@@ -9,8 +9,9 @@ DataFrame algebra — nothing executes until an action), mirroring how the
 reference's ``Query`` composes predicates before ``osm.query`` runs
 (reference osmquery.py:165-209).  Every step — including
 ``fuzzy_dedup`` since r14 — composes lazily; the shingle-set cache the
-fuzzy pass persists is managed per call site (functions/_cache) and is
-released on the next invocation or via ``release("curate.fuzzy_sets")``.
+fuzzy pass persists is managed per call site (``memo.managed_persist``)
+and is released on the next invocation or via
+``memo.release("curate.fuzzy_sets")``.
 
 Default recipe (``Curate.default_recipe``): normalize → exact dedup →
 fuzzy (n-gram Jaccard) dedup → quality gate → per-domain cap.  Every
@@ -35,7 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
-from osmdatapy_spark.functions._cache import managed_persist
+from osmdatapy_spark.memo import managed_persist
 
 
 class Curate:
@@ -130,6 +131,14 @@ class Curate:
         drop-set comment below for the A/B that removed it).  The
         shingle-set cache is a managed persist: live through the final
         action (which reads it 3x), released on the next invocation.
+
+        One live chain per session: the cache is ONE frame per call site
+        (``memo.managed_persist``), so building a second ``fuzzy_dedup``
+        chain before the first chain's action runs unpersists the first
+        chain's cache.  Both chains still return the same rows; the first
+        one's action recomputes the shingle sets (3x) instead of reading
+        them from memory.  Run each chain's action before building the
+        next to keep the cache.
         """
         from osmdatapy_spark.functions.dedup import (
             jaccard_candidate_pairs,

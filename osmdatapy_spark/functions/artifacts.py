@@ -18,9 +18,9 @@ entries).
 
 from __future__ import annotations
 
-from typing import Any, Callable, Dict, Tuple
+from typing import Any, Callable, Tuple
 
-_CACHE: Dict[Tuple, Any] = {}
+from osmdatapy_spark import memo
 
 
 def train_once(key: Tuple, trainer: Callable[[], Any]) -> Any:
@@ -28,16 +28,15 @@ def train_once(key: Tuple, trainer: Callable[[], Any]) -> Any:
 
     ``key`` must capture everything the artifact depends on (sf_dir,
     algorithm, every hyperparameter); ``trainer`` must be deterministic so
-    cache hits are semantically invisible.
-    """
-    if key not in _CACHE:
-        _CACHE[key] = trainer()
-    return _CACHE[key]
+    cache hits are semantically invisible.  Artifacts are process-scoped
+    in ``memo``; ``memo.invalidate(sf_dir)`` drops a regenerated
+    dataset's artifacts."""
+    return memo.get(None, "ann", key, trainer)
 
 
 def clear() -> None:
     """Drop all cached artifacts (tests / fresh-measurement hooks)."""
-    _CACHE.clear()
+    memo.clear("ann")
 
 
 def save(path: str) -> None:
@@ -49,7 +48,7 @@ def save(path: str) -> None:
     import json
 
     with open(path, "w") as f:
-        json.dump({repr(k): v for k, v in _CACHE.items()}, f)
+        json.dump({repr(k): v for k, v in memo.items("ann")}, f)
 
 
 def load(path: str) -> int:
@@ -63,5 +62,5 @@ def load(path: str) -> int:
     with open(path) as f:
         data = json.load(f)
     for k, v in data.items():
-        _CACHE[ast.literal_eval(k)] = v
+        memo.put(None, "ann", ast.literal_eval(k), v)
     return len(data)

@@ -34,9 +34,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
-from osmdatapy_spark.functions._cache import managed_persist
 from osmdatapy_spark.functions.dedup import _bucket_pairs, jaccard_candidate_pairs
 from osmdatapy_spark.functions.text import hash_bucket, tokens, word_ngrams
+from osmdatapy_spark.memo import managed_persist
 
 # ---------------------------------------------------------------------------
 # Fuzzy (edit-distance) dedup

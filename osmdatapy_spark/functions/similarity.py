@@ -13,9 +13,14 @@ a shuffle join when they grow, instead of a forced hint OOMing the driver.
 
 from __future__ import annotations
 
+import math
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast, col, lit
+from pyspark.sql.functions import col, lit
+
+from osmdatapy_spark import memo
 
 
 def as_double(vec: Column) -> Column:
@@ -126,56 +131,40 @@ def grid_topk(
 # ---------------------------------------------------------------------------
 # Literal-centroid expressions: SQL-parsed + memoized plan construction
 # ---------------------------------------------------------------------------
-# The Column-algebra forms of the literal-centroid arithmetic
-# (``nearest_cell``, the PQ distance table, the LSH plane projections)
+# Built as Column algebra, the literal-centroid arithmetic (cell
+# assignment, the PQ distance table, the LSH plane projections) would
 # cost ~65 py4j round trips PER literal vector (one lit() per component)
 # — measured ~1-1.3 s of pure DRIVER time per ivfpq_topk construction,
 # ~35% of its bench wall at sf0.1 (the §I pbf_query finding, same cause).
-# The builders below emit the IDENTICAL expression (same zip_with/
-# aggregate HOF tree, same fold order, same rounding — value-identical by
-# construction) as ONE SQL string: a single parse call replaces thousands
-# of round trips.  A fully-UNROLLED arithmetic variant was ALSO tried and
+# The builders below emit the expression (zip_with/aggregate HOF tree,
+# left-to-right fold, fixed rounding) as ONE SQL string: a single parse
+# call replaces thousands of round trips.  A fully-UNROLLED arithmetic variant was ALSO tried and
 # measured 8x SLOWER in execution (0.25 s → 1.95 s for the ivfpq corpus
 # projection at sf0.1 — per-stage codegen of ~500-term trees dominates at
 # bench scale), so the HOF execution shape is deliberately kept.
 #
-# ``_memo_expr`` additionally caches the parsed Column per (py4j gateway,
-# SQL text) — the literals are IN the key, so a retrained quantizer can
-# never reuse a stale expression, and a restarted JVM misses (gateway
-# identity changes).  This caches an EXPRESSION, not data: every run
-# still computes from its inputs (same discipline as
-# operators/geometry.way_geom_type).
-
-_EXPR_MEMO: dict[tuple[int, str], Column] = {}
+# ``_memo_expr`` additionally memoizes the parsed Column per (py4j
+# gateway, SQL text) in ``memo`` — the literals are IN the key, so a
+# retrained quantizer never reuses a stale expression.  This caches an
+# EXPRESSION, not data: every run still computes from its inputs.
 
 
 def _memo_expr(sql: str) -> Column:
-    from pyspark import SparkContext
-
-    gw = getattr(SparkContext, "_gateway", None)
-    if gw is None:
-        return F.expr(sql)
-    key = (id(gw), sql)
-    cached = _EXPR_MEMO.get(key)
-    if cached is None:
-        # bound growth: the suite builds a handful of distinct quantizer
-        # expressions per session; a stale-gateway flush keeps old JVMs'
-        # JavaObjects from accumulating
-        stale = [k for k in _EXPR_MEMO if k[0] != id(gw)]
-        for k in stale:
-            del _EXPR_MEMO[k]
-        cached = _EXPR_MEMO[key] = F.expr(sql)
-    return cached
+    return memo.get(SparkContext._gateway, "expr", sql, lambda: F.expr(sql))
 
 
 def as_double_sql(vec_col: str) -> str:
-    """SQL twin of ``as_double(col(vec_col))``."""
+    """SQL form of ``as_double(col(vec_col))``."""
     return f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
 
 
 def _sql_dlit(x: float) -> str:
     """Exact SQL double literal: repr() round-trips IEEE doubles and the
-    string→double cast parses exactly, then constant-folds."""
+    string→double cast parses exactly, then constant-folds.  Non-finite
+    values raise: the cast would turn 'nan'/'inf' into NULL distances and
+    silently change cell assignment (a degenerate quantizer)."""
+    if not math.isfinite(x):
+        raise ValueError(f"non-finite quantizer literal {x!r}")
     return f"CAST('{x!r}' AS DOUBLE)"
 
 
@@ -184,8 +173,9 @@ def _sql_lit_vec(comps: list[float]) -> str:
 
 
 def _l2_sq_sql(vec_sql: str, centroid: list[float], decimals: int = 6) -> str:
-    """SQL twin of ``_l2_sq`` — same zip_with/aggregate tree, same
-    left-to-right fold, same round."""
+    """Rounded squared L2 distance to a literal centroid — `zip_with` +
+    sequential fold, same deterministic order as ``dot`` (the oracle's
+    list_sum walks lists left-to-right too)."""
     return (
         f"round(aggregate(zip_with({vec_sql}, {_sql_lit_vec(centroid)}, "
         f"(x, c) -> (x - c) * (x - c)), CAST(0.0 AS DOUBLE), "
@@ -201,12 +191,16 @@ def _cell_structs_sql(vec_sql: str, centroids: list[list[float]]) -> str:
 
 
 def nearest_cell_sql(vec_sql: str, centroids: list[list[float]]) -> str:
-    """SQL twin of ``nearest_cell`` (array_min over (dist, cell) structs)."""
+    """Cell assignment as a PURE PROJECTION (no shuffle, no join): the
+    centroid table is tiny (k×dim doubles) and rides into the plan as
+    literals.  array_min over (dist, cell) structs — struct comparison is
+    lexicographic, so ties on the rounded distance break by cell id."""
     return f"array_min(array({_cell_structs_sql(vec_sql, centroids)})).cell"
 
 
 def probe_cells_sql(vec_sql: str, centroids: list[list[float]], n_probe: int) -> str:
-    """SQL twin of the ``_cell_ranking`` → transform → slice probe-cell list."""
+    """The ``n_probe`` nearest cells: (dist, cell) structs sorted
+    ascending, projected to cell ids, sliced."""
     return (
         f"slice(transform(array_sort(array({_cell_structs_sql(vec_sql, centroids)})), "
         f"s -> s.cell), 1, {n_probe})"
@@ -218,7 +212,11 @@ def _slice_sql(vec_sql: str, start1: int, length: int) -> str:
 
 
 def pq_codes_sql(vec_sql: str, codebooks: list[list[list[float]]], dim: int) -> str:
-    """SQL twin of ``pq_codes``: per-subspace nearest codebook cell."""
+    """ARRAY<INT> of per-subspace centroid codes — the compressed
+    representation that replaces the vector at scan time (``m_sub`` small
+    ints instead of ``dim`` floats: a 64-float embedding compresses 64×
+    at m=4/k=4).  Pure projection against literal codebooks: encoding
+    never shuffles."""
     m_sub = len(codebooks)
     sub = dim // m_sub
     cells = ", ".join(
@@ -229,7 +227,7 @@ def pq_codes_sql(vec_sql: str, codebooks: list[list[list[float]]], dim: int) -> 
 
 
 def pq_dtab_sql(vec_sql: str, codebooks: list[list[list[float]]], dim: int) -> str:
-    """SQL twin of the probe-side ADC distance table (m_sub × k_cells)."""
+    """The probe-side ADC distance table (m_sub × k_cells)."""
     m_sub = len(codebooks)
     sub = dim // m_sub
     rows = []
@@ -240,42 +238,6 @@ def pq_dtab_sql(vec_sql: str, codebooks: list[list[list[float]]], dim: int) -> s
         )
         rows.append(f"array({row})")
     return "array(%s)" % ", ".join(rows)
-
-
-def _lit_vec(comps: list[float]) -> Column:
-    return F.array(*[lit(float(c)) for c in comps])
-
-
-def _l2_sq(vec: Column, centroid: list[float], decimals: int = 6) -> Column:
-    """Rounded squared L2 distance to a literal centroid — `zip_with` +
-    sequential fold, same deterministic order as ``dot`` (the oracle's
-    list_sum walks lists left-to-right too)."""
-    diff = F.zip_with(vec, _lit_vec(centroid), lambda x, c: (x - c) * (x - c))
-    return F.round(F.aggregate(diff, lit(0.0), lambda acc, x: acc + x), decimals)
-
-
-def _cell_ranking(vec: Column, centroids: list[list[float]]) -> Column:
-    """ARRAY<STRUCT<dist,cell>> sorted ascending — struct comparison is
-    lexicographic, so ties on the rounded distance break by cell id."""
-    scored = [
-        F.struct(_l2_sq(vec, c).alias("dist"), lit(i).alias("cell"))
-        for i, c in enumerate(centroids)
-    ]
-    return F.array_sort(F.array(*scored))
-
-
-def nearest_cell(vec: Column, centroids: list[list[float]]) -> Column:
-    """Cell assignment as a PURE PROJECTION (no shuffle, no join): the
-    centroid table is tiny (k×dim doubles) and rides into the plan as
-    literals — the corpus never moves to learn its cell."""
-    return F.array_min(
-        F.array(
-            *[
-                F.struct(_l2_sq(vec, c).alias("dist"), lit(i).alias("cell"))
-                for i, c in enumerate(centroids)
-            ]
-        )
-    )["cell"]
 
 
 def kmeans_centroids(
@@ -718,22 +680,6 @@ def pq_codebooks(
             for m in range(m_sub)
         ]
     return books
-
-
-def pq_codes(vec: Column, codebooks: list[list[list[float]]], dim: int) -> Column:
-    """ARRAY<INT> of per-subspace centroid codes — the compressed
-    representation that replaces the vector at scan time (``m_sub`` small
-    ints instead of ``dim`` floats: a 64-float embedding compresses 64×
-    at m=4/k=4).  Pure projection against literal codebooks: encoding
-    never shuffles."""
-    m_sub = len(codebooks)
-    sub = dim // m_sub
-    return F.array(
-        *[
-            nearest_cell(F.slice(vec, m * sub + 1, sub), codebooks[m])
-            for m in range(m_sub)
-        ]
-    )
 
 
 def pq_topk(

@@ -1,0 +1,126 @@
+"""The engine's one memo: driver-side handles and artifacts, scoped to an owner.
+
+Every entry is keyed by ``(id(owner), namespace, key)`` and holds its owner
+strongly, so the owner's id cannot be reused while the entry exists:
+
+- a ``SparkSession`` owns table and spread handles (``tables.load_table``,
+  ``suite._util.TS``) and managed persists (``managed_persist``);
+- the py4j gateway owns parsed expressions (``similarity._memo_expr``,
+  ``geometry.way_geom_type``);
+- ``None`` (the process) owns trained ANN artifacts
+  (``artifacts.train_once``).
+
+Values are plan handles, expressions and small artifacts, never query
+results: every action still computes from its inputs.  A hit is one dict
+lookup plus an ``is owner`` check and makes no py4j call.  A miss prunes
+the entries of stopped owners, checking each distinct owner once.
+
+Datasets are assumed static while a session lives: a table handle freezes
+the parquet file listing.  Code that rewrites a dataset in-session calls
+``invalidate(sf_dir)``.
+"""
+
+from __future__ import annotations
+
+import threading
+from typing import TYPE_CHECKING, Any, Callable, Hashable
+
+from py4j.java_gateway import JavaGateway
+from pyspark import SparkContext
+
+if TYPE_CHECKING:  # pragma: no cover
+    from pyspark.sql import DataFrame
+
+_LOCK = threading.Lock()
+_STORE: dict[tuple[int, str, Hashable], tuple[Any, Any]] = {}
+
+
+def _stopped(owner: Any) -> bool:
+    if owner is None:
+        return False
+    if isinstance(owner, JavaGateway):
+        return owner is not SparkContext._gateway
+    try:
+        jsc = owner._sc._jsc
+        return jsc is None or jsc.sc().isStopped()
+    except Exception:
+        return True
+
+
+def get(owner: Any, namespace: str, key: Hashable, build: Callable[[], Any]) -> Any:
+    """Return the value memoized for ``(owner, namespace, key)``, building
+    and storing it on a miss."""
+    with _LOCK:
+        hit = _STORE.get((id(owner), namespace, key))
+    if hit is not None and hit[0] is owner:
+        return hit[1]
+    value = build()
+    put(owner, namespace, key, value)
+    return value
+
+
+def put(owner: Any, namespace: str, key: Hashable, value: Any) -> Any:
+    """Store ``value`` after pruning stopped owners; return the value it
+    replaced (or None)."""
+    with _LOCK:
+        stopped: dict[int, bool] = {}
+        for k, (o, _) in list(_STORE.items()):
+            if id(o) not in stopped:
+                stopped[id(o)] = _stopped(o)
+            if stopped[id(o)]:
+                del _STORE[k]
+        prev = _STORE.get((id(owner), namespace, key))
+        _STORE[(id(owner), namespace, key)] = (owner, value)
+    return prev[1] if prev is not None else None
+
+
+def items(namespace: str) -> list[tuple[Hashable, Any]]:
+    with _LOCK:
+        return [(k[2], v) for k, (_, v) in _STORE.items() if k[1] == namespace]
+
+
+def _drop(match: Callable[[str, Hashable], bool]) -> list[Any]:
+    with _LOCK:
+        gone = [k for k in _STORE if match(k[1], k[2])]
+        return [_STORE.pop(k)[1] for k in gone]
+
+
+def clear(namespace: str) -> None:
+    _drop(lambda ns, _: ns == namespace)
+
+
+def invalidate(sf_dir: str) -> None:
+    """Drop every entry whose key names ``sf_dir`` (table and spread
+    handles, ANN artifacts), so the next call re-reads the directory."""
+    _drop(lambda _, key: isinstance(key, tuple) and sf_dir in key)
+
+
+def _unpersist(df: "DataFrame") -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # session already stopped — nothing to release
+
+
+def managed_persist(df: "DataFrame", site: str) -> "DataFrame":
+    """Persist ``df`` as the ONE live frame of call site ``site`` in its
+    session, unpersisting the frame the site persisted before.
+
+    A builder whose returned plan reads a persisted frame cannot release
+    it before the caller's action runs; this bounds session-lifetime
+    growth to one frame per site instead.  Contract: one live plan per
+    call site.  Building a second plan through the same site before the
+    first one's action runs unpersists the first plan's frame — its
+    result is unchanged, but its action recomputes that subtree from
+    lineage.  Run each plan's action before building the next, or accept
+    the recompute."""
+    prev = put(df.sparkSession, "persist", site, df)
+    if prev is not None and prev is not df:
+        _unpersist(prev)
+    return df.persist()
+
+
+def release(site: str | None = None) -> None:
+    """Unpersist one call site's frame (or every managed frame)."""
+    for df in _drop(lambda ns, key: ns == "persist" and (site is None or key == site)):
+        _unpersist(df)

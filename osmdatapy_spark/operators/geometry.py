@@ -15,10 +15,12 @@ which at 100 TB runs as a sort-merge join on osmid-bucketed nodes.
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from osmdatapy_spark import memo
 from osmdatapy_spark.defaults import IS_AREA, IS_AREA_KEY_ANY_VALUE, NOT_AREA
 
 GEOM_NONE = 0
@@ -92,63 +94,32 @@ def area_rule_predicate(tags_col: Column = None) -> Column:
     )
 
 
-# way_geom_type's Column over the default (refs, tags) names, memoized per
-# py4j gateway: building the Overpass rule predicate costs ~1000 driver
-# py4j round trips (~0.65 s — measured as 40% of pbf_query's wall time at
-# sf0.1), and the expression tree is immutable + plan-independent, so one
-# build per JVM serves every query.  Keyed by gateway identity so a
-# restarted JVM never sees a stale JavaObject.  This caches an EXPRESSION,
-# not data — every run still computes from its inputs.
-_CANONICAL_WAY_GEOM_TYPE: dict[int, Column] = {}
-
-
 def way_geom_type(refs: Column = None, tags_col: Column = None) -> Column:
     """Way line-vs-area heuristic (reference ``_way_geotype``,
     primitives.py:260-285): 0 if degenerate, 2 if open/short, 3 if closed
     with ≥4 points and the area rules fire.
 
     Pure expression over the refs array — `element_at(refs,1) ==
-    element_at(refs,-1)` replaces the reference's first/last compare."""
-    canonical = refs is None and tags_col is None
-    key = None
-    if canonical:
-        from pyspark import SparkContext
+    element_at(refs,-1)` replaces the reference's first/last compare.
 
-        gw = getattr(SparkContext, "_gateway", None)
-        key = id(gw) if gw is not None else None
-        cached = _CANONICAL_WAY_GEOM_TYPE.get(key) if key is not None else None
-        if cached is not None:
-            return cached
+    The default-column form is memoized per py4j gateway (``memo``):
+    building the Overpass rule predicate costs ~1000 py4j round trips
+    (~0.65 s, 40% of pbf_query's wall time at sf0.1), and the expression
+    is immutable and plan-independent — an EXPRESSION, not data."""
+    if refs is None and tags_col is None:
+        return memo.get(
+            SparkContext._gateway, "way_geom_type", None,
+            lambda: way_geom_type(col("refs"), col("tags")),
+        )
     r = refs if refs is not None else col("refs")
     closed = F.element_at(r, 1) == F.element_at(r, -1)
     n = F.size(r)
-    out = (
+    return (
         F.when(n <= 1, lit(GEOM_NONE))
         .when(n < 4, lit(GEOM_LINESTRING))
         .when(~closed, lit(GEOM_LINESTRING))
         .when(area_rule_predicate(tags_col), lit(GEOM_AREA))
         .otherwise(lit(GEOM_LINESTRING))
-    )
-    if canonical and key is not None:
-        _CANONICAL_WAY_GEOM_TYPE[key] = out
-    return out
-
-
-def rel_geom_type(tags_col: Column = None, member_types: Column = None) -> Column:
-    """Relation geometry dispatch (reference ``_rel_geotype``,
-    primitives.py:288-305): node/relation members ⇒ unsupported (0);
-    ``type=route`` ⇒ linestring; ``type`` ∈ {multipolygon, boundary} ⇒ area."""
-    from osmdatapy_spark.defaults import RELATION_AREA, RELATION_LINESTRING
-
-    t = tags_col if tags_col is not None else col("tags")
-    mt = member_types if member_types is not None else col("members.type")
-    unsupported = F.array_contains(mt, GEOM_NONE) | F.array_contains(mt, 2)
-    tval = t.getItem("type")
-    return (
-        F.when(unsupported, lit(GEOM_NONE))
-        .when(tval.isin(RELATION_LINESTRING), lit(GEOM_LINESTRING))
-        .when(tval.isin(RELATION_AREA), lit(GEOM_AREA))
-        .otherwise(lit(GEOM_NONE))
     )
 
 

@@ -5,8 +5,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from osmdatapy_spark import memo
 from osmdatapy_spark.session import tune_session
-from osmdatapy_spark.tables import load_table
+from osmdatapy_spark.tables import load_table, spread
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -14,25 +15,14 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-_TS_MEMO: dict[tuple[int, str, str], tuple[SparkSession, DataFrame]] = {}
-
-
 def TS(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Table load for CPU-bound per-row kernels (hashing, shingling,
     vector math): `spread` re-distributes a coarse small-file scan across
-    all cores; a no-op at real scale (see tables.spread).  Memoized like
-    load_table — the spread decision (scan partition count vs default
-    parallelism) is fixed per (session, table), and the .rdd partition
-    probe costs driver round trips per call."""
-    from osmdatapy_spark.tables import spread
-
-    key = (id(spark), sf_dir, name)
-    hit = _TS_MEMO.get(key)
-    if hit is not None:
-        return hit[1]
-    df = spread(T(spark, sf_dir, name))
-    _TS_MEMO[key] = (spark, df)
-    return df
+    all cores; a no-op at real scale (see tables.spread).  Memoized per
+    live session like load_table — the spread decision (scan partition
+    count vs default parallelism) is fixed per (session, table), and the
+    .rdd partition probe costs driver round trips per call."""
+    return memo.get(spark, "spread", (sf_dir, name), lambda: spread(T(spark, sf_dir, name)))
 
 
 def coords_lookup(

@@ -1487,7 +1487,7 @@ def osm_settlement_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         col("embedding").alias("v"),
         # literal-centroid assignment via memoized SQL parse (similarity.py
-        # builders) — identical expression tree to nearest_cell
+        # builders)
         _memo_expr(nearest_cell_sql("`embedding`", cents)).alias("cluster"),
     )
     return assigned.groupBy("cluster").agg(

@@ -26,7 +26,6 @@ from osmdatapy_spark.functions.multimodal import (
     extract_features,
     sample_frames,
 )
-from osmdatapy_spark.functions._cache import managed_persist
 from osmdatapy_spark.functions.similarity import brute_force_topk, embed_neardup_pairs
 from osmdatapy_spark.functions.text import (
     STOPWORDS,
@@ -37,6 +36,7 @@ from osmdatapy_spark.functions.text import (
     tokens,
     word_shingles,
 )
+from osmdatapy_spark.memo import managed_persist
 from osmdatapy_spark.suite._util import T, TS
 from osmdatapy_spark.suite.registry import register
 

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
-from osmdatapy_spark.functions._cache import managed_persist
+from osmdatapy_spark.memo import managed_persist
 from osmdatapy_spark.operators.geometry import linestring_wkt, point_wkt, way_geom_type
 from osmdatapy_spark.operators.rings import ring_chains
 from osmdatapy_spark.operators.topology import topology_segments, way_endpoints

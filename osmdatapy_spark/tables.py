@@ -10,10 +10,10 @@ same names so the suite is storage-agnostic.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from osmdatapy_spark import memo
 
 TABLE_NAMES = (
     "region",
@@ -28,55 +28,28 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Table-HANDLE memo: ``spark.read.parquet`` costs ~0.12 s of driver time
-# per call (py4j round trips + a footer/schema read), and every query
-# construction re-pays it per table — ~0.2-0.4 s per bench pass on
-# multi-table queries.  A DataFrame is an immutable logical-plan handle
-# (schema + file index), NOT data: reusing it across queries changes no
-# plan and caches no results — every action still scans the parquet
-# inputs (same discipline as the geometry/similarity expression memos).
-# Keyed by the live SparkSession OBJECT (held in the value, so its id
-# can never be reused while the entry exists); entries of stopped
-# sessions are pruned on the next miss.
-_TABLE_MEMO: dict[tuple[int, str, str], tuple[SparkSession, DataFrame]] = {}
-_TABLE_MEMO_LOCK = threading.Lock()
 
-
-def _memo_get(key: tuple[int, str, str]) -> DataFrame | None:
-    with _TABLE_MEMO_LOCK:
-        hit = _TABLE_MEMO.get(key)
-        return hit[1] if hit is not None else None
-
-
-def _memo_put(key: tuple[int, str, str], spark: SparkSession, df: DataFrame) -> None:
-    with _TABLE_MEMO_LOCK:
-        for k, (s, _) in list(_TABLE_MEMO.items()):
-            try:
-                stopped = s._sc._jsc is None or s._sc._jsc.sc().isStopped()
-            except Exception:
-                stopped = True
-            if stopped:
-                del _TABLE_MEMO[k]
-        _TABLE_MEMO[key] = (spark, df)
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (id(spark), sf_dir, name)
-    cached = _memo_get(key)
-    if cached is not None:
-        return cached
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # nano-precision parquet timestamp read as LONG (see session.py);
         # truncate to microseconds — the same truncation DuckDB applies when
         # casting TIMESTAMP_NS to TIMESTAMP
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    _memo_put(key, spark, df)
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table handle for ``{sf_dir}/{name}.parquet``, memoized per live
+    session (``memo``): ``spark.read.parquet`` costs ~0.12 s of driver
+    time (py4j round trips + a footer/schema read) that every query
+    construction would re-pay per table.  The handle is an immutable plan
+    (schema + file index), not data: every action still scans the files.
+
+    Static-dataset assumption: the handle freezes the directory's file
+    listing.  After rewriting a dataset in-session, call
+    ``memo.invalidate(sf_dir)`` so the next load re-lists it."""
+    return memo.get(spark, "table", (sf_dir, name), lambda: _read_table(spark, sf_dir, name))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -746,8 +746,9 @@ def test_pq_topk_recall_and_compression(spark):
     the exact top-3, and the code representation is m_sub small ints."""
     from osmdatapy_spark.functions.similarity import (
         brute_force_topk,
+        as_double_sql,
         pq_codebooks,
-        pq_codes,
+        pq_codes_sql,
         pq_topk,
     )
     from pyspark.sql import functions as F
@@ -772,7 +773,7 @@ def test_pq_topk_recall_and_compression(spark):
     assert all(len(c) == 4 for b in books for c in b)
 
     codes = corpus.select(
-        pq_codes(F.transform(col("embedding"), lambda x: x.cast("double")), books, 8).alias("c")
+        F.expr(pq_codes_sql(as_double_sql("embedding"), books, 8)).alias("c")
     ).collect()
     assert all(len(r["c"]) == 2 for r in codes)
     assert all(0 <= v <= 3 for r in codes for v in r["c"])
