@@ -34,6 +34,31 @@ from osmdatapy_spark.operators.geometry import (
 from osmdatapy_spark.query import OSMTYPE_RELATION, OSMTYPE_WAY, Query
 
 
+_ELEMENT_COLUMNS = (
+    "osmid", "osmtype", "tags", "refs", "members", "version", "timestamp", "changeset",
+)
+
+
+def _split_way_refs(ways: DataFrame) -> DataFrame:
+    """``way_refs(way_id, pos, node_id)``: one row per node of each way
+    row (``osmid``, ``refs``) — the exploded membership bronze table."""
+    return ways.select("osmid", F.posexplode("refs").alias("pos", "node_id")).select(
+        col("osmid").alias("way_id"), "pos", "node_id"
+    )
+
+
+def _split_rel_members(rels: DataFrame) -> DataFrame:
+    """``rel_members(rel_id, pos, member_id, member_type, role)``: one row
+    per member of each relation row (``osmid``, ``members``)."""
+    return rels.select("osmid", F.posexplode("members").alias("pos", "m")).select(
+        col("osmid").alias("rel_id"),
+        "pos",
+        col("m.ref").alias("member_id"),
+        col("m.type").alias("member_type"),
+        col("m.role").alias("role"),
+    )
+
+
 class OSM:
     """Query driver over the element data model (reference ``osmdata.py:16-39``)."""
 
@@ -86,62 +111,37 @@ class OSM:
 
     # -- lazy bronze relations (pbf-backed OSMs build on first access) -----
 
+    def _read_pbf(self, **options) -> DataFrame:
+        from osmdatapy_spark.sources.pbf import read_pbf
+
+        spark, path = self._pbf_meta
+        return read_pbf(spark, path, **options)
+
     @property
     def elements(self) -> DataFrame:
         if self._elements is None and self._pbf_meta is not None:
-            spark, path = self._pbf_meta
-            from osmdatapy_spark.sources.pbf import read_pbf
-
-            self._elements = read_pbf(spark, path).select(
-                "osmid", "osmtype", "tags", "refs", "members",
-                "version", "timestamp", "changeset",
-            )
+            self._elements = self._read_pbf().select(*_ELEMENT_COLUMNS)
         return self._elements
 
     @property
     def nodes(self) -> DataFrame:
         if self._nodes is None and self._pbf_meta is not None:
-            spark, path = self._pbf_meta
-            from osmdatapy_spark.sources.pbf import read_pbf
-
-            self._nodes = read_pbf(
-                spark, path, osmtypes={0}, columns=["osmid", "lon", "lat"]
-            )
+            self._nodes = self._read_pbf(osmtypes={0}, columns=["osmid", "lon", "lat"])
         return self._nodes
 
     @property
     def way_refs(self) -> Optional[DataFrame]:
         if self._way_refs is None and self._pbf_meta is not None:
-            spark, path = self._pbf_meta
-            from pyspark.sql import functions as F
-
-            from osmdatapy_spark.sources.pbf import read_pbf
-
-            self._way_refs = (
-                read_pbf(spark, path, osmtypes={1}, columns=["osmid", "refs"])
-                .select("osmid", F.posexplode("refs").alias("pos", "node_id"))
-                .select(col("osmid").alias("way_id"), "pos", "node_id")
+            self._way_refs = _split_way_refs(
+                self._read_pbf(osmtypes={1}, columns=["osmid", "refs"])
             )
         return self._way_refs
 
     @property
     def rel_members(self) -> Optional[DataFrame]:
         if self._rel_members is None and self._pbf_meta is not None:
-            spark, path = self._pbf_meta
-            from pyspark.sql import functions as F
-
-            from osmdatapy_spark.sources.pbf import read_pbf
-
-            self._rel_members = (
-                read_pbf(spark, path, osmtypes={2}, columns=["osmid", "members"])
-                .select("osmid", F.posexplode("members").alias("pos", "m"))
-                .select(
-                    col("osmid").alias("rel_id"),
-                    "pos",
-                    col("m.ref").alias("member_id"),
-                    col("m.type").alias("member_type"),
-                    col("m.role").alias("role"),
-                )
+            self._rel_members = _split_rel_members(
+                self._read_pbf(osmtypes={2}, columns=["osmid", "members"])
             )
         return self._rel_members
 
@@ -173,32 +173,15 @@ class OSM:
         split into the four bronze tables post-scan (XML has no per-kind
         wire pruning; it is the interchange format, so files are small —
         bulk data belongs in PBF or bronze parquet)."""
-        from pyspark.sql import functions as F
-
         from osmdatapy_spark.sources.xml import read_osm_xml
 
         df = read_osm_xml(spark, path)
-        elements = df.select(
-            "osmid", "osmtype", "tags", "refs", "members", "version", "timestamp", "changeset"
+        return cls(
+            df.select(*_ELEMENT_COLUMNS),
+            df.filter(col("osmtype") == 0).select("osmid", "lon", "lat"),
+            _split_way_refs(df.filter(col("osmtype") == 1)),
+            _split_rel_members(df.filter(col("osmtype") == 2)),
         )
-        nodes = df.filter(col("osmtype") == 0).select("osmid", "lon", "lat")
-        way_refs = (
-            df.filter(col("osmtype") == 1)
-            .select("osmid", F.posexplode("refs").alias("pos", "node_id"))
-            .select(col("osmid").alias("way_id"), "pos", "node_id")
-        )
-        rel_members = (
-            df.filter(col("osmtype") == 2)
-            .select("osmid", F.posexplode("members").alias("pos", "m"))
-            .select(
-                col("osmid").alias("rel_id"),
-                "pos",
-                col("m.ref").alias("member_id"),
-                col("m.type").alias("member_type"),
-                col("m.role").alias("role"),
-            )
-        )
-        return cls(elements, nodes, way_refs, rel_members)
 
     # -- bronze persistence (SCALE.md: "what would change first") ----------
 
@@ -231,17 +214,27 @@ class OSM:
 
     @classmethod
     def from_bronze(cls, spark: SparkSession, path: str) -> "OSM":
+        """Open the tables ``to_bronze`` wrote.  ``way_refs`` and
+        ``rel_members`` are optional: an absent directory gives None, any
+        other read error (a corrupt file) raises."""
+        from pyspark.errors import AnalysisException
+
         read = spark.read.parquet
-        refs_path = f"{path}/way_refs"
-        mem_path = f"{path}/rel_members"
 
         def opt(p):
             try:
                 return read(p)
-            except Exception:
-                return None
+            except AnalysisException as e:
+                if e.getCondition() == "PATH_NOT_FOUND":
+                    return None
+                raise
 
-        return cls(read(f"{path}/elements"), read(f"{path}/nodes"), opt(refs_path), opt(mem_path))
+        return cls(
+            read(f"{path}/elements"),
+            read(f"{path}/nodes"),
+            opt(f"{path}/way_refs"),
+            opt(f"{path}/rel_members"),
+        )
 
     def to_pbf(
         self,
@@ -425,9 +418,9 @@ class OSM:
         """Elements relation for a query, kind-pruned at the SOURCE when
         this OSM was opened from a .pbf path (P2 block pruning, reference
         osmdata.py:140-168 block-kind skip): a ways-only query never
-        decodes the dense-node wire data at all — each pruned scan is a
-        fresh reader instance so pushed osmtype sets can't clobber each
-        other (see read_pbf_tables).  Falls back to the shared elements
+        decodes the dense-node wire data at all — each pruned scan is its
+        own relation, so scan reuse cannot merge differently-pruned reads
+        (see sources/pbf.py).  Falls back to the shared elements
         relation (post-decode Catalyst filter) for table-backed OSMs,
         where parquet row-group stats do the same pruning."""
         wanted = only if only is not None else {
@@ -437,9 +430,6 @@ class OSM:
         }
         if self._pbf_meta is None or not wanted or len(wanted) == 3:
             return self.elements
-        spark, path = self._pbf_meta
-        from osmdatapy_spark.sources.pbf import read_pbf
-
         # field-decode pruning rides the same relation options: a query
         # without metadata=True never parses Info blobs, a nodes-less
         # query never delta-accumulates refs, etc. (the 'columns' option —
@@ -475,9 +465,7 @@ class OSM:
             and not any("," in k for k in q.keep)
         ):
             any_keys = set(q.keep)
-        return read_pbf(
-            spark, path, osmtypes=wanted, columns=cols, any_tag_keys=any_keys
-        )
+        return self._read_pbf(osmtypes=wanted, columns=cols, any_tag_keys=any_keys)
 
     def query(self, q: Query, wkb: bool = False) -> DataFrame:
         """Execute a composable Query → element DataFrame.

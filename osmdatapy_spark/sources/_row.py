@@ -1,0 +1,99 @@
+"""The unified element row shared by the ``osmpbf`` and ``osmxml`` sources.
+
+Both sources yield SURVEY.md §1.5's element model: one table for all
+three kinds, tags as a map, refs and members as arrays
+(``sources/pbf.py::PBF_SCHEMA``).  Every decision about that row that the
+two sources share lives here, once:
+
+- ``prune_schema``: the ``columns`` read option;
+- ``parse_osmtypes``: the ``osmtypes`` read option;
+- ``arrow_types`` / ``record_batch``: the row's Arrow form, derived from
+  the Spark schema, and per-row Python values turned into it;
+- ``load``: how the ``read_*`` helpers pass their keyword arguments on
+  as read options.
+
+Both options are *relation-defining*: Spark's Python DataSource API
+(4.1) pushes down neither column pruning nor, safely, filters (scan
+reuse merges two scans of one relation even when their pushed filters
+differ), so pruning becomes real only as an option that gives each
+pruned read its own relation.
+"""
+
+from __future__ import annotations
+
+from typing import TYPE_CHECKING, Callable
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.datasource import DataSource
+from pyspark.sql.types import StructType
+
+from osmdatapy_spark import memo
+
+if TYPE_CHECKING:  # pragma: no cover
+    import pyarrow as pa
+
+
+def prune_schema(base: StructType, columns: str | None, source: str) -> StructType:
+    """The ``columns`` option: ``base`` narrowed to the named fields, in
+    schema order.  A ``.select()`` above the scan would still decode and
+    ship every field; the narrowed schema lets the reader skip the dropped
+    fields' decode and never build their Arrow arrays (reference
+    field-decode pruning, ``primitives.py:23-29``)."""
+    wanted = [c.strip() for c in (columns or "").split(",") if c.strip()]
+    if not wanted:
+        return base
+    unknown = [c for c in wanted if c not in base.fieldNames()]
+    if unknown:
+        raise ValueError(f"unknown {source} columns: {unknown}")
+    return StructType([f for f in base.fields if f.name in wanted])
+
+
+def parse_osmtypes(raw: str | None) -> set[int] | None:
+    """The ``osmtypes`` option (``"0"``, ``"1,2"``): the element kinds a
+    relation decodes, or None for all three."""
+    kinds = {int(t) for t in (raw or "").split(",") if t.strip()}
+    return kinds or None
+
+
+def arrow_types(schema: StructType) -> "dict[str, pa.DataType]":
+    """Arrow type of each column of a (possibly pruned) row schema."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return {f.name: to_arrow_type(f.dataType) for f in schema.fields}
+
+
+def record_batch(schema: StructType, column: Callable[[str], list]) -> "pa.RecordBatch":
+    """One Arrow batch of ``schema``'s columns from per-row Python values,
+    ``column(name)`` giving one list per column.  Tags come as dicts and
+    members as ``(ref, type, role)`` tuples, the form both sources' parsers
+    produce; pyarrow converts both without reshaping."""
+    import pyarrow as pa
+
+    types = arrow_types(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(column(name), type=t) for name, t in types.items()], names=list(types)
+    )
+
+
+def load(
+    spark: SparkSession, source: type[DataSource], path: str, stream: bool = False, **options
+) -> DataFrame:
+    """Open ``path`` through ``source`` (batch, or ``spark.readStream`` with
+    ``stream=True``), passing ``options`` on as read options.
+
+    ``source`` is registered once per session.  An option that is None,
+    False, 0 or empty is left unset; True reads ``"true"``; a set joins
+    sorted with commas and a list in its own order."""
+    name = source.name()
+    memo.get(spark, "datasource", name, lambda: spark.dataSource.register(source))
+    reader = (spark.readStream if stream else spark.read).format(name)
+    for key, value in options.items():
+        if isinstance(value, bool):
+            value = "true" if value else None
+        elif isinstance(value, (set, frozenset)):
+            value = ",".join(sorted(str(v) for v in value))
+        elif isinstance(value, (list, tuple)):
+            value = ",".join(str(v) for v in value)
+        if value:
+            reader = reader.option(key, str(value))
+    return reader.load(path)

@@ -21,16 +21,18 @@ file becomes an ordinary DataFrame scan —
   geometry pipeline joining elements to its own ways subset) silently
   returns wrong rows.  Verified empirically on Spark 4.1.2:
   ``scan.filter(t=0).union(scan.filter(t=1))`` yields one branch twice.
-  ``pushFilters`` is therefore implemented to absorb NOTHING (Spark
-  re-applies every filter above the scan), making all scans of a
-  relation identical and reuse-safe, while the option carries the
-  pruning per *relation* (each bronze table gets its own relation).
+  The reader therefore keeps pyspark's default ``pushFilters``, which
+  absorbs nothing (Spark re-applies every filter above the scan), so all
+  scans of a relation stay identical and reuse-safe, and it needs no
+  session conf; the option carries the pruning per *relation* (each
+  bronze table gets its own relation).
 - **column pruning**: metadata (version/timestamp/changeset) is only
   decoded when the pruned schema asks for it — the reference's
   field-decode pruning (``primitives.py:23-29``).
 
 The unified row shape is SURVEY.md §1.5's element model: one table, all
-three kinds, map tags, array refs/members.  ``read_pbf_tables`` splits it
+three kinds, map tags, array refs/members; ``sources/_row.py`` holds what
+this source shares with the ``osmxml`` one.  ``OSM.from_pbf`` splits it
 into the four bronze tables the engine operates on.
 
 Usage::
@@ -45,17 +47,7 @@ import os
 from typing import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    EqualTo,
-    Filter,
-    In,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
-from pyspark.sql.functions import col
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -67,6 +59,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from osmdatapy_spark.sources._row import (
+    arrow_types,
+    load,
+    parse_osmtypes,
+    prune_schema,
+    record_batch,
+)
+from osmdatapy_spark.sources._watch import DirectoryWatcher
 from osmdatapy_spark.sources.pbf_codec import (
     BlobSpan,
     blob_dictionary_has,
@@ -102,6 +102,14 @@ PBF_SCHEMA = StructType(
     ]
 )
 
+
+# ~1 MB compressed ≈ 60-130k elements in tool-produced files ≈ a
+# sub-second decode task: small enough for even scheduling, large enough
+# to amortize Python worker dispatch.  The blob-count cap bounds
+# elements-per-task too (a blob is ~8k elements regardless of how well it
+# compressed), so pathological compression ratios can't serialize the scan.
+_PARTITION_BYTES = 1024 * 1024
+_PARTITION_BLOBS = 8
 
 # Below this span count the probe runs sequentially: pool startup
 # (~100 ms of process spawns) costs more than it saves on a small
@@ -155,7 +163,7 @@ class PbfPartition(InputPartition):
     """One read task = a RUN of adjacent OSMData blobs.
 
     A blob is ~8k elements in real files but can be tiny; planning
-    coalesces adjacent blobs until ``partition_bytes`` of compressed
+    coalesces adjacent blobs until ``_PARTITION_BYTES`` of compressed
     payload so task count tracks data volume, not blob count (the same
     contract as ``spark.sql.files.maxPartitionBytes`` for file sources)."""
 
@@ -170,22 +178,9 @@ class PbfDataSourceReader(DataSourceReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("osmpbf source requires a path")
-        self.validate = options.get("validate", "true").lower() == "true"
-        # per-relation element-kind restriction (None = all kinds); comes
-        # from the 'osmtypes' option, e.g. "0" or "0,1" — see module doc
-        # for why this is an option and not absorbed pushFilters state
-        raw = options.get("osmtypes")
-        self.wanted_types: set[int] | None = (
-            {int(t) for t in str(raw).split(",") if t != ""} if raw is not None else None
-        )
-        # ~1 MB compressed ≈ 60-130k elements in tool-produced files ≈ a
-        # sub-second decode task: small enough for even scheduling, large
-        # enough to amortize Python worker dispatch.  The blob-count cap
-        # bounds elements-per-task too (a blob is ~8k elements regardless
-        # of how well it compressed), so pathological compression ratios
-        # can't serialize the scan.
-        self.partition_bytes = int(options.get("partition_bytes", 1024 * 1024))
-        self.partition_blobs = int(options.get("partition_blobs", 8))
+        # per-relation element-kind restriction (None = all kinds) — see
+        # the module doc for why this is an option and not pushFilters
+        self.wanted_types = parse_osmtypes(options.get("osmtypes"))
         # dictionary skip (reference P2 string-dictionary pruning,
         # osmquery.py:242-257, at blob granularity): 'must_tag_keys' names
         # strings that every wanted element MUST carry as tag keys — a
@@ -198,8 +193,8 @@ class PbfDataSourceReader(DataSourceReader):
         # the DRIVER additionally drops non-matching blobs at planning
         # time (streaming just each blob's table head — kilobytes per
         # blob), so pruned blobs never even become task work.  The probe
-        # runs in a bounded process pool ('plan_prune_workers', default
-        # 16) once the file is big enough to amortize the spawns, so
+        # runs in a bounded process pool (one worker per driver core, at
+        # most 16) once the file is big enough to amortize the spawns, so
         # planning wall-time scales with workers, not blob count — a
         # planet file's ~100k heads probe in parallel instead of one
         # sequential gigabyte crawl (see _probe_dictionaries for why
@@ -219,25 +214,6 @@ class PbfDataSourceReader(DataSourceReader):
             frozenset(k for k in str(raw_any).split(",") if k) if raw_any else None
         )
         self.plan_prune = options.get("plan_prune", "false").lower() == "true"
-        # default scales to the driver box (round-12 advice: a flat 16
-        # forks 16 processes on a 4-core driver for no speedup); the knob
-        # is only parsed/validated when the probe that uses it is enabled
-        # — an inert option must not raise, whatever its value
-        default_workers = min(16, os.cpu_count() or 1)
-        if self.plan_prune:
-            self.plan_prune_workers = int(
-                options.get("plan_prune_workers", default_workers)
-            )
-            if self.plan_prune_workers < 1:
-                raise ValueError("plan_prune_workers must be >= 1")
-        else:
-            self.plan_prune_workers = default_workers
-
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        """Absorb nothing: yielding every filter back makes Spark re-apply
-        them all, so scans of this relation stay interchangeable under scan
-        reuse (see module docstring for the wrong-results hazard)."""
-        yield from filters
 
     def _expand_paths(self) -> list[str]:
         """Multi-file inputs: a directory reads every ``*.pbf`` inside
@@ -272,15 +248,14 @@ class PbfDataSourceReader(DataSourceReader):
         out: list[PbfPartition] = []
         for path in self._expand_paths():
             spans = scan_blob_spans(path)
-            if self.validate:
-                headers = [s for s in spans if s.blob_type == "OSMHeader"]
-                if headers:
-                    req, _ = parse_header_block(read_blob(path, headers[0]))
-                    unsupported = set(req) - {"OsmSchema-V0.6", "DenseNodes"}
-                    if unsupported:
-                        raise ValueError(
-                            f"unsupported required PBF features in {path}: {unsupported}"
-                        )
+            headers = [s for s in spans if s.blob_type == "OSMHeader"]
+            if headers:
+                req, _ = parse_header_block(read_blob(path, headers[0]))
+                unsupported = set(req) - {"OsmSchema-V0.6", "DenseNodes"}
+                if unsupported:
+                    raise ValueError(
+                        f"unsupported required PBF features in {path}: {unsupported}"
+                    )
             data = [s for s in spans if s.blob_type == "OSMData"]
             if (self.must_strings or self.any_strings) and self.plan_prune:
                 keep = _probe_dictionaries(
@@ -288,7 +263,7 @@ class PbfDataSourceReader(DataSourceReader):
                     data,
                     self.must_strings or frozenset(),
                     self.any_strings,
-                    self.plan_prune_workers,
+                    min(16, os.cpu_count() or 1),
                 )
                 data = [s for s, k in zip(data, keep) if k]
             run: list[tuple[int, int]] = []
@@ -296,7 +271,7 @@ class PbfDataSourceReader(DataSourceReader):
             for s in data:
                 run.append((s.offset, s.size))
                 run_bytes += s.size
-                if run_bytes >= self.partition_bytes or len(run) >= self.partition_blobs:
+                if run_bytes >= _PARTITION_BYTES or len(run) >= _PARTITION_BLOBS:
                     out.append(PbfPartition(path, run))
                     run, run_bytes = [], 0
             if run:
@@ -353,29 +328,10 @@ class PbfDataSourceReader(DataSourceReader):
             )
         ]
 
-        arrow_types = {
-            "osmid": pa.int64(),
-            "osmtype": pa.int32(),
-            "tags": pa.map_(pa.string(), pa.string()),
-            "lon": pa.float64(),
-            "lat": pa.float64(),
-            "refs": pa.list_(pa.int64()),
-            "members": pa.list_(
-                pa.struct(
-                    [
-                        pa.field("ref", pa.int64(), nullable=False),
-                        pa.field("type", pa.int32(), nullable=False),
-                        pa.field("role", pa.string()),
-                    ]
-                )
-            ),
-            "version": pa.int32(),
-            "timestamp": pa.int64(),
-            "changeset": pa.int64(),
-        }
+        types = arrow_types(self.schema)
 
         def dense_array(name: str, dc: DenseColumns) -> "pa.Array":
-            t = arrow_types[name]
+            t = types[name]
             if name == "osmid":
                 return pa.array(dc.ids, type=t)
             if name == "osmtype":
@@ -399,7 +355,7 @@ class PbfDataSourceReader(DataSourceReader):
             return pa.nulls(dc.n, type=t)
 
         def way_array(name: str, wc: WayColumns) -> "pa.Array":
-            t = arrow_types[name]
+            t = types[name]
             if name == "osmid":
                 return pa.array(wc.ids, type=t)
             if name == "osmtype":
@@ -424,7 +380,7 @@ class PbfDataSourceReader(DataSourceReader):
             return pa.nulls(wc.n, type=t)
 
         def relation_array(name: str, rc: RelationColumns) -> "pa.Array":
-            t = arrow_types[name]
+            t = types[name]
             if name == "osmid":
                 return pa.array(rc.ids, type=t)
             if name == "osmtype":
@@ -462,37 +418,29 @@ class PbfDataSourceReader(DataSourceReader):
                 return pa.array(rc.changesets, type=t)
             return pa.nulls(rc.n, type=t)
 
-        # one python-level pass per requested column, plain attribute reads
-        def element_array(name: str, els: list) -> "pa.Array":
-            if name == "tags":
-                vals = [list(e.tags.items()) for e in els]
-            elif name == "members":
-                vals = [
-                    [{"ref": m[0], "type": m[1], "role": m[2]} for m in e.members]
-                    if e.members is not None
-                    else None
-                    for e in els
-                ]
-            else:
-                vals = [getattr(e, name) for e in els]
-            return pa.array(vals, type=arrow_types[name])
-
-        def column(name: str) -> "pa.Array":
-            chunks = [
-                dense_array(name, seg)
+        def segment_arrays(seg) -> "list[pa.Array]":
+            if isinstance(seg, list):  # plain (non-dense) Element rows
+                return record_batch(
+                    self.schema, lambda name: [getattr(e, name) for e in seg]
+                ).columns
+            build = (
+                dense_array
                 if isinstance(seg, DenseColumns)
-                else way_array(name, seg)
+                else way_array
                 if isinstance(seg, WayColumns)
-                else relation_array(name, seg)
-                if isinstance(seg, RelationColumns)
-                else element_array(name, seg)
-                for seg in segments
-            ]
-            if not chunks:
-                return pa.nulls(0, type=arrow_types[name])
-            return chunks[0] if len(chunks) == 1 else pa.concat_arrays(chunks)
+                else relation_array
+            )
+            return [build(name, seg) for name in fields]
 
-        arrays = [column(name) for name in fields]
+        chunks = [segment_arrays(seg) for seg in segments]
+        arrays = [
+            pa.nulls(0, type=types[name])
+            if not chunks
+            else chunks[0][i]
+            if len(chunks) == 1
+            else pa.concat_arrays([c[i] for c in chunks])
+            for i, name in enumerate(fields)
+        ]
         yield pa.RecordBatch.from_arrays(arrays, names=fields)
 
 
@@ -504,22 +452,7 @@ class PbfDataSource(DataSource):
         return "osmpbf"
 
     def schema(self) -> StructType:
-        # the 'columns' option is the relation-level projection: Spark's
-        # Python DataSource API (4.1) has no column-pruning pushdown, so a
-        # .select() above the scan still decodes and ships every wire
-        # field.  Passing the needed subset here makes the pruning REAL —
-        # the reader skips the packed tag/ref payload decode and never
-        # builds the dropped Arrow arrays (reference field-decode pruning,
-        # primitives.py:23-29, end-to-end).
-        raw = self.options.get("columns")
-        if raw:
-            wanted = [c.strip() for c in str(raw).split(",") if c.strip()]
-            by_name = {f.name: f for f in PBF_SCHEMA.fields}
-            unknown = [c for c in wanted if c not in by_name]
-            if unknown:
-                raise ValueError(f"unknown pbf columns: {unknown}")
-            return StructType([by_name[f.name] for f in PBF_SCHEMA.fields if f.name in wanted])
-        return PBF_SCHEMA
+        return prune_schema(PBF_SCHEMA, self.options.get("columns"), "osmpbf")
 
     def reader(self, schema: StructType) -> PbfDataSourceReader:
         return PbfDataSourceReader(schema, self.options)
@@ -528,64 +461,29 @@ class PbfDataSource(DataSource):
         return OsmPbfSimpleStreamReader(schema, dict(self.options))
 
 
-class OsmPbfSimpleStreamReader(SimpleDataSourceStreamReader):
+class OsmPbfSimpleStreamReader(DirectoryWatcher):
     """Directory watcher over ``.pbf`` extracts — the bulk twin of the
-    ``.osc`` changefile watcher (``sources/xml.py:OsmXmlSimpleStreamReader``,
-    same offset contract): each file that appears under ``path`` with a
-    lexicographically LATER basename is emitted exactly once.  The offset
-    is the last processed file's basename, so ``readBetweenOffsets``
-    replays any (start, end] window deterministically for recovery, and
-    files must arrive with ever-increasing zero-padded names (the
-    replication/epoch-drop contract).  The unit of progress is the FILE;
-    within a file the decode reuses the batch reader's blob planning and
-    columnar decode verbatim, so streamed rows are byte-identical to a
-    batch scan of the same file.  Completes the bulk+diff streaming
-    story: epoch extracts stream through here, minutely diffs through
-    the ``.osc`` watcher, and the same CDC fold downstream consumes both."""
+    ``.osc`` changefile watcher (``sources/xml.py:OsmXmlSimpleStreamReader``;
+    both share the offset contract of ``sources/_watch.py``).  Files must
+    arrive with ever-increasing zero-padded names (the replication/epoch-drop
+    contract).  Within a file the decode reuses the batch reader's blob
+    planning and columnar decode verbatim, so streamed rows are
+    byte-identical to a batch scan of the same file.  Completes the
+    bulk+diff streaming story: epoch extracts stream through here, minutely
+    diffs through the ``.osc`` watcher, and the same CDC fold downstream
+    consumes both."""
 
-    def __init__(self, schema: StructType, options: dict):
-        self.schema = schema
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("osmpbf stream source requires a directory path")
-        self.options = dict(options)
-        # arrival-batch cap (opt-in): the simple-reader wrapper pickles a
-        # whole microbatch's rows on the driver, so a bulk multi-epoch
-        # drop (or a first start against a populated directory) should be
-        # rationed — with the cap set, the offset only advances past the
-        # first N new files per microbatch; the rest arrive in later
-        # triggers.  It stays OPT-IN (0 = unlimited) because the simple
-        # stream reader plans exactly one read() per availableNow run —
-        # a default cap would make drain-everything tests/jobs stop after
-        # one file per run.  Set it on any continuously-triggered watcher
-        # over big epoch extracts.  Looked up case-insensitively: Spark
-        # lowercases option keys (sources/_watch.py:get_option).
-        from osmdatapy_spark.sources._watch import get_option
-
-        self.max_files = int(get_option(options, "maxFilesPerTrigger", "0"))
-        if self.max_files < 0:
-            raise ValueError("osmpbf stream source: maxFilesPerTrigger must be >= 0")
-
-    def initialOffset(self) -> dict:
-        return {"last": ""}
-
-    def _all_files(self) -> "list[str]":
-        from osmdatapy_spark.sources._watch import list_watched_files
-
-        return list_watched_files(self.path, (".pbf",), "osmpbf")
+    source = "osmpbf"
+    suffixes = (".pbf",)
 
     def _rows(self, files: "list[str]") -> "list[tuple]":
-        # a LIST, not a generator: the simple-reader wrapper prefetches and
-        # PICKLES the batch to cache it against replay.  Bounded by
-        # per-microbatch extract size — read() rations arrivals to
-        # maxFilesPerTrigger files (default 1 epoch file) per microbatch;
-        # a planet-bulk initial load belongs on the batch reader.
+        # Bounded by per-microbatch extract size — set maxFilesPerTrigger
+        # to ration epoch files per microbatch; a planet-bulk initial load
+        # belongs on the batch reader.
         fields = [f.name for f in self.schema.fields]
         out: list[tuple] = []
         for path in files:
-            opts = dict(self.options)
-            opts["path"] = path
-            r = PbfDataSourceReader(self.schema, opts)
+            r = PbfDataSourceReader(self.schema, {**self.options, "path": path})
             for part in r.partitions():
                 for batch in r.read(part):
                     for row in batch.to_pylist():
@@ -608,43 +506,6 @@ class OsmPbfSimpleStreamReader(SimpleDataSourceStreamReader):
                         out.append(tuple(vals))
         return out
 
-    def read(self, start: dict):
-        import os
-
-        new = [f for f in self._all_files() if os.path.basename(f) > start["last"]]
-        if self.max_files > 0:
-            new = new[: self.max_files]
-        if not new:
-            return [], start
-        end = {"last": os.path.basename(new[-1])}
-        return self._rows(new), end
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> "list[tuple]":
-        # recovery replay of a committed (start, end] window — the cap was
-        # already applied when the window was planned, so no cap here
-        import os
-
-        files = [
-            f
-            for f in self._all_files()
-            if start["last"] < os.path.basename(f) <= end["last"]
-        ]
-        return self._rows(files)
-
-
-_REGISTERED: set[int] = set()
-
-
-def register(spark: SparkSession) -> None:
-    """Idempotent per-session registration.  Also enables Spark 4's Python
-    data-source filter pushdown (runtime-settable; a reader implementing
-    ``pushFilters`` errors if the flag is off)."""
-    key = id(spark)
-    if key not in _REGISTERED:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        spark.dataSource.register(PbfDataSource)
-        _REGISTERED.add(key)
-
 
 def read_pbf(
     spark: SparkSession,
@@ -666,19 +527,16 @@ def read_pbf(
     head) so they never become tasks — the scan then only promises
     elements that can carry ALL the keys; pair it with the matching tag
     filter."""
-    register(spark)
-    reader = spark.read.format("osmpbf")
-    if osmtypes is not None:
-        reader = reader.option("osmtypes", ",".join(str(t) for t in sorted(osmtypes)))
-    if columns is not None:
-        reader = reader.option("columns", ",".join(columns))
-    if must_tag_keys:
-        reader = reader.option("must_tag_keys", ",".join(sorted(must_tag_keys)))
-    if any_tag_keys:
-        reader = reader.option("any_tag_keys", ",".join(sorted(any_tag_keys)))
-    if (must_tag_keys or any_tag_keys) and plan_prune:
-        reader = reader.option("plan_prune", "true")
-    return reader.load(path)
+    return load(
+        spark,
+        PbfDataSource,
+        path,
+        osmtypes=osmtypes,
+        columns=columns,
+        must_tag_keys=must_tag_keys,
+        any_tag_keys=any_tag_keys,
+        plan_prune=plan_prune,
+    )
 
 
 def read_pbf_stream(
@@ -714,62 +572,14 @@ def read_pbf_stream(
     blocks before their elements ever enter a microbatch — the right
     shape for a tag-focused epoch watcher, where most of each extract is
     irrelevant)."""
-    register(spark)
-    reader = spark.readStream.format("osmpbf")
-    if max_files_per_trigger > 0:
-        reader = reader.option("maxFilesPerTrigger", str(int(max_files_per_trigger)))
-    if osmtypes is not None:
-        reader = reader.option("osmtypes", ",".join(str(t) for t in sorted(osmtypes)))
-    if columns is not None:
-        reader = reader.option("columns", ",".join(columns))
-    if must_tag_keys:
-        reader = reader.option("must_tag_keys", ",".join(sorted(must_tag_keys)))
-    if any_tag_keys:
-        reader = reader.option("any_tag_keys", ",".join(sorted(any_tag_keys)))
-    return reader.load(path)
-
-
-def read_pbf_tables(spark: SparkSession, path: str) -> dict[str, DataFrame]:
-    """Split the unified scan into the engine's bronze tables (SURVEY §1.5):
-
-    - ``elements(osmid, osmtype, tags, version, timestamp, changeset)``
-    - ``nodes(osmid, lon, lat)`` — the reference's geometry cache
-      (``osmdata.py:127-133``) as a plain table
-    - ``way_refs(way_id, pos, node_id)`` — exploded membership
-    - ``rel_members(rel_id, pos, member_id, member_type, role)``
-
-    Each branch gets its OWN relation (a fresh ``read_pbf`` call): filter
-    pushdown is stateful per reader instance, so branches sharing one
-    relation inside one plan would clobber each other's pushed ``osmtype``
-    sets.  Each branch then pushes its own kind filter and pruned columns —
-    the nodes branch never decodes way/relation wire fields.  At scale,
-    persist these as partitioned parquet (bronze) and all downstream
-    queries get parquet-native pruning."""
-    elements = read_pbf(spark, path).select(
-        "osmid", "osmtype", "tags", "refs", "members", "version", "timestamp", "changeset"
+    return load(
+        spark,
+        PbfDataSource,
+        path,
+        stream=True,
+        maxFilesPerTrigger=max_files_per_trigger,
+        osmtypes=osmtypes,
+        columns=columns,
+        must_tag_keys=must_tag_keys,
+        any_tag_keys=any_tag_keys,
     )
-    nodes = read_pbf(
-        spark, path, osmtypes={0}, columns=["osmid", "lon", "lat"]
-    )
-    way_refs = (
-        read_pbf(spark, path, osmtypes={1}, columns=["osmid", "refs"])
-        .select("osmid", F.posexplode("refs").alias("pos", "node_id"))
-        .select(col("osmid").alias("way_id"), "pos", "node_id")
-    )
-    rel_members = (
-        read_pbf(spark, path, osmtypes={2}, columns=["osmid", "members"])
-        .select("osmid", F.posexplode("members").alias("pos", "m"))
-        .select(
-            col("osmid").alias("rel_id"),
-            "pos",
-            col("m.ref").alias("member_id"),
-            col("m.type").alias("member_type"),
-            col("m.role").alias("role"),
-        )
-    )
-    return {
-        "elements": elements,
-        "nodes": nodes,
-        "way_refs": way_refs,
-        "rel_members": rel_members,
-    }

@@ -17,7 +17,7 @@ file, and bulk data belongs in PBF or bronze parquet.  That mirrors the
 osmium ecosystem, where XML is the interchange/diff format and PBF the
 bulk format.  Parsing is ``iterparse`` streaming with element.clear()
 — memory stays bounded however large one file is — and rows leave
-Python as Arrow RecordBatches of ``batch_rows`` elements, never
+Python as Arrow RecordBatches of ``_BATCH_ROWS`` elements, never
 per-row pickling.
 """
 
@@ -28,18 +28,17 @@ import gzip
 from typing import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StringType, StructField, StructType
 
+from osmdatapy_spark.sources._row import load, parse_osmtypes, prune_schema, record_batch
+from osmdatapy_spark.sources._watch import DirectoryWatcher
 from osmdatapy_spark.sources.pbf import PBF_SCHEMA
 
 _TYPE_CODE = {"node": 0, "way": 1, "relation": 2}
 _ACTIONS = ("create", "modify", "delete")
+_SUFFIXES = (".osm", ".osc", ".osm.gz", ".osc.gz", ".osm.bz2", ".osc.bz2")
+_BATCH_ROWS = 20_000
 
 OSC_SCHEMA = StructType(list(PBF_SCHEMA.fields) + [StructField("action", StringType(), False)])
 
@@ -94,8 +93,8 @@ def iter_osm_xml(
     carry the unified-schema fields; ``<delete>`` entries are typically
     skeleton elements (id only) and come through with empty tags.
 
-    ``osmtypes`` / ``columns`` are the PBF source's pruning contract
-    (sources/pbf.py read options) on the XML side: non-requested element
+    ``osmtypes`` / ``columns`` are the shared pruning contract
+    (``sources/_row.py``) on the XML side: non-requested element
     KINDS are skipped before any child walk or dict build, and dropped
     COLUMNS skip their parse work (the tag/nd/member child scans and the
     int/float attribute conversions — iterparse must still stream the
@@ -190,9 +189,7 @@ class OsmXmlDataSourceReader(DataSourceReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("osmxml source requires a path")
-        self.batch_rows = int(options.get("batch_rows", 20_000))
-        self.is_osc = options.get("osc", "false").lower() == "true"
-        self.osmtypes = _parse_osmtypes(options.get("osmtypes"))
+        self.osmtypes = parse_osmtypes(options.get("osmtypes"))
 
     def partitions(self) -> Sequence[_XmlPartition]:
         import glob
@@ -205,8 +202,7 @@ class OsmXmlDataSourceReader(DataSourceReader):
             files = sorted(
                 f
                 for f in glob.glob(os.path.join(p, "*"))
-                if f.endswith((".osm", ".osc", ".osm.gz", ".osc.gz", ".osm.bz2", ".osc.bz2"))
-                and not os.path.basename(f).startswith(".")
+                if f.endswith(_SUFFIXES) and not os.path.basename(f).startswith(".")
             )
         else:
             files = sorted(glob.glob(p)) or [p]
@@ -215,150 +211,54 @@ class OsmXmlDataSourceReader(DataSourceReader):
         return [_XmlPartition(f) for f in files]
 
     def read(self, partition: _XmlPartition) -> Iterator:
-        import pyarrow as pa
+        def to_batch(rows: list[dict]):
+            return record_batch(self.schema, lambda name: [r[name] for r in rows])
 
-        fields = [f.name for f in self.schema.fields]
-        arrow_types = {
-            "osmid": pa.int64(),
-            "osmtype": pa.int32(),
-            "tags": pa.map_(pa.string(), pa.string()),
-            "lon": pa.float64(),
-            "lat": pa.float64(),
-            "refs": pa.list_(pa.int64()),
-            "members": pa.list_(
-                pa.struct(
-                    [
-                        pa.field("ref", pa.int64(), nullable=False),
-                        pa.field("type", pa.int32(), nullable=False),
-                        pa.field("role", pa.string()),
-                    ]
-                )
-            ),
-            "version": pa.int32(),
-            "timestamp": pa.int64(),
-            "changeset": pa.int64(),
-            "action": pa.string(),
-        }
-
-        def to_batch(rows: list[tuple[str, dict]]):
-            def column(name: str) -> list:
-                if name == "action":
-                    return [a for a, _ in rows]
-                if name == "tags":
-                    return [list(r["tags"].items()) for _, r in rows]
-                if name == "members":
-                    return [
-                        [{"ref": m[0], "type": m[1], "role": m[2]} for m in r["members"]]
-                        if r["members"] is not None
-                        else None
-                        for _, r in rows
-                    ]
-                return [r[name] for _, r in rows]
-
-            return pa.RecordBatch.from_arrays(
-                [pa.array(column(n), type=arrow_types[n]) for n in fields], names=fields
-            )
-
-        buf: list[tuple[str, dict]] = []
-        # fields IS the pruned column set: schema() already dropped the
-        # unrequested columns, so the parse skips their work and to_batch
-        # never builds their Arrow arrays — PBF-source contract parity
+        buf: list[dict] = []
+        # the schema IS the pruned column set: schema() already dropped
+        # the unrequested columns, so the parse skips their work and
+        # to_batch never builds their Arrow arrays
         for action, row in iter_osm_xml(
-            partition.path, osmtypes=self.osmtypes, columns=fields
+            partition.path, osmtypes=self.osmtypes, columns=self.schema.fieldNames()
         ):
-            buf.append((action, row))
-            if len(buf) >= self.batch_rows:
+            row["action"] = action
+            buf.append(row)
+            if len(buf) >= _BATCH_ROWS:
                 yield to_batch(buf)
                 buf = []
         if buf:
             yield to_batch(buf)
 
 
-class OsmXmlSimpleStreamReader(SimpleDataSourceStreamReader):
+class OsmXmlSimpleStreamReader(DirectoryWatcher):
     """Streaming face of the osmxml source: watch a DIRECTORY of
     ``.osc``/``.osm`` files and emit each file's elements exactly once —
     the planet minutely/hourly-diff watcher (osmosis' replication
     pipeline) as a Structured Streaming source, feeding the CDC fold
     (``osm_osc_apply`` / ``stream_upsert_latest``) incrementally.
 
-    Offset = the last processed file NAME: replication diffs are
-    sequence-numbered (``000/123/456.osc.gz``), so lexicographic file
-    order IS the replication order, the offset is a single scalar, and
-    ``readBetweenOffsets`` replays any (start, end] window
-    deterministically for recovery.  Files must be appended with
-    ever-increasing names (the replication contract); a name ≤ the
-    offset is never re-read.  The unit of progress is the FILE — the
-    same non-splittable-XML positioning as the batch reader."""
+    Replication diffs are sequence-numbered (``000/123/456.osc.gz``), so
+    lexicographic file order IS the replication order and the offset
+    (``sources/_watch.py``) is a single scalar.  Files must be appended
+    with ever-increasing names (the replication contract); a name ≤ the
+    offset is never re-read.  The unit of progress is the FILE — the same
+    non-splittable-XML positioning as the batch reader.  Replication
+    diffs are small by contract, so ``maxFilesPerTrigger`` is needed only
+    for a continuously-triggered watcher over a deep backlog."""
 
-    def __init__(self, schema: StructType, options: dict):
-        self.schema = schema
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("osmxml stream source requires a directory path")
-        self.osmtypes = _parse_osmtypes(options.get("osmtypes"))
-        self.fields = [f.name for f in schema.fields]
-        # optional arrival ration (same opt-in contract as the pbf
-        # watcher): 0 = unlimited; set it when pointing a continuously-
-        # triggered watcher at a deep backlog of diffs.  .osc replication
-        # diffs are small by contract, so unlimited is the sane default.
-        # Looked up case-insensitively: Spark lowercases option keys
-        # (sources/_watch.py:get_option).
-        from osmdatapy_spark.sources._watch import get_option
-
-        self.max_files = int(get_option(options, "maxFilesPerTrigger", "0"))
-        if self.max_files < 0:
-            raise ValueError("osmxml stream source: maxFilesPerTrigger must be >= 0")
-
-    def initialOffset(self) -> dict:
-        return {"last": ""}
-
-    def _all_files(self) -> "list[str]":
-        from osmdatapy_spark.sources._watch import list_watched_files
-
-        return list_watched_files(
-            self.path,
-            (".osm", ".osc", ".osm.gz", ".osc.gz", ".osm.bz2", ".osc.bz2"),
-            "osmxml",
-        )
+    source = "osmxml"
+    suffixes = _SUFFIXES
 
     def _rows(self, files: "list[str]") -> "list[tuple]":
-        # a LIST, not a generator: the simple-reader wrapper prefetches
-        # and PICKLES the batch to cache it against replay — bounded by
-        # per-microbatch diff size (replication diffs are small by
-        # contract; bulk loads go through the batch/PBF path)
-        has_action = "action" in self.fields
-        data_fields = [f for f in self.fields if f != "action"]
+        osmtypes = parse_osmtypes(self.options.get("osmtypes"))
+        fields = self.schema.fieldNames()
+        data_fields = [f for f in fields if f != "action"]
         out = []
         for path in files:
-            for action, row in iter_osm_xml(
-                path, osmtypes=self.osmtypes, columns=data_fields
-            ):
-                vals = [row.get(f) for f in data_fields]
-                if has_action:
-                    vals.append(action)
-                out.append(tuple(vals))
+            for action, row in iter_osm_xml(path, osmtypes=osmtypes, columns=data_fields):
+                row["action"] = action
+                out.append(tuple(row[f] for f in fields))
         return out
-
-    def read(self, start: dict):
-        import os
-
-        new = [f for f in self._all_files() if os.path.basename(f) > start["last"]]
-        if self.max_files > 0:
-            new = new[: self.max_files]
-        if not new:
-            return [], start
-        end = {"last": os.path.basename(new[-1])}
-        return self._rows(new), end
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> "list[tuple]":
-        import os
-
-        files = [
-            f
-            for f in self._all_files()
-            if start["last"] < os.path.basename(f) <= end["last"]
-        ]
-        return self._rows(files)
 
 
 class OsmXmlDataSource(DataSource):
@@ -369,42 +269,14 @@ class OsmXmlDataSource(DataSource):
         return "osmxml"
 
     def schema(self) -> StructType:
-        base = (
-            OSC_SCHEMA
-            if self.options.get("osc", "false").lower() == "true"
-            else PBF_SCHEMA
-        )
-        # the 'columns' option is the relation-level projection — same
-        # contract as the PBF source (sources/pbf.py schema()): the Python
-        # DataSource API has no pruning pushdown, so a .select() above the
-        # scan would still parse and ship every field; pruning HERE makes
-        # the reader skip the per-element tag/ref/member child walks and
-        # never build the dropped Arrow arrays.
-        raw = self.options.get("columns")
-        if raw:
-            wanted = [c.strip() for c in str(raw).split(",") if c.strip()]
-            by_name = {f.name: f for f in base.fields}
-            unknown = [c for c in wanted if c not in by_name]
-            if unknown:
-                raise ValueError(f"unknown osmxml columns: {unknown}")
-            return StructType([by_name[f.name] for f in base.fields if f.name in wanted])
-        return base
+        osc = self.options.get("osc", "false").lower() == "true"
+        return prune_schema(OSC_SCHEMA if osc else PBF_SCHEMA, self.options.get("columns"), "osmxml")
 
     def reader(self, schema: StructType) -> OsmXmlDataSourceReader:
         return OsmXmlDataSourceReader(schema, dict(self.options))
 
     def simpleStreamReader(self, schema: StructType) -> OsmXmlSimpleStreamReader:
         return OsmXmlSimpleStreamReader(schema, dict(self.options))
-
-
-def _parse_osmtypes(raw) -> "set[int] | None":
-    if raw is None or raw == "":
-        return None
-    return {int(t) for t in str(raw).split(",") if t.strip() != ""}
-
-
-def register(spark: SparkSession) -> None:
-    spark.dataSource.register(OsmXmlDataSource)
 
 
 def read_osm_xml(
@@ -421,15 +293,7 @@ def read_osm_xml(
     ``columns`` restricts built fields — the same pruning contract as
     ``read_pbf`` (a ``.select()`` above a Python DataSource scan cannot
     push down, so the options are where pruning becomes real)."""
-    register(spark)
-    reader = spark.read.format("osmxml")
-    if osc:
-        reader = reader.option("osc", "true")
-    if osmtypes is not None:
-        reader = reader.option("osmtypes", ",".join(str(t) for t in sorted(osmtypes)))
-    if columns is not None:
-        reader = reader.option("columns", ",".join(columns))
-    return reader.load(path)
+    return load(spark, OsmXmlDataSource, path, osc=osc, osmtypes=osmtypes, columns=columns)
 
 
 def read_osm_xml_stream(
@@ -450,17 +314,16 @@ def read_osm_xml_stream(
     rations arrivals for a continuously-triggered watcher over a deep
     diff backlog (0 = unlimited, the default — an availableNow run plans
     exactly one read per run; same contract as ``read_pbf_stream``)."""
-    register(spark)
-    reader = spark.readStream.format("osmxml")
-    if max_files_per_trigger > 0:
-        reader = reader.option("maxFilesPerTrigger", str(int(max_files_per_trigger)))
-    if osc:
-        reader = reader.option("osc", "true")
-    if osmtypes is not None:
-        reader = reader.option("osmtypes", ",".join(str(t) for t in sorted(osmtypes)))
-    if columns is not None:
-        reader = reader.option("columns", ",".join(columns))
-    return reader.load(path)
+    return load(
+        spark,
+        OsmXmlDataSource,
+        path,
+        stream=True,
+        maxFilesPerTrigger=max_files_per_trigger,
+        osc=osc,
+        osmtypes=osmtypes,
+        columns=columns,
+    )
 
 
 def _element_xml(r: dict, names: dict) -> str:

@@ -65,3 +65,22 @@ def fixture_pbf(tmp_path_factory):
     )
     w.write(path, groups_per_block=3)  # >1 block exercises partition planning
     return path
+
+
+@pytest.fixture(scope="session")
+def fixture_osm_xml(fixture_pbf, tmp_path_factory):
+    """The ``fixture_pbf`` elements as ``.osm`` XML, for tests of the
+    contract both data sources share."""
+    from dataclasses import asdict
+
+    from osmdatapy_spark.sources.pbf_codec import decode_primitive_block, read_blob, scan_blob_spans
+    from osmdatapy_spark.sources.xml import write_osm_xml
+
+    path = tmp_path_factory.mktemp("xml") / "grid.osm"
+    spans = [s for s in scan_blob_spans(fixture_pbf) if s.blob_type == "OSMData"]
+    with open(path, "w") as f:
+        write_osm_xml(
+            (asdict(e) for s in spans for e in decode_primitive_block(read_blob(fixture_pbf, s))),
+            f,
+        )
+    return str(path)

@@ -3,12 +3,14 @@ bronze-table split, and the OSM facade end-to-end on a real .pbf file."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
 from osmdatapy_spark.engine import OSM
 from osmdatapy_spark.query import Query
-from osmdatapy_spark.sources.pbf import read_pbf, read_pbf_tables
+from osmdatapy_spark.sources.pbf import read_pbf
+from osmdatapy_spark.sources.xml import read_osm_xml
 from osmdatapy_spark.sources.pbf_codec import (
     decode_primitive_block,
     read_blob,
@@ -99,9 +101,30 @@ def test_spark_read(spark, fixture_pbf):
     assert counts == {0: 9, 1: 7, 2: 3}
 
 
-def test_osmtypes_option_prunes_kinds(spark, fixture_pbf):
-    assert read_pbf(spark, fixture_pbf, osmtypes={1}).count() == 7
-    assert read_pbf(spark, fixture_pbf, osmtypes={0, 2}).count() == 12
+@pytest.mark.parametrize("fmt", ["osmpbf", "osmxml"])
+def test_osmtypes_option_prunes_kinds(spark, fixture_pbf, fixture_osm_xml, fmt):
+    """The read options both sources share (sources/_row.py), over the
+    same 19 elements: ``osmtypes`` prunes element kinds and an unknown
+    ``columns`` entry raises."""
+    read, path = (read_pbf, fixture_pbf) if fmt == "osmpbf" else (read_osm_xml, fixture_osm_xml)
+    assert read(spark, path, osmtypes={1}).count() == 7
+    assert read(spark, path, osmtypes={0, 2}).count() == 12
+    with pytest.raises(Exception, match=f"unknown {fmt} columns"):
+        read(spark, path, columns=["osmid", "nope"]).count()
+
+
+def test_read_pbf_leaves_session_conf_unchanged(spark, fixture_pbf):
+    """Reading sets no session-wide conf: the source keeps pyspark's
+    default pushFilters (absorb nothing), so Python data-source filter
+    pushdown stays as the caller's session had it."""
+    key = "spark.sql.python.filterPushdown.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert read_pbf(spark, fixture_pbf).filter(col("osmtype") == 1).count() == 7
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_two_filters_one_relation_is_correct(spark, fixture_pbf):
@@ -115,11 +138,11 @@ def test_two_filters_one_relation_is_correct(spark, fixture_pbf):
 
 
 def test_bronze_tables(spark, fixture_pbf):
-    t = read_pbf_tables(spark, fixture_pbf)
-    assert t["nodes"].count() == 9
-    refs = {r["way_id"]: r["node_id"] for r in t["way_refs"].filter(col("pos") == 0).collect()}
+    osm = OSM.from_pbf(spark, fixture_pbf)
+    assert osm.nodes.count() == 9
+    refs = {r["way_id"]: r["node_id"] for r in osm.way_refs.filter(col("pos") == 0).collect()}
     assert refs[101] == 1 and refs[106] == 1
-    m = t["rel_members"].filter(col("rel_id") == 201).orderBy("pos").collect()
+    m = osm.rel_members.filter(col("rel_id") == 201).orderBy("pos").collect()
     assert [r["member_id"] for r in m] == [101, 102, 103, 104]
     assert m[0]["role"] == "outer"
 
@@ -218,6 +241,25 @@ def test_bronze_roundtrip(spark, fixture_pbf, tmp_path):
     segs_a = sorted((s["way_id"], s["seg"], s["source"], s["target"]) for s in osm.topology().collect())
     segs_b = sorted((s["way_id"], s["seg"], s["source"], s["target"]) for s in osm2.topology().collect())
     assert segs_a == segs_b
+
+
+def test_from_bronze_optional_tables(spark, fixture_pbf, tmp_path):
+    """A missing rel_members directory opens as None, but a corrupt
+    way_refs table raises instead of silently dropping way geometry."""
+    import shutil
+
+    from py4j.protocol import Py4JJavaError
+
+    bronze = tmp_path / "bronze"
+    OSM.from_pbf(spark, fixture_pbf).to_bronze(str(bronze))
+    shutil.rmtree(bronze / "rel_members")
+    osm = OSM.from_bronze(spark, str(bronze))
+    assert osm.rel_members is None
+    assert osm.way_refs.count() > 0
+    for f in (bronze / "way_refs").glob("*.parquet"):
+        f.write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError):
+        OSM.from_bronze(spark, str(bronze))
 
 
 def test_bucketed_bronze_join_has_no_exchange(spark, fixture_pbf, tmp_path):
@@ -459,10 +501,6 @@ def test_columns_option_prunes_relation_schema(spark, fixture_pbf):
     assert sorted(map(tuple, ((r[0], tuple(r[1])) for r in refs.collect()))) == sorted(
         map(tuple, ((r[0], tuple(r[1])) for r in full_refs.collect()))
     )
-    import pytest
-
-    with pytest.raises(Exception, match="unknown pbf columns"):
-        read_pbf(spark, fixture_pbf, columns=["osmid", "nope"]).count()
 
 
 def test_dense_columns_partial_metadata_parity():
@@ -684,43 +722,24 @@ def test_dictionary_prune_plans_fewer_partitions(tmp_path):
 
 def test_dictionary_prune_workers_invariant(tmp_path, monkeypatch):
     """The parallel probe (round-12: bounded process pool instead of a
-    sequential driver loop) must plan EXACTLY the same partitions at any
-    worker count — the pool changes wall-time only, never the keep-mask
-    or span order.  The pool threshold is forced to 1 so the 40-blob
+    sequential driver loop) must return EXACTLY the same keep-mask at any
+    worker count — the pool changes wall-time only, never the mask or
+    span order.  The pool threshold is forced to 1 so the 40-blob
     fixture actually exercises the process path."""
-    import pytest
-
     from osmdatapy_spark.sources import pbf as pbf_mod
-    from osmdatapy_spark.sources.pbf import PBF_SCHEMA, PbfDataSourceReader
+    from osmdatapy_spark.sources.pbf_codec import scan_blob_spans
 
     monkeypatch.setattr(pbf_mod, "_PROBE_POOL_MIN_SPANS", 1)
     p = _dict_prune_fixture(tmp_path)
+    spans = [s for s in scan_blob_spans(p) if s.blob_type == "OSMData"]
 
-    def plan(workers):
-        r = PbfDataSourceReader(
-            PBF_SCHEMA,
-            {
-                "path": p,
-                "must_tag_keys": "bridge",
-                "plan_prune": "true",
-                "plan_prune_workers": str(workers),
-            },
-        )
-        return [(part.path, tuple(part.spans)) for part in r.partitions()]
+    def keep(workers):
+        return pbf_mod._probe_dictionaries(p, spans, frozenset({"bridge"}), None, workers=workers)
 
-    sequential = plan(1)
-    assert plan(16) == sequential
-    assert plan(3) == sequential
-    with pytest.raises(ValueError, match="plan_prune_workers"):
-        PbfDataSourceReader(
-            PBF_SCHEMA,
-            {"path": p, "plan_prune": "true", "plan_prune_workers": "0"},
-        )
-    # inert knob (round-12 advice): with plan_prune off the option is
-    # unused, so a nonsense value must NOT raise — out-of-range or even
-    # unparseable
-    PbfDataSourceReader(PBF_SCHEMA, {"path": p, "plan_prune_workers": "0"})
-    PbfDataSourceReader(PBF_SCHEMA, {"path": p, "plan_prune_workers": "auto"})
+    sequential = keep(1)
+    assert sum(sequential) == 5
+    assert keep(16) == sequential
+    assert keep(3) == sequential
 
 
 def test_dictionary_prune_pool_inside_spark_planning(spark, tmp_path):

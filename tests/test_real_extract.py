@@ -49,11 +49,11 @@ def test_real_extract_invariants(spark, extract_path):
     from pyspark.sql import functions as F
     from pyspark.sql.functions import col
 
-    from osmdatapy_spark.sources.pbf import read_pbf_tables
+    from osmdatapy_spark.engine import OSM
 
-    t = read_pbf_tables(spark, extract_path)
-    nodes, way_refs, rel_members = t["nodes"], t["way_refs"], t["rel_members"]
-    elements = t["elements"]
+    osm = OSM.from_pbf(spark, extract_path)
+    nodes, way_refs, rel_members = osm.nodes, osm.way_refs, osm.rel_members
+    elements = osm.elements
 
     # node count > 0 and within a sane envelope for a country extract
     n_nodes = nodes.count()

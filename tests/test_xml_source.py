@@ -353,10 +353,6 @@ def test_xml_source_pruning_options(spark, tmp_path):
     assert all(r["tags"] == {} and r["refs"] is None and r["members"] is None for r in rows)
     assert [r["osmid"] for r in rows] == [1, 2, 101, 201]
 
-    # unknown column is an error, same as the PBF source
-    with pytest.raises(Exception, match="unknown osmxml columns"):
-        read_osm_xml(spark, p, columns=["osmid", "nope"]).collect()
-
     # pruning composes with .osc (action survives unless dropped)
     (tmp_path / "d.osc").write_text(OSC_DOC)
     osc = read_osm_xml(spark, str(tmp_path / "d.osc"), osc=True,
@@ -457,76 +453,60 @@ def test_write_osm_osc_rejects_bad_action(tmp_path):
         )
 
 
-def test_stream_offset_logic_is_basename_keyed(tmp_path):
-    """Driver-side watcher offset properties, no Spark needed: files sort
-    and select the end offset by BASENAME (a glob spanning directories
-    must not re-emit), duplicate basenames are rejected loudly, and
-    read/readBetweenOffsets agree on any (start, end] window."""
-    import pytest
+@pytest.mark.parametrize("fmt", ["osmxml", "osmpbf"])
+def test_stream_offset_logic_is_basename_keyed(tmp_path, fmt):
+    """Driver-side watcher offset properties both stream sources share
+    (sources/_watch.py), no Spark needed: files sort and select the end
+    offset by BASENAME (a glob spanning directories must not re-emit),
+    read/readBetweenOffsets agree on any (start, end] window, duplicate
+    basenames are rejected loudly, and so is a negative
+    maxFilesPerTrigger."""
+    import os
 
-    from osmdatapy_spark.sources.xml import OsmXmlSimpleStreamReader
-    from pyspark.sql.types import StructType, StructField, LongType
+    from osmdatapy_spark.sources.pbf import OsmPbfSimpleStreamReader, PBF_SCHEMA
+    from osmdatapy_spark.sources.pbf_codec import PbfWriter
+    from osmdatapy_spark.sources.xml import OSC_SCHEMA, OsmXmlSimpleStreamReader, write_osm_osc
 
-    schema = StructType([StructField("osmid", LongType())])
+    def write(path, nid):
+        if fmt == "osmxml":
+            node = {"osmid": nid, "osmtype": 0, "tags": {}, "lon": 1.0, "lat": 2.0}
+            with open(path, "w") as f:
+                write_osm_osc(iter([("create", node)]), f)
+        else:
+            w = PbfWriter()
+            w.add_dense_nodes([(nid, 1.0, 2.0, {})])
+            w.write(str(path))
 
+    suffix, reader, schema = (
+        (".osc", OsmXmlSimpleStreamReader, OSC_SCHEMA)
+        if fmt == "osmxml"
+        else (".osm.pbf", OsmPbfSimpleStreamReader, PBF_SCHEMA)
+    )
     a = tmp_path / "a"
     b = tmp_path / "b"
     a.mkdir(), b.mkdir()
     # basename order (000001 < 000002 < 000003) crosses directory order
-    (b / "000001.osc").write_text("<osmChange/>")
-    (a / "000002.osc").write_text("<osmChange/>")
-    (b / "000003.osc").write_text("<osmChange/>")
+    for d, nid in ((b, 1), (a, 2), (b, 3)):
+        write(d / f"00000{nid}{suffix}", nid)
 
-    r = OsmXmlSimpleStreamReader(schema, {"path": str(tmp_path / "*" / "*.osc")})
-    files = r._all_files()
-    import os
-
-    assert [os.path.basename(f) for f in files] == [
-        "000001.osc", "000002.osc", "000003.osc",
+    glob = str(tmp_path / "*" / f"*{suffix}")
+    r = reader(schema, {"path": glob})
+    assert [os.path.basename(f) for f in r._all_files()] == [
+        f"00000{i}{suffix}" for i in (1, 2, 3)
     ]
     rows, end = r.read({"last": ""})
-    assert end == {"last": "000003.osc"}
+    assert end == {"last": f"000003{suffix}"}
+    assert [t[0] for t in rows] == [1, 2, 3]  # osmid is field 0 of the schema
     # a second read from the recorded end emits nothing (no re-reads)
     rows2, end2 = r.read(end)
     assert rows2 == [] and end2 == end
     # replay any window deterministically
-    assert r.readBetweenOffsets({"last": "000001.osc"}, {"last": "000003.osc"}) == rows
+    assert r.readBetweenOffsets({"last": f"000001{suffix}"}, end) == rows[1:]
+
+    with pytest.raises(ValueError, match="maxFilesPerTrigger"):
+        reader(schema, {"path": glob, "maxFilesPerTrigger": "-1"})
 
     # duplicate basenames across directories are ambiguous — loud error
-    (a / "000001.osc").write_text("<osmChange/>")
-    with pytest.raises(ValueError, match="duplicate basenames"):
-        r._all_files()
-
-
-def test_pbf_stream_offset_logic_is_basename_keyed(tmp_path):
-    """Same offset discipline for the .pbf watcher."""
-    import os
-
-    import pytest
-
-    from osmdatapy_spark.sources.pbf import OsmPbfSimpleStreamReader, PBF_SCHEMA
-    from osmdatapy_spark.sources.pbf_codec import PbfWriter
-
-    a = tmp_path / "a"
-    b = tmp_path / "b"
-    a.mkdir(), b.mkdir()
-    for d, name, nid in ((b, "000001.osm.pbf", 1), (a, "000002.osm.pbf", 2)):
-        w = PbfWriter()
-        w.add_dense_nodes([(nid, 1.0, 2.0, {})])
-        w.write(str(d / name))
-
-    r = OsmPbfSimpleStreamReader(PBF_SCHEMA, {"path": str(tmp_path / "*" / "*.pbf")})
-    files = r._all_files()
-    assert [os.path.basename(f) for f in files] == ["000001.osm.pbf", "000002.osm.pbf"]
-    rows, end = r.read({"last": ""})
-    assert end == {"last": "000002.osm.pbf"}
-    assert [t[0] for t in rows] == [1, 2]  # osmid is field 0 of the schema
-    rows2, end2 = r.read(end)
-    assert rows2 == [] and end2 == end
-    assert r.readBetweenOffsets({"last": "000001.osm.pbf"}, end) == [
-        t for t in rows if t[0] == 2
-    ]
-
-    (a / "000001.osm.pbf").write_bytes((b / "000001.osm.pbf").read_bytes())
+    (a / f"000001{suffix}").write_bytes((b / f"000001{suffix}").read_bytes())
     with pytest.raises(ValueError, match="duplicate basenames"):
         r._all_files()

@@ -67,6 +67,37 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), kind="stable").reset_index(drop=True)
 
 
+def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> int:
+    """Check a Spark result against its DuckDB oracle the way the driver
+    does: same columns, same dtype kinds, same row count, same values in
+    canonical order.  Returns the row count; raises AssertionError naming
+    the first disagreement (with the first mismatching row for values)."""
+    a, b = canon(sdf), canon(odf)
+    if list(a.columns) != list(b.columns):
+        raise AssertionError(f"columns {list(a.columns)} vs {list(b.columns)}")
+    kind_bad = [
+        (c, str(sdf[c].dtype), str(odf[c].dtype))
+        for c in a.columns
+        if dtype_kind(sdf[c].dtype) != dtype_kind(odf[c].dtype)
+    ]
+    if kind_bad:
+        raise AssertionError(f"DTYPE KIND mismatch (driver hash would differ): {kind_bad}")
+    if len(a) != len(b):
+        raise AssertionError(f"rowcount {len(a)} vs {len(b)}")
+    try:
+        pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
+    except AssertionError as e:
+        msg = "VALUES differ: " + " | ".join(str(e).split("\n")[0:4])
+        neq = (a != b) & ~(a.isna() & b.isna())
+        bad = neq.any(axis=1)
+        if bad.any():
+            i = bad.idxmax()
+            msg += f"\n      spark row {i}: {a.loc[i].to_dict()}"
+            msg += f"\n      duck  row {i}: {b.loc[i].to_dict()}"
+        raise AssertionError(msg) from None
+    return len(a)
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -183,50 +214,24 @@ def main() -> int:
             n_fail += 1
             continue
         try:
-            a, b = canon(sdf), canon(odf)
+            n_rows = compare(sdf, odf)
+        except AssertionError as e:
+            print(f"FAIL  {name}: {e}")
+            n_fail += 1
+            continue
         except Exception as e:
             print(f"FAIL  {name}: CANON ERROR {e}")
             n_fail += 1
             continue
-        if list(a.columns) != list(b.columns):
-            print(f"FAIL  {name}: columns {list(a.columns)} vs {list(b.columns)}")
-            n_fail += 1
-            continue
-        kind_bad = [
-            (c, str(sdf[c].dtype), str(odf[c].dtype))
-            for c in a.columns
-            if dtype_kind(sdf[c].dtype) != dtype_kind(odf[c].dtype)
-        ]
-        if kind_bad:
-            print(f"FAIL  {name}: DTYPE KIND mismatch (driver hash would differ): {kind_bad}")
-            n_fail += 1
-            continue
-        if len(a) != len(b):
-            print(f"FAIL  {name}: rowcount {len(a)} vs {len(b)}")
-            n_fail += 1
-            continue
-        try:
-            pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
-            # spark and oracle walls SEPARATELY: r7's verdict flagged that
-            # the combined wall reads as engine perf (llm_tfidf_pairs
-            # printed 108s at sf0.1 of which 71s was DuckDB re-deriving
-            # TF-IDF) — anyone scanning sweep logs needs the split
-            print(
-                f"PASS  {name}: {len(a)} rows "
-                f"[spark {t_spark:.1f}s | oracle {time.time()-t0-t_spark:.1f}s]"
-            )
-            n_pass += 1
-        except AssertionError as e:
-            msg = str(e).split("\n")[0:4]
-            print(f"FAIL  {name}: VALUES differ: {' | '.join(msg)}")
-            # show first mismatching rows for debugging
-            neq = (a != b) & ~(a.isna() & b.isna())
-            bad = neq.any(axis=1)
-            if bad.any():
-                i = bad.idxmax()
-                print(f"      spark row {i}: {a.loc[i].to_dict()}")
-                print(f"      duck  row {i}: {b.loc[i].to_dict()}")
-            n_fail += 1
+        # spark and oracle walls SEPARATELY: r7's verdict flagged that the
+        # combined wall reads as engine perf (llm_tfidf_pairs printed 108s
+        # at sf0.1 of which 71s was DuckDB re-deriving TF-IDF) — anyone
+        # scanning sweep logs needs the split
+        print(
+            f"PASS  {name}: {n_rows} rows "
+            f"[spark {t_spark:.1f}s | oracle {time.time()-t0-t_spark:.1f}s]"
+        )
+        n_pass += 1
 
     print(f"\n== {n_pass} pass, {n_fail} fail, {n_rows_only} rows-only ==")
     return 1 if n_fail else 0

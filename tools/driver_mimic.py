@@ -23,10 +23,9 @@ sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "tools"))
 
 import duckdb  # noqa: E402
-import pandas as pd  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
-from check_oracle import canon, dtype_kind  # noqa: E402
+from check_oracle import compare  # noqa: E402
 from osmdatapy_spark.tables import TABLE_NAMES  # noqa: E402
 
 
@@ -66,18 +65,7 @@ def main() -> int:
             sdf = q[name](spark, sf).toPandas()
             spark.catalog.clearCache()
             odf = con.execute(o[name]).fetchdf()
-            a, b = canon(sdf), canon(odf)
-            assert list(a.columns) == list(b.columns), (
-                f"cols {list(a.columns)} vs {list(b.columns)}"
-            )
-            kb = [
-                (c, str(sdf[c].dtype), str(odf[c].dtype))
-                for c in a.columns
-                if dtype_kind(sdf[c].dtype) != dtype_kind(odf[c].dtype)
-            ]
-            assert not kb, f"dtype kinds {kb}"
-            assert len(a) == len(b), f"rows {len(a)} vs {len(b)}"
-            pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
+            compare(sdf, odf)
             print(f"PASS {name} [{time.time() - t0:.1f}s]")
             n_pass += 1
         except Exception as e:  # noqa: BLE001 — report every failure mode
