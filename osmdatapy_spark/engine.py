@@ -22,8 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
-from osmdatapy_spark.operators.rings import reorder_rings, ring_chains, ring_node_sequence
-from osmdatapy_spark.operators.topology import topology_segments, way_endpoints
+from osmdatapy_spark.operators.rings import ring_chains
+from osmdatapy_spark.operators.topology import topology_segments
 from osmdatapy_spark.operators.geometry import (
     linestring_wkt,
     point_wkt,
@@ -59,6 +59,60 @@ def _split_rel_members(rels: DataFrame) -> DataFrame:
     )
 
 
+def _with_way_coords(out: DataFrame, nodes: DataFrame) -> DataFrame:
+    """``out`` (element rows with ``refs``) plus ``coords``: each way's
+    ordered ARRAY<STRUCT<lon,lat>> (reference G2's coords gather,
+    _frame.py:103-105), in ONE pass over ``out``.  Joining ``out`` back to
+    coordinates built from a second use of it would scan its source twice:
+    Spark does not reuse a scan across two exchanges.
+
+    Every row explodes into its refs (``posexplode_outer`` keeps one row
+    for a row without refs), left-joins the nodes on node id and regroups
+    on ``(osmtype, osmid)``, so a node and a way that share an id stay
+    apart.  The row's other columns ride only its first exploded row, and
+    ``refs`` is rebuilt from the collected ``(pos, node id)`` pairs, so
+    neither crosses the node-id exchange once per ref.  The join key is
+    ``(node id, node id)``; a row without refs joins on ``(null, own id)``,
+    which matches nothing but hashes by the row's id (a bare null key would
+    send every such row to one shuffle partition).  Output: ``osmtype``,
+    ``osmid``, the other columns of ``out``, ``refs``, ``coords`` (null for
+    a row without refs); one row per ``(osmtype, osmid)``."""
+    rest = [f"`{c}`" for c in out.columns if c not in ("osmtype", "osmid", "refs")]
+    exploded = out.selectExpr(
+        "osmtype",
+        "osmid",
+        f"struct({', '.join(rest + ['refs IS NULL AS _norefs'])}) AS _row",
+        "posexplode_outer(refs) AS (_pos, _nid)",
+    ).selectExpr(
+        "osmtype",
+        "osmid",
+        "_pos",
+        "_nid",
+        "IF(coalesce(_pos, 0) = 0, _row, NULL) AS _row",
+        "coalesce(_nid, osmid) AS _salt",
+    )
+    pts = nodes.selectExpr("osmid AS _nid", "osmid AS _salt", "lon AS _lon", "lat AS _lat")
+    return (
+        exploded.join(pts, ["_nid", "_salt"], "left")
+        .groupBy("osmtype", "osmid")
+        .agg(
+            F.expr("first(_row, true) AS _row"),
+            F.expr(
+                "array_sort(collect_list(IF(_pos IS NULL, NULL, struct(_pos, _nid, _lon, _lat))))"
+                " AS _pts"
+            ),
+        )
+        .selectExpr(
+            "osmtype",
+            "osmid",
+            "_row.*",
+            "IF(_row._norefs, NULL, transform(_pts, p -> p._nid)) AS refs",
+            "IF(size(_pts) = 0, NULL, transform(_pts, p -> struct(p._lon AS lon, p._lat AS lat)))"
+            " AS coords",
+        )
+    )
+
+
 class OSM:
     """Query driver over the element data model (reference ``osmdata.py:16-39``)."""
 
@@ -85,11 +139,13 @@ class OSM:
 
                 spark = get_spark()
             pbf_meta = (spark, path)
-            # LAZY relations (round 4): each Python-DS relation costs
-            # ~0.15s of driver-side construction (py4j + worker schema
-            # round-trip), and a typical query touches 2 of the 4 bronze
-            # tables — the properties below build each on first access
-            # (measured: ~0.5s off every from_pbf+query wall)
+            # lazy relations: the properties below open each bronze
+            # table on first access, so a query pays only for the tables
+            # it touches.  Opening is a memo hit after the first OSM of
+            # the session over this file (sources/_row.py:load holds one
+            # relation handle per session, path and options), so a
+            # relation's setup cost — the JVM's Python planner round trips
+            # for schema and blob plan — is paid once per session
             elements = nodes = way_refs = rel_members = None
         elif nodes is None:
             raise ValueError("OSM needs a nodes table (or a .pbf path)")
@@ -606,33 +662,17 @@ class OSM:
             )
         out = out.withColumn("geom_type", gt)
         if q.ways and "refs" in out.columns:
-            coords = self._refs_coords(out.filter(col("osmtype") == OSMTYPE_WAY))
-            out = out.join(coords, "osmid", "left")
             line = linestring_wkt(col("coords"))
-            out = out.withColumn(
-                "geometry",
-                F.when(col("osmtype") == 0, point).when(
-                    (col("osmtype") == OSMTYPE_WAY) & (col("geom_type") >= GEOM_LINESTRING), line
-                ),
-            ).drop("coords")
+            out = _with_way_coords(out, nodes).select(
+                "osmid",
+                *[c for c in out.columns if c != "osmid"],
+                F.when(col("osmtype") == 0, point)
+                .when((col("osmtype") == OSMTYPE_WAY) & (col("geom_type") >= GEOM_LINESTRING), line)
+                .alias("geometry"),
+            )
         else:
             out = out.withColumn("geometry", F.when(col("osmtype") == 0, point))
         return out.drop(*[c for c in ("lon", "lat") if c in out.columns])
-
-    def _refs_coords(self, ways: DataFrame) -> DataFrame:
-        """refs ARRAY<LONG> → ordered ARRAY<STRUCT<lon,lat>> via posexplode +
-        coordinate join + re-collect (reference G2's coords gather,
-        _frame.py:103-105). One shuffle by node id, one by way id."""
-        exploded = ways.select("osmid", F.posexplode("refs").alias("pos", "node_id"))
-        joined = exploded.join(
-            self.nodes.select(col("osmid").alias("node_id"), "lon", "lat"), "node_id", "left"
-        )
-        return joined.groupBy("osmid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "lon", "lat"))),
-                lambda s: F.struct(s["lon"].alias("lon"), s["lat"].alias("lat")),
-            ).alias("coords")
-        )
 
     # -- composite pipelines ----------------------------------------------
 

@@ -4,7 +4,8 @@ Every entry is keyed by ``(id(owner), namespace, key)`` and holds its owner
 strongly, so the owner's id cannot be reused while the entry exists:
 
 - a ``SparkSession`` owns table and spread handles (``tables.load_table``,
-  ``suite._util.TS``) and managed persists (``managed_persist``);
+  ``suite._util.TS``), data-source registrations and relation handles
+  (``sources._row.load``) and managed persists (``managed_persist``);
 - the py4j gateway owns parsed expressions (``similarity._memo_expr``,
   ``geometry.way_geom_type``);
 - ``None`` (the process) owns trained ANN artifacts
@@ -15,9 +16,13 @@ results: every action still computes from its inputs.  A hit is one dict
 lookup plus an ``is owner`` check and makes no py4j call.  A miss prunes
 the entries of stopped owners, checking each distinct owner once.
 
-Datasets are assumed static while a session lives: a table handle freezes
-the parquet file listing.  Code that rewrites a dataset in-session calls
-``invalidate(sf_dir)``.
+Table datasets are assumed static while a session lives: a table handle
+freezes the parquet file listing.  Code that rewrites a dataset in-session
+calls ``invalidate(sf_dir)``.  Data-source relation handles are not
+assumed static: each entry carries the fingerprint (size, mtime, inode) of
+the files its read covers, and ``load`` replaces an entry whose files
+changed, since a held relation freezes its blob plan.  ``invalidate(path)``
+drops them too.
 """
 
 from __future__ import annotations

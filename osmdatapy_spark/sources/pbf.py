@@ -61,6 +61,7 @@ from pyspark.sql.types import (
 
 from osmdatapy_spark.sources._row import (
     arrow_types,
+    expand_paths,
     load,
     parse_osmtypes,
     prune_schema,
@@ -215,38 +216,12 @@ class PbfDataSourceReader(DataSourceReader):
         )
         self.plan_prune = options.get("plan_prune", "false").lower() == "true"
 
-    def _expand_paths(self) -> list[str]:
-        """Multi-file inputs: a directory reads every ``*.pbf`` inside
-        (sorted — deterministic partition order), a glob pattern expands,
-        a plain path stays itself.  The multi-extract case is how real
-        deployments store regional downloads (one .osm.pbf per region);
-        ids are globally unique across OSM extracts, so a union-of-files
-        scan is semantically a bigger extract."""
-        import glob
-        import os
-
-        if os.path.isdir(self.path):
-            # skip hidden dotfiles (macOS AppleDouble '._x.osm.pbf' sidecars
-            # end with .pbf but hold resource-fork bytes that would crash
-            # the framing scan — same rationale as sources/_watch.py)
-            files = sorted(
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if f.endswith(".pbf") and not f.startswith(".")
-            )
-            if not files:
-                raise ValueError(f"no .pbf files in directory {self.path}")
-            return files
-        if any(c in self.path for c in "*?["):
-            files = sorted(glob.glob(self.path))
-            if not files:
-                raise ValueError(f"glob {self.path!r} matched no files")
-            return files
-        return [self.path]
-
     def partitions(self) -> Sequence[PbfPartition]:
         out: list[PbfPartition] = []
-        for path in self._expand_paths():
+        # a directory or glob reads every extract it names: ids are
+        # globally unique across OSM extracts, so a union-of-files scan is
+        # semantically a bigger extract (regional downloads, one per file)
+        for path in expand_paths(self.path, PbfDataSource.suffixes):
             spans = scan_blob_spans(path)
             headers = [s for s in spans if s.blob_type == "OSMHeader"]
             if headers:
@@ -447,6 +422,8 @@ class PbfDataSourceReader(DataSourceReader):
 class PbfDataSource(DataSource):
     """``spark.read.format("osmpbf")`` — OSM PBF as a DataFrame."""
 
+    suffixes = (".pbf",)
+
     @classmethod
     def name(cls) -> str:
         return "osmpbf"
@@ -474,7 +451,7 @@ class OsmPbfSimpleStreamReader(DirectoryWatcher):
     consumes both."""
 
     source = "osmpbf"
-    suffixes = (".pbf",)
+    suffixes = PbfDataSource.suffixes
 
     def _rows(self, files: "list[str]") -> "list[tuple]":
         # Bounded by per-microbatch extract size — set maxFilesPerTrigger

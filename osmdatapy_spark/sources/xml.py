@@ -31,7 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StringType, StructField, StructType
 
-from osmdatapy_spark.sources._row import load, parse_osmtypes, prune_schema, record_batch
+from osmdatapy_spark.sources._row import (
+    expand_paths,
+    load,
+    parse_osmtypes,
+    prune_schema,
+    record_batch,
+)
 from osmdatapy_spark.sources._watch import DirectoryWatcher
 from osmdatapy_spark.sources.pbf import PBF_SCHEMA
 
@@ -192,23 +198,7 @@ class OsmXmlDataSourceReader(DataSourceReader):
         self.osmtypes = parse_osmtypes(options.get("osmtypes"))
 
     def partitions(self) -> Sequence[_XmlPartition]:
-        import glob
-        import os
-
-        p = self.path
-        if os.path.isdir(p):
-            # skip hidden dotfiles (AppleDouble sidecars etc. — same
-            # rationale as sources/_watch.py and the pbf batch expander)
-            files = sorted(
-                f
-                for f in glob.glob(os.path.join(p, "*"))
-                if f.endswith(_SUFFIXES) and not os.path.basename(f).startswith(".")
-            )
-        else:
-            files = sorted(glob.glob(p)) or [p]
-        if not files:
-            raise FileNotFoundError(f"no OSM XML files under {p!r}")
-        return [_XmlPartition(f) for f in files]
+        return [_XmlPartition(f) for f in expand_paths(self.path, _SUFFIXES)]
 
     def read(self, partition: _XmlPartition) -> Iterator:
         def to_batch(rows: list[dict]):
@@ -263,6 +253,8 @@ class OsmXmlSimpleStreamReader(DirectoryWatcher):
 
 class OsmXmlDataSource(DataSource):
     """``spark.read.format("osmxml")`` — OSM XML / osmChange as a DataFrame."""
+
+    suffixes = _SUFFIXES
 
     @classmethod
     def name(cls) -> str:

@@ -5,6 +5,8 @@
   not grow the session's cached-RDD set (``memo.managed_persist``);
 - memo entries hold their owner, prune stopped owners, can be
   invalidated per dataset directory, and serve hits without py4j calls;
+- data-source relation handles are one per session, path and options,
+  and are replaced when the files they read change;
 - degenerate quantizer literals fail loudly;
 - no module other than memo.py grows its own module-level cache."""
 
@@ -225,6 +227,112 @@ def test_memo_hits_make_no_py4j_calls(spark, monkeypatch):
     assert all(a is b for a, b in zip(warm, again))
     F.lit(1)  # the counter does see a real round trip
     assert len(calls) > 0
+
+
+def _write_nodes(path, n: int, base: int = 0) -> None:
+    from osmdatapy_spark.sources.pbf_codec import PbfWriter
+
+    w = PbfWriter()
+    w.add_dense_nodes([(base + i + 1, 10.0 + i * 0.001, 50.0, {}) for i in range(n)])
+    w.write(str(path))
+
+
+def _relation_keys(path) -> list:
+    return [k for k, _ in memo.items("relation") if k[1] == str(path)]
+
+
+def test_repeat_read_is_a_relation_memo_hit(spark, tmp_path, monkeypatch):
+    """A second batch read of one path with the same options returns the
+    session's held relation handle and makes no py4j call: building a
+    relation costs the JVM's Python planner a schema and a blob-plan round
+    trip, paid once per session."""
+    from py4j.java_gateway import GatewayClient
+
+    from osmdatapy_spark.sources.pbf import read_pbf
+
+    p = tmp_path / "a.osm.pbf"
+    _write_nodes(p, 5)
+    first = read_pbf(spark, str(p), osmtypes={0}, columns=["osmid", "lon", "lat"])
+    calls = []
+    send = GatewayClient.send_command
+    monkeypatch.setattr(
+        GatewayClient, "send_command", lambda self, *a, **k: calls.append(a) or send(self, *a, **k)
+    )
+    again = read_pbf(spark, str(p), osmtypes={0}, columns=["osmid", "lon", "lat"])
+    assert len(calls) == 0, f"{len(calls)} py4j round trips on a relation memo hit"
+    assert again is first
+    monkeypatch.undo()
+    # other options are another relation
+    assert read_pbf(spark, str(p)) is not first
+    assert first.count() == 5
+    memo.invalidate(str(p))
+
+
+def test_rewritten_file_returns_new_rows(spark, tmp_path):
+    """A held relation freezes its blob plan, so the entry carries the
+    file's fingerprint: rewriting the file at the same path replaces it."""
+    from osmdatapy_spark.sources.pbf import read_pbf
+
+    p = tmp_path / "a.osm.pbf"
+    _write_nodes(p, 5)
+    assert read_pbf(spark, str(p)).count() == 5
+    _write_nodes(p, 8, base=100)
+    df = read_pbf(spark, str(p))
+    assert sorted(r.osmid for r in df.collect()) == list(range(101, 109))
+    memo.invalidate(str(p))
+
+
+def test_directory_gaining_a_pbf_returns_new_rows(spark, tmp_path):
+    from osmdatapy_spark.sources.pbf import read_pbf
+
+    d = tmp_path / "extracts"
+    d.mkdir()
+    _write_nodes(d / "a.osm.pbf", 5)
+    assert read_pbf(spark, str(d)).count() == 5
+    _write_nodes(d / "b.osm.pbf", 3, base=100)
+    assert read_pbf(spark, str(d)).count() == 8
+    memo.invalidate(str(d))
+
+
+def test_invalidate_drops_relation_entry(spark, tmp_path):
+    from osmdatapy_spark.sources.pbf import read_pbf
+
+    p = tmp_path / "a.osm.pbf"
+    _write_nodes(p, 5)
+    first = read_pbf(spark, str(p))
+    assert len(_relation_keys(p)) == 1
+    memo.invalidate(str(p))
+    assert _relation_keys(p) == []
+    assert read_pbf(spark, str(p)) is not first
+    memo.invalidate(str(p))
+
+
+def test_stopped_session_relation_entries_pruned(spark, tmp_path):
+    """A relation entry of a stopped session goes on the next store
+    write, as every other session-owned entry does."""
+    from osmdatapy_spark.sources.pbf import read_pbf
+
+    p = tmp_path / "a.osm.pbf"
+    _write_nodes(p, 5)
+    key = ("osmpbf", str(p), ())
+    memo.put(_Owner(live=False), "relation", key, ((), "stale handle"))
+    assert len(_relation_keys(p)) == 1
+    assert read_pbf(spark, str(p)).count() == 5  # a miss: the store write prunes
+    held = [v[1] for k, v in memo.items("relation") if k == key]
+    assert len(held) == 1 and not isinstance(held[0], str)
+    memo.invalidate(str(p))
+
+
+def test_rewrite_loop_keeps_one_entry_per_key(spark, tmp_path):
+    from osmdatapy_spark.sources.pbf import read_pbf
+
+    p = tmp_path / "a.osm.pbf"
+    for n in (3, 4, 5, 6):
+        _write_nodes(p, n)
+        assert read_pbf(spark, str(p), osmtypes={0}).count() == n
+        assert read_pbf(spark, str(p)).count() == n
+    assert sorted(k[2] for k in _relation_keys(p)) == [(), (("osmtypes", "0"),)]
+    memo.invalidate(str(p))
 
 
 _CACHE_NAME = re.compile(r"MEMO|CACHE|^_LIVE$")

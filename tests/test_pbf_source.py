@@ -127,6 +127,19 @@ def test_read_pbf_leaves_session_conf_unchanged(spark, fixture_pbf):
         spark.conf.set(key, before)
 
 
+def test_derived_session_reads_both_sources(spark, fixture_pbf, fixture_osm_xml):
+    """A ``newSession()`` of a session that already registered the sources
+    registers and reads them too (Spark 4.1 checks a registration against
+    the JVM's active session, the parent), and the parent still reads."""
+    assert read_pbf(spark, fixture_pbf).count() == 19
+    assert read_osm_xml(spark, fixture_osm_xml).count() == 19
+    child = spark.newSession()
+    assert read_pbf(child, fixture_pbf).count() == 19
+    assert read_osm_xml(child, fixture_osm_xml).count() == 19
+    assert OSM.from_pbf(child, fixture_pbf).nodes.count() == 9
+    assert read_pbf(spark, fixture_pbf, osmtypes={1}).count() == 7
+
+
 def test_two_filters_one_relation_is_correct(spark, fixture_pbf):
     """Regression: scan reuse must not merge differently-filtered scans of
     one relation (the hazard that absorbed pushFilters state triggers —
@@ -912,3 +925,57 @@ def test_engine_query_pushes_keep_first_keys(spark, tmp_path):
         )
     ).collect()
     assert len(got_all) == 2000
+
+
+def test_way_geometry_parity_across_backings(spark, tmp_path):
+    """A nodes+ways geometry query gives the same rows through
+    ``from_pbf`` (single pass over the way side), ``from_tables`` (refs
+    inline, or only in ``way_refs``) and ``from_bronze``, on the corner
+    cases of the coordinate gather: a node and a way sharing id 101, a way
+    with empty refs, a way referencing a missing node and a one-node way."""
+    from osmdatapy_spark.sources.pbf_codec import PbfWriter
+
+    p = str(tmp_path / "corners.osm.pbf")
+    w = PbfWriter()
+    grid = [(i + 1, 10.0 + (i % 3) * 0.001, 50.0 + (i // 3) * 0.001, {}) for i in range(9)]
+    grid[4] = (5, 10.001, 50.001, {"amenity": "cafe"})
+    w.add_dense_nodes(grid + [(101, 11.0, 51.0, {"amenity": "bar"})])
+    w.add_way(101, [1, 2, 3], {"highway": "primary"})
+    w.add_way(106, [1, 3, 9, 7, 1], {"highway": "x", "building": "yes"})
+    w.add_way(108, [], {"highway": "empty"})
+    w.add_way(109, [1, 999], {"highway": "missing"})
+    w.add_way(110, [5], {"highway": "single"})
+    w.add_way(111, [2, 5], {"name": "untagged"})
+    w.write(p)
+
+    q = Query(nodes=True, ways=True, relations=False, keep={"amenity": [], "highway": []},
+              geometry=True)
+
+    def rows(osm):
+        return sorted(
+            tuple(r) for r in osm.query(q).select("osmid", "osmtype", "geom_type", "geometry").collect()
+        )
+
+    osm = OSM.from_pbf(spark, p)
+    got = rows(osm)
+    assert got == rows(OSM.from_tables(osm.elements, osm.nodes, osm.way_refs))
+    # without inline refs an empty way has no way_refs rows, so its refs
+    # and geom_type are null rather than [] and 0; its geometry is null
+    # either way
+    no_refs = rows(OSM.from_tables(osm.elements.drop("refs"), osm.nodes, osm.way_refs))
+    assert [(i, t, g) for i, t, _, g in got] == [(i, t, g) for i, t, _, g in no_refs]
+    osm.to_bronze(str(tmp_path / "bronze"))
+    assert got == rows(OSM.from_bronze(spark, str(tmp_path / "bronze")))
+    geom = {(r[0], r[1]): r[3] for r in got}
+    assert geom[(101, 0)] == "POINT (11.0000000 51.0000000)"
+    assert geom[(101, 1)] == (
+        "LINESTRING (10.0000000 50.0000000, 10.0010000 50.0000000, 10.0020000 50.0000000)"
+    )
+    assert geom[(5, 0)] == "POINT (10.0010000 50.0010000)"
+    assert geom[(106, 1)].startswith("LINESTRING (10.0000000 50.0000000, 10.0020000 50.0000000")
+    assert geom[(108, 1)] is None and geom[(110, 1)] is None
+    assert geom[(109, 1)] == "LINESTRING (10.0000000 50.0000000, null null)"
+    assert (111, 1) not in geom
+    # the PBF rows keep refs, rebuilt in order from the gathered pairs
+    refs = {r.osmid: r.refs for r in osm.query(q).filter(col("osmtype") == 1).collect()}
+    assert refs == {101: [1, 2, 3], 106: [1, 3, 9, 7, 1], 108: [], 109: [1, 999], 110: [5]}

@@ -4,6 +4,8 @@ designed minimum, and the JVM-only hot paths contain no Python nodes."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
@@ -67,6 +69,22 @@ def test_topology_two_shuffles(spark):
     )
     assert_plan(topology_segments(refs), max_exchanges=2, forbid_python=True)
     assert_plan(q(spark, "osm_topology_segments"), max_exchanges=3, forbid_python=True)
+
+
+def test_way_geometry_scans_the_way_side_once(spark, fixture_pbf):
+    # a ways-only highway geometry query reads the ways relation once and
+    # the nodes relation once: the coordinate gather is one pass over the
+    # query rows (engine._with_way_coords), not a join back to a second
+    # scan of them; rows without refs hash on their own id, not on null
+    from osmdatapy_spark.engine import OSM
+    from osmdatapy_spark.query import Query
+
+    q = Query(ways=True, nodes=False, relations=False, keep={"highway": []}, geometry=True)
+    df = OSM.from_pbf(spark, fixture_pbf).query(q)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BatchScan osmpbf") == 2, plan
+    assert re.search(r"hashpartitioning\(_nid#\d+L, _salt#", plan), plan
+    assert sorted(r.osmid for r in df.collect()) == [101, 102, 105]
 
 
 def test_token_stats_no_shuffle(spark):
