@@ -12,8 +12,13 @@ core schema and a ``tags MAP<STRING,STRING>`` column; way membership is
 Catalyst ``Column`` expressions so pushdown/pruning are free; the only
 Python-side kernels are the per-group ring chaining (``applyInPandas``)
 and the PBF blob decoder inside the custom data source.
+
+Importing the package installs ``_pyworker``'s zip-importer fingerprint
+check, so every Python worker that unpickles engine code stops re-reading
+``pyspark.zip``'s directory at the start of each task.
 """
 
+from osmdatapy_spark import _pyworker  # noqa: F401  (installs on import)
 from osmdatapy_spark.query import Query
 from osmdatapy_spark.engine import OSM
 from osmdatapy_spark.session import get_spark

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
+from osmdatapy_spark._pyworker import kernel
 from osmdatapy_spark.operators.rings import ring_chains
 from osmdatapy_spark.operators.topology import topology_segments
 from osmdatapy_spark.operators.geometry import (
@@ -76,7 +77,9 @@ def _with_way_coords(out: DataFrame, nodes: DataFrame) -> DataFrame:
     which matches nothing but hashes by the row's id (a bare null key would
     send every such row to one shuffle partition).  Output: ``osmtype``,
     ``osmid``, the other columns of ``out``, ``refs``, ``coords`` (null for
-    a row without refs); one row per ``(osmtype, osmid)``."""
+    a row without refs and for a way with a missing vertex: a node the
+    extract does not hold, as clipped extracts have); one row per
+    ``(osmtype, osmid)``."""
     rest = [f"`{c}`" for c in out.columns if c not in ("osmtype", "osmid", "refs")]
     exploded = out.selectExpr(
         "osmtype",
@@ -107,8 +110,8 @@ def _with_way_coords(out: DataFrame, nodes: DataFrame) -> DataFrame:
             "osmid",
             "_row.*",
             "IF(_row._norefs, NULL, transform(_pts, p -> p._nid)) AS refs",
-            "IF(size(_pts) = 0, NULL, transform(_pts, p -> struct(p._lon AS lon, p._lat AS lat)))"
-            " AS coords",
+            "IF(size(_pts) = 0 OR exists(_pts, p -> p._lon IS NULL OR p._lat IS NULL), NULL,"
+            " transform(_pts, p -> struct(p._lon AS lon, p._lat AS lat))) AS coords",
         )
     )
 
@@ -386,6 +389,7 @@ class OSM:
         )
         target, group, czx, with_meta = path, elements_per_group, codec, metadata
 
+        @kernel
         def write_partition(rows) -> None:
             from pyspark import TaskContext
 
@@ -629,11 +633,19 @@ class OSM:
         # way_refs table (bronze-tier fixtures) — attach arrays on demand
         if q.ways and "refs" not in out.columns and self.way_refs is not None:
             refs = self._way_ref_arrays()
+            # a way without way_refs rows has empty refs, as a PBF scan
+            # gives it ([] and geom_type 0, not null)
             out = out.join(
                 refs,
                 (out.osmid == refs.way_id) & (col("osmtype") == OSMTYPE_WAY),
                 "left",
-            ).drop("way_id")
+            ).drop("way_id").withColumn(
+                "refs",
+                F.when(
+                    col("osmtype") == OSMTYPE_WAY,
+                    F.coalesce(col("refs"), F.array().cast("array<long>")),
+                ),
+            )
         if q.nodes:
             if "lon" in out.columns:
                 # PBF scans carry node coords inline (the pruned elements

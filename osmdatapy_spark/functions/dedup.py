@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from osmdatapy_spark._pyworker import kernel
+
 
 def _perm_hash(perm: int, value: Column) -> Column:
     """Deterministic keyed hash for permutation `perm`: an 8-hex-char chunk
@@ -306,6 +308,7 @@ def connected_components(
     Returns (id, cluster); only nodes that appear in ``edges`` are
     returned — callers left-join and coalesce to default singletons."""
 
+    @kernel
     def _uf_partition(batches):
         import pandas as pd
 

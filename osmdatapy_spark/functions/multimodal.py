@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osmdatapy_spark._pyworker import kernel
+
 DECODE_META_SCHEMA = "doc_id long, n_bytes long, fake_width int, fake_height int"
 
 try:  # import-gated real pixel decoder (not present in every deployment)
@@ -120,6 +122,7 @@ def decode_binary_meta(
     slots the real path (``real_decode_meta``) in place of the md5 stub —
     the plumbing (schema, batching, partitioning) is identical."""
 
+    @kernel
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             meta = [decoder(b) for b in pdf[bin_col]]
@@ -155,6 +158,7 @@ def extract_features(
     downstream; no shuffle introduced."""
     schema = f"{id_col} long, " + ", ".join(f"f{j} double" for j in range(dim))
 
+    @kernel
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = [fake_features(b, dim) for b in pdf[bin_col]]
@@ -189,6 +193,7 @@ def resize_binary(
     Arrow buffers between JVM and Python, never per-row pickled.
     ``resizer`` slots ``real_resize`` (PIL-gated) over the same plumbing."""
 
+    @kernel
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
@@ -217,6 +222,7 @@ def sample_frames(
     flatMap-style expansion without an explode shuffle, and a real decoder
     (ffmpeg keyframe extraction) slots into the same loop."""
 
+    @kernel
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, digests, sizes = [], [], [], []

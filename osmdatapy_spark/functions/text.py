@@ -13,6 +13,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from osmdatapy_spark._pyworker import kernel
+
 # tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic (public-knowledge word lists)
 STOPWORDS: dict[str, list[str]] = {
@@ -173,6 +175,7 @@ def nfc_normalize(text: Column) -> Column:
 
     # no type hints: `from __future__ import annotations` stringifies
     # them, which pandas_udf's hint parser rejects
+    @kernel
     def _nfc(s):
         import unicodedata
 
@@ -254,6 +257,7 @@ def vocab_tokenize_counts(df, vocab: list[str], id_col: str = "doc_id", text_col
         by_first.setdefault(t[0], []).append(t)
     schema = f"{id_col} long, token string, n long"
 
+    @kernel
     def _batches(it):
         for pdf in it:
             ids: list = []

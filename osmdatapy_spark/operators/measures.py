@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from osmdatapy_spark._pyworker import kernel
+
 # bbox-cover replication guards for point_in_polygon_join: a ring whose
 # bbox spans more grid cells than this per axis — or whose TOTAL cover
 # (x-span × y-span replica rows) exceeds the product cap — fails loudly
@@ -526,6 +528,7 @@ def simplify_dp(
     tol2 = float(tol) * float(tol)
     schema = f"{id_col} long, n_in long, kept array<struct<lon:double,lat:double>>"
 
+    @kernel
     def batch(batches):
         import pandas as pd
 

@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osmdatapy_spark._pyworker import kernel
+
 RING_SCHEMA = (
     "rel_id long, way_id long, pos int, direction int, ring int, "
     "ring_role string, kind string"
@@ -170,6 +172,7 @@ def ring_chains(members: DataFrame) -> DataFrame:
         *([F.min("kind").alias("kind")] if has_kind else []),
     )
 
+    @kernel
     def batch(batches):
         for pdf in batches:
             rel_l, ring_l, nodes_l, role_l, kind_l = [], [], [], [], []
@@ -300,6 +303,7 @@ def assign_polygons(ring_coords: DataFrame) -> DataFrame:
         .agg(F.collect_list(F.struct("ring", "ring_role", "coords")).alias("rs"))
     )
 
+    @kernel
     def batch(batches):
         for pdf in batches:
             rel_l, ring_l, role_l, poly_l, coords_l = [], [], [], [], []

@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import col, pandas_udf
 
+from osmdatapy_spark._pyworker import kernel
+
 CRS_METADATA = {"crs": "EPSG:4326", "geometry_encoding": "WKB (ISO, little-endian)"}
 
 WKB_POINT = 1
@@ -120,6 +122,7 @@ def _is_null(v) -> bool:
 def wkt_to_wkb(wkt: Column) -> Column:
     """The engine's WKT dialect → ISO WKB, all five geometry types."""
 
+    @kernel
     def batch(s: pd.Series) -> pd.Series:
         return s.map(lambda v: None if _is_null(v) else _encode_wkt(v))
 
@@ -132,6 +135,7 @@ def wkt_to_wkb(wkt: Column) -> Column:
 def point_wkb(lon: Column, lat: Column) -> Column:
     """POINT WKB from lon/lat doubles — fully vectorized byte layout."""
 
+    @kernel
     def batch(x: pd.Series, y: pd.Series) -> pd.Series:
         n = len(x)
         buf = np.zeros((n, 21), np.uint8)
@@ -155,6 +159,7 @@ def _pts(points) -> np.ndarray:
 def linestring_wkb(coords: Column) -> Column:
     """LINESTRING WKB from an ordered ARRAY<STRUCT<lon,lat>>."""
 
+    @kernel
     def batch(s: pd.Series) -> pd.Series:
         return s.map(lambda pts: None if _is_null(pts) else _enc_linestring(_pts(pts)))
 
@@ -164,6 +169,7 @@ def linestring_wkb(coords: Column) -> Column:
 def polygon_wkb(rings: Column) -> Column:
     """POLYGON WKB from ARRAY<ARRAY<STRUCT<lon,lat>>> (outer ring first)."""
 
+    @kernel
     def batch(s: pd.Series) -> pd.Series:
         return s.map(lambda rs: None if _is_null(rs) else _enc_polygon([_pts(r) for r in rs]))
 
@@ -212,6 +218,7 @@ def wkb_info(wkb: Column) -> Column:
     """Decode WKB structure: geometry type code, total point count, first
     coordinate — the round-trip check that pins the byte layout."""
 
+    @kernel
     def batch(s: pd.Series) -> pd.DataFrame:
         rows = []
         for buf in s:

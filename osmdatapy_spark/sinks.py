@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from osmdatapy_spark._pyworker import kernel
+
 # in-progress part-file suffix for the non-destructive overwrite protocol
 # (write temps → job succeeds → delete old parts → rename temps)
 _TMP_SUFFIX = ".inprogress"
@@ -264,6 +266,7 @@ def write_geoparquet(
     cols = df.columns
     has_ll = "lon" in cols and "lat" in cols
 
+    @kernel
     def write_partition(batches):
         import pyarrow as pa
         import pyarrow.compute as pc

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StructField, StructType
 
+from osmdatapy_spark._pyworker import kernel
+
 OUTPUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType(), True),
@@ -136,6 +138,7 @@ def running_totals_tws_batch(events: DataFrame, chunks: int = 3) -> DataFrame:
     stream was batched, so the oracle is a plain GROUP BY."""
     import pandas as pd
 
+    @kernel
     def apply(pdf: "pd.DataFrame") -> "pd.DataFrame":
         proc = _make_processor()
         proc.init(_BatchHandle())

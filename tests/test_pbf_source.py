@@ -932,7 +932,8 @@ def test_way_geometry_parity_across_backings(spark, tmp_path):
     ``from_pbf`` (single pass over the way side), ``from_tables`` (refs
     inline, or only in ``way_refs``) and ``from_bronze``, on the corner
     cases of the coordinate gather: a node and a way sharing id 101, a way
-    with empty refs, a way referencing a missing node and a one-node way."""
+    with empty refs, a way referencing a missing node and a one-node way;
+    ``wkb=True`` encodes the same geometries."""
     from osmdatapy_spark.sources.pbf_codec import PbfWriter
 
     p = str(tmp_path / "corners.osm.pbf")
@@ -959,11 +960,11 @@ def test_way_geometry_parity_across_backings(spark, tmp_path):
     osm = OSM.from_pbf(spark, p)
     got = rows(osm)
     assert got == rows(OSM.from_tables(osm.elements, osm.nodes, osm.way_refs))
-    # without inline refs an empty way has no way_refs rows, so its refs
-    # and geom_type are null rather than [] and 0; its geometry is null
-    # either way
-    no_refs = rows(OSM.from_tables(osm.elements.drop("refs"), osm.nodes, osm.way_refs))
-    assert [(i, t, g) for i, t, _, g in got] == [(i, t, g) for i, t, _, g in no_refs]
+    # without inline refs an empty way has no way_refs rows; it still gets
+    # refs [] and geom_type 0, as the PBF path gives it
+    no_refs = OSM.from_tables(osm.elements.drop("refs"), osm.nodes, osm.way_refs)
+    assert got == rows(no_refs)
+    assert no_refs.query(q).filter(col("osmid") == 108).select("refs").first()[0] == []
     osm.to_bronze(str(tmp_path / "bronze"))
     assert got == rows(OSM.from_bronze(spark, str(tmp_path / "bronze")))
     geom = {(r[0], r[1]): r[3] for r in got}
@@ -974,8 +975,22 @@ def test_way_geometry_parity_across_backings(spark, tmp_path):
     assert geom[(5, 0)] == "POINT (10.0010000 50.0010000)"
     assert geom[(106, 1)].startswith("LINESTRING (10.0000000 50.0000000, 10.0020000 50.0000000")
     assert geom[(108, 1)] is None and geom[(110, 1)] is None
-    assert geom[(109, 1)] == "LINESTRING (10.0000000 50.0000000, null null)"
+    # a way with a vertex missing from the extract keeps its row, refs and
+    # geom_type; its geometry is null
+    assert geom[(109, 1)] is None
     assert (111, 1) not in geom
     # the PBF rows keep refs, rebuilt in order from the gathered pairs
     refs = {r.osmid: r.refs for r in osm.query(q).filter(col("osmtype") == 1).collect()}
     assert refs == {101: [1, 2, 3], 106: [1, 3, 9, 7, 1], 108: [], 109: [1, 999], 110: [5]}
+    assert {(r[0], r[1]): r[2] for r in got}[(109, 1)] == 2
+    # wkb=True encodes the same geometries, null where the WKT is null
+    wkb = {
+        (r.osmid, r.osmtype): r
+        for r in osm.query(q, wkb=True).select(
+            "osmid", "osmtype", "geometry", "geometry_wkb"
+        ).collect()
+    }
+    assert {k: r.geometry for k, r in wkb.items()} == geom
+    assert all((r.geometry is None) == (r.geometry_wkb is None) for r in wkb.values())
+    assert wkb[(109, 1)].geometry_wkb is None
+    assert bytes(wkb[(101, 1)].geometry_wkb)[:9] == b"\x01\x02\x00\x00\x00\x03\x00\x00\x00"

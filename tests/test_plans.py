@@ -87,6 +87,43 @@ def test_way_geometry_scans_the_way_side_once(spark, fixture_pbf):
     assert sorted(r.osmid for r in df.collect()) == [101, 102, 105]
 
 
+# py4j round trips of a warm PBF-extract build (``OSM.from_pbf(...).query``,
+# no action), as recorded: the benchmark's two extract shapes.  py4j's own
+# object-release commands (``m``/``d``) follow Python's garbage collector
+# and vary from run to run, so they are not counted.
+EXTRACT_PY4J_BUDGET = {"highway": 584, "amenity": 284}
+
+
+@pytest.mark.parametrize("cls", sorted(EXTRACT_PY4J_BUDGET))
+def test_extract_build_py4j_budget(spark, fixture_pbf, cls, monkeypatch):
+    from py4j.java_gateway import GatewayClient
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+    from osmdatapy_spark.engine import OSM
+    from osmdatapy_spark.query import Query
+
+    def build():
+        q = Query(nodes=cls == "amenity", ways=cls == "highway", keep={cls: []}, geometry=True)
+        return OSM.from_pbf(spark, fixture_pbf).query(q)
+
+    build()  # the session's relation handles and per-gateway expressions
+    release = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+    calls = []
+    send = GatewayClient.send_command
+
+    def counted(self, command, *args, **kwargs):
+        if not command.startswith(release):
+            calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    build()
+    monkeypatch.undo()
+    assert 0 < len(calls) <= EXTRACT_PY4J_BUDGET[cls], (
+        f"{cls} extract build: {len(calls)} py4j calls, budget {EXTRACT_PY4J_BUDGET[cls]}"
+    )
+
+
 def test_token_stats_no_shuffle(spark):
     # narrow projection: tokenization/quality scoring must pipeline inside
     # the scan stage — zero exchanges at any scale
