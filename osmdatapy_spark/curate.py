@@ -32,10 +32,11 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from osmdatapy_spark import memo
 from osmdatapy_spark.memo import managed_persist
 
 
@@ -67,7 +68,8 @@ class Curate:
         ``nfc=True`` additionally applies NFC unicode normalization via
         the Arrow kernel (functions.text) — off by default so the default
         recipe stays oracle-exact in plain SQL."""
-        t = F.regexp_replace(F.trim(col(self.text_col)), r"\s+", " ")
+        ws = memo.sstr(r"\s+")
+        t = memo.expr(f"regexp_replace(trim({memo.ident(self.text_col)}), {ws}, ' ')")
         if nfc:
             from osmdatapy_spark.functions.text import nfc_normalize
 
@@ -89,12 +91,12 @@ class Curate:
         corpus-row-sized, so that join could never broadcast).  ``min_by``
         keeps arbitrary column types (no ordering requirement on the
         payload); ids are unique so the election is deterministic."""
-        cols = self._df.columns
-        row = F.struct(*[col(c) for c in cols])
-        self._df = (
-            self._df.groupBy(F.md5(col(self.text_col)).alias("_fp"))
-            .agg(F.min_by(row, col(self.id_col)).alias("_r"))
-            .select(*[col(f"_r.{c}").alias(c) for c in cols])
+        cols = [memo.ident(c) for c in self._df.columns]
+        self._df = memo.select(
+            self._df.groupBy(memo.expr(f"md5({memo.ident(self.text_col)}) AS _fp")).agg(
+                memo.expr(f"min_by(struct({', '.join(cols)}), {memo.ident(self.id_col)}) AS _r")
+            ),
+            *[f"_r.{c} AS {c}" for c in cols],
         )
         self.steps.append("exact_dedup")
         return self
@@ -154,7 +156,8 @@ class Curate:
             ),
             "curate.fuzzy_sets",
         )
-        shingled = sets.select(self.id_col, F.explode(col("s")).alias("s"))
+        idc = memo.ident(self.id_col)
+        shingled = memo.select(sets, idc, "explode(s) AS s")
         if method == "jaccard":
             cand = jaccard_candidate_pairs(
                 shingled, self.id_col, "s",
@@ -165,18 +168,15 @@ class Curate:
             cand = lsh_band_pairs(sig, self.id_col, num_perm=num_perm)
         else:
             raise ValueError(f"unknown fuzzy_dedup method {method!r} (jaccard|minhash)")
-        sa = sets.select(col(self.id_col).alias("id_a"), col("s").alias("sa"))
-        sb = sets.select(col(self.id_col).alias("id_b"), col("s").alias("sb"))
-        dupes = (
+        sa = memo.select(sets, f"{idc} AS id_a", "s AS sa")
+        sb = memo.select(sets, f"{idc} AS id_b", "s AS sb")
+        scored = (
             cand.join(sa, "id_a")
             .join(sb, "id_b")
-            .select(
-                "id_b", jaccard_similarity(col("sa"), col("sb")).alias("jac")
-            )
-            .filter(col("jac") >= lit(float(threshold)))
-            .select(col("id_b").alias(self.id_col))
-            .distinct()
+            .withColumn("jac", jaccard_similarity("sa", "sb"))
+            .filter(memo.expr(f"jac >= {memo.dlit(threshold)}"))
         )
+        dupes = memo.select(scored, f"id_b AS {idc}").distinct()
         # LAZY composition (r14): the drop-set rides the returned plan
         # unhinted and unmaterialized — the r13 shape eagerly
         # localCheckpoint'ed + counted it at CHAIN time (one extra
@@ -292,13 +292,15 @@ class Curate:
     ) -> "Curate":
         """Token-count band + type-token diversity gate (the
         llm_quality_filter rule) — a scan-stage filter, zero shuffle."""
-        from osmdatapy_spark.functions.text import tokens
+        from osmdatapy_spark.functions.text import tokens_sql
 
-        t = tokens(col(self.text_col))
-        n = F.size(t)
-        diversity = F.size(F.array_distinct(t)).cast("double") / n
+        n = f"size({tokens_sql(memo.ident(self.text_col))})"
+        diversity = f"CAST(size(array_distinct({tokens_sql(memo.ident(self.text_col))})) AS DOUBLE) / {n}"
         self._df = self._df.filter(
-            n.between(min_tokens, max_tokens) & (diversity > lit(float(min_diversity)))
+            memo.expr(
+                f"(({n} >= {int(min_tokens)}) AND ({n} <= {int(max_tokens)})) "
+                f"AND (({diversity}) > {memo.dlit(min_diversity)})"
+            )
         )
         self.steps.append("quality_filter")
         return self
@@ -308,10 +310,13 @@ class Curate:
         (smallest id) — rank<=k rewrites to a map-side WindowGroupLimit
         (the llm_domain_cap shape), so no domain's full row set ever
         shuffles."""
-        w = Window.partitionBy(domain_col).orderBy(self.id_col)
+        rank = (
+            f"row_number() OVER (PARTITION BY {memo.ident(domain_col)} "
+            f"ORDER BY {memo.ident(self.id_col)})"
+        )
         self._df = (
-            self._df.withColumn("_rk", F.row_number().over(w))
-            .filter(col("_rk") <= k)
+            self._df.withColumn("_rk", memo.expr(rank))
+            .filter(memo.expr(f"_rk <= {int(k)}"))
             .drop("_rk")
         )
         self.steps.append("domain_cap")

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
 from osmdatapy_spark._pyworker import kernel
-from osmdatapy_spark.operators.rings import ring_chains
+from osmdatapy_spark.operators.rings import missing_vertex_sql, ring_chains
 from osmdatapy_spark.operators.topology import topology_segments
 from osmdatapy_spark.operators.geometry import (
     linestring_wkt,
@@ -1002,13 +1002,24 @@ class OSM:
         more than one chain (gaps) — reference ``make_lines``
         (_geometry.py:25-41)."""
         lines = chain_coords.select(
-            "rel_id", "ring", linestring_wkt(col("coords")).alias("line")
+            "rel_id",
+            "ring",
+            linestring_wkt(col("coords")).alias("line"),
+            F.expr(missing_vertex_sql("coords")).alias("gap"),
         )
-        per_rel = lines.groupBy("rel_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(col("ring"), col("line")))),
-                lambda s: s["line"],
-            ).alias("lines")
+        # a chain with a vertex missing from the extract leaves the whole
+        # relation out, as assign_polygons does for areas: the query's
+        # left join then gives its row a null geometry (the way rule)
+        per_rel = (
+            lines.groupBy("rel_id")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct(col("ring"), col("line")))),
+                    lambda s: s["line"],
+                ).alias("lines"),
+                F.max("gap").alias("gap"),
+            )
+            .filter(~col("gap"))
         )
         return per_rel.select(
             "rel_id",

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from osmdatapy_spark import memo
 from osmdatapy_spark._pyworker import kernel
 
 
@@ -120,13 +121,10 @@ def _bucket_pairs(
         # pair set, proven disjoint across windows
         s, m = max_bucket - 1, max_bucket
         nwin = f"greatest(1, cast(ceil((size({ids_col}) - 1) / {s}) as int))"
-        chunks = buckets.select(
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {nwin} - 1), "
-                    f"c -> slice({ids_col}, c * {s} + 1, {m}))"
-                )
-            ).alias("_chunk")
+        chunks = memo.select(
+            buckets,
+            f"explode(transform(sequence(0, {nwin} - 1), "
+            f"c -> slice({ids_col}, c * {s} + 1, {m}))) AS _chunk",
         )
         # EXPLICIT partition count: chunk rows are tiny in bytes but huge
         # in downstream CPU (quadratic expansion + pair verify), and AQE's
@@ -141,7 +139,7 @@ def _bucket_pairs(
             "transform(slice(_chunk, i + 2, size(_chunk) - i - 1), "
             "y -> struct(x as id_a, y as id_b))))"
         )
-        return chunks.select(F.explode(F.expr(combos)).alias("p")).select("p.id_a", "p.id_b")
+        return memo.select(memo.select(chunks, f"explode({combos}) AS p"), "p.id_a", "p.id_b")
     if max_bucket > 1:
         s, m = max_bucket - 1, max_bucket
         window = f"((i div {s}) * {s}) + {m} - i - 1"
@@ -152,7 +150,7 @@ def _bucket_pairs(
         f"transform(slice({ids_col}, i + 2, {window}), "
         f"y -> struct(x as id_a, y as id_b))))"
     )
-    return buckets.select(F.explode(F.expr(combos)).alias("p")).select("p.id_a", "p.id_b")
+    return memo.select(memo.select(buckets, f"explode({combos}) AS p"), "p.id_a", "p.id_b")
 
 
 def band_rows(
@@ -259,17 +257,17 @@ def jaccard_candidate_pairs(
     (~1e-8 chance corpus-wide), and candidates are exactly verified
     downstream — correctness is unaffected."""
     postings = (
-        shingled.groupBy(F.xxhash64(col(shingle_col)).alias("__sh"))
-        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") >= 2)
+        shingled.groupBy(memo.expr(f"xxhash64({memo.ident(shingle_col)}) AS __sh"))
+        .agg(memo.expr(f"array_sort(collect_list({memo.ident(id_col)})) AS ids"))
+        .filter(memo.expr("size(ids) >= 2"))
     )
-    return (
+    counted = (
         _bucket_pairs(postings, max_bucket=max_doc_freq)
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(col("n_shared") >= min_shared)
-        .select("id_a", "id_b")
+        .groupBy(memo.expr("id_a"), memo.expr("id_b"))
+        .agg(memo.expr("count(*) AS n_shared"))
+        .filter(memo.expr(f"n_shared >= {int(min_shared)}"))
     )
+    return memo.select(counted, "id_a", "id_b")
 
 
 def connected_components(
@@ -403,8 +401,11 @@ def connected_components(
     raise RuntimeError(f"connected_components did not converge in {max_iter} levels")
 
 
-def jaccard_similarity(sets_a: Column, sets_b: Column) -> Column:
-    """Exact Jaccard over two distinct-element arrays, as DOUBLE."""
-    inter = F.size(F.array_intersect(sets_a, sets_b))
-    union = F.size(sets_a) + F.size(sets_b) - inter
-    return inter.cast("double") / union
+def jaccard_similarity(sets_a: str, sets_b: str) -> Column:
+    """Exact Jaccard over two distinct-element arrays, as DOUBLE.  The
+    arguments are SQL fragments (column names or expressions); the
+    expression is memoized SQL (``memo.expr``)."""
+    inter = f"size(array_intersect({sets_a}, {sets_b}))"
+    return memo.expr(
+        f"CAST({inter} AS DOUBLE) / ((size({sets_a}) + size({sets_b})) - {inter})"
+    )

@@ -13,9 +13,6 @@ a shuffle join when they grow, instead of a forced hint OOMing the driver.
 
 from __future__ import annotations
 
-import math
-
-from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
@@ -143,14 +140,10 @@ def grid_topk(
 # projection at sf0.1 — per-stage codegen of ~500-term trees dominates at
 # bench scale), so the HOF execution shape is deliberately kept.
 #
-# ``_memo_expr`` additionally memoizes the parsed Column per (py4j
-# gateway, SQL text) in ``memo`` — the literals are IN the key, so a
-# retrained quantizer never reuses a stale expression.  This caches an
-# EXPRESSION, not data: every run still computes from its inputs.
-
-
-def _memo_expr(sql: str) -> Column:
-    return memo.get(SparkContext._gateway, "expr", sql, lambda: F.expr(sql))
+# ``memo.expr`` additionally memoizes the parsed Column per (py4j
+# gateway, SQL text) — the literals are IN the key, so a retrained
+# quantizer never reuses a stale expression.  This caches an EXPRESSION,
+# not data: every run still computes from its inputs.
 
 
 def as_double_sql(vec_col: str) -> str:
@@ -158,18 +151,11 @@ def as_double_sql(vec_col: str) -> str:
     return f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
 
 
-def _sql_dlit(x: float) -> str:
-    """Exact SQL double literal: repr() round-trips IEEE doubles and the
-    string→double cast parses exactly, then constant-folds.  Non-finite
-    values raise: the cast would turn 'nan'/'inf' into NULL distances and
-    silently change cell assignment (a degenerate quantizer)."""
-    if not math.isfinite(x):
-        raise ValueError(f"non-finite quantizer literal {x!r}")
-    return f"CAST('{x!r}' AS DOUBLE)"
-
-
 def _sql_lit_vec(comps: list[float]) -> str:
-    return "array(%s)" % ", ".join(_sql_dlit(float(c)) for c in comps)
+    # memo.dlit raises on a non-finite component: 'nan'/'inf' would become
+    # NULL distances and silently change cell assignment (a degenerate
+    # quantizer)
+    return "array(%s)" % ", ".join(memo.dlit(c) for c in comps)
 
 
 def _l2_sq_sql(vec_sql: str, centroid: list[float], decimals: int = 6) -> str:
@@ -283,7 +269,7 @@ def kmeans_centroids(
             # literal-centroid assignment via memoized SQL parse (the
             # literals are in the memo key, so each Lloyd iteration's
             # fresh centroids parse fresh)
-            v.withColumn("cell", _memo_expr(nearest_cell_sql("`v`", centroids)))
+            v.withColumn("cell", memo.expr(nearest_cell_sql("`v`", centroids)))
             .select("cell", F.posexplode("v").alias("idx", "val"))
             .groupBy("cell", "idx")
             .agg(
@@ -340,12 +326,12 @@ def ivf_topk(
     c = corpus.select(
         col(id_col).alias("nbr_id"),
         as_double(col(vec_col)).alias("cvec"),
-        _memo_expr(nearest_cell_sql(vs, centroids)).alias("cell"),
+        memo.expr(nearest_cell_sql(vs, centroids)).alias("cell"),
     )
     p = probes.select(
         col(id_col).alias("probe_id"),
         as_double(col(vec_col)).alias("pvec"),
-        F.explode(_memo_expr(probe_cells_sql(vs, centroids, n_probe))).alias("cell"),
+        F.explode(memo.expr(probe_cells_sql(vs, centroids, n_probe))).alias("cell"),
     )
     scored = (
         c.join(p, "cell")
@@ -412,7 +398,7 @@ def plane_band_buckets(
             )
         bands.append(
             F.struct(
-                lit(b).alias("band"), _memo_expr(bucket_sql).cast("int").alias("bucket")
+                lit(b).alias("band"), memo.expr(bucket_sql).cast("int").alias("bucket")
             )
         )
     return vectors.select(col(id_col), F.explode(F.array(*bands)).alias("bb")).select(
@@ -557,13 +543,13 @@ def ivfpq_topk(
     vs = as_double_sql(vec_col)
     c = corpus.select(
         col(id_col).alias("nbr_id"),
-        _memo_expr(nearest_cell_sql(vs, centroids)).alias("cell"),
-        _memo_expr(pq_codes_sql(vs, codebooks, dim)).alias("codes"),
+        memo.expr(nearest_cell_sql(vs, centroids)).alias("cell"),
+        memo.expr(pq_codes_sql(vs, codebooks, dim)).alias("codes"),
     )
     p = probes.select(
         col(id_col).alias("probe_id"),
-        _memo_expr(pq_dtab_sql(vs, codebooks, dim)).alias("dtab"),
-        F.explode(_memo_expr(probe_cells_sql(vs, centroids, n_probe))).alias("cell"),
+        memo.expr(pq_dtab_sql(vs, codebooks, dim)).alias("dtab"),
+        F.explode(memo.expr(probe_cells_sql(vs, centroids, n_probe))).alias("cell"),
     )
     adist = F.aggregate(
         F.sequence(lit(0), lit(m_sub - 1)),
@@ -651,7 +637,7 @@ def pq_codebooks(
                         F.struct(
                             lit(m).alias("m"),
                             F.slice(col("v"), m * sub + 1, sub).alias("sv"),
-                            _memo_expr(
+                            memo.expr(
                                 nearest_cell_sql(
                                     _slice_sql("`v`", m * sub + 1, sub), books[m]
                                 )
@@ -723,10 +709,10 @@ def pq_topk(
     # identical trees, py4j construction cost removed
     vs = as_double_sql(vec_col)
     c = corpus.select(
-        col(id_col).alias("nbr_id"), _memo_expr(pq_codes_sql(vs, codebooks, dim)).alias("codes")
+        col(id_col).alias("nbr_id"), memo.expr(pq_codes_sql(vs, codebooks, dim)).alias("codes")
     )
     p = probes.select(
-        col(id_col).alias("probe_id"), _memo_expr(pq_dtab_sql(vs, codebooks, dim)).alias("dtab")
+        col(id_col).alias("probe_id"), memo.expr(pq_dtab_sql(vs, codebooks, dim)).alias("dtab")
     )
     # ADC: Σ_m dtab[m][code_m], summed in DECIMAL(18,6) — every term is a
     # round-6 double, so the decimal sum is exact and order-independent
@@ -808,7 +794,7 @@ def semantic_dedup_pairs(
         col(id_col).alias("_id"),
         v.alias("v"),
         # literal-centroid assignment via memoized SQL parse (see builders)
-        _memo_expr(nearest_cell_sql(as_double_sql(vec_col), centroids)).alias("cell"),
+        memo.expr(nearest_cell_sql(as_double_sql(vec_col), centroids)).alias("cell"),
     )
     buckets = assigned.groupBy("cell").agg(F.sort_array(F.collect_list("_id")).alias("ids"))
     # quantizer cells are low-cardinality (k buckets): spread chunk

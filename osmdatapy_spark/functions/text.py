@@ -13,6 +13,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from osmdatapy_spark import memo
 from osmdatapy_spark._pyworker import kernel
 
 # tiny per-language stopword lists for the n-gram/stopword language-ID
@@ -27,11 +28,21 @@ STOPWORDS: dict[str, list[str]] = {
 LANG_PRECEDENCE = ["en", "de", "es", "fr"]  # deterministic argmax tie-break
 
 
+_WS = r"\s+"
+
+
 def tokens(text: Column) -> Column:
     """Whitespace tokenization. A BPE-ish regex tokenizer is
     ``F.split(text, r"\\s+|(?=[\\p{Punct}])")`` — whitespace is what the
-    synthetic corpus needs and keeps the oracle portable."""
-    return F.split(F.trim(text), r"\s+")
+    synthetic corpus needs and keeps the oracle portable.  ``tokens_sql``
+    is the same expression as SQL text."""
+    return F.split(F.trim(text), _WS)
+
+
+def tokens_sql(text: str) -> str:
+    """SQL text of ``tokens`` over a SQL fragment, for kernels built as
+    memoized SQL (``memo.expr``)."""
+    return f"split(trim({text}), {memo.sstr(_WS)})"
 
 
 def token_count(text: Column) -> Column:
@@ -80,10 +91,16 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
 
 def shingle_sets(df, text_col: str = "text", id_col: str = "doc_id", n: int = 3):
     """(id, shingle-set) with the token split staged as its own projection
-    so it runs once per row."""
-    return (
-        df.withColumn("__toks", tokens(F.col(text_col)))
-        .select(id_col, word_shingles(F.col("__toks"), n).alias("s"))
+    so it runs once per row.  Both projections are memoized SQL: the
+    shingles are ``word_shingles`` (slice + arrays_zip + transform, then
+    array_distinct) written as SQL text."""
+    ln = f"greatest(size(__toks) - {n - 1}, 0)"
+    zipped = ", ".join(f"slice(__toks, {i + 1}, {ln})" for i in range(n))
+    parts = ", ".join(f"__g.`{i}`" for i in range(n))
+    return memo.select(
+        df.withColumn("__toks", memo.expr(tokens_sql(memo.ident(text_col)))),
+        memo.ident(id_col),
+        f"array_distinct(transform(arrays_zip({zipped}), __g -> concat_ws(' ', {parts}))) AS s",
     )
 
 

@@ -6,7 +6,7 @@ strongly, so the owner's id cannot be reused while the entry exists:
 - a ``SparkSession`` owns table and spread handles (``tables.load_table``,
   ``suite._util.TS``), data-source registrations and relation handles
   (``sources._row.load``) and managed persists (``managed_persist``);
-- the py4j gateway owns parsed expressions (``similarity._memo_expr``,
+- the py4j gateway owns parsed expressions (``expr``, ``select``,
   ``geometry.way_geom_type``);
 - ``None`` (the process) owns trained ANN artifacts
   (``artifacts.train_once``).
@@ -27,11 +27,14 @@ drops them too.
 
 from __future__ import annotations
 
+import math
 import threading
 from typing import TYPE_CHECKING, Any, Callable, Hashable
 
 from py4j.java_gateway import JavaGateway
 from pyspark import SparkContext
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -77,6 +80,53 @@ def put(owner: Any, namespace: str, key: Hashable, value: Any) -> Any:
         prev = _STORE.get((id(owner), namespace, key))
         _STORE[(id(owner), namespace, key)] = (owner, value)
     return prev[1] if prev is not None else None
+
+
+def expr(sql: str) -> Column:
+    """``F.expr(sql)``, parsed once per py4j gateway.
+
+    Built as Column algebra, every node of an expression tree costs ~3-13
+    py4j round trips (call-site capture included); a kernel written as SQL
+    text costs one parse call the first time and none after.  The SQL text
+    is the key, so literals baked into it never reuse a stale expression.
+    A memoized Column is an unresolved expression, not data: every plan
+    that uses it still resolves and computes it from its own inputs."""
+    return get(SparkContext._gateway, "expr", sql, lambda: F.expr(sql))
+
+
+def select(df: "DataFrame", *sqls: str) -> "DataFrame":
+    """``df.select`` over SQL expressions in one py4j call: the parsed
+    column list (a JVM ``Seq``) is memoized per gateway like ``expr``.
+    ``df.select(*cols)`` would pay one round trip per column to build the
+    list on every call."""
+    seq = get(
+        SparkContext._gateway, "select", sqls,
+        lambda: SparkContext._active_spark_context._jvm.PythonUtils.toSeq(
+            [expr(s)._jc for s in sqls]
+        ),
+    )
+    return type(df)(df._jdf.select(seq), df.sparkSession)
+
+
+def dlit(x: float) -> str:
+    """Exact SQL DOUBLE literal (the ``F.lit(float)`` of SQL text): repr()
+    round-trips IEEE doubles and the string→double cast parses exactly,
+    then constant-folds.  Non-finite values raise: the cast would turn
+    'nan'/'inf' into NULL."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"non-finite SQL literal {x!r}")
+    return f"CAST('{x!r}' AS DOUBLE)"
+
+
+def ident(name: str) -> str:
+    """Backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sstr(s: str) -> str:
+    """Single-quoted SQL string literal (backslashes and quotes escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def items(namespace: str) -> list[tuple[Hashable, Any]]:

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from osmdatapy_spark import memo
 from osmdatapy_spark._pyworker import kernel
 
 # bbox-cover replication guards for point_in_polygon_join: a ring whose
@@ -198,11 +199,41 @@ def nearest_in_grid(
 # ---------------------------------------------------------------------------
 
 
-def ray_cast_crossings(coords: Column, px: Column, py: Column) -> Column:
+def _crossings_sql(coords: str, px: str, py: str) -> str:
+    """SQL text of ``ray_cast_crossings`` over SQL fragments."""
+    closed = f"concat({coords}, slice({coords}, 1, 1))"
+    n = f"size({closed}) - 1"
+    ax, ay = "__s.`0`.lon", "__s.`0`.lat"
+    bx, by = "__s.`1`.lon", "__s.`1`.lat"
+    lhs = f"(({px}) - {ax}) * ({by} - {ay})"
+    rhs = f"({bx} - {ax}) * (({py}) - {ay})"
+    crosses = (
+        f"CAST((({ay} > ({py})) != ({by} > ({py}))) AND "
+        f"(CASE WHEN {by} > {ay} THEN {lhs} < {rhs} ELSE {lhs} > {rhs} END) AS INT)"
+    )
+    return (
+        f"aggregate(transform(arrays_zip(slice({closed}, 1, {n}), slice({closed}, 2, {n})), "
+        f"__s -> {crosses}), 0, (__acc, __x) -> __acc + __x)"
+    )
+
+
+def _rings_crossings_sql(rings: str, px: str, py: str) -> str:
+    return (
+        f"aggregate({rings}, 0, (__racc, __ring) -> "
+        f"__racc + {_crossings_sql('__ring', px, py)})"
+    )
+
+
+def ray_cast_crossings(coords: str, px: str, py: str) -> Column:
     """Number of times a horizontal ray from (px, py) toward +lon crosses
     the ring's edges (ring closed implicitly, even-odd rule — well-defined
     for self-intersecting rings too, matching shapely's point-in-polygon
     on simple rings).
+
+    Arguments are SQL fragments: column names or expressions (a double
+    literal is ``memo.dlit(x)``).  The expression is SQL text parsed once
+    per gateway (``memo.expr``) — built as Column algebra it cost ~400
+    py4j round trips per call.
 
     The crossing test is the division-free form
     ``(px-ax)·(by-ay) <> (bx-ax)·(py-ay)`` with the comparison direction
@@ -210,40 +241,28 @@ def ray_cast_crossings(coords: Column, px: Column, py: Column) -> Column:
     libraries, no divide-by-zero edge on horizontal edges), so the count
     is bit-identical across engines.
     """
-    closed = F.concat(coords, F.slice(coords, 1, 1))
-    def _crosses(s: Column) -> Column:
-        ax, ay = s["a"]["lon"], s["a"]["lat"]
-        bx, by = s["b"]["lon"], s["b"]["lat"]
-        straddles = (ay > py) != (by > py)
-        lhs = (px - ax) * (by - ay)
-        rhs = (bx - ax) * (py - ay)
-        hit = F.when(by > ay, lhs < rhs).otherwise(lhs > rhs)
-        return (straddles & hit).cast("int")
-    return F.aggregate(
-        F.transform(_segments(closed), _crosses), lit(0), lambda acc, x: acc + x
-    )
+    return memo.expr(_crossings_sql(coords, px, py))
 
 
-def point_in_ring(coords: Column, px: Column, py: Column) -> Column:
-    """Even-odd containment: odd crossing count ⇒ inside."""
-    return ray_cast_crossings(coords, px, py) % 2 == 1
+def point_in_ring(coords: str, px: str, py: str) -> Column:
+    """Even-odd containment: odd crossing count ⇒ inside (SQL-fragment
+    arguments, as ``ray_cast_crossings``)."""
+    return memo.expr(f"{_crossings_sql(coords, px, py)} % 2 = 1")
 
 
-def rings_crossings(rings: Column, px: Column, py: Column) -> Column:
+def rings_crossings(rings: str, px: str, py: str) -> Column:
     """Total crossing count over a MULTI-ring geometry
     (array<array<struct<lon,lat>>>): the even-odd rule composes across
     rings by summing crossings, so a point inside the outer but also
     inside a hole counts 2 (outside), and inside an island ring nested
     in the hole counts 3 (inside) — exactly shapely's semantics for
     polygons with interiors."""
-    return F.aggregate(
-        rings, lit(0), lambda acc, ring: acc + ray_cast_crossings(ring, px, py)
-    )
+    return memo.expr(_rings_crossings_sql(rings, px, py))
 
 
-def point_in_rings(rings: Column, px: Column, py: Column) -> Column:
+def point_in_rings(rings: str, px: str, py: str) -> Column:
     """Even-odd containment against a holed/multi-ring geometry."""
-    return rings_crossings(rings, px, py) % 2 == 1
+    return memo.expr(f"{_rings_crossings_sql(rings, px, py)} % 2 = 1")
 
 
 def point_in_polygon_join(
@@ -302,15 +321,15 @@ def point_in_polygon_join(
     op is exactly-rounded IEEE (divide by ``cell_deg``, floor, compares),
     so verdicts are bit-identical cross-engine.
     """
-    cell = lit(float(cell_deg))
-    flat = F.flatten(col(ring_coords)) if multi else col(ring_coords)
-    lons = F.transform(flat, lambda s: s["lon"])
-    lats = F.transform(flat, lambda s: s["lat"])
+    cell = memo.dlit(cell_deg)
+    rc = memo.ident(ring_coords)
+    flat = f"flatten({rc})" if multi else rc
+    x, y = memo.ident(point_x), memo.ident(point_y)
 
     # Replication sanity guard: cell_deg is a pure performance knob, but a
     # badly mis-sized one (tiny cell vs a wide bbox) would silently explode
     # each ring to O((bbox/cell)^2) rows — and past ~2^31 elements
-    # F.sequence errors opaquely.  Fail LOUDLY in-plan instead, per axis,
+    # sequence() errors opaquely.  Fail LOUDLY in-plan instead, per axis,
     # naming the knob.  4096 cells/axis is far above any sane cover (the
     # docstring's guidance is a handful of replicas per ring) while well
     # under sequence's element cap.  With max_cover_cells UNSET both
@@ -328,94 +347,64 @@ def point_in_polygon_join(
         total_cap = int(max_cover_cells)
         axis_cap = min(max(_MAX_COVER_CELLS_PER_AXIS, total_cap), _MAX_COVER_AXIS_HARD)
 
-    def _guarded_hi(lo: Column, hi: Column, axis: str) -> Column:
-        return F.when(
-            hi - lo >= axis_cap,
-            F.raise_error(
-                F.format_string(
-                    "point_in_polygon_join: ring bbox covers %d cells on the "
-                    + axis
-                    + " axis (max "
-                    + str(axis_cap)
-                    + ") — cell_deg is too small for this ring; raise "
-                    "cell_deg (or max_cover_cells, which lifts this cap "
-                    "up to " + str(_MAX_COVER_AXIS_HARD) + ")",
-                    hi - lo + 1,
-                )
-            ).cast("long"),
-        ).otherwise(hi)
+    def cellof(v: str) -> str:
+        return f"CAST(FLOOR({v} / {cell}) AS BIGINT)"
 
-    def _product_guarded_hi(hi: Column) -> Column:
-        # total-cover cap: the per-axis guard alone admits a ring spanning
-        # just under the cap on BOTH axes (~16.7M replica rows); gate the
-        # x-span × y-span product before either explode runs.  The cap is
-        # a caller knob (``max_cover_cells``) because a legitimately large
-        # cover — one fine-celled continental ring — is a cost decision,
-        # not a correctness error; the default keeps the guard.
-        xs = F.floor(col("__x1") / cell).cast("long") - F.floor(col("__x0") / cell).cast("long") + 1
-        ys = F.floor(col("__y1") / cell).cast("long") - F.floor(col("__y0") / cell).cast("long") + 1
-        return F.when(
-            xs * ys > total_cap,
-            F.raise_error(
-                F.format_string(
-                    "point_in_polygon_join: ring bbox covers %d total cells "
-                    "(%d x %d, max " + str(total_cap) + ") — "
-                    "cell_deg is too small for this ring; raise cell_deg "
-                    "or pass a larger max_cover_cells",
-                    xs * ys,
-                    xs,
-                    ys,
-                )
-            ).cast("long"),
-        ).otherwise(hi)
+    def guarded_hi(lo: str, hi: str, axis: str) -> str:
+        msg = memo.sstr(
+            "point_in_polygon_join: ring bbox covers %d cells on the " + axis
+            + f" axis (max {axis_cap}) — cell_deg is too small for this ring; "
+            "raise cell_deg (or max_cover_cells, which lifts this cap "
+            f"up to {_MAX_COVER_AXIS_HARD})"
+        )
+        return (
+            f"CASE WHEN ({hi} - {lo}) >= {axis_cap} THEN "
+            f"CAST(raise_error(format_string({msg}, (({hi} - {lo}) + 1))) AS BIGINT) "
+            f"ELSE {hi} END"
+        )
 
-    r = (
-        rings.withColumn("__x0", F.array_min(lons))
-        .withColumn("__x1", F.array_max(lons))
-        .withColumn("__y0", F.array_min(lats))
-        .withColumn("__y1", F.array_max(lats))
-        .withColumn(
-            "__cellx",
-            F.explode(
-                F.sequence(
-                    F.floor(col("__x0") / cell).cast("long"),
-                    _product_guarded_hi(
-                        _guarded_hi(
-                            F.floor(col("__x0") / cell).cast("long"),
-                            F.floor(col("__x1") / cell).cast("long"),
-                            "lon",
-                        )
-                    ),
-                )
-            ),
-        )
-        .withColumn(
-            "__celly",
-            F.explode(
-                F.sequence(
-                    F.floor(col("__y0") / cell).cast("long"),
-                    _guarded_hi(
-                        F.floor(col("__y0") / cell).cast("long"),
-                        F.floor(col("__y1") / cell).cast("long"),
-                        "lat",
-                    ),
-                )
-            ),
-        )
+    # total-cover cap: the per-axis guard alone admits a ring spanning
+    # just under the cap on BOTH axes (~16.7M replica rows); gate the
+    # x-span × y-span product before either explode runs.  The cap is a
+    # caller knob (``max_cover_cells``) because a legitimately large
+    # cover — one fine-celled continental ring — is a cost decision, not
+    # a correctness error; the default keeps the guard.
+    xs = f"(({cellof('__x1')} - {cellof('__x0')}) + 1)"
+    ys = f"(({cellof('__y1')} - {cellof('__y0')}) + 1)"
+    total_msg = memo.sstr(
+        "point_in_polygon_join: ring bbox covers %d total cells "
+        f"(%d x %d, max {total_cap}) — cell_deg is too small for this "
+        "ring; raise cell_deg or pass a larger max_cover_cells"
     )
-    p = points.withColumn("__cellx", F.floor(col(point_x) / cell).cast("long")).withColumn(
-        "__celly", F.floor(col(point_y) / cell).cast("long")
+    x_hi = (
+        f"CASE WHEN ({xs} * {ys}) > {total_cap} THEN "
+        f"CAST(raise_error(format_string({total_msg}, ({xs} * {ys}), {xs}, {ys})) AS BIGINT) "
+        f"ELSE {guarded_hi(cellof('__x0'), cellof('__x1'), 'lon')} END"
     )
+    y_hi = guarded_hi(cellof("__y0"), cellof("__y1"), "lat")
+    # one projection for the bbox, one per explode (a select holds at
+    # most one generator)
+    r = memo.select(
+        rings,
+        "*",
+        f"array_min(transform({flat}, __v -> __v.lon)) AS __x0",
+        f"array_max(transform({flat}, __v -> __v.lon)) AS __x1",
+        f"array_min(transform({flat}, __v -> __v.lat)) AS __y0",
+        f"array_max(transform({flat}, __v -> __v.lat)) AS __y1",
+    )
+    r = memo.select(r, "*", f"explode(sequence({cellof('__x0')}, {x_hi})) AS __cellx")
+    r = memo.select(r, "*", f"explode(sequence({cellof('__y0')}, {y_hi})) AS __celly")
+    p = memo.select(points, "*", f"{cellof(x)} AS __cellx", f"{cellof(y)} AS __celly")
     pairs = p.join(r, ["__cellx", "__celly"]).filter(
-        col(point_x).between(col("__x0"), col("__x1"))
-        & col(point_y).between(col("__y0"), col("__y1"))
+        memo.expr(f"({x} >= __x0 AND {x} <= __x1) AND ({y} >= __y0 AND {y} <= __y1)")
     )
-    cross_fn = rings_crossings if multi else ray_cast_crossings
-    crossings = cross_fn(col(ring_coords), col(point_x), col(point_y))
+    crossings = (_rings_crossings_sql if multi else _crossings_sql)(rc, x, y)
     if crossings_col is not None:
-        out = pairs.withColumn(crossings_col, crossings.cast("bigint"))
+        out = memo.select(
+            pairs, "*", f"CAST({crossings} AS BIGINT) AS {memo.ident(crossings_col)}"
+        )
     else:
-        out = pairs.filter(crossings % 2 == 1)
+        out = pairs.filter(memo.expr(f"{crossings} % 2 = 1"))
     return out.drop("__cellx", "__celly", "__x0", "__x1", "__y0", "__y1")
 
 

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osmdatapy_spark import memo
 from osmdatapy_spark._pyworker import kernel
 
 RING_SCHEMA = (
@@ -281,6 +282,12 @@ def _assign_rel(rings):
     return rows
 
 
+def missing_vertex_sql(coords: str) -> str:
+    """SQL predicate: the coordinate array ``coords`` holds a vertex with a
+    null lon or lat (its node is not in the extract)."""
+    return f"exists({coords}, __c -> __c.lon IS NULL OR __c.lat IS NULL)"
+
+
 def assign_polygons(ring_coords: DataFrame) -> DataFrame:
     """Classify closed rings into polygons per relation (G8/G9 +
     containment nesting).
@@ -288,7 +295,10 @@ def assign_polygons(ring_coords: DataFrame) -> DataFrame:
     Input: ``(rel_id, ring, ring_role, coords ARRAY<STRUCT<lon,lat>>)``
     (extra columns ignored).  Output: ``(rel_id, ring, role, poly,
     coords)`` — poly is the 0-based polygon index within the relation;
-    dropped inner rings (reference-G8 fallback) are absent.
+    dropped inner rings (reference-G8 fallback) are absent.  A relation
+    with a ring vertex of null coordinates (a node the extract does not
+    hold, as clipped extracts have) is absent as a whole: it has no
+    polygon, the rule a way with a missing vertex follows.
 
     Scale: ONE shuffle by rel_id (JVM-side collect_list aggregation —
     coordinate arrays ride the exchange through Arrow), then ONE
@@ -301,6 +311,7 @@ def assign_polygons(ring_coords: DataFrame) -> DataFrame:
         ring_coords.select("rel_id", "ring", "ring_role", "coords")
         .groupBy("rel_id")
         .agg(F.collect_list(F.struct("ring", "ring_role", "coords")).alias("rs"))
+        .filter(memo.expr(f"NOT exists(rs, __r -> {missing_vertex_sql('__r.coords')})"))
     )
 
     @kernel

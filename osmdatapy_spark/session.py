@@ -12,6 +12,8 @@ Local testing runs on ``local[N]`` but every setting is chosen for the
   deployment overrides to ~2-3× total cores, then AQE coalesces).
 - session timezone pinned to UTC so timestamp semantics are stable across
   driver/executor locales (and match the DuckDB oracle).
+- a generated-code cache that holds a query mix's working set (see
+  ``CODEGEN_CACHE_ENTRIES``).
 """
 
 from __future__ import annotations
@@ -19,6 +21,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# ``spark.sql.codegen.cache.maxEntries``: Spark's default of 100 compiled
+# classes (a Guava LRU cache in 4 segments of 25) is smaller than the
+# working set of two suite queries run in turn (llm_curation_recipe and
+# osm_point_in_polygon need 75 + 33 whole-stage/projection classes), so
+# every repeat Janino-compiles the evicted classes again and the JIT
+# compiles them once more.  The value is sized from the measured working
+# set of the 32 headline bench queries (SCALE.md, "Plan builds and
+# generated code").  It is a STATIC conf: it reaches only sessions built
+# here, never a session handed in from outside (``tune_session``).
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(app_name: str = "osmdatapy-spark", cpus: int | None = None) -> SparkSession:
@@ -34,6 +48,7 @@ def get_spark(app_name: str = "osmdatapy-spark", cpus: int | None = None) -> Spa
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # split-packing floor: the 4 MB default collapses every sub-4MB file
         # to ONE task, serializing the whole map stage on small inputs (the
         # local sf* tables are sub-MB; lineitem sf0.1 is 10 MB → 3 tasks).

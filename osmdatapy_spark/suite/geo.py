@@ -278,55 +278,49 @@ centers AS (
     "algebra.",
 )
 def osm_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.functions import lit
-
+    from osmdatapy_spark import memo
     from osmdatapy_spark.operators.measures import point_in_polygon_join
     from osmdatapy_spark.suite.osm import derived_nodes, derived_way_refs
     from osmdatapy_spark.suite._util import T
 
     # pos-window formulation, reinstated with _way_coords (r13 §W): the
     # window-free struct-sort gather was value-identical but measurably
-    # slower — see _way_coords' comment.
+    # slower — see _way_coords' comment.  Every projection is memoized
+    # SQL (``memo.select``): one py4j call each on a warm build.
     ways = derived_way_refs(spark, sf_dir)
     nodes = derived_nodes(spark, sf_dir).withColumnRenamed("osmid", "node_id")
-    cx = ((col("way_id") % 360) - 180 + 0.5).cast("double")
-    cy = ((F.expr("way_id div 360") % 170) - 85 + 0.5).cast("double")
-    verts = coords_lookup(ways, nodes).select(
+    cx = "CAST(((way_id % 360) - 180) + 0.5D AS DOUBLE)"
+    cy = "CAST((((way_id div 360) % 170) - 85) + 0.5D AS DOUBLE)"
+    verts = memo.select(
+        coords_lookup(ways, nodes),
         "way_id",
         "pos",
-        (cx + col("lon") * 0.35 / 180).alias("vx"),
-        (cy + col("lat") * 0.35 / 85).alias("vy"),
+        f"{cx} + ((lon * 0.35D) / 180) AS vx",
+        f"{cy} + ((lat * 0.35D) / 85) AS vy",
     )
     rings = (
-        verts.groupBy("way_id")
+        verts.groupBy(memo.expr("way_id"))
         .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "vx", "vy"))),
-                lambda s: F.struct(s["vx"].alias("lon"), s["vy"].alias("lat")),
-            ).alias("c")
+            memo.expr(
+                "transform(array_sort(collect_list(struct(pos, vx, vy))), "
+                "__s -> struct(__s.vx AS lon, __s.vy AS lat)) AS c"
+            )
         )
-        .filter(F.size("c") >= 3)
+        .filter(memo.expr("size(c) >= 3"))
     )
-    o = T(spark, sf_dir, "orders")
-    px = ((col("o_orderkey") % 360) - 180 + 0.5).cast("double") + (
-        (col("o_custkey") % 100) * lit(0.006) - lit(0.3)
-    )
-    py = ((F.expr("o_orderkey div 360") % 170) - 85 + 0.5).cast("double") + (
-        (col("o_custkey") % 80) * lit(0.007) - lit(0.28)
-    )
-    pts = o.select(
-        col("o_orderkey").alias("point_id"),
-        px.alias("px"),
-        py.alias("py"),
+    pts = memo.select(
+        T(spark, sf_dir, "orders"),
+        "o_orderkey AS point_id",
+        "CAST(((o_orderkey % 360) - 180) + 0.5D AS DOUBLE)"
+        " + (((o_custkey % 100) * 0.006D) - 0.3D) AS px",
+        "CAST((((o_orderkey div 360) % 170) - 85) + 0.5D AS DOUBLE)"
+        " + (((o_custkey % 80) * 0.007D) - 0.28D) AS py",
     )
     pairs = point_in_polygon_join(
         pts, rings, 0.25, ring_coords="c", crossings_col="crossings"
     )
-    return pairs.select(
-        "point_id",
-        "way_id",
-        "crossings",
-        (col("crossings") % 2 == 1).alias("inside"),
+    return memo.select(
+        pairs, "point_id", "way_id", "crossings", "crossings % 2 = 1 AS inside"
     )
 
 
@@ -1468,11 +1462,8 @@ def osm_geojson_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def osm_settlement_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmdatapy_spark.functions.artifacts import train_once
-    from osmdatapy_spark.functions.similarity import (
-        _memo_expr,
-        kmeans_centroids,
-        nearest_cell_sql,
-    )
+    from osmdatapy_spark import memo
+    from osmdatapy_spark.functions.similarity import kmeans_centroids, nearest_cell_sql
 
     nodes = derived_nodes(spark, sf_dir)
     vecs = nodes.select(
@@ -1488,7 +1479,7 @@ def osm_settlement_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         col("embedding").alias("v"),
         # literal-centroid assignment via memoized SQL parse (similarity.py
         # builders)
-        _memo_expr(nearest_cell_sql("`embedding`", cents)).alias("cluster"),
+        memo.expr(nearest_cell_sql("`embedding`", cents)).alias("cluster"),
     )
     return assigned.groupBy("cluster").agg(
         F.count("*").cast("long").alias("n_nodes"),
@@ -1557,17 +1548,15 @@ def _clip_oracle() -> str:
     "is one unhinted semi-ish left join + partial-agg count on way_id.",
 )
 def osm_polygon_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osmdatapy_spark import memo
     from osmdatapy_spark.operators.measures import point_in_ring
     from osmdatapy_spark.suite.osm import derived_way_refs as _refs
 
-    ring = F.array(
-        *[
-            F.struct(lit(x).alias("lon"), lit(y).alias("lat"))
-            for x, y in _CLIP_POLY
-        ]
+    ring = "array(%s)" % ", ".join(
+        f"struct({memo.dlit(x)} AS lon, {memo.dlit(y)} AS lat)" for x, y in _CLIP_POLY
     )
     nodes = derived_nodes(spark, sf_dir)
-    inside = nodes.filter(point_in_ring(ring, col("lon"), col("lat"))).select("osmid")
+    inside = nodes.filter(point_in_ring(ring, "lon", "lat")).select("osmid")
     kept_nodes = inside.select(
         "osmid", lit(0).cast("int").alias("osmtype"), lit(1).cast("long").alias("n_inside")
     )

@@ -34,8 +34,10 @@ from osmdatapy_spark.functions.text import (
     shingle_sets,
     stopword_count,
     tokens,
+    tokens_sql,
     word_shingles,
 )
+from osmdatapy_spark import memo
 from osmdatapy_spark.memo import managed_persist
 from osmdatapy_spark.suite._util import T, TS
 from osmdatapy_spark.suite.registry import register
@@ -389,7 +391,7 @@ def _jaccard_pairs_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .select("id_a", "id_b", jaccard_similarity(col("sa"), col("sb")).alias("jac"))
+        .select("id_a", "id_b", jaccard_similarity("sa", "sb").alias("jac"))
         .filter(col("jac") >= 0.5)
     )
 
@@ -1187,14 +1189,14 @@ def llm_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_curation_recipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmdatapy_spark.curate import Curate
 
-    docs = TS(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source")
+    docs = memo.select(TS(spark, sf_dir, "documents"), "doc_id", "text", "lang", "source")
     cur = Curate.default_recipe(docs, domain_col="source", cap=10)
-    out = cur.df()
-    return out.select(
+    return memo.select(
+        cur.df(),
         "doc_id",
         "lang",
         "source",
-        F.size(tokens(col("text"))).cast("long").alias("n_tokens"),
+        f"CAST(size({tokens_sql('text')}) AS BIGINT) AS n_tokens",
     )
 
 
@@ -1967,7 +1969,7 @@ def llm_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = managed_persist(sets, "dedup_audit.sets")
     sa = sets.select(col("doc_id").alias("id_a"), col("gs").alias("ga"))
     sb = sets.select(col("doc_id").alias("id_b"), col("gs").alias("gb"))
-    j = jaccard_similarity(col("ga"), col("gb"))
+    j = jaccard_similarity("ga", "gb")
     scored = pairs.join(sa, "id_a").join(sb, "id_b").select(j.alias("j"))
     return (
         scored.groupBy(

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from osmdatapy_spark import memo
 from osmdatapy_spark.memo import managed_persist
 from osmdatapy_spark.operators.geometry import linestring_wkt, point_wkt, way_geom_type
 from osmdatapy_spark.operators.rings import ring_chains
@@ -38,41 +39,37 @@ def derived_way_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # l_linenumber is NOT unique within an order in the synthetic data, so
     # pos must be a row_number over a total order — otherwise member order
     # (and every downstream endpoint/topology result) is engine-dependent.
-    from pyspark.sql import Window
-
-    li = T(spark, sf_dir, "lineitem").select(
-        col("l_orderkey").alias("way_id"),
-        col("l_partkey").alias("node_id"),
-        "l_linenumber",
+    # The window partitions by the ALIAS so the output partitioning
+    # survives the final projection — downstream groupBy(way_id) then
+    # reuses this exchange instead of adding its own (alias-aware
+    # partitioning only tracks attributes that remain in the project
+    # list).  Both projections are memoized SQL (``memo.select``).
+    li = memo.select(
+        T(spark, sf_dir, "lineitem"),
+        "l_orderkey AS way_id", "l_partkey AS node_id", "l_linenumber",
     )
-    # window partitions by the ALIAS so the output partitioning survives the
-    # final projection — downstream groupBy(way_id) then reuses this
-    # exchange instead of adding its own (alias-aware partitioning only
-    # tracks attributes that remain in the project list)
-    w = Window.partitionBy("way_id").orderBy("l_linenumber", "node_id")
-    return li.select(
+    return memo.select(
+        li,
         "way_id",
-        F.row_number().over(w).alias("pos"),
+        "row_number() OVER (PARTITION BY way_id ORDER BY l_linenumber, node_id) AS pos",
         "node_id",
     )
 
 
 def derived_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = T(spark, sf_dir, "part")
-    return part.select(
-        col("p_partkey").alias("osmid"),
-        ((col("p_partkey") % 360) - 180 + 0.5).cast("double").alias("lon"),
-        ((col("p_partkey") % 170) - 85 + 0.25).cast("double").alias("lat"),
+    return memo.select(
+        T(spark, sf_dir, "part"),
+        "p_partkey AS osmid",
+        "CAST(((p_partkey % 360) - 180) + 0.5D AS DOUBLE) AS lon",
+        "CAST(((p_partkey % 170) - 85) + 0.25D AS DOUBLE) AS lat",
     )
 
 
-def _opt_map(*pairs) -> F.Column:
-    """MAP from (key, value-Column) pairs, dropping NULL values — the Spark
-    idiom for a sparse tags map."""
-    args = []
-    for k, v in pairs:
-        args += [lit(k), v]
-    return F.map_filter(F.create_map(*args), lambda k, v: v.isNotNull())
+def _opt_map(*pairs: tuple[str, str]) -> str:
+    """SQL MAP from (key, value-SQL) pairs, dropping NULL values — the
+    Spark idiom for a sparse tags map."""
+    args = ", ".join(f"{memo.sstr(k)}, {v}" for k, v in pairs)
+    return f"map_filter(map({args}), (__k, __v) -> __v IS NOT NULL)"
 
 
 def derived_way_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,39 +78,35 @@ def derived_way_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
     The vocabulary deliberately includes values the reference's default
     queries exclude (highway=abandoned/bus_stop, service=spur, area=yes,
     type=multipolygon) so Query(defaults=...) has real discrimination."""
-    o = T(spark, sf_dir, "orders")
-    k = col("o_orderkey")
     tags = _opt_map(
-        (
-            "highway",
-            F.when(k % 7 == 0, "residential")
-            .when(k % 7 == 1, "primary")
-            .when(k % 7 == 2, "service")
-            .when(k % 7 == 3, "footway")
-            .when(k % 7 == 5, "abandoned")
-            .when(k % 7 == 6, "bus_stop"),
-        ),
-        ("building", F.when(k % 4 == 0, "yes").when(k % 4 == 1, "no").when(k % 4 == 2, "house")),
-        ("area", F.when(k % 9 == 0, "no").when(k % 9 == 1, "yes")),
-        ("natural", F.when(k % 11 == 0, "coastline")),
-        ("barrier", F.when(k % 13 == 0, "wall")),
-        ("service", F.when(k % 17 == 0, "spur").when(k % 17 == 1, "driveway")),
-        ("type", F.when(k % 19 == 0, "multipolygon")),
-        ("name", F.when(k % 3 == 0, F.concat(lit("way-"), k.cast("string")))),
+        ("highway", "CASE o_orderkey % 7 WHEN 0 THEN 'residential' WHEN 1 THEN 'primary' "
+                    "WHEN 2 THEN 'service' WHEN 3 THEN 'footway' WHEN 5 THEN 'abandoned' "
+                    "WHEN 6 THEN 'bus_stop' END"),
+        ("building", "CASE o_orderkey % 4 WHEN 0 THEN 'yes' WHEN 1 THEN 'no' WHEN 2 THEN 'house' END"),
+        ("area", "CASE o_orderkey % 9 WHEN 0 THEN 'no' WHEN 1 THEN 'yes' END"),
+        ("natural", "CASE o_orderkey % 11 WHEN 0 THEN 'coastline' END"),
+        ("barrier", "CASE o_orderkey % 13 WHEN 0 THEN 'wall' END"),
+        ("service", "CASE o_orderkey % 17 WHEN 0 THEN 'spur' WHEN 1 THEN 'driveway' END"),
+        ("type", "CASE o_orderkey % 19 WHEN 0 THEN 'multipolygon' END"),
+        ("name", "CASE o_orderkey % 3 WHEN 0 THEN concat('way-', CAST(o_orderkey AS STRING)) END"),
     )
-    return o.select(k.alias("osmid"), lit(1).cast("tinyint").alias("osmtype"), tags.alias("tags"))
+    return memo.select(
+        T(spark, sf_dir, "orders"),
+        "o_orderkey AS osmid", "CAST(1 AS TINYINT) AS osmtype", f"{tags} AS tags",
+    )
 
 
 def derived_node_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = T(spark, sf_dir, "part")
-    k = col("p_partkey")
     tags = _opt_map(
-        ("amenity", F.when(k % 10 == 0, "restaurant").when(k % 10 == 1, "cafe")),
-        ("shop", F.when(k % 7 == 0, "bakery")),
-        ("tourism", F.when(k % 9 == 0, "hotel")),
-        ("name", F.when(k % 3 == 0, F.concat(lit("node-"), k.cast("string")))),
+        ("amenity", "CASE p_partkey % 10 WHEN 0 THEN 'restaurant' WHEN 1 THEN 'cafe' END"),
+        ("shop", "CASE p_partkey % 7 WHEN 0 THEN 'bakery' END"),
+        ("tourism", "CASE p_partkey % 9 WHEN 0 THEN 'hotel' END"),
+        ("name", "CASE p_partkey % 3 WHEN 0 THEN concat('node-', CAST(p_partkey AS STRING)) END"),
     )
-    return p.select(k.alias("osmid"), lit(0).cast("tinyint").alias("osmtype"), tags.alias("tags"))
+    return memo.select(
+        T(spark, sf_dir, "part"),
+        "p_partkey AS osmid", "CAST(0 AS TINYINT) AS osmtype", f"{tags} AS tags",
+    )
 
 
 # DuckDB-side derivations as reusable CTE text

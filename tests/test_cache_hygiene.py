@@ -140,11 +140,11 @@ def test_two_fuzzy_dedup_chains_match_single_chain(spark):
 def test_non_finite_centroid_raises(spark, bad):
     """ADVICE #4: ``CAST('nan' AS DOUBLE)`` would silently become NULL
     distances; a non-finite centroid must fail at build time."""
-    from osmdatapy_spark.functions.similarity import _sql_dlit, ivf_topk
+    from osmdatapy_spark.functions.similarity import ivf_topk
 
-    assert _sql_dlit(0.1) == "CAST('0.1' AS DOUBLE)"
+    assert memo.dlit(0.1) == "CAST('0.1' AS DOUBLE)"
     with pytest.raises(ValueError):
-        _sql_dlit(bad)
+        memo.dlit(bad)
     corpus = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<double>"
     )
@@ -200,7 +200,6 @@ def test_memo_hits_make_no_py4j_calls(spark, monkeypatch):
     from py4j.java_gateway import GatewayClient
     from pyspark.sql import functions as F
 
-    from osmdatapy_spark.functions.similarity import _memo_expr
     from osmdatapy_spark.operators.geometry import way_geom_type
     from osmdatapy_spark.suite._util import TS
     from osmdatapy_spark.tables import load_table
@@ -210,7 +209,7 @@ def test_memo_hits_make_no_py4j_calls(spark, monkeypatch):
             load_table(spark, SF_DIR, "documents"),
             TS(spark, SF_DIR, "embeddings"),
             way_geom_type(),
-            _memo_expr("1 + 1"),
+            memo.expr("1 + 1"),
         )
 
     warm = build()
@@ -227,6 +226,26 @@ def test_memo_hits_make_no_py4j_calls(spark, monkeypatch):
     assert all(a is b for a, b in zip(warm, again))
     F.lit(1)  # the counter does see a real round trip
     assert len(calls) > 0
+
+
+def test_memo_select_is_one_py4j_call(spark, monkeypatch):
+    from py4j.java_gateway import GatewayClient
+
+    base = spark.range(3)
+    sqls = ("id", "id * 2 AS twice", "CAST(id AS STRING) AS s")
+    memo.select(base, *sqls)
+    calls = []
+    send = GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        calls.append(args)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    out = memo.select(base, *sqls)
+    monkeypatch.undo()
+    assert len(calls) == 1, f"{len(calls)} py4j round trips for a warm memo.select"
+    assert out.collect() == base.selectExpr(*sqls).collect()
 
 
 def _write_nodes(path, n: int, base: int = 0) -> None:

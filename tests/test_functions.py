@@ -211,7 +211,7 @@ def test_exact_dedup_and_jaccard_similarity(docs):
     df = docs.sparkSession.createDataFrame(
         [(["a", "b", "c"], ["b", "c", "d"])], "sa array<string>, sb array<string>"
     )
-    assert df.select(jaccard_similarity(col("sa"), col("sb")).alias("j")).first()["j"] == 0.5
+    assert df.select(jaccard_similarity("sa", "sb").alias("j")).first()["j"] == 0.5
 
 
 def test_dot_cosine_vs_numpy(spark):

@@ -116,11 +116,12 @@ def test_nearest_in_grid_crosses_cell_boundary(spark):
 
 
 def _pip(spark, ring, px, py):
+    from osmdatapy_spark import memo
     from osmdatapy_spark.operators.measures import point_in_ring, ray_cast_crossings
 
     out = _coords_df(spark, ring).select(
-        ray_cast_crossings(col("c"), F.lit(float(px)), F.lit(float(py))).alias("x"),
-        point_in_ring(col("c"), F.lit(float(px)), F.lit(float(py))).alias("inside"),
+        ray_cast_crossings("c", memo.dlit(px), memo.dlit(py)).alias("x"),
+        point_in_ring("c", memo.dlit(px), memo.dlit(py)).alias("inside"),
     ).collect()[0]
     return out.x, out.inside
 
@@ -191,7 +192,7 @@ def _pip_brute(spark, pts, rings):
     return sorted(
         (r.pid, r.rid)
         for r in pts.crossJoin(rings)
-        .filter(point_in_ring(col("coords"), col("px"), col("py")))
+        .filter(point_in_ring("coords", "px", "py"))
         .collect()
     )
 

@@ -994,3 +994,39 @@ def test_way_geometry_parity_across_backings(spark, tmp_path):
     assert all((r.geometry is None) == (r.geometry_wkb is None) for r in wkb.values())
     assert wkb[(109, 1)].geometry_wkb is None
     assert bytes(wkb[(101, 1)].geometry_wkb)[:9] == b"\x01\x02\x00\x00\x00\x03\x00\x00\x00"
+
+
+def test_relation_geometry_null_on_missing_vertex(spark, tmp_path):
+    """A relation whose ring (or route chain) references a node the
+    extract does not hold keeps its row with geometry null, as a way with
+    a missing vertex does; ``wkb=True`` encodes null instead of raising.
+    A complete relation in the same extract still renders."""
+    from osmdatapy_spark.sources.pbf_codec import PbfWriter
+
+    p = str(tmp_path / "clipped.osm.pbf")
+    w = PbfWriter()
+    w.add_dense_nodes([
+        (1, 10.0, 50.0, {}), (2, 10.1, 50.0, {}), (3, 10.1, 50.1, {}),
+        (4, 11.0, 51.0, {}), (5, 11.1, 51.0, {}), (6, 11.1, 51.1, {}),
+    ])
+    w.add_way(11, [1, 2, 3, 999, 1], {})
+    w.add_way(12, [4, 5, 6, 4], {})
+    w.add_way(13, [1, 2, 999], {})
+    w.add_relation(21, [(11, 1, "outer")], {"type": "multipolygon", "landuse": "park"})
+    w.add_relation(22, [(12, 1, "outer")], {"type": "multipolygon", "landuse": "park"})
+    w.add_relation(23, [(13, 1, "")], {"type": "route", "route": "bus"})
+    w.write(p)
+
+    osm = OSM.from_pbf(spark, p)
+    q = Query(nodes=False, ways=False, relations=True, geometry=True)
+    got = {r.osmid: r for r in osm.query(q, wkb=True).collect()}
+    assert set(got) == {21, 22, 23}
+    assert got[21].geometry is None and got[21].geometry_wkb is None
+    assert got[23].geometry is None and got[23].geometry_wkb is None
+    assert got[22].geometry == (
+        "POLYGON ((11.0000000 51.0000000, 11.1000000 51.0000000, "
+        "11.1000000 51.1000000, 11.0000000 51.0000000))"
+    )
+    assert bytes(got[22].geometry_wkb)[:5] == b"\x01\x03\x00\x00\x00"
+    plain = {r.osmid: r.geometry for r in osm.query(q).collect()}
+    assert plain == {k: r.geometry for k, r in got.items()}

@@ -613,7 +613,7 @@ def test_point_in_polygon_join_matches_brute_force(spark, rings, pts, cell):
     want = sorted(
         (r.pid, r.rid)
         for r in pdf.crossJoin(rdf)
-        .filter(in_bbox & point_in_ring(F.col("coords"), F.col("px"), F.col("py")))
+        .filter(in_bbox & point_in_ring("coords", "px", "py"))
         .collect()
     )
     assert got == want

@@ -3,11 +3,19 @@ Spark query AND its DuckDB oracle at a given sf dir, compare row count,
 column names/order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+The DuckDB side runs under a fixed memory limit and thread count and
+spills to a temporary directory, so it stays bounded next to the Spark
+JVM.  The last lines report this process's peak RSS and the JVM's
+metaspace.
 """
 
 from __future__ import annotations
 
+import os
+import resource
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -20,6 +28,11 @@ sys.path.insert(0, str(REPO))
 from osmdatapy_spark.session import get_spark  # noqa: E402
 from osmdatapy_spark.suite import QUERY_REGISTRY  # noqa: E402
 from osmdatapy_spark.tables import TABLE_NAMES  # noqa: E402
+
+# DuckDB bounds: past the limit an operator spills to the temp directory
+# instead of growing the process.
+DUCKDB_MEMORY_LIMIT = "2GB"
+DUCKDB_THREADS = min(4, os.cpu_count() or 1)
 
 
 def dtype_kind(dtype) -> str:
@@ -126,9 +139,6 @@ def main() -> int:
     # container spin-up, unrelated to any query's plan; warm it the same
     # way the Arrow workers are warmed above
     try:
-        import os
-        import tempfile
-
         from osmdatapy_spark.sources.xml import read_osm_xml, write_osm_xml
 
         p = os.path.join(tempfile.mkdtemp(), "warm.osm")
@@ -173,7 +183,14 @@ def main() -> int:
     except Exception as e:  # missing embeddings table etc. — queries train lazily
         print(f"ann training skipped: {e}")
 
-    con = duckdb.connect()
+    duck_tmp = tempfile.TemporaryDirectory(prefix="check-oracle-duckdb-")
+    con = duckdb.connect(
+        config={
+            "memory_limit": DUCKDB_MEMORY_LIMIT,
+            "threads": DUCKDB_THREADS,
+            "temp_directory": duck_tmp.name,
+        }
+    )
     # Pin the oracle session to UTC: DuckDB's TZ-sensitive conversions
     # (to_timestamp, CAST TIMESTAMPTZ->TIMESTAMP, AT TIME ZONE) follow the
     # session TimeZone, which defaults to the HOST's — an oracle that
@@ -233,8 +250,21 @@ def main() -> int:
         )
         n_pass += 1
 
+    con.close()
+    duck_tmp.cleanup()
     print(f"\n== {n_pass} pass, {n_fail} fail, {n_rows_only} rows-only ==")
+    peak_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+    print(f"checker process peak RSS: {peak_mb:.0f} MB")
+    print(f"JVM metaspace used: {_metaspace_mb(spark):.0f} MB")
     return 1 if n_fail else 0
+
+
+def _metaspace_mb(spark) -> float:
+    pools = spark._jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
+    for i in range(pools.size()):
+        if pools.get(i).getName() == "Metaspace":
+            return pools.get(i).getUsage().getUsed() / 2**20
+    return float("nan")
 
 
 if __name__ == "__main__":
