@@ -5,7 +5,8 @@ strongly, so the owner's id cannot be reused while the entry exists:
 
 - a ``SparkSession`` owns table and spread handles (``tables.load_table``,
   ``suite._util.TS``), data-source registrations and relation handles
-  (``sources._row.load``) and managed persists (``managed_persist``);
+  (``sources._row.load``), managed persists (``managed_persist``) and the
+  mark that its conf is tuned (``session.tune_session``);
 - the py4j gateway owns parsed expressions (``expr``, ``select``,
   ``geometry.way_geom_type``);
 - ``None`` (the process) owns trained ANN artifacts
@@ -14,7 +15,8 @@ strongly, so the owner's id cannot be reused while the entry exists:
 Values are plan handles, expressions and small artifacts, never query
 results: every action still computes from its inputs.  A hit is one dict
 lookup plus an ``is owner`` check and makes no py4j call.  A miss prunes
-the entries of stopped owners, checking each distinct owner once.
+the entries of stopped owners, checking each SparkContext (or gateway)
+once.
 
 Table datasets are assumed static while a session lives: a table handle
 freezes the parquet file listing.  Code that rewrites a dataset in-session
@@ -71,11 +73,15 @@ def put(owner: Any, namespace: str, key: Hashable, value: Any) -> Any:
     """Store ``value`` after pruning stopped owners; return the value it
     replaced (or None)."""
     with _LOCK:
+        # sessions from ``newSession()`` share one SparkContext, so one
+        # probe answers for all of them (a gateway is its own context:
+        # its __getattr__ would ask the JVM)
         stopped: dict[int, bool] = {}
         for k, (o, _) in list(_STORE.items()):
-            if id(o) not in stopped:
-                stopped[id(o)] = _stopped(o)
-            if stopped[id(o)]:
+            ctx = id(o if isinstance(o, JavaGateway) else getattr(o, "_sc", o))
+            if ctx not in stopped:
+                stopped[ctx] = _stopped(o)
+            if stopped[ctx]:
                 del _STORE[k]
         prev = _STORE.get((id(owner), namespace, key))
         _STORE[(id(owner), namespace, key)] = (owner, value)

@@ -195,7 +195,7 @@ class Query:
         return out
 
     def type_predicate(self) -> Column:
-        """Element-kind selection (reference P1, osmquery.py:259-281)."""
+        """Kind selection: nodes, ways, relations (reference P1, osmquery.py:259-281)."""
         kinds = [
             t
             for t, on in (

@@ -22,6 +22,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from osmdatapy_spark import memo
+
 
 # ``spark.sql.codegen.cache.maxEntries``: Spark's default of 100 compiled
 # classes (a Guava LRU cache in 4 segments of 25) is smaller than the
@@ -69,11 +71,17 @@ def get_spark(app_name: str = "osmdatapy-spark", cpus: int | None = None) -> Spa
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable defaults to an externally-created session.
+    """Apply runtime-settable defaults to an externally-created session,
+    once per session (the memo drops the mark when the session stops).
 
     The driver hands us its own SparkSession; only touch conf keys that are
     runtime-mutable (timezone, AQE) and leave cluster sizing alone.
     """
+    memo.get(spark, "tuned", None, lambda: _set_conf(spark))
+    return spark
+
+
+def _set_conf(spark: SparkSession) -> None:
     for k, v in (
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.adaptive.enabled", "true"),
@@ -86,4 +94,3 @@ def tune_session(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass  # immutable in this deployment — fine, defaults are sane
-    return spark

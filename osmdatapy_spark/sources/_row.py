@@ -7,8 +7,7 @@ two sources share lives here, once:
 
 - ``prune_schema``: the ``columns`` read option;
 - ``parse_osmtypes``: the ``osmtypes`` read option;
-- ``arrow_types`` / ``record_batch``: the row's Arrow form, derived from
-  the Spark schema, and per-row Python values turned into it;
+- ``arrow_types``: the row's Arrow form, derived from the Spark schema;
 - ``expand_paths``: the files a batch read of a path covers;
 - ``load``: how the ``read_*`` helpers pass their keyword arguments on
   as read options, and the one relation handle per session and read.
@@ -24,7 +23,7 @@ from __future__ import annotations
 
 import glob
 import os
-from typing import TYPE_CHECKING, Callable
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource
@@ -63,19 +62,6 @@ def arrow_types(schema: StructType) -> "dict[str, pa.DataType]":
     from pyspark.sql.pandas.types import to_arrow_type
 
     return {f.name: to_arrow_type(f.dataType) for f in schema.fields}
-
-
-def record_batch(schema: StructType, column: Callable[[str], list]) -> "pa.RecordBatch":
-    """One Arrow batch of ``schema``'s columns from per-row Python values,
-    ``column(name)`` giving one list per column.  Tags come as dicts and
-    members as ``(ref, type, role)`` tuples, the form both sources' parsers
-    produce; pyarrow converts both without reshaping."""
-    import pyarrow as pa
-
-    types = arrow_types(schema)
-    return pa.RecordBatch.from_arrays(
-        [pa.array(column(name), type=t) for name, t in types.items()], names=list(types)
-    )
 
 
 def expand_paths(path: str, suffixes: tuple[str, ...]) -> list[str]:

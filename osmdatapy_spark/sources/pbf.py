@@ -65,7 +65,6 @@ from osmdatapy_spark.sources._row import (
     load,
     parse_osmtypes,
     prune_schema,
-    record_batch,
 )
 from osmdatapy_spark.sources._watch import DirectoryWatcher
 from osmdatapy_spark.sources.pbf_codec import (
@@ -260,11 +259,14 @@ class PbfDataSourceReader(DataSourceReader):
         metadata wire fields are not even decoded unless asked for
         (reference field-decode pruning, primitives.py:23-29).
 
-        Dense-node groups (~90% of a planet file) arrive as columnar
-        ``DenseColumns`` segments — numpy arrays become Arrow arrays
-        zero-copy and tags build via ``MapArray.from_arrays`` offsets, so
-        no per-node Python object ever exists (round-4 decode speedup;
-        the pre-columnar path profiled ~70% of CPU in Element churn)."""
+        Every block decodes into columnar segments
+        (``decode_block_segments``): nodes as ``DenseColumns`` — numpy
+        arrays for dense groups (~90% of a planet file), which become
+        Arrow arrays zero-copy — ways as ``WayColumns`` and relations as
+        ``RelationColumns``; tags build via ``MapArray.from_arrays``
+        offsets, so no per-element Python object ever exists (round-4
+        decode speedup).  A malformed block raises ``ValueError`` naming
+        the file and the blob's offset."""
         import numpy as np
         import pyarrow as pa
 
@@ -280,28 +282,30 @@ class PbfDataSourceReader(DataSourceReader):
         want_tags = "tags" in fields
         want_refs = "refs" in fields
         want_members = "members" in fields
-        wanted = self.wanted_types
-        segments = [
-            seg
-            for offset, size in partition.spans
-            # kind restriction applied INSIDE the block decoder: an
-            # unselected primitive group is skipped before any varint
-            # work (dense nodes dominate planet files, so a ways-only
-            # scan drops most decode CPU here)
-            for seg in decode_block_segments(
-                read_blob(partition.path, BlobSpan("OSMData", offset, size)),
-                with_metadata=want_meta,
-                wanted_types=wanted,
-                with_tags=want_tags,
-                with_refs=want_refs,
-                with_members=want_members,
-                # executor-side dictionary skip: bail after the
-                # stringtable when a must key is absent from this block
-                # (or no any-key is present)
-                must_strings=self.must_strings,
-                any_strings=self.any_strings,
-            )
-        ]
+
+        def decode(offset: int, size: int) -> list:
+            try:
+                return decode_block_segments(
+                    read_blob(partition.path, BlobSpan("OSMData", offset, size)),
+                    with_metadata=want_meta,
+                    # kind restriction applied INSIDE the block decoder: an
+                    # unselected primitive group is skipped before any varint
+                    # work (dense nodes dominate planet files, so a ways-only
+                    # scan drops most decode CPU here)
+                    wanted_types=self.wanted_types,
+                    with_tags=want_tags,
+                    with_refs=want_refs,
+                    with_members=want_members,
+                    # executor-side dictionary skip: bail after the
+                    # stringtable when a must key is absent from this block
+                    # (or no any-key is present)
+                    must_strings=self.must_strings,
+                    any_strings=self.any_strings,
+                )
+            except ValueError as e:
+                raise ValueError(f"{partition.path}: blob at offset {offset}: {e}") from e
+
+        segments = [seg for offset, size in partition.spans for seg in decode(offset, size)]
 
         types = arrow_types(self.schema)
 
@@ -394,10 +398,6 @@ class PbfDataSourceReader(DataSourceReader):
             return pa.nulls(rc.n, type=t)
 
         def segment_arrays(seg) -> "list[pa.Array]":
-            if isinstance(seg, list):  # plain (non-dense) Element rows
-                return record_batch(
-                    self.schema, lambda name: [getattr(e, name) for e in seg]
-                ).columns
             build = (
                 dense_array
                 if isinstance(seg, DenseColumns)

@@ -458,32 +458,6 @@ def parse_header_block(block: bytes) -> tuple[list[str], list[str]]:
 # PrimitiveBlock decode (reference S5-S12)
 # ---------------------------------------------------------------------------
 
-NODE, WAY, RELATION = 0, 1, 2
-
-# shared read-only tags dict for untagged elements (see _decode_dense)
-_EMPTY_TAGS: dict = {}
-
-
-@dataclass(slots=True)
-class Element:
-    """Unified decoded element row (SURVEY.md §1.5 data model).
-
-    ``slots=True``: hundreds of thousands of these materialize per decode
-    task (one per element between wire and Arrow batch) — slots cut the
-    per-object dict allocation and speed attribute writes/reads in the
-    hot loops (~10% off dense-node decode, measured)."""
-
-    osmid: int
-    osmtype: int
-    tags: dict[str, str]
-    lon: Optional[float] = None
-    lat: Optional[float] = None
-    refs: Optional[list[int]] = None
-    members: Optional[list[tuple[int, int, str]]] = None  # (ref, type, role)
-    version: Optional[int] = None
-    timestamp: Optional[int] = None
-    changeset: Optional[int] = None
-
 
 def _decode_stringtable(data: bytes) -> list[str]:
     return [
@@ -508,92 +482,49 @@ def _decode_info(data: bytes) -> tuple[Optional[int], Optional[int], Optional[in
     return version, timestamp, changeset
 
 
-def decode_primitive_block(
-    block: bytes,
-    with_metadata: bool = False,
-    wanted_types: "set[int] | None" = None,
-) -> list[Element]:
-    """Decode every element of one PrimitiveBlock.
-
-    Predicate evaluation does NOT happen here (contrast reference
-    primitives.py:26-27 early aborts): rows flow into Spark and Catalyst
-    filters them — pushed filters instead prune whole *partitions* in
-    ``PbfDataSourceReader.partitions``/``read``.
-
-    The ONE exception is ``wanted_types`` (the ``osmtypes`` read option,
-    P2 block pruning, reference osmdata.py:140-168 block-kind skip): a
-    primitive GROUP of an unselected kind is skipped before any varint is
-    touched.  On planet-shaped files dense-node groups are ~90% of the
-    decode work, so a ways/relations query drops most of the CPU here —
-    far cheaper than decode-then-filter.  The skip is by wire field id
-    (1/2=nodes, 3=ways, 4=relations), so it cannot change the VALUES of
-    decoded rows — only avoid decoding rows Catalyst would discard."""
-    strings: list[str] = []
-    groups: list[bytes] = []
-    granularity = 100
-    lat_off = lon_off = 0
-    date_gran = 1000
-    for field, _, val in iter_fields(block, 0, len(block)):
-        if field == 1:
-            strings = _decode_stringtable(val)
-        elif field == 2:
-            groups.append(bytes(val))
-        elif field == 17:
-            granularity = val
-        elif field == 18:
-            date_gran = val
-        elif field == 19:
-            lat_off = val
-        elif field == 20:
-            lon_off = val
-
-    scale = 1e-9
-    w = wanted_types
-    nodes_on = w is None or 0 in w
-    ways_on = w is None or 1 in w
-    rels_on = w is None or 2 in w
-    out: list[Element] = []
-    for group in groups:
-        for field, _, val in iter_fields(group, 0, len(group)):
-            if field == 1:
-                if nodes_on:
-                    out.append(_decode_node(val, strings, granularity, lat_off, lon_off, scale, with_metadata, date_gran))
-            elif field == 2:
-                if nodes_on:
-                    out.extend(_decode_dense(val, strings, granularity, lat_off, lon_off, scale, with_metadata, date_gran))
-            elif field == 3:
-                if ways_on:
-                    out.append(_decode_way(val, strings, with_metadata, date_gran))
-            elif field == 4:
-                if rels_on:
-                    out.append(_decode_relation(val, strings, with_metadata, date_gran))
-    return out
+def _append_tags(seg, keys: list[int], vals: list[int], strings: list[str]) -> None:
+    if keys:
+        seg.tag_keys += [strings[k] for k in keys]
+        seg.tag_vals += [strings[v] for v in vals]
+    seg.tag_offsets.append(seg.tag_offsets[-1] + len(keys))
 
 
-def _tags_from_keyvals(keys: list[int], vals: list[int], strings: list[str]) -> dict[str, str]:
-    return {strings[k]: strings[v] for k, v in zip(keys, vals)}
+def _append_info(seg, info: Optional[bytes], date_gran: int) -> None:
+    """One element's Info → the segment's metadata columns (nulls when the
+    element carries none)."""
+    v = ts = cs = None
+    if info is not None:
+        v, ts, cs = _decode_info(info)
+        if ts is not None:
+            ts = ts * date_gran // 1000
+    seg.versions.append(v)
+    seg.timestamps.append(ts)
+    seg.changesets.append(cs)
 
 
 class DenseColumns:
-    """Columnar dense-node segment (the Arrow scan fast path).
+    """Columnar node segment (the Arrow scan fast path).
 
-    Planet files are ~90% dense nodes; materializing an ``Element`` per
+    Planet files are ~90% dense nodes; materializing a Python object per
     node (then re-reading it attribute-by-attribute for each Arrow
-    column) was ~70% of block-decode CPU (profiled round 4).  This keeps
-    the delta/cumsum decode's numpy arrays AS the columns and flattens
-    tags into (offsets, keys, vals) ready for ``pa.MapArray.from_arrays``
-    — the only remaining Python loop is over tag PAIRS (sparse: most
-    nodes are untagged), not nodes."""
+    column) was ~70% of block-decode CPU (profiled round 4).  A DenseNodes
+    group keeps the delta/cumsum decode's numpy arrays AS the columns and
+    flattens tags into (offsets, keys, vals) ready for
+    ``pa.MapArray.from_arrays`` — the only remaining Python loop is over
+    tag PAIRS (sparse: most nodes are untagged), not nodes.  A run of
+    plain (non-dense) Nodes, rare in real files, appends into the same
+    columns held as lists (``_decode_node_into``).  The metadata columns
+    are ``None`` when the scan does not want metadata or a DenseNodes
+    group carries none."""
 
     __slots__ = (
-        "n", "ids", "lons", "lats",
+        "ids", "lons", "lats",
         "tag_offsets", "tag_keys", "tag_vals",
         "versions", "timestamps", "changesets",
     )
 
-    def __init__(self, n, ids, lons, lats, tag_offsets, tag_keys, tag_vals,
+    def __init__(self, ids, lons, lats, tag_offsets, tag_keys, tag_vals,
                  versions=None, timestamps=None, changesets=None):
-        self.n = n
         self.ids = ids
         self.lons = lons
         self.lats = lats
@@ -604,21 +535,31 @@ class DenseColumns:
         self.timestamps = timestamps
         self.changesets = changesets
 
+    @property
+    def n(self) -> int:
+        return len(self.ids)
+
 
 def _decode_dense_columns(
     data: bytes, strings, gran, lat_off, lon_off, scale, with_metadata, date_gran,
     with_tags: bool = True,
-) -> Optional[DenseColumns]:
-    """DenseNodes → columnar segment; same wire walk as ``_decode_dense``
-    but no per-node Python objects.  Tag flattening: the keys_vals stream
-    is ``[k,v,...,0]`` per node (string index 0 is the reserved empty
+) -> DenseColumns:
+    """DenseNodes → columnar segment, no per-node Python objects (reference
+    dense.py:8-51; its metadata path is broken — SURVEY §2.12 — spec
+    semantics here).  Tag flattening: the keys_vals stream is
+    ``[k,v,...,0]`` per node (string index 0 is the reserved empty
     string, so 0 appears only as the terminator); dropping the zero
     terminators leaves the global ``k,v,k,v,...`` pair stream intact, and
     per-node pair counts come from the gaps between zero positions —
-    fully vectorized."""
+    fully vectorized.
+
+    The group's parallel arrays must match its id count: a lats, lons or
+    versions array of another length, or a keys_vals stream with another
+    number of terminators, raises ``ValueError`` — no node's values could
+    be told from its neighbour's."""
     import numpy as np
 
-    ids = lats = lons = None
+    ids = lats = lons = np.zeros(0, dtype=np.int64)
     kv = None
     versions: list[int] = []
     timestamps: list[int] = []
@@ -643,9 +584,10 @@ def _decode_dense_columns(
         elif field == 10:
             if with_tags:
                 kv = np_read_packed_varints(val, 0, len(val))
-    if ids is None:
-        return None
     n = len(ids)
+    for name, got in (("lats", len(lats)), ("lons", len(lons))):
+        if got != n:
+            raise ValueError(f"malformed DenseNodes: {n} ids but {got} {name}")
 
     abs_ids = np.cumsum(ids)
     abs_lats = (np.cumsum(lats) * gran + lat_off) * scale
@@ -658,9 +600,9 @@ def _decode_dense_columns(
     else:
         z = np.flatnonzero(kv == 0)
         if len(z) != n:
-            # malformed stream — fall back to the per-element decoder's
-            # semantics by letting the caller use _decode_dense
-            return None
+            raise ValueError(
+                f"malformed DenseNodes: {n} ids but {len(z)} keys_vals terminators"
+            )
         pairs_per_node = (np.diff(np.concatenate(([-1], z))) - 1) // 2
         tag_offsets = np.concatenate(
             ([0], np.cumsum(pairs_per_node))
@@ -671,15 +613,16 @@ def _decode_dense_columns(
 
     vers = ts = cs = None
     if with_metadata and versions:
+        if len(versions) != n:
+            raise ValueError(
+                f"malformed DenseNodes: {n} ids but {len(versions)} versions"
+            )
         vers = np.asarray(versions, dtype=np.int32)
-        if len(vers) != n:
-            return None
 
         def _padded_cumsum(deltas: list) -> "np.ndarray":
-            # short delta streams behave as trailing zero deltas (the
-            # per-element decoder's `deltas[i] if i < len else 0`), so
-            # pad BEFORE the cumsum — zero-filling the whole array would
-            # diverge on the prefix that IS present
+            # a short delta stream reads as trailing zero deltas: pad
+            # BEFORE the cumsum, so the accumulated prefix that IS
+            # present carries through to the last node
             arr = np.zeros(n, dtype=np.int64)
             k = min(len(deltas), n)
             arr[:k] = deltas[:k]
@@ -687,7 +630,47 @@ def _decode_dense_columns(
 
         ts = _padded_cumsum(timestamps) * date_gran // 1000
         cs = _padded_cumsum(changesets)
-    return DenseColumns(n, abs_ids, abs_lons, abs_lats, tag_offsets, tag_keys, tag_vals, vers, ts, cs)
+    return DenseColumns(abs_ids, abs_lons, abs_lats, tag_offsets, tag_keys, tag_vals, vers, ts, cs)
+
+
+def _node_run(with_metadata: bool) -> DenseColumns:
+    """An empty run of plain nodes: list columns to append to."""
+    meta = ([], [], []) if with_metadata else (None, None, None)
+    return DenseColumns([], [], [], [0], [], [], *meta)
+
+
+def _decode_node_into(
+    data: bytes, strings, nc: DenseColumns, gran, lat_off, lon_off, scale,
+    with_metadata, date_gran, with_tags: bool = True,
+) -> None:
+    """One plain (non-dense) Node → columnar append (reference
+    primitives.py:9-44 — whose cached-node path is broken, SURVEY §2.12;
+    implemented per spec here)."""
+    osmid = lat = lon = 0
+    keys: list[int] = []
+    vals: list[int] = []
+    info = None
+    for field, _, val in iter_fields(data, 0, len(data)):
+        if field == 1:
+            osmid = zigzag(val)
+        elif field == 2:
+            if with_tags:
+                keys = read_packed_varints(val, 0, len(val))
+        elif field == 3:
+            if with_tags:
+                vals = read_packed_varints(val, 0, len(val))
+        elif field == 4:
+            info = bytes(val)
+        elif field == 8:
+            lat = zigzag(val)
+        elif field == 9:
+            lon = zigzag(val)
+    nc.ids.append(osmid)
+    nc.lons.append((lon * gran + lon_off) * scale)
+    nc.lats.append((lat * gran + lat_off) * scale)
+    _append_tags(nc, keys, vals, strings)
+    if with_metadata:
+        _append_info(nc, info, date_gran)
 
 
 class WayColumns:
@@ -724,10 +707,11 @@ def _decode_way_into(
     data: bytes, strings, wb: WayColumns, with_metadata, date_gran,
     with_tags: bool = True, with_refs: bool = True,
 ) -> None:
-    """One way → columnar append (same wire walk as ``_decode_way``).
-    ``with_tags``/``with_refs`` gate the packed-payload decodes for pruned
-    scans (the exploded way_refs relation never touches tag strings; a
-    tags-only projection never delta-accumulates refs)."""
+    """One way with delta-decoded refs → columnar append (reference
+    primitives.py:47-90).  ``with_tags``/``with_refs`` gate the
+    packed-payload decodes for pruned scans (the exploded way_refs
+    relation never touches tag strings; a tags-only projection never
+    delta-accumulates refs)."""
     osmid = 0
     keys: list[int] = []
     vals: list[int] = []
@@ -746,34 +730,22 @@ def _decode_way_into(
             info = bytes(val)
         elif field == 8:
             if with_refs:
+                # delta → absolute refs via C-speed accumulate
                 refs = list(accumulate(read_packed_signed(val, 0, len(val))))
     wb.ids.append(osmid)
-    if keys:
-        wb.tag_keys += [strings[k] for k in keys]
-        wb.tag_vals += [strings[v] for v in vals]
-    wb.tag_offsets.append(wb.tag_offsets[-1] + len(keys))
+    _append_tags(wb, keys, vals, strings)
     wb.refs += refs
     wb.ref_offsets.append(wb.ref_offsets[-1] + len(refs))
     if with_metadata:
-        if info is not None:
-            v, ts, cs = _decode_info(info)
-            wb.versions.append(v)
-            wb.timestamps.append(ts * date_gran // 1000 if ts is not None else None)
-            wb.changesets.append(cs)
-        else:
-            wb.versions.append(None)
-            wb.timestamps.append(None)
-            wb.changesets.append(None)
+        _append_info(wb, info, date_gran)
 
 
 class RelationColumns:
     """Columnar relation segment builder (Arrow scan fast path for
     relations — round 6, completing the ``DenseColumns``/``WayColumns``
-    trio; reference per-element anchor primitives.py:93-147).  Member
-    triples flatten into parallel (refs, types, roles) arrays + one
-    offsets array, ready for ``ListArray.from_arrays`` over a
-    ``StructArray`` — no per-relation Element object, no per-member
-    tuple."""
+    trio).  Member triples flatten into parallel (refs, types, roles)
+    arrays + one offsets array, ready for ``ListArray.from_arrays`` over
+    a ``StructArray`` — no per-relation object, no per-member tuple."""
 
     __slots__ = (
         "ids", "tag_offsets", "tag_keys", "tag_vals",
@@ -803,10 +775,10 @@ def _decode_relation_into(
     data: bytes, strings, rb: RelationColumns, with_metadata, date_gran,
     with_tags: bool = True, with_members: bool = True,
 ) -> None:
-    """One relation → columnar append (same wire walk as
-    ``_decode_relation``).  ``with_tags``/``with_members`` gate the packed
-    payload decodes for pruned scans (an id-only projection never
-    delta-accumulates member ids or touches role strings)."""
+    """One relation with delta-decoded member ids → columnar append
+    (reference primitives.py:93-147).  ``with_tags``/``with_members`` gate
+    the packed payload decodes for pruned scans (an id-only projection
+    never delta-accumulates member ids or touches role strings)."""
     osmid = 0
     keys: list[int] = []
     vals: list[int] = []
@@ -835,10 +807,7 @@ def _decode_relation_into(
             if with_members:
                 types = read_packed_varints(val, 0, len(val))
     rb.ids.append(osmid)
-    if keys:
-        rb.tag_keys += [strings[k] for k in keys]
-        rb.tag_vals += [strings[v] for v in vals]
-    rb.tag_offsets.append(rb.tag_offsets[-1] + len(keys))
+    _append_tags(rb, keys, vals, strings)
     if memids:
         rb.mem_refs += memids
         rb.mem_types += types
@@ -847,15 +816,11 @@ def _decode_relation_into(
         ]
     rb.mem_offsets.append(rb.mem_offsets[-1] + len(memids))
     if with_metadata:
-        if info is not None:
-            v, ts, cs = _decode_info(info)
-            rb.versions.append(v)
-            rb.timestamps.append(ts * date_gran // 1000 if ts is not None else None)
-            rb.changesets.append(cs)
-        else:
-            rb.versions.append(None)
-            rb.timestamps.append(None)
-            rb.changesets.append(None)
+        _append_info(rb, info, date_gran)
+
+
+# PrimitiveGroup field → osmtype: 1 Node, 2 DenseNodes, 3 Way, 4 Relation
+_GROUP_KIND = {1: 0, 2: 0, 3: 1, 4: 2}
 
 
 def decode_block_segments(
@@ -868,23 +833,35 @@ def decode_block_segments(
     must_strings: "frozenset[str] | None" = None,
     any_strings: "frozenset[str] | None" = None,
 ) -> list:
-    """Segment-structured block decode for the Arrow scan path: dense-node
-    groups come back as ``DenseColumns``, way runs as ``WayColumns``, and
-    relation runs as ``RelationColumns`` (columnar, no per-element
-    objects — round 6 completes the trio); non-dense Nodes remain
-    ``Element`` lists (rare in real files), in wire encounter order — so
-    row order is identical to ``decode_primitive_block``.  Semantics
-    parity is pinned by tests/test_pbf_source.py (same rows either path).
-    ``with_tags`` / ``with_refs`` / ``with_members`` skip the packed
-    payload decodes for pruned scans (the 'columns' read option —
-    reference field-decode pruning, primitives.py:23-29, end-to-end).
-    ``must_strings`` is the executor-side dictionary skip: a block whose
-    string table lacks any required string decodes to NOTHING (tag
-    keys/values are indices into that table, so absence is exact proof
-    no element matches — reference osmquery.py:242-257 semantics at
-    block granularity).  ``any_strings`` is the disjunctive variant
-    (skip only when NONE is present) — the shape Query.must_tags needs
-    ("element has at least one of these keys")."""
+    """Decode one PrimitiveBlock into columnar segments, in wire order:
+    each DenseNodes group is one ``DenseColumns``; each run of plain
+    Nodes, Ways or Relations is one ``DenseColumns``, ``WayColumns`` or
+    ``RelationColumns``, so concatenating the segments gives the block's
+    elements in the order they were written.  No per-element Python
+    object is built.
+
+    Predicate evaluation does NOT happen here (contrast reference
+    primitives.py:26-27 early aborts): rows flow into Spark and Catalyst
+    filters them.  Three things are pruned before any varint work:
+
+    - ``wanted_types`` (the ``osmtypes`` read option, P2 block pruning,
+      reference osmdata.py:140-168 block-kind skip): a primitive group
+      entry of an unselected kind is skipped by its wire field id.  On
+      planet-shaped files dense-node groups are ~90% of the decode work,
+      so a ways/relations query drops most of the CPU here.
+    - ``with_tags`` / ``with_refs`` / ``with_members`` skip the packed
+      payload decodes for pruned scans (the 'columns' read option —
+      reference field-decode pruning, primitives.py:23-29, end-to-end).
+    - ``must_strings`` is the executor-side dictionary skip: a block whose
+      string table lacks any required string decodes to NOTHING (tag
+      keys/values are indices into that table, so absence is exact proof
+      no element matches — reference osmquery.py:242-257 semantics at
+      block granularity).  ``any_strings`` is the disjunctive variant
+      (skip only when NONE is present) — the shape Query.must_tags needs
+      ("element has at least one of these keys").
+
+    A malformed DenseNodes group raises ``ValueError``
+    (``_decode_dense_columns``)."""
     strings: list[str] = []
     groups: list[bytes] = []
     granularity = 100
@@ -913,238 +890,36 @@ def decode_block_segments(
         return []
 
     scale = 1e-9
-    w = wanted_types
-    nodes_on = w is None or 0 in w
-    ways_on = w is None or 1 in w
-    rels_on = w is None or 2 in w
     segments: list = []
-    els: list[Element] = []
-    wb: Optional[WayColumns] = None
-    rb: Optional[RelationColumns] = None
-
-    def flush_els():
-        nonlocal els
-        if els:
-            segments.append(els)
-            els = []
-
-    def flush_ways():
-        nonlocal wb
-        if wb is not None and wb.ids:
-            segments.append(wb)
-            wb = None
-
-    def flush_rels():
-        nonlocal rb
-        if rb is not None and rb.ids:
-            segments.append(rb)
-            rb = None
-
+    run = 0  # group field of the open plain-node / way / relation run
     for group in groups:
         for field, _, val in iter_fields(group, 0, len(group)):
+            kind = _GROUP_KIND.get(field)
+            if kind is None or (wanted_types is not None and kind not in wanted_types):
+                continue
+            if field == 2:
+                segments.append(_decode_dense_columns(
+                    val, strings, granularity, lat_off, lon_off, scale,
+                    with_metadata, date_gran, with_tags,
+                ))
+                run = 0
+                continue
+            if field != run:
+                run = field
+                segments.append(
+                    _node_run(with_metadata) if field == 1
+                    else WayColumns() if field == 3
+                    else RelationColumns()
+                )
+            seg = segments[-1]
             if field == 1:
-                if nodes_on:
-                    flush_ways()
-                    flush_rels()
-                    els.append(_decode_node(val, strings, granularity, lat_off, lon_off, scale, with_metadata, date_gran))
-            elif field == 2:
-                if nodes_on:
-                    dc = _decode_dense_columns(val, strings, granularity, lat_off, lon_off, scale, with_metadata, date_gran, with_tags)
-                    if dc is None:
-                        flush_ways()
-                        flush_rels()
-                        els.extend(_decode_dense(val, strings, granularity, lat_off, lon_off, scale, with_metadata, date_gran))
-                    else:
-                        flush_els()
-                        flush_ways()
-                        flush_rels()
-                        segments.append(dc)
+                _decode_node_into(val, strings, seg, granularity, lat_off, lon_off, scale,
+                                  with_metadata, date_gran, with_tags)
             elif field == 3:
-                if ways_on:
-                    flush_els()
-                    flush_rels()
-                    if wb is None:
-                        wb = WayColumns()
-                    _decode_way_into(val, strings, wb, with_metadata, date_gran, with_tags, with_refs)
-            elif field == 4:
-                if rels_on:
-                    flush_els()
-                    flush_ways()
-                    if rb is None:
-                        rb = RelationColumns()
-                    _decode_relation_into(val, strings, rb, with_metadata, date_gran, with_tags, with_members)
-    flush_ways()
-    flush_rels()
-    flush_els()
+                _decode_way_into(val, strings, seg, with_metadata, date_gran, with_tags, with_refs)
+            else:
+                _decode_relation_into(val, strings, seg, with_metadata, date_gran, with_tags, with_members)
     return segments
-
-
-def _apply_info(el: Element, info: Optional[bytes], with_metadata: bool, date_gran: int) -> None:
-    if not with_metadata or info is None:
-        return
-    v, ts, cs = _decode_info(info)
-    el.version = v
-    el.timestamp = ts * date_gran // 1000 if ts is not None else None
-    el.changeset = cs
-
-
-def _decode_node(
-    data: bytes, strings, gran, lat_off, lon_off, scale, with_metadata, date_gran
-) -> Element:
-    """Non-dense Node (reference primitives.py:9-44 — whose cached-node path
-    is broken, SURVEY §2.12; implemented per spec here)."""
-    osmid = 0
-    keys: list[int] = []
-    vals: list[int] = []
-    lat = lon = 0
-    info = None
-    for field, wire, val in iter_fields(data, 0, len(data)):
-        if field == 1:
-            osmid = zigzag(val)
-        elif field == 2:
-            keys = read_packed_varints(val, 0, len(val))
-        elif field == 3:
-            vals = read_packed_varints(val, 0, len(val))
-        elif field == 4:
-            info = bytes(val)
-        elif field == 8:
-            lat = zigzag(val)
-        elif field == 9:
-            lon = zigzag(val)
-    el = Element(
-        osmid,
-        NODE,
-        _tags_from_keyvals(keys, vals, strings),
-        lon=(lon * gran + lon_off) * scale,
-        lat=(lat * gran + lat_off) * scale,
-    )
-    _apply_info(el, info, with_metadata, date_gran)
-    return el
-
-
-def _decode_dense(
-    data: bytes, strings, gran, lat_off, lon_off, scale, with_metadata, date_gran
-) -> list[Element]:
-    """DenseNodes with delta decoding (reference dense.py:8-51; its metadata
-    path is broken — SURVEY §2.12 — spec semantics here)."""
-    import numpy as np
-
-    ids = lats = lons = None
-    keyvals: list[int] = []
-    versions: list[int] = []
-    timestamps: list[int] = []
-    changesets: list[int] = []
-    for field, _, val in iter_fields(data, 0, len(data)):
-        if field == 1:
-            ids = np_read_packed_signed(val, 0, len(val))
-        elif field == 5:
-            for f2, _, v2 in iter_fields(val, 0, len(val)):
-                if f2 == 1:
-                    # proto int32: sign-interpret two's-complement
-                    versions = [decode_i64(v) for v in read_packed_varints(v2, 0, len(v2))]
-                elif f2 == 2:
-                    timestamps = read_packed_signed(v2, 0, len(v2))
-                elif f2 == 3:
-                    changesets = read_packed_signed(v2, 0, len(v2))
-        elif field == 8:
-            lats = np_read_packed_signed(val, 0, len(val))
-        elif field == 9:
-            lons = np_read_packed_signed(val, 0, len(val))
-        elif field == 10:
-            keyvals = np_read_packed_varints(val, 0, len(val)).tolist()
-    if ids is None:
-        return []
-
-    # delta-decode + coordinate scaling vectorized (the reference needs the
-    # same trick in numpy, dense.py:38-46); .tolist() hands plain
-    # ints/floats to the Element loop
-    abs_ids = np.cumsum(ids).tolist()
-    abs_lats = ((np.cumsum(lats) * gran + lat_off) * scale).tolist()
-    abs_lons = ((np.cumsum(lons) * gran + lon_off) * scale).tolist()
-
-    out: list[Element] = []
-    cur_ts = cur_cs = 0
-    kv_pos = 0
-    n_kv = len(keyvals)
-    for i in range(len(abs_ids)):
-        # untagged nodes share ONE empty dict (planet files are ~95%
-        # untagged nodes; a fresh dict per node is pure allocator churn).
-        # Decode output is read-only by contract — nothing downstream
-        # mutates el.tags (the Arrow conversion only iterates items).
-        if kv_pos < n_kv and keyvals[kv_pos] != 0:
-            tags: dict[str, str] = {}
-            while kv_pos < n_kv and keyvals[kv_pos] != 0:
-                tags[strings[keyvals[kv_pos]]] = strings[keyvals[kv_pos + 1]]
-                kv_pos += 2
-        else:
-            tags = _EMPTY_TAGS
-        kv_pos += 1  # skip the 0 terminator
-        el = Element(abs_ids[i], NODE, tags, lon=abs_lons[i], lat=abs_lats[i])
-        if with_metadata and versions:
-            cur_ts += timestamps[i] if i < len(timestamps) else 0
-            cur_cs += changesets[i] if i < len(changesets) else 0
-            el.version = versions[i] if i < len(versions) else None
-            el.timestamp = cur_ts * date_gran // 1000
-            el.changeset = cur_cs
-        out.append(el)
-    return out
-
-
-def _decode_way(data: bytes, strings, with_metadata, date_gran) -> Element:
-    """Way with delta-decoded refs (reference primitives.py:47-90)."""
-    osmid = 0
-    keys: list[int] = []
-    vals: list[int] = []
-    refs: list[int] = []
-    info = None
-    for field, _, val in iter_fields(data, 0, len(data)):
-        if field == 1:
-            osmid = val
-        elif field == 2:
-            keys = read_packed_varints(val, 0, len(val))
-        elif field == 3:
-            vals = read_packed_varints(val, 0, len(val))
-        elif field == 4:
-            info = bytes(val)
-        elif field == 8:
-            # delta → absolute refs via C-speed accumulate (no Python loop)
-            refs = list(accumulate(read_packed_signed(val, 0, len(val))))
-    el = Element(osmid, WAY, _tags_from_keyvals(keys, vals, strings), refs=refs)
-    _apply_info(el, info, with_metadata, date_gran)
-    return el
-
-
-def _decode_relation(data: bytes, strings, with_metadata, date_gran) -> Element:
-    """Relation with delta-decoded member ids (reference primitives.py:93-147)."""
-    osmid = 0
-    keys: list[int] = []
-    vals: list[int] = []
-    roles: list[int] = []
-    memids: list[int] = []
-    types: list[int] = []
-    info = None
-    for field, _, val in iter_fields(data, 0, len(data)):
-        if field == 1:
-            osmid = val
-        elif field == 2:
-            keys = read_packed_varints(val, 0, len(val))
-        elif field == 3:
-            vals = read_packed_varints(val, 0, len(val))
-        elif field == 4:
-            info = bytes(val)
-        elif field == 8:
-            roles = read_packed_varints(val, 0, len(val))
-        elif field == 9:
-            memids = list(accumulate(read_packed_signed(val, 0, len(val))))
-        elif field == 10:
-            types = read_packed_varints(val, 0, len(val))
-    members = [
-        (memids[i], types[i], strings[roles[i]] if i < len(roles) else "")
-        for i in range(len(memids))
-    ]
-    el = Element(osmid, RELATION, _tags_from_keyvals(keys, vals, strings), members=members)
-    _apply_info(el, info, with_metadata, date_gran)
-    return el
 
 
 # ---------------------------------------------------------------------------

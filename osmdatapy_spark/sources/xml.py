@@ -32,11 +32,11 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StringType, StructField, StructType
 
 from osmdatapy_spark.sources._row import (
+    arrow_types,
     expand_paths,
     load,
     parse_osmtypes,
     prune_schema,
-    record_batch,
 )
 from osmdatapy_spark.sources._watch import DirectoryWatcher
 from osmdatapy_spark.sources.pbf import PBF_SCHEMA
@@ -95,7 +95,7 @@ def iter_osm_xml(
     """Stream (action, element-dict) pairs from an ``.osm``/``.osc`` file.
 
     For plain ``.osm`` the action is ``""``; for osmChange it is the
-    enclosing ``create``/``modify``/``delete`` wrapper.  Element dicts
+    enclosing ``create``/``modify``/``delete`` wrapper.  The dicts
     carry the unified-schema fields; ``<delete>`` entries are typically
     skeleton elements (id only) and come through with empty tags.
 
@@ -174,7 +174,7 @@ def iter_osm_xml(
                 "changeset": int(a["changeset"]) if w_cs and "changeset" in a else None,
             }
             yield action, row
-            # el.clear() alone leaves an O(elements) list of empty Element
+            # el.clear() alone leaves an O(elements) list of empty element
             # shells in the enclosing container's child list (the round-5
             # leak) — clear the container too: the root for plain .osm,
             # the open create/modify/delete wrapper for .osc.  Both are
@@ -201,8 +201,17 @@ class OsmXmlDataSourceReader(DataSourceReader):
         return [_XmlPartition(f) for f in expand_paths(self.path, _SUFFIXES)]
 
     def read(self, partition: _XmlPartition) -> Iterator:
-        def to_batch(rows: list[dict]):
-            return record_batch(self.schema, lambda name: [r[name] for r in rows])
+        import pyarrow as pa
+
+        types = arrow_types(self.schema)
+
+        def to_batch(rows: list[dict]) -> "pa.RecordBatch":
+            # pyarrow takes tag dicts and (ref, type, role) member tuples
+            # as the parser yields them, without reshaping
+            return pa.RecordBatch.from_arrays(
+                [pa.array([r[name] for r in rows], type=t) for name, t in types.items()],
+                names=list(types),
+            )
 
         buf: list[dict] = []
         # the schema IS the pruned column set: schema() already dropped

@@ -196,6 +196,32 @@ def test_ts_handles_live_in_the_memo(spark):
     assert ((SF_DIR, "documents"), df) in memo.items("spread")
 
 
+def test_tune_session_sets_conf_once_per_session(spark, monkeypatch):
+    """A plain session (built without ``get_spark``'s configs) gets
+    ``nanosAsLong`` before its first table read, then no conf round trip
+    on later loads; a derived session is tuned on its own."""
+    from py4j.java_gateway import GatewayClient
+
+    from osmdatapy_spark.suite._util import T
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    child = spark.newSession()
+    child.conf.set(key, "false")
+    assert T(child, SF_DIR, "events").count() > 0
+    assert child.conf.get(key) == "true"
+
+    calls = []
+    send = GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        calls.append(args)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    T(child, SF_DIR, "events")
+    assert calls == []
+
+
 def test_memo_hits_make_no_py4j_calls(spark, monkeypatch):
     from py4j.java_gateway import GatewayClient
     from pyspark.sql import functions as F

@@ -168,7 +168,7 @@ def test_reference_keyvals_value_misalignment(ref_pbf_modules):
     key (protobuf.pyx:86-106 — cnter increments between key and value
     stores), so dense-node tag VALUES come back shifted: vals[0] is
     garbage and the final value is truncated. Our decoder pairs them
-    correctly (pbf_codec._decode_dense); this test pins the upstream
+    correctly (pbf_codec._decode_dense_columns); this test pins the upstream
     behavior so the divergence is visible, not silent."""
     ref_protobuf, _ = ref_pbf_modules
     buf = bytes([1, 2, 0, 3, 4, 0])  # node0 {1:2}, node1 {3:4}

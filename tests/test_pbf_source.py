@@ -12,7 +12,6 @@ from osmdatapy_spark.query import Query
 from osmdatapy_spark.sources.pbf import read_pbf
 from osmdatapy_spark.sources.xml import read_osm_xml
 from osmdatapy_spark.sources.pbf_codec import (
-    decode_primitive_block,
     read_blob,
     scan_blob_spans,
     read_varint,
@@ -20,6 +19,8 @@ from osmdatapy_spark.sources.pbf_codec import (
     write_zigzag,
     zigzag,
 )
+
+from conftest import element, pbf_rows
 
 
 def test_varint_roundtrip():
@@ -62,8 +63,7 @@ def test_framing_scan(fixture_pbf):
 
 
 def test_codec_decode(fixture_pbf):
-    spans = [s for s in scan_blob_spans(fixture_pbf) if s.blob_type == "OSMData"]
-    els = [e for s in spans for e in decode_primitive_block(read_blob(fixture_pbf, s))]
+    els = pbf_rows(fixture_pbf)
     by_id = {(e.osmtype, e.osmid): e for e in els}
     assert len(by_id) == 9 + 7 + 3
     n5 = by_id[(0, 5)]
@@ -88,8 +88,7 @@ def test_all_stdlib_codecs_roundtrip(tmp_path):
         w.add_dense_nodes([(1, 10.0, 50.0, {"amenity": "cafe"})])
         w.add_way(101, [1, 1], {"highway": "primary"})
         w.write(path)
-        spans = [s for s in scan_blob_spans(path) if s.blob_type == "OSMData"]
-        els = [e for s in spans for e in decode_primitive_block(read_blob(path, s))]
+        els = pbf_rows(path)
         assert {(e.osmtype, e.osmid) for e in els} == {(0, 1), (1, 101)}, codec
         assert els[0].tags == {"amenity": "cafe"}
 
@@ -111,6 +110,28 @@ def test_osmtypes_option_prunes_kinds(spark, fixture_pbf, fixture_osm_xml, fmt):
     assert read(spark, path, osmtypes={0, 2}).count() == 12
     with pytest.raises(Exception, match=f"unknown {fmt} columns"):
         read(spark, path, columns=["osmid", "nope"]).count()
+
+
+def test_osm_xml_fixture_matches_writer_and_pbf(spark, fixture_pbf, fixture_osm_xml, fixture_elements):
+    """The two sources decode the same element list independently — the
+    XML fixture is written from the writer's list, not from a PBF decode
+    — and agree with that list and with each other: coordinates to the
+    XML's 7 decimals, everything else exact."""
+
+    def canon(r):
+        r = r if isinstance(r, dict) else r.asDict()
+        return (
+            r["osmtype"], r["osmid"], dict(r["tags"]),
+            None if r["lon"] is None else round(r["lon"], 7),
+            None if r["lat"] is None else round(r["lat"], 7),
+            None if r["refs"] is None else list(r["refs"]),
+            None if r["members"] is None else [tuple(m) for m in r["members"]],
+            r["version"], r["timestamp"], r["changeset"],
+        )
+
+    want = sorted(map(canon, fixture_elements))
+    assert sorted(map(canon, read_osm_xml(spark, fixture_osm_xml).collect())) == want
+    assert sorted(map(canon, read_pbf(spark, fixture_pbf).collect())) == want
 
 
 def test_read_pbf_leaves_session_conf_unchanged(spark, fixture_pbf):
@@ -427,75 +448,67 @@ def test_corrupt_pbf_fails_cleanly(spark, fixture_pbf, tmp_path):
         list(scan_blob_spans(str(junk)))
 
 
-def test_segment_decode_parity_with_element_decode(fixture_pbf):
-    """The columnar scan path (decode_block_segments: DenseColumns /
-    WayColumns) must produce EXACTLY the rows of decode_primitive_block,
-    in the same order — metadata included."""
-    from osmdatapy_spark.sources.pbf_codec import (
-        DenseColumns,
-        RelationColumns,
-        WayColumns,
-        decode_block_segments,
-    )
+def _assert_rows_match_writer(rows, elements, with_metadata: bool, quantum: float) -> None:
+    """Decoded rows against the element dicts the writer was given, in
+    order: ids, kinds, tags, refs and members exact, coordinates within
+    the writer's granularity quantum, metadata as written (or None when
+    the decode does not ask for it)."""
+    assert len(rows) == len(elements)
+    for r, e in zip(rows, elements):
+        assert (r.osmid, r.osmtype, r.tags, r.refs, r.members) == (
+            e["osmid"], e["osmtype"], e["tags"], e["refs"], e["members"]
+        ), e
+        if e["osmtype"] == 0:
+            assert r.lon == pytest.approx(e["lon"], abs=quantum), e
+            assert r.lat == pytest.approx(e["lat"], abs=quantum), e
+        else:
+            assert (r.lon, r.lat) == (None, None)
+        meta = (e["version"], e["timestamp"], e["changeset"]) if with_metadata else (None,) * 3
+        assert (r.version, r.timestamp, r.changeset) == meta, e
 
-    spans = [s for s in scan_blob_spans(fixture_pbf) if s.blob_type == "OSMData"]
+
+def test_segment_decode_matches_writer_elements(fixture_pbf, fixture_elements, tmp_path):
+    """The one block decoder (``decode_block_segments``) reproduces the
+    element lists the writer was given, in order, across several blocks,
+    with metadata decoded and not: the grid fixture (no metadata), and a
+    file at granularity 1000 mixing DenseInfo and Info-bearing groups
+    with metadata-less ones."""
+    from osmdatapy_spark.sources.pbf_codec import PbfWriter
+
     for with_meta in (False, True):
-        flat = []
-        for s in spans:
-            block = read_blob(fixture_pbf, s)
-            for seg in decode_block_segments(block, with_metadata=with_meta):
-                if isinstance(seg, DenseColumns):
-                    for i in range(seg.n):
-                        lo, hi = seg.tag_offsets[i], seg.tag_offsets[i + 1]
-                        flat.append((
-                            int(seg.ids[i]), 0,
-                            dict(zip(seg.tag_keys[lo:hi], seg.tag_vals[lo:hi])),
-                            float(seg.lons[i]), float(seg.lats[i]), None, None,
-                            int(seg.versions[i]) if seg.versions is not None else None,
-                            int(seg.timestamps[i]) if seg.timestamps is not None else None,
-                            int(seg.changesets[i]) if seg.changesets is not None else None,
-                        ))
-                elif isinstance(seg, WayColumns):
-                    for i in range(len(seg.ids)):
-                        lo, hi = seg.tag_offsets[i], seg.tag_offsets[i + 1]
-                        rlo, rhi = seg.ref_offsets[i], seg.ref_offsets[i + 1]
-                        flat.append((
-                            seg.ids[i], 1,
-                            dict(zip(seg.tag_keys[lo:hi], seg.tag_vals[lo:hi])),
-                            None, None, seg.refs[rlo:rhi], None,
-                            seg.versions[i] if seg.versions else None,
-                            seg.timestamps[i] if seg.timestamps else None,
-                            seg.changesets[i] if seg.changesets else None,
-                        ))
-                elif isinstance(seg, RelationColumns):
-                    for i in range(seg.n):
-                        lo, hi = seg.tag_offsets[i], seg.tag_offsets[i + 1]
-                        mlo, mhi = seg.mem_offsets[i], seg.mem_offsets[i + 1]
-                        flat.append((
-                            seg.ids[i], 2,
-                            dict(zip(seg.tag_keys[lo:hi], seg.tag_vals[lo:hi])),
-                            None, None, None,
-                            [
-                                (seg.mem_refs[j], seg.mem_types[j], seg.mem_roles[j])
-                                for j in range(mlo, mhi)
-                            ],
-                            seg.versions[i] if seg.versions else None,
-                            seg.timestamps[i] if seg.timestamps else None,
-                            seg.changesets[i] if seg.changesets else None,
-                        ))
-                else:
-                    for e in seg:
-                        flat.append((
-                            e.osmid, e.osmtype, e.tags, e.lon, e.lat, e.refs,
-                            e.members, e.version, e.timestamp, e.changeset,
-                        ))
-        expect = [
-            (e.osmid, e.osmtype, e.tags, e.lon, e.lat, e.refs, e.members,
-             e.version, e.timestamp, e.changeset)
-            for s in spans
-            for e in decode_primitive_block(read_blob(fixture_pbf, s), with_metadata=with_meta)
-        ]
-        assert flat == expect, f"with_metadata={with_meta}"
+        _assert_rows_match_writer(pbf_rows(fixture_pbf, with_meta), fixture_elements, with_meta, 1e-7)
+
+    dense_meta = [
+        element(0, 10 + i, {"amenity": "bench"} if i % 2 else {}, lon=-73.9 + i * 0.0123457,
+                lat=40.7 - i * 0.0098765, meta=(i + 1, 1_600_000_000 - 37 * i, 5_000 + i))
+        for i in range(6)
+    ]
+    dense_bare = [element(0, 30 + i, {}, lon=2.35 + i * 1e-5, lat=48.85) for i in range(3)]
+    ways = [
+        element(1, 100, {"highway": "residential"}, refs=[10, 11, 12], meta=(3, 1_600_000_100, 6_000)),
+        element(1, 101, {}, refs=[12, 30, 31]),
+    ]
+    rels = [
+        element(2, 200, {"type": "route"}, members=[(100, 1, "forward"), (10, 0, "stop")],
+                meta=(9, 1_600_000_200, 7_000)),
+        element(2, 201, {"type": "site"}, members=[(200, 2, ""), (101, 1, "")]),
+    ]
+
+    def meta(e):
+        return None if e["version"] is None else (e["version"], e["timestamp"], e["changeset"])
+
+    w = PbfWriter(granularity=1000)
+    w.add_dense_nodes([(e["osmid"], e["lon"], e["lat"], e["tags"], meta(e)) for e in dense_meta])
+    w.add_dense_nodes([(e["osmid"], e["lon"], e["lat"], e["tags"]) for e in dense_bare])
+    w.add_ways([(e["osmid"], e["refs"], e["tags"], meta(e)) for e in ways])
+    w.add_relations([(e["osmid"], e["members"], e["tags"], meta(e)) for e in rels])
+    p = str(tmp_path / "meta.osm.pbf")
+    w.write(p, groups_per_block=2)
+    assert sum(s.blob_type == "OSMData" for s in scan_blob_spans(p)) == 2
+    for with_meta in (False, True):
+        _assert_rows_match_writer(
+            pbf_rows(p, with_meta), dense_meta + dense_bare + ways + rels, with_meta, 1e-6
+        )
 
 
 def test_columns_option_prunes_relation_schema(spark, fixture_pbf):
@@ -518,13 +531,11 @@ def test_columns_option_prunes_relation_schema(spark, fixture_pbf):
 
 def test_dense_columns_partial_metadata_parity():
     """Partial-length DenseInfo delta streams (fewer timestamps/changesets
-    than nodes) must decode identically on both paths: the per-element
-    decoder treats missing deltas as 0, so the columnar cumsum pads
-    BEFORE accumulating — the prefix that IS present must survive."""
+    than nodes) read as trailing zero deltas: the columnar cumsum pads
+    BEFORE accumulating, so the prefix that IS present survives."""
     from osmdatapy_spark.sources.pbf_codec import (
         DenseColumns,
         decode_block_segments,
-        decode_primitive_block,
         enc_bytes_field,
         enc_packed_deltas,
         enc_packed_field,
@@ -546,15 +557,71 @@ def test_dense_columns_partial_metadata_parity():
     group = enc_bytes_field(2, dense)
     block = enc_bytes_field(2, group)  # PrimitiveBlock.primitivegroup
 
-    els = decode_primitive_block(block, with_metadata=True)
     segs = decode_block_segments(block, with_metadata=True)
     (dc,) = [s for s in segs if isinstance(s, DenseColumns)]
-    assert [int(x) for x in dc.timestamps] == [e.timestamp for e in els]
-    assert [int(x) for x in dc.changesets] == [e.changeset for e in els]
     # enc_packed_deltas takes ABSOLUTE values; missing trailing deltas
     # hold the last accumulated value
-    assert [e.timestamp for e in els] == [100, 5, 5, 5]
-    assert [e.changeset for e in els] == [7, 7, 7, 7]
+    assert [int(x) for x in dc.timestamps] == [100, 5, 5, 5]
+    assert [int(x) for x in dc.changesets] == [7, 7, 7, 7]
+    assert [int(x) for x in dc.versions] == [1, 1, 1, 1]
+
+
+def _corrupt_dense_block(case: str) -> bytes:
+    """A one-group PrimitiveBlock whose 3-node DenseNodes group breaks
+    the parallel-array rule in one way."""
+    from osmdatapy_spark.sources.pbf_codec import (
+        enc_bytes_field,
+        enc_packed_deltas,
+        enc_packed_field,
+    )
+
+    lats = [500_000_000, 500_000_100] if case == "short_lats" else [500_000_000, 500_000_100, 500_000_200]
+    # string 1 = "amenity", 2 = "cafe"; node 1 tagged, nodes 2-3 untagged
+    kv = [1, 2, 0, 0] if case == "kv_terminators" else [1, 2, 0, 0, 0]
+    versions = [1, 1] if case == "short_versions" else [1, 1, 1]
+    dense = (
+        enc_packed_deltas(1, [1, 2, 3])
+        + enc_bytes_field(
+            5,
+            enc_packed_field(1, versions)
+            + enc_packed_deltas(2, [100, 200, 300])
+            + enc_packed_deltas(3, [7, 7, 7]),
+        )
+        + enc_packed_deltas(8, lats)
+        + enc_packed_deltas(9, [100_000_000] * 3)
+        + enc_packed_field(10, kv)
+    )
+    strings = b"".join(enc_bytes_field(1, t) for t in (b"", b"amenity", b"cafe"))
+    return enc_bytes_field(1, strings) + enc_bytes_field(2, enc_bytes_field(2, dense))
+
+
+@pytest.mark.parametrize(
+    "case, message",
+    [
+        ("kv_terminators", "3 ids but 2 keys_vals terminators"),
+        ("short_versions", "3 ids but 2 versions"),
+        ("short_lats", "3 ids but 2 lats"),
+    ],
+)
+def test_corrupt_dense_nodes_raise(spark, tmp_path, case, message):
+    """A DenseNodes group whose keys_vals terminators, versions or lats
+    disagree with its id count raises ``ValueError`` from the decoder and
+    fails a Spark read naming the file and the blob's offset — no row of
+    it is guessed."""
+    from osmdatapy_spark.sources.pbf_codec import PbfWriter, decode_block_segments, enc_bytes_field
+
+    block = _corrupt_dense_block(case)
+    with pytest.raises(ValueError, match=f"malformed DenseNodes: {message}"):
+        decode_block_segments(block, with_metadata=True)
+
+    w = PbfWriter(codec="raw")
+    header = enc_bytes_field(4, b"OsmSchema-V0.6") + enc_bytes_field(4, b"DenseNodes")
+    p = tmp_path / f"{case}.osm.pbf"
+    p.write_bytes(w._frame("OSMHeader", w._blob(header)) + w._frame("OSMData", w._blob(block)))
+    (span,) = [s for s in scan_blob_spans(str(p)) if s.blob_type == "OSMData"]
+    with pytest.raises(Exception, match=f"blob at offset {span.offset}: malformed DenseNodes: {message}") as err:
+        read_pbf(spark, str(p)).collect()
+    assert str(p) in str(err.value)
 
 
 def test_multi_file_read(spark, tmp_path):
@@ -601,12 +668,7 @@ def test_writer_metadata_roundtrip(tmp_path):
     loudly — DenseInfo is a parallel array by spec."""
     import pytest
 
-    from osmdatapy_spark.sources.pbf_codec import (
-        PbfWriter,
-        decode_primitive_block,
-        read_blob,
-        scan_blob_spans,
-    )
+    from osmdatapy_spark.sources.pbf_codec import PbfWriter
 
     w = PbfWriter()
     w.add_dense_nodes([
@@ -619,10 +681,7 @@ def test_writer_metadata_roundtrip(tmp_path):
     p = str(tmp_path / "meta.osm.pbf")
     w.write(p)
 
-    els = []
-    for span in scan_blob_spans(p):
-        if span.blob_type == "OSMData":
-            els += decode_primitive_block(read_blob(p, span), with_metadata=True)
+    els = pbf_rows(p, with_metadata=True)
     got = {(e.osmid, e.osmtype): (e.version, e.timestamp, e.changeset) for e in els}
     assert got[(1, 0)] == (3, 1_000_000, 42)
     assert got[(2, 0)] == (7, 1_000_100, 43)
@@ -659,12 +718,7 @@ def test_negative_metadata_roundtrip(tmp_path):
     complement 10-byte varints) and DenseInfo (zigzag deltas).  Round 10
     shipped an asymmetry where dense nodes accepted them but ways and
     relations raised mid-write, stranding partial shards."""
-    from osmdatapy_spark.sources.pbf_codec import (
-        PbfWriter,
-        decode_primitive_block,
-        read_blob,
-        scan_blob_spans,
-    )
+    from osmdatapy_spark.sources.pbf_codec import PbfWriter
 
     w = PbfWriter()
     w.add_dense_nodes([
@@ -676,10 +730,7 @@ def test_negative_metadata_roundtrip(tmp_path):
     p = str(tmp_path / "neg.osm.pbf")
     w.write(p)
 
-    els = []
-    for span in scan_blob_spans(p):
-        if span.blob_type == "OSMData":
-            els += decode_primitive_block(read_blob(p, span), with_metadata=True)
+    els = pbf_rows(p, with_metadata=True)
     got = {(e.osmid, e.osmtype): (e.version, e.timestamp, e.changeset) for e in els}
     assert got[(1, 0)] == (1, -86_400, 42)
     assert got[(2, 0)] == (2, -1, -7)

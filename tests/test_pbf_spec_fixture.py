@@ -10,7 +10,8 @@ granularity/offset scaling ``raw * granularity + offset`` nanodegrees,
 
 Coverage: framing (BlobHeader + Blob), raw/zlib/lzma/bz2 codecs,
 dense nodes (negative id/coord deltas, DenseInfo delta timestamps,
-keys_vals with empty tag runs), non-dense Node (zigzag lat/lon, Info),
+keys_vals with empty tag runs), non-dense Node (zigzag lat/lon, Info,
+and interleaved with a dense group in wire order),
 Way (negative ref deltas), Relation (roles/memids/types), non-default
 granularity + lat/lon offsets, date_granularity, multibyte UTF-8 strings,
 and unknown-field skipping.
@@ -30,10 +31,12 @@ import zlib
 import pytest
 
 from osmdatapy_spark.sources.pbf_codec import (
-    decode_primitive_block,
+    decode_block_segments,
     read_blob,
     scan_blob_spans,
 )
+
+from conftest import block_rows, segment_rows
 
 
 # --- protobuf wire primitives, transcribed from the spec --------------------
@@ -225,7 +228,7 @@ def test_framing_and_codecs(spec_pbf):
 
 
 def test_dense_nodes_deltas_offsets_metadata(spec_pbf):
-    els = decode_primitive_block(_dense_block(), with_metadata=True)
+    els = block_rows(_dense_block(), with_metadata=True)
     assert [e.osmid for e in els] == DENSE_IDS
     for e, lat_raw, lon_raw in zip(els, DENSE_LATS_RAW, DENSE_LONS_RAW):
         # spec: degrees = 1e-9 * (offset + granularity * raw)
@@ -241,7 +244,7 @@ def test_dense_nodes_deltas_offsets_metadata(spec_pbf):
 
 
 def test_nondense_node_and_way(spec_pbf):
-    els = decode_primitive_block(_node_way_block(), with_metadata=True)
+    els = block_rows(_node_way_block(), with_metadata=True)
     node, way = els
     assert node.osmid == 4242
     assert node.lat == pytest.approx(-45.0)
@@ -254,10 +257,89 @@ def test_nondense_node_and_way(spec_pbf):
 
 
 def test_relation_members(spec_pbf):
-    (rel,) = decode_primitive_block(_relation_block())
+    (rel,) = block_rows(_relation_block())
     assert rel.osmid == 77
     assert rel.tags == {"type": "multipolygon"}
     assert rel.members == [(900, 1, "outer"), (450, 1, "inner"), (4242, 0, "")]
+
+
+# Block 5 (raw): plain Node (Info) → DenseNodes (no DenseInfo) → plain
+# Node (no Info) → Way (Info), one PrimitiveGroup each
+def _interleaved_block() -> bytes:
+    node_a = (
+        TAG(1, 0) + Z(-7)                   # negative id
+        + PACKED(2, [SID["name"]])
+        + PACKED(3, [SID["Ǝlephant"]])
+        + LF(4, VF(1, 2) + VF(2, 100) + VF(3, 9))
+        + TAG(8, 0) + Z(10_000_000)         # lat 1.0 deg at gran=100
+        + TAG(9, 0) + Z(-20_000_000)        # lon -2.0 deg
+    )
+    dense = (
+        PACKED(1, DELTAS([20, 21]), signed=True)
+        + PACKED(8, DELTAS([0, 1]), signed=True)
+        + PACKED(9, DELTAS([0, 1]), signed=True)
+        + PACKED(10, [0, SID["amenity"], SID["café"], 0])
+    )
+    node_b = TAG(1, 0) + Z(30) + TAG(8, 0) + Z(5) + TAG(9, 0) + Z(6)
+    way = (
+        VF(1, 40)
+        + LF(4, VF(1, 4) + VF(2, 300) + VF(3, 11))
+        + PACKED(8, DELTAS([-7, 20, 30]), signed=True)
+    )
+    return _stringtable() + b"".join(
+        LF(2, LF(field, body)) for field, body in ((1, node_a), (2, dense), (1, node_b), (3, way))
+    )
+
+
+INTERLEAVED_IDS = [-7, 20, 21, 30, 40]
+
+
+def test_interleaved_plain_and_dense_nodes_keep_wire_order():
+    """Plain nodes decode into their own columnar node runs: a block
+    interleaving plain node, dense group, plain node and way yields four
+    segments in wire order, and the plain nodes keep their Info."""
+    from osmdatapy_spark.sources.pbf_codec import DenseColumns, WayColumns
+
+    segs = decode_block_segments(_interleaved_block(), with_metadata=True)
+    assert [type(s) for s in segs] == [DenseColumns, DenseColumns, DenseColumns, WayColumns]
+    rows = segment_rows(segs)
+    assert [r.osmid for r in rows] == INTERLEAVED_IDS
+    assert [r.osmtype for r in rows] == [0, 0, 0, 0, 1]
+    assert [(r.version, r.timestamp, r.changeset) for r in rows] == [
+        (2, 100, 9), (None,) * 3, (None,) * 3, (None,) * 3, (4, 300, 11),
+    ]
+    assert [r.tags for r in rows] == [{"name": "Ǝlephant"}, {}, {"amenity": "café"}, {}, {}]
+    assert (rows[0].lat, rows[0].lon) == (pytest.approx(1.0), pytest.approx(-2.0))
+    assert (rows[3].lat, rows[3].lon) == (pytest.approx(5e-7), pytest.approx(6e-7))
+    assert rows[4].refs == [-7, 20, 30]
+    assert [(r.version, r.timestamp, r.changeset) for r in block_rows(_interleaved_block())] == [
+        (None,) * 3
+    ] * 5
+
+
+def test_spark_reader_plain_nodes(spark, tmp_path):
+    """Plain nodes through the Spark reader: values from the wire spec
+    (zigzag id and coordinates, Info, unknown-field skip), row order as on
+    the wire, Info kept only on the nodes that carry it."""
+    from osmdatapy_spark.sources.pbf import read_pbf
+
+    p = tmp_path / "plain.osm.pbf"
+    p.write_bytes(
+        _frame("OSMHeader", _blob(_header_block(), "raw"))
+        + _frame("OSMData", _blob(_node_way_block(), "raw"))
+        + _frame("OSMData", _blob(_interleaved_block(), "zlib"))
+    )
+    rows = read_pbf(spark, str(p)).collect()
+    assert [r["osmid"] for r in rows] == [4242, 900] + INTERLEAVED_IDS
+    node = rows[0]
+    assert node["osmtype"] == 0
+    assert node["lat"] == pytest.approx(-45.0) and node["lon"] == pytest.approx(123.456789)
+    assert node["tags"] == {"amenity": "café"}
+    assert (node["version"], node["timestamp"], node["changeset"]) == (5, 1_700_000, 77)
+    assert node["refs"] is None and node["members"] is None
+    assert [(r["version"], r["timestamp"], r["changeset"]) for r in rows[2:]] == [
+        (2, 100, 9), (None,) * 3, (None,) * 3, (None,) * 3, (4, 300, 11),
+    ]
 
 
 def test_zigzag_wire_values():

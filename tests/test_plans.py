@@ -132,13 +132,12 @@ def test_extract_build_py4j_budget(spark, fixture_pbf, cls, monkeypatch):
 
 
 # py4j round trips of a warm registered-query build (no action) after
-# their kernels became memoized SQL (``memo.expr`` / ``memo.select``):
-# 87 and 58 recorded in a session alone in the memo (built as Column
-# algebra they took 1,244 and 2,504).  A memo miss also probes every
-# other live session the memo holds, 2 calls each (the recipe's managed
-# persist misses on every build; 89 in a full test run), so the budgets
-# allow for four such sessions.
-SUITE_PY4J_BUDGET = {"llm_curation_recipe": 87 + 8, "osm_point_in_polygon": 58 + 8}
+# their kernels became memoized SQL (``memo.expr`` / ``memo.select``), as
+# recorded in a full test run (built as Column algebra they took 1,244
+# and 2,504).  A memo miss probes each live SparkContext once, however
+# many sessions share it, and a session's conf is tuned once, not on
+# every table load, so other tests' sessions add nothing.
+SUITE_PY4J_BUDGET = {"llm_curation_recipe": 87, "osm_point_in_polygon": 49}
 
 
 @pytest.mark.parametrize("name", sorted(SUITE_PY4J_BUDGET))
@@ -147,6 +146,25 @@ def test_suite_build_py4j_budget(spark, name, monkeypatch):
     assert 0 < n <= SUITE_PY4J_BUDGET[name], (
         f"{name} build: {n} py4j calls, budget {SUITE_PY4J_BUDGET[name]}"
     )
+
+
+def test_derived_session_adds_no_build_py4j_calls(spark, monkeypatch):
+    """A memo miss probes each SparkContext once, not each session: a live
+    ``spark.newSession()`` in the memo (it shares the parent's context)
+    adds no py4j call to a warm build whose managed persist misses every
+    time."""
+    from osmdatapy_spark import memo
+
+    def build():
+        return q(spark, "llm_curation_recipe")
+
+    alone = _warm_build_py4j_calls(build, monkeypatch)
+    memo.put(spark.newSession(), "test.derived", "k", "live")
+    try:
+        with_child = _warm_build_py4j_calls(build, monkeypatch)
+    finally:
+        memo.clear("test.derived")
+    assert with_child == alone
 
 
 def test_suite_codegen_cache_holds_the_mix(spark):

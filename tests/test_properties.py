@@ -10,6 +10,8 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from osmdatapy_spark.operators.topology import topology_segments
 from osmdatapy_spark.query import Query
 
+from conftest import pbf_rows
+
 KEYS = ["highway", "building", "amenity", "access", "area"]
 VALS = ["primary", "yes", "no", "cafe", "private"]
 
@@ -242,22 +244,13 @@ def test_codec_dense_node_roundtrip_fuzz(nodes, codec):
     ids/tags exact, coords within the 1e-7 granularity quantum."""
     import tempfile
 
-    from osmdatapy_spark.sources.pbf_codec import (
-        PbfWriter,
-        decode_primitive_block,
-        read_blob,
-        scan_blob_spans,
-    )
+    from osmdatapy_spark.sources.pbf_codec import PbfWriter
 
     w = PbfWriter(codec=codec)
     w.add_dense_nodes(nodes)
     with tempfile.NamedTemporaryFile(suffix=".osm.pbf") as f:
         w.write(f.name)
-        spans = [s for s in scan_blob_spans(f.name) if s.blob_type == "OSMData"]
-        decoded = []
-        for s in spans:
-            block = read_blob(f.name, s)
-            decoded += [e for e in decode_primitive_block(block) if e.osmtype == 0]
+        decoded = [e for e in pbf_rows(f.name) if e.osmtype == 0]
     got = {e.osmid: e for e in decoded}
     assert set(got) == {n[0] for n in nodes}
     for nid, lon, lat, tags in nodes:
@@ -638,12 +631,7 @@ def test_metadata_wire_roundtrip_property(metas, tmp_path_factory):
     — out-of-order timestamps produce negative deltas on the wire) and
     through per-element Info submessages (two's-complement varints), for
     every element kind."""
-    from osmdatapy_spark.sources.pbf_codec import (
-        PbfWriter,
-        decode_primitive_block,
-        read_blob,
-        scan_blob_spans,
-    )
+    from osmdatapy_spark.sources.pbf_codec import PbfWriter
 
     w = PbfWriter()
     w.add_dense_nodes(
@@ -658,10 +646,7 @@ def test_metadata_wire_roundtrip_property(metas, tmp_path_factory):
     p = str(tmp_path_factory.mktemp("meta") / "m.osm.pbf")
     w.write(p)
 
-    els = []
-    for span in scan_blob_spans(p):
-        if span.blob_type == "OSMData":
-            els += decode_primitive_block(read_blob(p, span), with_metadata=True)
+    els = pbf_rows(p, with_metadata=True)
     by_id = {(e.osmtype, e.osmid): (e.version, e.timestamp, e.changeset) for e in els}
     for i, m in enumerate(metas):
         assert by_id[(0, i + 1)] == m
