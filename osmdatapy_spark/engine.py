@@ -22,13 +22,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
+from osmdatapy_spark import memo
 from osmdatapy_spark._pyworker import kernel
 from osmdatapy_spark.operators.rings import missing_vertex_sql, ring_chains
 from osmdatapy_spark.operators.topology import topology_segments
 from osmdatapy_spark.operators.geometry import (
     linestring_wkt,
+    parts_wkt,
     point_wkt,
     way_geom_type,
+    GEOM_AREA,
     GEOM_LINESTRING,
     GEOM_POINT,
 )
@@ -113,6 +116,37 @@ def _with_way_coords(out: DataFrame, nodes: DataFrame) -> DataFrame:
             "IF(size(_pts) = 0 OR exists(_pts, p -> p._lon IS NULL OR p._lat IS NULL), NULL,"
             " transform(_pts, p -> struct(p._lon AS lon, p._lat AS lat))) AS coords",
         )
+    )
+
+
+def _with_wkb(out: DataFrame) -> DataFrame:
+    """``out`` plus ``geometry_wkb``, encoded from the coordinates its WKT
+    was rendered from: node ``lon``/``lat``, way ``coords`` and relation
+    ``_akind``/``_aparts``, each present when the query built that kind's
+    geometry, and dropped here."""
+    from osmdatapy_spark.operators.wkb import CRS_METADATA, parts_wkb
+
+    cases = []  # (rows, geometry kind, parts)
+    if "lon" in out.columns:
+        cases.append(("osmtype = 0", GEOM_POINT, "array(array(array(struct(lon, lat))))"))
+    if "coords" in out.columns:
+        cases.append(
+            (f"osmtype = {OSMTYPE_WAY} AND geometry IS NOT NULL", GEOM_LINESTRING, "array(array(coords))")
+        )
+    if "_aparts" in out.columns:
+        cases.append(
+            (f"osmtype = {OSMTYPE_RELATION}", f"IF(_akind = 'area', {GEOM_AREA}, {GEOM_LINESTRING})", "_aparts")
+        )
+    if cases:
+        kind = memo.expr("CASE " + " ".join(f"WHEN {w} THEN {k}" for w, k, _ in cases) + " END")
+        parts = memo.expr("CASE " + " ".join(f"WHEN {w} THEN {p}" for w, _, p in cases) + " END")
+        geom = parts_wkb(kind, parts)
+    else:
+        geom = lit(None).cast("binary")
+    return (
+        out.withColumn("geometry_wkb", geom)
+        .withMetadata("geometry_wkb", CRS_METADATA)
+        .drop("lon", "lat", "coords", "_akind", "_aparts")
     )
 
 
@@ -533,11 +567,12 @@ class OSM:
         Pipeline parity with reference ``osm.query``/``to_dataframe``
         (osmdata.py:183-206, _frame.py:8-57): filter+project elements; for
         ways attach refs; for relations attach members; geometry mode adds
-        WKT for points and linestrings (area assembly via
-        ``relation_areas``).  With ``wkb=True`` a ``geometry_wkb``
+        WKT for points, linestrings and relations (relation assembly via
+        ``_relation_parts``).  With ``wkb=True`` a ``geometry_wkb``
         BinaryType column (ISO little-endian WKB, EPSG:4326 column
-        metadata) is appended next to the WKT — the binary surface the
-        reference serves as shapely objects (``_frame.py:54-56``)."""
+        metadata) is appended next to the WKT, encoded from the same
+        coordinates — the binary surface the reference serves as shapely
+        objects (``_frame.py:54-56``)."""
         if wkb and not q.geometry:
             raise ValueError(
                 "wkb=True requires a geometry query (Query(geometry=True)) — "
@@ -546,7 +581,7 @@ class OSM:
         out = q.apply(self._elements_for(q))
 
         if q.geometry:
-            out = self._with_geometry(out, q)
+            out = self._with_geometry(out, q, keep_coords=wkb)
             if q.relations and self.rel_members is not None:
                 # relation geometry (G5 dispatch): areas for
                 # type ∈ {multipolygon, boundary}, linestrings for
@@ -563,8 +598,10 @@ class OSM:
                     .select(col("osmid").alias("rel_id"))
                 )
                 kinds = self._relation_kinds().join(kept, "rel_id", "left_semi")
-                rel_geoms = self._relation_geometries(kinds).select(
-                    col("rel_id").alias("_arid"), col("wkt").alias("_awkt")
+                rel_geoms = self._relation_parts(kinds).select(
+                    col("rel_id").alias("_arid"),
+                    parts_wkt("kind", "parts").alias("_awkt"),
+                    *([col("kind").alias("_akind"), col("parts").alias("_aparts")] if wkb else []),
                 )
                 out = out.join(
                     rel_geoms,
@@ -576,9 +613,7 @@ class OSM:
                 ).drop("_awkt")
             out = out.withMetadata("geometry", {"crs": "EPSG:4326"})
             if wkb:
-                from osmdatapy_spark.operators.wkb import attach_wkb
-
-                out = attach_wkb(out)
+                out = _with_wkb(out)
         if q.topology:
             segs = self.topology(q)
             out = (
@@ -623,11 +658,13 @@ class OSM:
             pdf.drop(columns=[geometry_col]), geometry=geoms, crs="EPSG:4326"
         )
 
-    def _with_geometry(self, out: DataFrame, q: Query) -> DataFrame:
+    def _with_geometry(self, out: DataFrame, q: Query, keep_coords: bool = False) -> DataFrame:
         """Node/way geometry attachment, gated on the query's element kinds:
         a relation-only query joins neither the nodes table nor way refs —
         those joins would be row-free work (the kind filter already ran in
-        ``q.apply``), and every skipped join is a skipped exchange."""
+        ``q.apply``), and every skipped join is a skipped exchange.  With
+        ``keep_coords`` the rows keep the node ``lon``/``lat`` and way
+        ``coords`` the WKT was rendered from, for ``_with_wkb``."""
         nodes = self.nodes
         # elements may carry refs inline (PBF scan) or only via the exploded
         # way_refs table (bronze-tier fixtures) — attach arrays on demand
@@ -678,12 +715,15 @@ class OSM:
             out = _with_way_coords(out, nodes).select(
                 "osmid",
                 *[c for c in out.columns if c != "osmid"],
+                *(["coords"] if keep_coords else []),
                 F.when(col("osmtype") == 0, point)
                 .when((col("osmtype") == OSMTYPE_WAY) & (col("geom_type") >= GEOM_LINESTRING), line)
                 .alias("geometry"),
             )
         else:
             out = out.withColumn("geometry", F.when(col("osmtype") == 0, point))
+        if keep_coords:
+            return out
         return out.drop(*[c for c in ("lon", "lat") if c in out.columns])
 
     # -- composite pipelines ----------------------------------------------
@@ -795,16 +835,14 @@ class OSM:
     def relation_areas(self) -> DataFrame:
         """(rel_id, wkt) POLYGON/MULTIPOLYGON for type ∈ {multipolygon,
         boundary} relations (reference ``_frame.py:107-179``)."""
-        return self._relation_geometries(
-            self._relation_kinds(line=False), branches=("area",)
-        )
+        parts = self._relation_parts(self._relation_kinds(line=False), branches=("area",))
+        return parts.select("rel_id", parts_wkt("kind", "parts").alias("wkt"))
 
     def relation_lines(self) -> DataFrame:
         """(rel_id, wkt) LINESTRING/MULTILINESTRING for type=route
         relations (reference line branch ``_frame.py:87-105``)."""
-        return self._relation_geometries(
-            self._relation_kinds(area=False), branches=("line",)
-        )
+        parts = self._relation_parts(self._relation_kinds(area=False), branches=("line",))
+        return parts.select("rel_id", parts_wkt("kind", "parts").alias("wkt"))
 
     def cache_relation_geometry(self) -> "OSM":
         """Materialize the chain/gather pipeline for ALL geometry-bearing
@@ -813,7 +851,7 @@ class OSM:
         expensive 9-of-12-exchanges prefix of every relation-geometry
         query — runs ONCE, and every later ``relation_areas()`` /
         ``relation_lines()`` / geometry ``query()`` reads the persisted
-        per-ring coordinate arrays (≤3 exchanges: branch filter + WKT
+        per-ring coordinate arrays (≤3 exchanges: branch filter + part
         assembly).  The persisted unit is relation rings only — a sliver
         of the corpus even at planet scale (where this table would be a
         written bronze parquet, same contract)."""
@@ -940,14 +978,18 @@ class OSM:
         )
         return self._ring_coords(chains, ["ring_role", "kind"])
 
-    def _relation_geometries(
+    def _relation_parts(
         self, kinds: DataFrame, branches: tuple = ("area", "line")
     ) -> DataFrame:
-        """Relation geometry assembly shared by areas and routes: ONE
-        member-chaining pipeline (G6 kernel, endpoint join, node-sequence
-        expansion), splitting into the polygon ring algebra (G7-G9 + G3)
-        and the linestring branch only at WKT assembly — the two types are
-        disjoint by the G5 dispatch, so a unionByName stitches the result.
+        """``(rel_id, kind, parts)``: relation geometry assembled once, as
+        coordinate parts (``kind`` 'area' or 'line'; ``parts``
+        ARRAY<ARRAY<ARRAY<STRUCT<lon,lat>>>>, see ``geometry.parts_wkt``)
+        that WKT, WKB and GeoJSON are rendered from.  Areas and routes
+        share ONE member-chaining pipeline (G6 kernel, endpoint join,
+        node-sequence expansion), splitting into the polygon ring algebra
+        (G7-G9) and the chain branch only at part assembly — the two types
+        are disjoint by the G5 dispatch, so a unionByName stitches the
+        result.
 
         With ``cache_relation_geometry()`` warmed, the chain/gather prefix
         is read from the persisted bronze table (restricted to the
@@ -998,51 +1040,31 @@ class OSM:
         )
 
     def _assemble_lines(self, chain_coords: DataFrame) -> DataFrame:
-        """Per-chain coords → LINESTRING; MULTILINESTRING when a route has
-        more than one chain (gaps) — reference ``make_lines``
-        (_geometry.py:25-41)."""
-        lines = chain_coords.select(
-            "rel_id",
-            "ring",
-            linestring_wkt(col("coords")).alias("line"),
-            F.expr(missing_vertex_sql("coords")).alias("gap"),
-        )
+        """Per-chain coords → ``(rel_id, kind, parts)``, one part per chain
+        in chain order (reference ``make_lines``, _geometry.py:25-41): one
+        part is a LINESTRING, more are a MULTILINESTRING (gaps)."""
         # a chain with a vertex missing from the extract leaves the whole
         # relation out, as assign_polygons does for areas: the query's
         # left join then gives its row a null geometry (the way rule)
-        per_rel = (
-            lines.groupBy("rel_id")
+        return (
+            chain_coords.groupBy("rel_id")
             .agg(
                 F.transform(
-                    F.array_sort(F.collect_list(F.struct(col("ring"), col("line")))),
-                    lambda s: s["line"],
-                ).alias("lines"),
-                F.max("gap").alias("gap"),
+                    F.array_sort(F.collect_list(F.struct(col("ring"), col("coords")))),
+                    lambda s: F.array(s["coords"]),
+                ).alias("parts"),
+                F.max(F.expr(missing_vertex_sql("coords"))).alias("gap"),
             )
             .filter(~col("gap"))
-        )
-        return per_rel.select(
-            "rel_id",
-            F.when(F.size("lines") == 1, F.element_at("lines", 1))
-            .otherwise(
-                F.concat(
-                    lit("MULTILINESTRING ("),
-                    F.array_join(
-                        F.transform(
-                            col("lines"), lambda l: F.regexp_replace(l, "^LINESTRING ", "")
-                        ),
-                        ", ",
-                    ),
-                    lit(")"),
-                )
-            )
-            .alias("wkt"),
+            .select("rel_id", lit("line").alias("kind"), "parts")
         )
 
     def _assemble_areas(self, ring_coords: DataFrame) -> DataFrame:
-        """Closed-ring coords → POLYGON/MULTIPOLYGON WKT: classify rings by
-        the first member's role, group rings into polygons (G9,
-        _frame.py:251-256), assemble WKT (G3).
+        """Closed-ring coords → ``(rel_id, kind, parts)``, one part per
+        polygon in polygon order, each part its rings (outer first, then
+        holes): classify rings by the first member's role, group rings into
+        polygons (G9, _frame.py:251-256).  One part is a POLYGON, more are a
+        MULTIPOLYGON (G3).
 
         Complex relations (>1 inner AND >1 outer) go BEYOND the reference,
         which drops their inner rings outright (G8, _frame.py:234-244,
@@ -1058,16 +1080,13 @@ class OSM:
         (``rings.assign_polygons`` — the same per-group-sequential shape
         as the G6 chain kernel): ring counts are bounded per OSM entity,
         independent of corpus size, and the single rel_id exchange it
-        costs is reused by every polygon/WKT groupBy below (subset rule) —
+        costs is reused by both polygon groupBys below (subset rule) —
         the window/join/union formulation of the same algebra cost ~6
         extra exchanges and a 4-way DAG fan-out re-running the coordinate
         gather per branch."""
-        from osmdatapy_spark.operators.geometry import polygon_wkt
         from osmdatapy_spark.operators.rings import assign_polygons
 
         indexed = assign_polygons(ring_coords)
-
-        # G3: rings → polygons (outer first, then holes), polygons → WKT
         polys = indexed.groupBy("rel_id", "poly").agg(
             F.transform(
                 F.array_sort(
@@ -1082,26 +1101,9 @@ class OSM:
                 lambda s: s["coords"],
             ).alias("rings")
         )
-        per_rel = polys.groupBy("rel_id").agg(
+        return polys.groupBy("rel_id").agg(
             F.transform(
-                F.array_sort(F.collect_list(F.struct(col("poly"), polygon_wkt(col("rings")).alias("w")))),
-                lambda s: s["w"],
-            ).alias("polys")
-        )
-        return per_rel.select(
-            "rel_id",
-            F.when(F.size("polys") == 1, F.element_at("polys", 1))
-            .otherwise(
-                F.concat(
-                    lit("MULTIPOLYGON ("),
-                    F.array_join(
-                        F.transform(
-                            col("polys"), lambda p: F.regexp_replace(p, "^POLYGON ", "")
-                        ),
-                        ", ",
-                    ),
-                    lit(")"),
-                )
-            )
-            .alias("wkt"),
-        )
+                F.array_sort(F.collect_list(F.struct(col("poly"), col("rings")))),
+                lambda s: s["rings"],
+            ).alias("parts")
+        ).select("rel_id", lit("area").alias("kind"), "parts")

@@ -43,21 +43,31 @@ def linestring_wkt(coords: Column, decimals: int = 7) -> Column:
     return F.concat(lit("LINESTRING ("), F.array_join(pts, ", "), lit(")"))
 
 
-def polygon_wkt(rings: Column, decimals: int = 7) -> Column:
-    """POLYGON WKT from ARRAY<ARRAY<STRUCT<lon,lat>>> (outer ring first;
-    reference G3, _geometry.py:44-65)."""
-    fmt = f"%.{decimals}f"
-    ring_txt = F.transform(
-        rings,
-        lambda ring: F.concat(
-            lit("("),
-            F.array_join(
-                F.transform(ring, lambda c: F.format_string(f"{fmt} {fmt}", c["lon"], c["lat"])), ", "
-            ),
-            lit(")"),
-        ),
+def _seq_wkt(seq: str) -> str:
+    """SQL: ``(x y, x y, …)`` of an ARRAY<STRUCT<lon,lat>> point sequence."""
+    pt = "format_string('%.7f %.7f', __p.lon, __p.lat)"
+    return f"concat('(', array_join(transform({seq}, __p -> {pt}), ', '), ')')"
+
+
+def parts_wkt(kind: str, parts: str) -> Column:
+    """WKT of a geometry given as coordinate parts (reference G2/G3,
+    _geometry.py:25-106): ``parts`` is an ARRAY<ARRAY<ARRAY<STRUCT<lon,lat>>>>
+    SQL fragment, ``kind`` a SQL fragment giving ``'area'`` or ``'line'``.
+    An area's part is one polygon's rings (outer first), a line's part
+    holds its one chain.  One part renders POLYGON / LINESTRING, more
+    render MULTIPOLYGON / MULTILINESTRING — the same parts
+    ``operators/wkb.parts_wkb`` encodes."""
+    body = (
+        f"IF({kind} = 'area', "
+        f"concat('(', array_join(transform(__g, __r -> {_seq_wkt('__r')}), ', '), ')'), "
+        f"{_seq_wkt('__g[0]')})"
     )
-    return F.concat(lit("POLYGON ("), F.array_join(ring_txt, ", "), lit(")"))
+    multi = f"size({parts}) > 1"
+    return memo.expr(
+        f"concat(IF({multi}, 'MULTI', ''), IF({kind} = 'area', 'POLYGON', 'LINESTRING'), "
+        f"IF({multi}, ' (', ' '), array_join(transform({parts}, __g -> {body}), ', '), "
+        f"IF({multi}, ')', ''))"
+    )
 
 
 def _pair_match(tags_col: Column, rules: dict[str, list[str]]) -> Column:

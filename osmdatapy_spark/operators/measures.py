@@ -250,18 +250,13 @@ def point_in_ring(coords: str, px: str, py: str) -> Column:
     return memo.expr(f"{_crossings_sql(coords, px, py)} % 2 = 1")
 
 
-def rings_crossings(rings: str, px: str, py: str) -> Column:
-    """Total crossing count over a MULTI-ring geometry
-    (array<array<struct<lon,lat>>>): the even-odd rule composes across
-    rings by summing crossings, so a point inside the outer but also
-    inside a hole counts 2 (outside), and inside an island ring nested
-    in the hole counts 3 (inside) — exactly shapely's semantics for
-    polygons with interiors."""
-    return memo.expr(_rings_crossings_sql(rings, px, py))
-
-
 def point_in_rings(rings: str, px: str, py: str) -> Column:
-    """Even-odd containment against a holed/multi-ring geometry."""
+    """Even-odd containment against a holed/multi-ring geometry
+    (array<array<struct<lon,lat>>>): the rule composes across rings by
+    summing crossings, so a point inside the outer but also inside a hole
+    counts 2 (outside), and inside an island ring nested in the hole
+    counts 3 (inside) — exactly shapely's semantics for polygons with
+    interiors."""
     return memo.expr(f"{_rings_crossings_sql(rings, px, py)} % 2 = 1")
 
 

@@ -6,17 +6,12 @@ surface serializes geometries as little-endian ISO WKB in ``BinaryType``
 columns — directly readable by shapely.wkb / GeoPandas / Sedona / DuckDB
 spatial — with the CRS carried as column metadata (``CRS_METADATA``).
 
-Spark has no JVM-side double→IEEE-754-bits function, so the constructors
-are Arrow-batched pandas UDFs over numpy byte layout — the ONE place a
-binary surface genuinely needs Python.  They are narrow projections: no
-shuffle, batch-local, and only run on the final output columns.
-
-Precision note: ``wkt_to_wkb`` re-parses the engine's canonical
-7-decimal WKT.  OSM coordinates are 1e-7 fixed-point in the PBF model
-(nanodegrees, reference ``dense.py:44-47``), so 7 decimals is exactly
-the source resolution — the text round-trip is lossless for OSM data.
-The ``*_wkb`` constructors encode raw doubles and are exact for any
-input.
+Spark has no JVM-side double→IEEE-754-bits function, so the one encoder,
+``parts_wkb``, is an Arrow-batched UDF over numpy byte layout — the ONE
+place a binary surface genuinely needs Python.  It is a narrow
+projection: no shuffle, batch-local, and only runs on the final output
+columns.  It reads the same coordinate parts the WKT is rendered from
+(``operators/geometry.parts_wkt``), so WKB carries the exact doubles.
 """
 
 from __future__ import annotations
@@ -24,12 +19,15 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql.functions import col, pandas_udf
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf, lit
 
 from osmdatapy_spark._pyworker import kernel
+from osmdatapy_spark.operators.geometry import GEOM_AREA, GEOM_LINESTRING, GEOM_POINT
 
 CRS_METADATA = {"crs": "EPSG:4326", "geometry_encoding": "WKB (ISO, little-endian)"}
 
@@ -47,10 +45,6 @@ def _hdr(gtype: int) -> bytes:
     return b"\x01" + struct.pack("<I", gtype)
 
 
-def _enc_point(x: float, y: float) -> bytes:
-    return _hdr(WKB_POINT) + struct.pack("<2d", x, y)
-
-
 def _enc_linestring(arr: np.ndarray) -> bytes:
     return _hdr(WKB_LINESTRING) + struct.pack("<I", len(arr)) + arr.astype("<f8").tobytes()
 
@@ -64,116 +58,90 @@ def _enc_multi(gtype: int, parts: list[bytes]) -> bytes:
     return _hdr(gtype) + struct.pack("<I", len(parts)) + b"".join(parts)
 
 
-# -- WKT (the engine's canonical text dialect) → WKB ------------------------
-
-
-def _coord_array(txt: str) -> np.ndarray:
-    """``"1.5 2.5, 3.0 4.0"`` → (n, 2) float64 array."""
-    pts = [p.split() for p in txt.split(",")]
-    return np.asarray([[float(a), float(b)] for a, b in pts], "<f8")
-
-
-def _groups(body: str) -> list[str]:
-    """Top-level parenthesized groups of ``body``: ``"(a),(b (c))"`` →
-    ``["a", "b (c)"]``."""
-    out, depth, start = [], 0, 0
-    for i, ch in enumerate(body):
-        if ch == "(":
-            depth += 1
-            if depth == 1:
-                start = i + 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                out.append(body[start:i])
-    return out
-
-def _encode_wkt(wkt: str) -> bytes:
-    head, _, body = wkt.partition(" (")
-    body = body[:-1]  # strip closing paren
-    if head == "POINT":
-        x, y = body.split()
-        return _enc_point(float(x), float(y))
-    if head == "LINESTRING":
-        return _enc_linestring(_coord_array(body))
-    if head == "POLYGON":
-        return _enc_polygon([_coord_array(g) for g in _groups(body)])
-    if head == "MULTILINESTRING":
-        return _enc_multi(
-            WKB_MULTILINESTRING, [_enc_linestring(_coord_array(g)) for g in _groups(body)]
-        )
-    if head == "MULTIPOLYGON":
-        polys = [
-            _enc_polygon([_coord_array(r) for r in _groups(g)]) for g in _groups(body)
-        ]
-        return _enc_multi(WKB_MULTIPOLYGON, polys)
-    raise ValueError(f"unsupported WKT geometry: {head!r}")
-
-
-def _is_null(v) -> bool:
-    return v is None or (isinstance(v, float) and pd.isna(v))
-
-
-# The pandas UDFs are created at call time (pandas_udf parses its DDL
+# The UDFs are created at call time (arrow_udf parses its DDL
 # return type against the active session, so module import must not
 # require one).
 
 
-def wkt_to_wkb(wkt: Column) -> Column:
-    """The engine's WKT dialect → ISO WKB, all five geometry types."""
+def parts_wkb(kind: Column, parts: Column) -> Column:
+    """ISO WKB of a geometry given as coordinate parts, all five types.
+
+    ``parts`` is ARRAY<ARRAY<ARRAY<STRUCT<lon,lat>>>>: parts hold point
+    sequences, point sequences hold points.  ``kind`` (``geometry.GEOM_*``)
+    picks the layout, and the part count picks single or MULTI:
+
+    - ``GEOM_POINT``: POINT from the one point;
+    - ``GEOM_LINESTRING``: each part's one sequence is a chain — LINESTRING
+      for one part, MULTILINESTRING for more;
+    - ``GEOM_AREA``: each part's sequences are a polygon's rings, outer
+      first — POLYGON for one part, MULTIPOLYGON for more.
+
+    Null parts, or a null coordinate anywhere in them (a node the extract
+    does not hold), encode null.  The parts arrive as Arrow list offsets:
+    pandas cannot take ragged nested arrays (rings of different lengths)
+    through its ndarray conversion."""
 
     @kernel
-    def batch(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: None if _is_null(v) else _encode_wkt(v))
+    def batch(kinds: pa.Array, shapes: pa.Array) -> pa.Array:
+        seqs = shapes.values
+        pts = seqs.values
+        lon, lat = (pc.struct_field(pts.values, f) for f in ("lon", "lat"))
+        xy = np.column_stack(
+            [lon.to_numpy(zero_copy_only=False), lat.to_numpy(zero_copy_only=False)]
+        ).astype("<f8")
+        # running count of null coordinates: a range holds one iff the
+        # count grows across it
+        null = pc.or_(lon.is_null(), lat.is_null()).to_numpy(zero_copy_only=False)
+        missing = np.concatenate(([0], np.cumsum(null)))
+        # an empty list array may come without an offsets buffer
+        part_off, seq_off, pt_off = (
+            a.offsets.to_numpy() if len(a) else np.zeros(1, np.int32) for a in (shapes, seqs, pts)
+        )
 
-    return pandas_udf(batch, "binary")(wkt)
+        def seq(k: int) -> np.ndarray:
+            return xy[pt_off[k]:pt_off[k + 1]]
 
+        out = []
+        for i, (k, valid) in enumerate(zip(kinds.to_pylist(), shapes.is_valid().to_pylist())):
+            if not valid or k is None:
+                out.append(None)
+                continue
+            p0, p1 = part_off[i], part_off[i + 1]
+            first, last = pt_off[seq_off[p0]], pt_off[seq_off[p1]]
+            if missing[last] > missing[first]:
+                out.append(None)
+            elif k == GEOM_POINT:
+                out.append(_hdr(WKB_POINT) + xy[first].tobytes())
+            elif k == GEOM_LINESTRING:
+                chains = [_enc_linestring(seq(seq_off[j])) for j in range(p0, p1)]
+                out.append(chains[0] if len(chains) == 1 else _enc_multi(WKB_MULTILINESTRING, chains))
+            elif k == GEOM_AREA:
+                polys = [
+                    _enc_polygon([seq(r) for r in range(seq_off[j], seq_off[j + 1])])
+                    for j in range(p0, p1)
+                ]
+                out.append(polys[0] if len(polys) == 1 else _enc_multi(WKB_MULTIPOLYGON, polys))
+            else:
+                raise ValueError(f"unsupported geometry kind {k}")
+        return pa.array(out, pa.binary())
 
-# -- direct constructors (exact doubles, no text round-trip) ----------------
+    return arrow_udf(batch, "binary")(kind, parts)
 
 
 def point_wkb(lon: Column, lat: Column) -> Column:
-    """POINT WKB from lon/lat doubles — fully vectorized byte layout."""
-
-    @kernel
-    def batch(x: pd.Series, y: pd.Series) -> pd.Series:
-        n = len(x)
-        buf = np.zeros((n, 21), np.uint8)
-        buf[:, 0] = 1
-        buf[:, 1] = WKB_POINT
-        buf[:, 5:13] = x.to_numpy("<f8", na_value=0.0).view(np.uint8).reshape(n, 8)
-        buf[:, 13:21] = y.to_numpy("<f8", na_value=0.0).view(np.uint8).reshape(n, 8)
-        out = pd.Series([r.tobytes() for r in buf], dtype=object)
-        null = (x.isna() | y.isna()).to_numpy()
-        if null.any():
-            out[null] = None
-        return out
-
-    return pandas_udf(batch, "binary")(lon, lat)
-
-
-def _pts(points) -> np.ndarray:
-    return np.asarray([[p["lon"], p["lat"]] for p in points], "<f8")
+    """POINT WKB from lon/lat doubles."""
+    pt = F.struct(lon.alias("lon"), lat.alias("lat"))
+    return parts_wkb(lit(GEOM_POINT), F.array(F.array(F.array(pt))))
 
 
 def linestring_wkb(coords: Column) -> Column:
     """LINESTRING WKB from an ordered ARRAY<STRUCT<lon,lat>>."""
-
-    @kernel
-    def batch(s: pd.Series) -> pd.Series:
-        return s.map(lambda pts: None if _is_null(pts) else _enc_linestring(_pts(pts)))
-
-    return pandas_udf(batch, "binary")(coords)
+    return parts_wkb(lit(GEOM_LINESTRING), F.when(coords.isNotNull(), F.array(F.array(coords))))
 
 
 def polygon_wkb(rings: Column) -> Column:
     """POLYGON WKB from ARRAY<ARRAY<STRUCT<lon,lat>>> (outer ring first)."""
-
-    @kernel
-    def batch(s: pd.Series) -> pd.Series:
-        return s.map(lambda rs: None if _is_null(rs) else _enc_polygon([_pts(r) for r in rs]))
-
-    return pandas_udf(batch, "binary")(rings)
+    return parts_wkb(lit(GEOM_AREA), F.when(rings.isNotNull(), F.array(rings)))
 
 
 # -- decoder (round-trip verification surface) ------------------------------
@@ -216,24 +184,17 @@ def _walk(buf: bytes, off: int) -> tuple[int, int, float, float, int]:
 
 def wkb_info(wkb: Column) -> Column:
     """Decode WKB structure: geometry type code, total point count, first
-    coordinate — the round-trip check that pins the byte layout."""
+    coordinate — the round-trip check that pins the byte layout.  An Arrow
+    UDF like ``parts_wkb``, so an encode-then-decode projection is one
+    Python evaluation."""
 
     @kernel
-    def batch(s: pd.Series) -> pd.DataFrame:
-        rows = []
-        for buf in s:
-            if _is_null(buf):
-                rows.append((None, None, None, None))
-            else:
-                g, n, x, y, _ = _walk(bytes(buf), 0)
-                rows.append((g, n, x, y))
-        return pd.DataFrame(rows, columns=["gtype", "n_points", "x1", "y1"])
+    def batch(bufs: pa.Array) -> pa.Array:
+        rows = [(None,) * 4 if b is None else _walk(b, 0)[:4] for b in bufs.to_pylist()]
+        cols = list(zip(*rows)) or [()] * 4
+        types = (pa.int32(), pa.int32(), pa.float64(), pa.float64())
+        return pa.StructArray.from_arrays(
+            [pa.array(c, t) for c, t in zip(cols, types)], names=["gtype", "n_points", "x1", "y1"]
+        )
 
-    return pandas_udf(batch, "gtype int, n_points int, x1 double, y1 double")(wkb)
-
-
-def attach_wkb(df: DataFrame, wkt_col: str = "geometry", out_col: str = "geometry_wkb") -> DataFrame:
-    """Append a WKB BinaryType column next to the WKT one, tagged with the
-    EPSG:4326 CRS convention (the reference's GeoDataFrame carries the same
-    CRS — ``_frame.py:54-56``)."""
-    return df.withColumn(out_col, wkt_to_wkb(col(wkt_col))).withMetadata(out_col, CRS_METADATA)
+    return arrow_udf(batch, "gtype int, n_points int, x1 double, y1 double")(wkb)

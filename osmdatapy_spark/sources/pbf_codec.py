@@ -483,6 +483,12 @@ def _decode_info(data: bytes) -> tuple[Optional[int], Optional[int], Optional[in
 
 
 def _append_tags(seg, keys: list[int], vals: list[int], strings: list[str]) -> None:
+    """Tags of the element ``seg`` appended last; its packed keys and vals
+    must pair up."""
+    if len(keys) != len(vals):
+        raise ValueError(
+            f"malformed element {seg.ids[-1]}: {len(keys)} keys but {len(vals)} vals"
+        )
     if keys:
         seg.tag_keys += [strings[k] for k in keys]
         seg.tag_vals += [strings[v] for v in vals]
@@ -554,9 +560,10 @@ def _decode_dense_columns(
     fully vectorized.
 
     The group's parallel arrays must match its id count: a lats, lons or
-    versions array of another length, or a keys_vals stream with another
-    number of terminators, raises ``ValueError`` — no node's values could
-    be told from its neighbour's."""
+    versions array of another length, a non-empty timestamps or changesets
+    array of another length, or a keys_vals stream with another number of
+    terminators, raises ``ValueError`` — no node's values could be told
+    from its neighbour's."""
     import numpy as np
 
     ids = lats = lons = np.zeros(0, dtype=np.int64)
@@ -619,17 +626,16 @@ def _decode_dense_columns(
             )
         vers = np.asarray(versions, dtype=np.int32)
 
-        def _padded_cumsum(deltas: list) -> "np.ndarray":
-            # a short delta stream reads as trailing zero deltas: pad
-            # BEFORE the cumsum, so the accumulated prefix that IS
-            # present carries through to the last node
-            arr = np.zeros(n, dtype=np.int64)
-            k = min(len(deltas), n)
-            arr[:k] = deltas[:k]
-            return np.cumsum(arr)
+        def _accumulated(name: str, deltas: list) -> "np.ndarray":
+            # an absent stream reads as all-zero deltas
+            if not deltas:
+                return np.zeros(n, dtype=np.int64)
+            if len(deltas) != n:
+                raise ValueError(f"malformed DenseNodes: {n} ids but {len(deltas)} {name}")
+            return np.cumsum(np.asarray(deltas, dtype=np.int64))
 
-        ts = _padded_cumsum(timestamps) * date_gran // 1000
-        cs = _padded_cumsum(changesets)
+        ts = _accumulated("timestamps", timestamps) * date_gran // 1000
+        cs = _accumulated("changesets", changesets)
     return DenseColumns(abs_ids, abs_lons, abs_lats, tag_offsets, tag_keys, tag_vals, vers, ts, cs)
 
 
@@ -808,6 +814,10 @@ def _decode_relation_into(
                 types = read_packed_varints(val, 0, len(val))
     rb.ids.append(osmid)
     _append_tags(rb, keys, vals, strings)
+    if len(types) != len(memids):
+        raise ValueError(
+            f"malformed relation {osmid}: {len(memids)} memids but {len(types)} types"
+        )
     if memids:
         rb.mem_refs += memids
         rb.mem_types += types
@@ -860,8 +870,9 @@ def decode_block_segments(
       (skip only when NONE is present) — the shape Query.must_tags needs
       ("element has at least one of these keys").
 
-    A malformed DenseNodes group raises ``ValueError``
-    (``_decode_dense_columns``)."""
+    A malformed DenseNodes group (``_decode_dense_columns``), an element
+    whose keys and vals differ in length, or a relation whose memids and
+    types differ in length raises ``ValueError``."""
     strings: list[str] = []
     groups: list[bytes] = []
     granularity = 100

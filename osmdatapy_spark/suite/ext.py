@@ -788,11 +788,12 @@ def rel_rank_dense_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Polygon WKT assembly with holes (ref G3 _geometry.py:44-65 + ring "
     "orchestration _frame.py:107-179): outer ring + optional inner ring → "
     "POLYGON ((outer), (hole)). Constructive fixture (squares per nation "
-    "key) so the oracle states the expected text in closed form; pure "
-    "transform/array_join Column algebra — no UDF, no shuffle.",
+    "key) so the oracle states the expected text in closed form; rendered "
+    "by the relation-geometry WKT helper (operators/geometry.parts_wkt) as "
+    "one polygon part — transform/array_join, no UDF, no shuffle.",
 )
 def osm_polygon_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osmdatapy_spark.operators.geometry import polygon_wkt
+    from osmdatapy_spark.operators.geometry import parts_wkt
 
     n = T(spark, sf_dir, "nation").select(col("n_nationkey").cast("double").alias("k"))
 
@@ -805,8 +806,8 @@ def osm_polygon_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     outer = square(col("k"), col("k"), F.lit(2.0))
     inner = square(col("k") + 0.5, col("k") + 0.5, F.lit(0.5))
     rings = F.when((col("k") % 2) == 0, F.array(outer, inner)).otherwise(F.array(outer))
-    return n.select(
-        col("k").cast("int").alias("rel_id"), polygon_wkt(rings).alias("wkt")
+    return n.select(col("k").cast("int").alias("rel_id"), rings.alias("rings")).select(
+        "rel_id", parts_wkt("'area'", "array(rings)").alias("wkt")
     )
 
 

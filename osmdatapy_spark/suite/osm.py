@@ -757,62 +757,28 @@ def _nest_ring_json(cs: list[tuple[str, str]]) -> str:
     doc="GeoJSON MultiPolygon Feature export WITH HOLES (RFC 7946) — the "
     "polygon sibling of osm_geojson_points/lines, and a geometry the "
     "reference cannot emit for complex relations (G8 drops the holes): "
-    "each relation's kernel-classified rings (outer first, holes after, "
-    "polygons in index order) format to a line-delimited Feature via "
+    "each relation's coordinate parts, assembled once by the engine "
+    "(OSM._relation_parts: kernel-classified rings, outer first, holes "
+    "after, polygons in index order — the parts its WKT and WKB render "
+    "from), format to a line-delimited Feature via "
     "array transforms + C-locale printf — every partition writes "
     "independently, same as the other GeoJSON faces.  Rides the one "
     "rel_id exchange of the nesting kernel.",
 )
 def osm_geojson_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osmdatapy_spark.operators.rings import assign_polygons
     from osmdatapy_spark.session import tune_session
 
     tune_session(spark)
     osm = _nest_fixture_osm(spark)
-    coords = osm._build_ring_coords(osm._relation_kinds(line=False))
-    assigned = assign_polygons(coords.filter(col("kind") == "area"))
-
-    ring_json = F.concat(
-        lit("["),
-        F.array_join(
-            F.transform(
-                col("coords"), lambda p: F.format_string("[%.7f,%.7f]", p["lon"], p["lat"])
-            ),
-            ",",
-        ),
-        lit("]"),
-    )
-    polys = assigned.select(
-        "rel_id", "poly", "ring",
-        F.when(col("role") == "inner", 1).otherwise(0).alias("is_inner"),
-        ring_json.alias("rj"),
-    ).groupBy("rel_id", "poly").agg(
-        F.concat(
-            lit("["),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("is_inner", "ring", col("rj").alias("rj")))),
-                    lambda s: s["rj"],
-                ),
-                ",",
-            ),
-            lit("]"),
-        ).alias("pj")
-    )
-    per_rel = polys.groupBy("rel_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("poly", col("pj").alias("pj")))),
-                lambda s: s["pj"],
-            ),
-            ",",
-        ).alias("mp")
-    )
-    return per_rel.select(
+    parts = osm._relation_parts(osm._relation_kinds(line=False), branches=("area",))
+    pt = "format_string('[%.7f,%.7f]', __p.lon, __p.lat)"
+    ring = f"concat('[', array_join(transform(__r, __p -> {pt}), ','), ']')"
+    poly = f"concat('[', array_join(transform(__g, __r -> {ring}), ','), ']')"
+    return parts.select(
         "rel_id",
         F.concat(
             lit('{"type":"Feature","geometry":{"type":"MultiPolygon","coordinates":['),
-            col("mp"),
+            memo.expr(f"array_join(transform(parts, __g -> {poly}), ',')"),
             lit(']},"properties":{"rel_id":'),
             col("rel_id").cast("string"),
             lit("}}"),

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import struct
 import sys
 from collections import namedtuple
 from pathlib import Path
@@ -159,3 +160,37 @@ def pbf_rows(path: str, with_metadata: bool = False) -> list[DecodedRow]:
         if s.blob_type == "OSMData"
         for r in block_rows(read_blob(path, s), with_metadata)
     ]
+
+
+def wkb_as_wkt(buf: bytes) -> str:
+    """Test-side WKB reader: ISO little-endian WKB → the engine's WKT
+    dialect, every coordinate re-printed with ``%.7f``."""
+
+    def seq(off):
+        (n,) = struct.unpack_from("<I", buf, off)
+        pts = [struct.unpack_from("<2d", buf, off + 4 + 16 * i) for i in range(n)]
+        return "(" + ", ".join("%.7f %.7f" % p for p in pts) + ")", off + 4 + 16 * n
+
+    def geom(off):
+        assert buf[off] == 1
+        (gtype,) = struct.unpack_from("<I", buf, off + 1)
+        off += 5
+        if gtype == 1:
+            return "POINT", "(%.7f %.7f)" % struct.unpack_from("<2d", buf, off), off + 16
+        if gtype == 2:
+            return ("LINESTRING", *seq(off))
+        (n,) = struct.unpack_from("<I", buf, off)
+        off += 4
+        bodies = []
+        for _ in range(n):
+            if gtype == 3:
+                body, off = seq(off)
+            else:
+                _, body, off = geom(off)
+            bodies.append(body)
+        name = {3: "POLYGON", 5: "MULTILINESTRING", 6: "MULTIPOLYGON"}[gtype]
+        return name, "(" + ", ".join(bodies) + ")", off
+
+    name, body, end = geom(0)
+    assert end == len(buf)
+    return f"{name} {body}"

@@ -530,9 +530,10 @@ def test_columns_option_prunes_relation_schema(spark, fixture_pbf):
 
 
 def test_dense_columns_partial_metadata_parity():
-    """Partial-length DenseInfo delta streams (fewer timestamps/changesets
-    than nodes) read as trailing zero deltas: the columnar cumsum pads
-    BEFORE accumulating, so the prefix that IS present survives."""
+    """DenseInfo timestamp and changeset delta streams must match the id
+    count like versions do: a stream shorter than the group raises
+    ``ValueError`` (no later node's value could be told apart), while an
+    absent stream reads as all-zero deltas."""
     from osmdatapy_spark.sources.pbf_codec import (
         DenseColumns,
         decode_block_segments,
@@ -541,29 +542,83 @@ def test_dense_columns_partial_metadata_parity():
         enc_packed_field,
     )
 
-    # hand-assemble a DenseNodes message with 4 nodes but only 2
-    # timestamp deltas and 1 changeset delta
-    dense = (
-        enc_packed_deltas(1, [10, 11, 12, 13])        # ids
-        + enc_bytes_field(
-            5,
-            enc_packed_field(1, [1, 1, 1, 1])          # versions (4)
-            + enc_packed_deltas(2, [100, 5])           # timestamps (2 < 4)
-            + enc_packed_deltas(3, [7]),               # changesets (1 < 4)
+    def block(timestamps: list, changesets: list) -> bytes:
+        # a DenseNodes message with 4 nodes and 4 versions
+        dense = (
+            enc_packed_deltas(1, [10, 11, 12, 13])        # ids
+            + enc_bytes_field(
+                5,
+                enc_packed_field(1, [1, 1, 1, 1])          # versions (4)
+                + enc_packed_deltas(2, timestamps)
+                + enc_packed_deltas(3, changesets),
+            )
+            + enc_packed_deltas(8, [500000000, 0, 0, 0])   # lats
+            + enc_packed_deltas(9, [100000000, 0, 0, 0])   # lons
         )
-        + enc_packed_deltas(8, [500000000, 0, 0, 0])   # lats
-        + enc_packed_deltas(9, [100000000, 0, 0, 0])   # lons
-    )
-    group = enc_bytes_field(2, dense)
-    block = enc_bytes_field(2, group)  # PrimitiveBlock.primitivegroup
+        return enc_bytes_field(2, enc_bytes_field(2, dense))  # PrimitiveBlock.primitivegroup
 
-    segs = decode_block_segments(block, with_metadata=True)
+    with pytest.raises(ValueError, match="malformed DenseNodes: 4 ids but 2 timestamps"):
+        decode_block_segments(block([100, 5], [7, 7, 7, 7]), with_metadata=True)
+    with pytest.raises(ValueError, match="malformed DenseNodes: 4 ids but 1 changesets"):
+        decode_block_segments(block([100, 5, 5, 5], [7]), with_metadata=True)
+
+    segs = decode_block_segments(block([], []), with_metadata=True)
     (dc,) = [s for s in segs if isinstance(s, DenseColumns)]
-    # enc_packed_deltas takes ABSOLUTE values; missing trailing deltas
-    # hold the last accumulated value
-    assert [int(x) for x in dc.timestamps] == [100, 5, 5, 5]
-    assert [int(x) for x in dc.changesets] == [7, 7, 7, 7]
+    assert [int(x) for x in dc.timestamps] == [0, 0, 0, 0]
+    assert [int(x) for x in dc.changesets] == [0, 0, 0, 0]
     assert [int(x) for x in dc.versions] == [1, 1, 1, 1]
+
+
+def _mismatched_element_block(case: str) -> bytes:
+    """A one-element PrimitiveBlock whose element breaks a parallel-array
+    rule: a way with keys [1, 2] but vals [1], or a relation with two
+    memids but one type."""
+    from osmdatapy_spark.sources.pbf_codec import (
+        enc_bytes_field,
+        enc_packed_deltas,
+        enc_packed_field,
+        enc_varint_field,
+    )
+
+    strings = b"".join(enc_bytes_field(1, t) for t in (b"", b"highway", b"name"))
+    if case == "way_keys_vals":
+        element = enc_bytes_field(3, (
+            enc_varint_field(1, 5) + enc_packed_field(2, [1, 2]) + enc_packed_field(3, [1])
+            + enc_packed_deltas(8, [1, 2])
+        ))
+    else:
+        element = enc_bytes_field(4, (
+            enc_varint_field(1, 7) + enc_packed_field(8, [0, 0])
+            + enc_packed_deltas(9, [1, 2]) + enc_packed_field(10, [0])
+        ))
+    return enc_bytes_field(1, strings) + enc_bytes_field(2, element)
+
+
+@pytest.mark.parametrize(
+    "case, message",
+    [
+        ("way_keys_vals", "malformed element 5: 2 keys but 1 vals"),
+        ("relation_types", "malformed relation 7: 2 memids but 1 types"),
+    ],
+)
+def test_mismatched_element_arrays_raise(spark, tmp_path, case, message):
+    """A way whose keys and vals, or a relation whose memids and types,
+    differ in length raises ``ValueError`` from the decoder, and a Spark
+    read fails naming the file and the blob's offset."""
+    from osmdatapy_spark.sources.pbf_codec import PbfWriter, decode_block_segments, enc_bytes_field
+
+    block = _mismatched_element_block(case)
+    with pytest.raises(ValueError, match=message):
+        decode_block_segments(block)
+
+    w = PbfWriter(codec="raw")
+    header = enc_bytes_field(4, b"OsmSchema-V0.6") + enc_bytes_field(4, b"DenseNodes")
+    p = tmp_path / f"{case}.osm.pbf"
+    p.write_bytes(w._frame("OSMHeader", w._blob(header)) + w._frame("OSMData", w._blob(block)))
+    (span,) = [s for s in scan_blob_spans(str(p)) if s.blob_type == "OSMData"]
+    with pytest.raises(Exception, match=f"blob at offset {span.offset}: {message}") as err:
+        read_pbf(spark, str(p)).collect()
+    assert str(p) in str(err.value)
 
 
 def _corrupt_dense_block(case: str) -> bytes:
@@ -981,24 +1036,39 @@ def test_engine_query_pushes_keep_first_keys(spark, tmp_path):
 def test_way_geometry_parity_across_backings(spark, tmp_path):
     """A nodes+ways geometry query gives the same rows through
     ``from_pbf`` (single pass over the way side), ``from_tables`` (refs
-    inline, or only in ``way_refs``) and ``from_bronze``, on the corner
-    cases of the coordinate gather: a node and a way sharing id 101, a way
-    with empty refs, a way referencing a missing node and a one-node way;
-    ``wkb=True`` encodes the same geometries."""
+    inline, or only in ``way_refs``), ``from_bronze`` and ``from_xml``, on
+    the corner cases of the coordinate gather: a node and a way sharing id
+    101, a way with empty refs, a way referencing a missing node and a
+    one-node way; ``wkb=True`` encodes the same geometries."""
+    from conftest import wkb_as_wkt
+
     from osmdatapy_spark.sources.pbf_codec import PbfWriter
+    from osmdatapy_spark.sources.xml import write_osm_xml
 
     p = str(tmp_path / "corners.osm.pbf")
     w = PbfWriter()
     grid = [(i + 1, 10.0 + (i % 3) * 0.001, 50.0 + (i // 3) * 0.001, {}) for i in range(9)]
     grid[4] = (5, 10.001, 50.001, {"amenity": "cafe"})
-    w.add_dense_nodes(grid + [(101, 11.0, 51.0, {"amenity": "bar"})])
-    w.add_way(101, [1, 2, 3], {"highway": "primary"})
-    w.add_way(106, [1, 3, 9, 7, 1], {"highway": "x", "building": "yes"})
-    w.add_way(108, [], {"highway": "empty"})
-    w.add_way(109, [1, 999], {"highway": "missing"})
-    w.add_way(110, [5], {"highway": "single"})
-    w.add_way(111, [2, 5], {"name": "untagged"})
+    nodes = grid + [(101, 11.0, 51.0, {"amenity": "bar"})]
+    ways = [
+        (101, [1, 2, 3], {"highway": "primary"}),
+        (106, [1, 3, 9, 7, 1], {"highway": "x", "building": "yes"}),
+        (108, [], {"highway": "empty"}),
+        (109, [1, 999], {"highway": "missing"}),
+        (110, [5], {"highway": "single"}),
+        (111, [2, 5], {"name": "untagged"}),
+    ]
+    w.add_dense_nodes(nodes)
+    for way in ways:
+        w.add_way(*way)
     w.write(p)
+    xml = tmp_path / "corners.osm"
+    with open(xml, "w") as f:
+        write_osm_xml(
+            [dict(osmid=i, osmtype=0, lon=x, lat=y, tags=t) for i, x, y, t in nodes]
+            + [dict(osmid=i, osmtype=1, refs=r, tags=t) for i, r, t in ways],
+            f,
+        )
 
     q = Query(nodes=True, ways=True, relations=False, keep={"amenity": [], "highway": []},
               geometry=True)
@@ -1018,6 +1088,8 @@ def test_way_geometry_parity_across_backings(spark, tmp_path):
     assert no_refs.query(q).filter(col("osmid") == 108).select("refs").first()[0] == []
     osm.to_bronze(str(tmp_path / "bronze"))
     assert got == rows(OSM.from_bronze(spark, str(tmp_path / "bronze")))
+    from_xml = OSM.from_xml(spark, str(xml))
+    assert got == rows(from_xml)
     geom = {(r[0], r[1]): r[3] for r in got}
     assert geom[(101, 0)] == "POINT (11.0000000 51.0000000)"
     assert geom[(101, 1)] == (
@@ -1045,6 +1117,13 @@ def test_way_geometry_parity_across_backings(spark, tmp_path):
     assert all((r.geometry is None) == (r.geometry_wkb is None) for r in wkb.values())
     assert wkb[(109, 1)].geometry_wkb is None
     assert bytes(wkb[(101, 1)].geometry_wkb)[:9] == b"\x01\x02\x00\x00\x00\x03\x00\x00\x00"
+    # the XML backing encodes the same geometries (its coordinates are
+    # the 7-decimal text, the PBF's the 1e-7 grid: equal once re-printed)
+    xml_wkb = {
+        (r.osmid, r.osmtype): r.geometry_wkb and wkb_as_wkt(bytes(r.geometry_wkb))
+        for r in from_xml.query(q, wkb=True).select("osmid", "osmtype", "geometry_wkb").collect()
+    }
+    assert xml_wkb == geom
 
 
 def test_relation_geometry_null_on_missing_vertex(spark, tmp_path):

@@ -163,7 +163,7 @@ def test_kernel_mark_imports_the_package_on_unpickle():
 
 _KERNEL_CALLS = {
     "mapInPandas", "applyInPandas", "applyInPandasWithState", "mapInArrow",
-    "foreachPartition", "pandas_udf",
+    "foreachPartition", "pandas_udf", "arrow_udf",
 }
 
 

@@ -1,5 +1,6 @@
-"""WKB output surface: byte-exact layout fixtures, WKT↔WKB round-trips
-over all five geometry types, and the engine's geometry_wkb path.
+"""WKB output surface: byte-exact layout fixtures, the engine's
+geometry_wkb path, and WKB re-printed as WKT equal to the engine's WKT
+over all five geometry types.
 
 The expected bytes are hand-assembled from the public WKB spec
 (little-endian ISO: byte order 0x01, uint32 type, float64 coords) — an
@@ -12,15 +13,16 @@ import struct
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from conftest import wkb_as_wkt
+from osmdatapy_spark.engine import OSM
 from osmdatapy_spark.operators.wkb import (
     CRS_METADATA,
-    attach_wkb,
     linestring_wkb,
     point_wkb,
     polygon_wkb,
     wkb_info,
-    wkt_to_wkb,
 )
+from osmdatapy_spark.query import Query
 
 
 def _le(gtype: int) -> bytes:
@@ -62,30 +64,23 @@ def test_linestring_polygon_wkb_byte_exact(spark):
     assert bytes(row["pg"]) == _le(3) + struct.pack("<I", 1) + struct.pack(
         "<I", 4
     ) + struct.pack("<8d", 0.0, 0.0, 4.0, 0.0, 4.0, 4.0, 0.0, 0.0)
-
-
-def test_wkt_to_wkb_all_types_roundtrip(spark):
-    wkts = [
-        ("POINT (12.5000000 -3.2500000)", 1, 1, 12.5, -3.25),
-        ("LINESTRING (0.0000000 0.0000000, 1.0000000 2.0000000, 3.0000000 4.0000000)", 2, 3, 0.0, 0.0),
-        ("POLYGON ((0.5 0.5, 4.0 0.0, 4.0 4.0, 0.5 0.5), (1.0 1.0, 2.0 1.0, 1.0 2.0, 1.0 1.0))", 3, 8, 0.5, 0.5),
-        ("MULTILINESTRING ((7.0 8.0, 9.0 10.0), (1.0 1.0, 2.0 2.0, 3.0 3.0))", 5, 5, 7.0, 8.0),
-        ("MULTIPOLYGON (((0.0 0.0, 1.0 0.0, 1.0 1.0, 0.0 0.0)), ((5.0 5.0, 6.0 5.0, 6.0 6.0, 5.0 5.0)))", 6, 8, 0.0, 0.0),
-        (None, None, None, None, None),
-    ]
-    df = spark.createDataFrame([(w,) for w, *_ in wkts], "wkt string")
-    out = df.select(
-        "wkt", wkb_info(wkt_to_wkb(col("wkt"))).alias("i")
-    ).select("wkt", "i.gtype", "i.n_points", "i.x1", "i.y1")
-    got = {r["wkt"]: (r["gtype"], r["n_points"], r["x1"], r["y1"]) for r in out.collect()}
-    for wkt, gtype, n, x1, y1 in wkts:
-        assert got[wkt] == (gtype, n, x1, y1)
+    # a hole with another point count than its outer ring (ragged rings),
+    # and null inputs
+    outer = [(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0), (0.0, 0.0)]
+    hole = [(1.0, 1.0), (2.0, 1.0), (1.0, 2.0), (1.0, 1.0)]
+    df = spark.createDataFrame(
+        [([[{"lon": x, "lat": y} for x, y in r] for r in (outer, hole)],), (None,)],
+        "rings array<array<struct<lon:double,lat:double>>>",
+    )
+    got = [r["pg"] for r in df.select(polygon_wkb(col("rings")).alias("pg")).collect()]
+    assert bytes(got[0]) == _le(3) + struct.pack("<I", 2) + b"".join(
+        struct.pack("<I", len(r)) + struct.pack(f"<{2 * len(r)}d", *[c for p in r for c in p])
+        for r in (outer, hole)
+    )
+    assert got[1] is None
 
 
 def test_engine_query_wkb(spark):
-    from osmdatapy_spark.engine import OSM
-    from osmdatapy_spark.query import Query
-
     elements = spark.createDataFrame(
         [(1, 0, {"amenity": "cafe"}), (7, 1, {"highway": "path"})],
         "osmid long, osmtype tinyint, tags map<string,string>",
@@ -118,7 +113,71 @@ def test_engine_query_wkb(spark):
     assert meta["geometry_wkb"] == CRS_METADATA
 
 
-def test_attach_wkb_nulls_pass_through(spark):
-    df = spark.createDataFrame([("POINT (1.0 2.0)",), (None,)], "geometry string")
-    got = attach_wkb(df).collect()
-    assert sum(r["geometry_wkb"] is None for r in got) == 1
+def _ragged_hole_osm(spark):
+    """A multipolygon whose hole has fewer points than its outer ring, a
+    tagged node with a coordinate finer than 7 decimals, a linestring way
+    and a one-node way (geometry null)."""
+    nodes = spark.createDataFrame(
+        [(1, 0.0, 0.0), (2, 4.0, 0.0), (3, 4.0, 4.0), (4, 0.0, 4.0),
+         (5, 1.0, 1.0), (6, 2.0, 1.0), (7, 1.0, 2.0), (8, 10.123456789, -3.25)],
+        "osmid long, lon double, lat double",
+    )
+    elements = spark.createDataFrame(
+        [(8, 0, {"amenity": "bench"}), (11, 1, {"highway": "path"}), (12, 1, {}),
+         (13, 1, {"highway": "stub"}), (21, 2, {"type": "multipolygon"}),
+         (22, 2, {"type": "site"})],
+        "osmid long, osmtype tinyint, tags map<string,string>",
+    )
+    refs = [(11, p, n) for p, n in enumerate([1, 2, 3, 4, 1])]
+    refs += [(12, p, n) for p, n in enumerate([5, 6, 7, 5])] + [(13, 0, 8)]
+    way_refs = spark.createDataFrame(refs, "way_id long, pos int, node_id long")
+    rel_members = spark.createDataFrame(
+        [(21, 0, 11, 1, "outer"), (21, 1, 12, 1, "inner"), (22, 0, 8, 0, "")],
+        "rel_id long, pos int, member_id long, member_type tinyint, role string",
+    )
+    return OSM.from_tables(elements, nodes, way_refs, rel_members)
+
+
+def test_query_wkb_keeps_exact_doubles(spark):
+    """WKB carries the coordinate doubles themselves, not the 7-decimal
+    WKT text."""
+    osm = _ragged_hole_osm(spark)
+    q = Query(nodes=True, ways=False, relations=False, geometry=True)
+    (row,) = osm.query(q, wkb=True).collect()
+    assert row.geometry == "POINT (10.1234568 -3.2500000)"
+    assert struct.unpack_from("<2d", bytes(row.geometry_wkb), 5) == (10.123456789, -3.25)
+
+
+def test_query_wkb_reprints_as_wkt(spark):
+    """``geometry_wkb`` decoded and re-printed with ``%.7f`` equals the
+    ``geometry`` WKT, null where it is null, over all five geometry types:
+    a polygon with a ragged hole, the route fixture's gaps
+    (MULTILINESTRING) and the nested-squares fixture (MULTIPOLYGON)."""
+    from osmdatapy_spark.suite.ext import _route_tables
+    from osmdatapy_spark.suite.osm import _nest_fixture_osm
+
+    q = Query(nodes=True, ways=True, relations=True, geometry=True, tags=False)
+    heads = set()
+    for osm in (
+        _ragged_hole_osm(spark),
+        OSM.from_tables(*_route_tables(spark)),
+        _nest_fixture_osm(spark),
+    ):
+        rows = osm.query(q, wkb=True).select("osmid", "osmtype", "geometry", "geometry_wkb").collect()
+        for r in rows:
+            if r.geometry is None:
+                assert r.geometry_wkb is None, r
+            else:
+                assert wkb_as_wkt(bytes(r.geometry_wkb)) == r.geometry, r
+                heads.add(r.geometry.split(" ")[0])
+    assert heads == {"POINT", "LINESTRING", "POLYGON", "MULTILINESTRING", "MULTIPOLYGON"}
+    ragged = {
+        r.osmid: r.geometry
+        for r in _ragged_hole_osm(spark).query(q).filter("osmtype = 2").collect()
+    }
+    assert ragged == {
+        21: "POLYGON ((0.0000000 0.0000000, 4.0000000 0.0000000, 4.0000000 4.0000000, "
+        "0.0000000 4.0000000, 0.0000000 0.0000000), (1.0000000 1.0000000, "
+        "2.0000000 1.0000000, 1.0000000 2.0000000, 1.0000000 1.0000000))",
+        22: None,
+    }
