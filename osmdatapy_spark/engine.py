@@ -684,12 +684,11 @@ class OSM:
                 ),
             )
         if q.nodes:
-            if "lon" in out.columns:
-                # PBF scans carry node coords inline (the pruned elements
-                # relation includes lon/lat when nodes are selected) — no
-                # J6 join needed at all
-                pass
-            else:
+            point = point_wkt(col("lon"), col("lat"))
+            # PBF scans carry node coords inline (the pruned elements
+            # relation includes lon/lat when nodes are selected); other
+            # backings join the nodes table
+            if "lon" not in out.columns:
                 pts = nodes.select(col("osmid").alias("_nid"), "lon", "lat")
                 # node points (reference J6/G1, _frame.py:44-52); osmid is
                 # NOT unique across element kinds, so the join is
@@ -698,7 +697,9 @@ class OSM:
                 out = out.join(
                     pts, (out.osmid == pts["_nid"]) & (col("osmtype") == 0), "left"
                 ).drop("_nid")
-            point = point_wkt(col("lon"), col("lat"))
+                # a node missing from the nodes table has no point, as a
+                # way with a missing vertex has no linestring
+                point = F.when(col("lon").isNotNull() & col("lat").isNotNull(), point)
         else:
             point = lit(None).cast("string")
         gt = F.when(col("osmtype") == 0, GEOM_POINT)
@@ -747,20 +748,21 @@ class OSM:
         )
 
     def relation_rings(self) -> DataFrame:
-        """Multipolygon ring assembly (reference G6-G9; operators.rings)."""
-        from osmdatapy_spark.operators.geometry import close_rings
+        """``(rel_id, ring, nodes, ring_role, kind)``: the closed rings of
+        every area relation (type ∈ {multipolygon, boundary}), member ways
+        chained into rings (reference G6-G7; operators.rings) with nested
+        relation members flattened to their ways — the rings
+        ``relation_areas()`` renders."""
+        return self._chain_rings(self._relation_kinds(line=False))
 
-        members = (
-            self.rel_members.filter(col("member_type") == OSMTYPE_WAY)
-            .select("rel_id", col("member_id").alias("way_id"), col("pos").alias("member_pos"))
-            .join(self._way_ref_arrays(), "way_id")
-        )
-        return ring_chains(members).withColumn("nodes", close_rings(col("nodes")))
-
-    def expand_members(self, max_depth: int = 8) -> DataFrame:
-        """J2 at arbitrary depth: the transitive membership closure of every
-        relation — ``(root_rel, member_id, member_type, role, depth)`` for
-        each member reachable from ``root_rel`` through nested relations.
+    def _member_walk(self, members: DataFrame, max_depth: int) -> DataFrame:
+        """J2 at arbitrary depth: the union of the levels of the membership
+        walk from ``members`` (``rel_members`` rows).  Columns other than
+        ``pos``, ``member_id``, ``member_type`` and ``role`` — ``rel_id``,
+        the root, and any the caller adds — ride along unchanged to every
+        level.  Each level holds ``member_id``, ``member_type``, ``role``,
+        ``depth`` (1 = a direct member) and ``path``, the member positions
+        from the root down (ARRAY<INT>).
 
         The reference stops at depth 1 with a TODO (``osmdata.py:192``);
         here the member join is ITERATED to a fixpoint: each round joins
@@ -774,46 +776,55 @@ class OSM:
         it holds only relation-type members, which are <1% of planet
         membership — so rounds after the first are near-free; real OSM
         nesting rarely exceeds depth ~6."""
+        keep = [c for c in members.columns if c not in ("pos", "member_id", "member_type", "role")]
+        level = members.select(
+            *keep,
+            "member_id",
+            "member_type",
+            "role",
+            lit(1).alias("depth"),
+            F.array(col("pos").cast("int")).alias("path"),
+        )
+        sub = self.rel_members.select(
+            col("rel_id").alias("_sub_rel"),
+            col("pos").alias("_m_pos"),
+            col("member_id").alias("_m_id"),
+            col("member_type").alias("_m_type"),
+            col("role").alias("_m_role"),
+        )
+        walk = level
+        for _ in range(1, max_depth):
+            frontier = level.filter(col("member_type") == OSMTYPE_RELATION)
+            if frontier.isEmpty():
+                break
+            level = (
+                frontier.join(sub, col("member_id") == col("_sub_rel"))
+                .select(
+                    *keep,
+                    col("_m_id").alias("member_id"),
+                    col("_m_type").alias("member_type"),
+                    col("_m_role").alias("role"),
+                    (col("depth") + 1).alias("depth"),
+                    F.concat("path", F.array(col("_m_pos").cast("int"))).alias("path"),
+                )
+                .localCheckpoint()
+            )
+            walk = walk.unionByName(level)
+        return walk
+
+    def expand_members(self, max_depth: int = 8) -> DataFrame:
+        """The transitive membership closure of every relation —
+        ``(root_rel, member_id, member_type, role, depth)`` for each member
+        reachable from ``root_rel`` through nested relations, up to
+        ``max_depth`` levels (``_member_walk``)."""
         if self.rel_members is None:
             raise ValueError(
                 "expand_members requires relation membership: this OSM was "
                 "built without a rel_members table"
             )
-        base = self.rel_members.select(
-            col("rel_id").alias("root_rel"),
-            "member_id",
-            "member_type",
-            "role",
-            lit(1).alias("depth"),
+        return self._member_walk(self.rel_members, max_depth).select(
+            col("rel_id").alias("root_rel"), "member_id", "member_type", "role", "depth"
         )
-        levels = [base]
-        frontier = base.filter(col("member_type") == OSMTYPE_RELATION)
-        for _ in range(1, max_depth):
-            if frontier.isEmpty():
-                break
-            sub = self.rel_members.select(
-                col("rel_id").alias("_sub_rel"),
-                col("member_id").alias("_m_id"),
-                col("member_type").alias("_m_type"),
-                col("role").alias("_m_role"),
-            )
-            nxt = (
-                frontier.join(sub, frontier.member_id == sub._sub_rel)
-                .select(
-                    "root_rel",
-                    col("_m_id").alias("member_id"),
-                    col("_m_type").alias("member_type"),
-                    col("_m_role").alias("role"),
-                    (col("depth") + 1).alias("depth"),
-                )
-                .localCheckpoint()
-            )
-            levels.append(nxt)
-            frontier = nxt.filter(col("member_type") == OSMTYPE_RELATION)
-        out = levels[0]
-        for lv in levels[1:]:
-            out = out.unionByName(lv)
-        return out
 
     def _relation_kinds(self, area: bool = True, line: bool = True) -> DataFrame:
         """(rel_id, kind) for geometry-bearing relations — the G5 dispatch
@@ -826,9 +837,16 @@ class OSM:
             kind = F.when(tval.isin(RELATION_LINESTRING), "line").otherwise(kind)
         if area:
             kind = F.when(tval.isin(RELATION_AREA), "area").otherwise(kind)
+        if self._pbf_meta is None:
+            rels = self.elements.filter(col("osmtype") == OSMTYPE_RELATION)
+        else:
+            # a PBF-backed OSM reads relation tags from the kind-pruned
+            # relation scan, never decoding a node or a way
+            rels = self._read_pbf(
+                osmtypes={OSMTYPE_RELATION}, columns=["osmid", "osmtype", "tags"]
+            )
         return (
-            self.elements.filter(col("osmtype") == OSMTYPE_RELATION)
-            .select(col("osmid").alias("rel_id"), kind.alias("kind"))
+            rels.select(col("osmid").alias("rel_id"), kind.alias("kind"))
             .filter(col("kind").isNotNull())
         )
 
@@ -870,21 +888,12 @@ class OSM:
         The common case (no nested relation members among the requested
         relations) is detected with one cheap limit-1 probe and returns
         the direct-way membership untouched — identical plan to before.
-        When nesting exists, membership is iterated to a depth-capped
-        fixpoint (the ``expand_members`` recipe) carrying the hierarchical
-        position PATH; the flattened member order is the lexicographic
-        path order (sub-relation members sort where their parent sat), and
-        each leaf way keeps ITS OWN role — outer/inner live on the leaf
-        members in real boundary hierarchies.  The cap also terminates
-        membership cycles (legal-if-broken OSM data)."""
+        When nesting exists, the way leaves of the membership walk
+        (``_member_walk``) are kept in the lexicographic order of their
+        position path (sub-relation members sort where their parent sat),
+        and each leaf way keeps ITS OWN role — outer/inner live on the leaf
+        members in real boundary hierarchies."""
         mem = self.rel_members.join(kinds, "rel_id")
-        direct = mem.filter(col("member_type") == OSMTYPE_WAY).select(
-            "rel_id",
-            col("member_id").alias("way_id"),
-            col("pos").alias("member_pos"),
-            "role",
-            "kind",
-        )
         # cheapest sufficient probe, memoized per OSM: scan rel_members
         # alone (no kinds join — one narrow limit-1 job; Catalyst folds it
         # to a no-op when member_type is a literal) and take the flatten
@@ -896,87 +905,51 @@ class OSM:
                 .isEmpty()
             )
         if not self._has_nested_members:
-            return direct
-        nested = mem.filter(col("member_type") == OSMTYPE_RELATION)
+            return mem.filter(col("member_type") == OSMTYPE_WAY).select(
+                "rel_id",
+                col("member_id").alias("way_id"),
+                col("pos").alias("member_pos"),
+                "role",
+                "kind",
+            )
 
         from pyspark.sql import Window as W
 
-        ways_lv = mem.filter(col("member_type") == OSMTYPE_WAY).select(
-            "rel_id",
-            col("member_id").alias("way_id"),
-            F.array(col("pos").cast("int")).alias("path"),
-            "role",
-            "kind",
-        )
-        frontier = nested.select(
-            "rel_id",
-            col("member_id").alias("sub_rel"),
-            F.array(col("pos").cast("int")).alias("path"),
-            "kind",
-        )
-        sub = self.rel_members.select(
-            col("rel_id").alias("_sr"),
-            col("member_id").alias("_mid"),
-            col("member_type").alias("_mt"),
-            col("pos").alias("_mp"),
-            col("role").alias("_mrole"),
-        )
-        levels = [ways_lv]
-        for _ in range(1, max_depth):
-            j = frontier.join(sub, frontier.sub_rel == sub._sr).localCheckpoint()
-            levels.append(
-                j.filter(col("_mt") == OSMTYPE_WAY).select(
-                    "rel_id",
-                    col("_mid").alias("way_id"),
-                    F.concat("path", F.array(col("_mp").cast("int"))).alias("path"),
-                    col("_mrole").alias("role"),
-                    "kind",
-                )
-            )
-            frontier = j.filter(col("_mt") == OSMTYPE_RELATION).select(
-                "rel_id",
-                col("_mid").alias("sub_rel"),
-                F.concat("path", F.array(col("_mp").cast("int"))).alias("path"),
-                "kind",
-            )
-            if frontier.isEmpty():
-                break
-        flat = levels[0]
-        for lv in levels[1:]:
-            flat = flat.unionByName(lv)
+        flat = self._member_walk(mem, max_depth).filter(col("member_type") == OSMTYPE_WAY)
         w = W.partitionBy("rel_id").orderBy("path")
         return flat.select(
             "rel_id",
-            "way_id",
+            col("member_id").alias("way_id"),
             F.row_number().over(w).alias("member_pos"),
             "role",
             "kind",
         )
 
-    def _build_ring_coords(self, kinds: DataFrame) -> DataFrame:
-        """The shared chain/gather pipeline: ONE refs aggregation + ONE
-        way_id join feed the fused chain kernel (``ring_chains`` — refs
-        ride the rel_id exchange through Arrow); ONE node-coordinate
-        gather serves both geometry branches (the node join is the
-        expensive step — per-branch gathers would scan and shuffle the
-        nodes table twice); everything after stays keyed by rel_id.
-        Relation-type members are flattened to their leaf ways first
-        (``_flatten_way_members`` — a no-op probe when no nesting)."""
-        members = self._flatten_way_members(kinds).join(
-            self._way_ref_arrays(), "way_id"
-        )
-        # role + kind travel through the fused chaining kernel's schema
-        # (rings.CHAIN_SCHEMA) — no re-join to recover them
-        chains = ring_chains(members)
-        # G7 ring closing applies to the area branch only (node-id level,
-        # matching the reference's append-first-ref closure)
+    def _chain_rings(self, kinds: DataFrame) -> DataFrame:
+        """``(rel_id, ring, nodes, ring_role, kind)``: the member ways of
+        the ``kinds`` relations, nested members flattened to their leaf
+        ways (``_flatten_way_members`` — a no-op probe when no nesting),
+        chained by the fused chain kernel (``ring_chains`` — ONE refs
+        aggregation + ONE way_id join, refs ride the rel_id exchange
+        through Arrow; role + kind travel through its schema, no re-join
+        to recover them).  Area rings are closed (G7, node-id level,
+        matching the reference's append-first-ref closure); route chains
+        stay open."""
         from osmdatapy_spark.operators.geometry import close_rings
 
-        chains = chains.withColumn(
+        members = self._flatten_way_members(kinds).join(self._way_ref_arrays(), "way_id")
+        return ring_chains(members).withColumn(
             "nodes",
             F.when(col("kind") == "area", close_rings(col("nodes"))).otherwise(col("nodes")),
         )
-        return self._ring_coords(chains, ["ring_role", "kind"])
+
+    def _build_ring_coords(self, kinds: DataFrame) -> DataFrame:
+        """The shared chain/gather pipeline: the chained rings
+        (``_chain_rings``) and ONE node-coordinate gather serving both
+        geometry branches (the node join is the expensive step —
+        per-branch gathers would scan and shuffle the nodes table twice);
+        everything after stays keyed by rel_id."""
+        return self._ring_coords(self._chain_rings(kinds), ["ring_role", "kind"])
 
     def _relation_parts(
         self, kinds: DataFrame, branches: tuple = ("area", "line")
@@ -1005,8 +978,9 @@ class OSM:
             # without persist each branch would re-run the whole upstream
             # (chain kernel + node join).  The persisted unit is per-ring
             # coordinate arrays — relation rings only, a sliver of the
-            # corpus even at planet scale
-            coords = self._build_ring_coords(kinds).persist()
+            # corpus even at planet scale.  One live frame per session:
+            # the next query's persist releases this one
+            coords = memo.managed_persist(self._build_ring_coords(kinds), "relation_parts.coords")
         else:
             # single-branch callers (relation_areas / relation_lines) have
             # exactly one consumer — a persist would only add a cache

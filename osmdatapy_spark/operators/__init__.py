@@ -8,7 +8,7 @@ from osmdatapy_spark.operators.geometry import (
     way_geom_type,
 )
 from osmdatapy_spark.operators.topology import topology_segments, way_endpoints
-from osmdatapy_spark.operators.rings import reorder_rings
+from osmdatapy_spark.operators.rings import ring_chains
 from osmdatapy_spark.operators.measures import (
     nearest_in_grid,
     point_in_polygon_join,
@@ -26,7 +26,7 @@ __all__ = [
     "way_geom_type",
     "topology_segments",
     "way_endpoints",
-    "reorder_rings",
+    "ring_chains",
     "nearest_in_grid",
     "point_in_polygon_join",
     "point_in_ring",

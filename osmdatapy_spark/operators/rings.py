@@ -20,16 +20,11 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osmdatapy_spark import memo
 from osmdatapy_spark._pyworker import kernel
-
-RING_SCHEMA = (
-    "rel_id long, way_id long, pos int, direction int, ring int, "
-    "ring_role string, kind string"
-)
 
 
 def _chain(s, t, roles):
@@ -76,47 +71,13 @@ def _chain(s, t, roles):
     return pos, direction, ring, ring_roles
 
 
-def _member_meta(pdf: pd.DataFrame):
-    n = len(pdf)
-    roles = list(pdf["role"]) if "role" in pdf.columns else [None] * n
-    kind = pdf["kind"].iloc[0] if "kind" in pdf.columns and n else None
-    return roles, kind
-
-
-def _reorder_one(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-relation chaining kernel over endpoint columns (see ``_chain``).
-
-    ``ring_role`` = the member role of the way each ring *started* at
-    (reference splits outer/inner by member role, _frame.py:115-136) —
-    carried through here so downstream never re-joins members to recover
-    it (one whole join + groupBy saved in the area pipeline).
-    """
-    pdf = pdf.sort_values("member_pos", kind="stable").reset_index(drop=True)
-    n = len(pdf)
-    roles, kind = _member_meta(pdf)
-    pos, direction, ring, ring_roles = _chain(
-        pdf["source"].to_numpy(), pdf["target"].to_numpy(), roles
-    )
-    return pd.DataFrame(
-        {
-            "rel_id": pdf["rel_id"],
-            "way_id": pdf["way_id"],
-            "pos": pd.array(pos, dtype="int32"),
-            "direction": pd.array(direction, dtype="int32"),
-            "ring": pd.array(ring, dtype="int32"),
-            "ring_role": [ring_roles[r] for r in ring],
-            "kind": [kind] * n,
-        }
-    )
-
-
 CHAIN_SCHEMA = "rel_id long, ring int, nodes array<bigint>, ring_role string, kind string"
 
 
 def _chain_rel(rel_id, ms, kind):
     """Chain + sequence ONE relation from its collected member structs
-    (sorted by member_pos) — the per-relation core of ``ring_chains``,
-    shared with the batched kernel.  Returns column lists."""
+    (sorted by member_pos) — the per-relation core of ``ring_chains``'
+    batched kernel.  Returns column lists."""
     ms = sorted(ms, key=lambda m: m["member_pos"])
     refs = [list(m["refs"]) if m["refs"] is not None else [] for m in ms]
     roles = [m["role"] if "role" in m else None for m in ms]
@@ -144,8 +105,9 @@ def _chain_rel(rel_id, ms, kind):
 
 def ring_chains(members: DataFrame) -> DataFrame:
     """Chain member ways into rings AND expand to ordered node sequences
-    (the fused form of ``reorder_rings`` + ``ring_node_sequence`` — same
-    semantics, pinned by tests/test_operators.py parity test).
+    (reference ``_reorder_ring`` + node-sequence dedup, _frame.py:152-215):
+    each ring's ways in chain order, reversed where stored against the
+    chain, the joint node shared by consecutive ways kept once.
 
     Input: ``(rel_id, way_id, member_pos, refs ARRAY<LONG>[, role, kind])``.
     Output: ``(rel_id, ring, nodes ARRAY<LONG>, ring_role, kind)`` with
@@ -340,78 +302,3 @@ def assign_polygons(ring_coords: DataFrame) -> DataFrame:
             )
 
     return agg.mapInPandas(batch, schema=ASSIGN_SCHEMA)
-
-
-def reorder_rings(members: DataFrame) -> DataFrame:
-    """Chain each relation's member ways into ordered rings.
-
-    Input: ``(rel_id, way_id, member_pos, source, target[, role])`` — one
-    row per member way with its endpoint node ids (from
-    ``topology.way_endpoints``).  Output adds ``pos`` (order in ring),
-    ``direction`` (1 forward / -1 reversed), ``ring`` (0-based ring index
-    within the relation), ``ring_role`` (role of the ring's first member).
-    """
-    cols = ["rel_id", "way_id", "member_pos", "source", "target"]
-    cols += [c for c in ("role", "kind") if c in members.columns]
-    return (
-        members.select(*cols)
-        .groupBy("rel_id")
-        .applyInPandas(_reorder_one, schema=RING_SCHEMA)
-    )
-
-
-def ring_node_sequence(ordered: DataFrame, way_refs: DataFrame, close: bool = True) -> DataFrame:
-    """Expand chained rings to ordered node lists (reference
-    _frame.py:152-171): join member ways to their refs, reverse refs where
-    direction=-1, drop the duplicated joint node between consecutive ways,
-    close the ring if needed (``close=False`` keeps open chains — the
-    route/linestring branch, reference _frame.py:87-105).
-
-    Returns ``(rel_id, ring, nodes ARRAY<LONG>, ring_role)`` —
-    array-native, no per-node shuffle: the refs arrays ride along the
-    rel_id shuffle.
-    """
-    refs = way_refs.groupBy(F.col("way_id")).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("pos").alias("p"), F.col("node_id").alias("n")))
-        ).alias("pn")
-    ).select("way_id", F.col("pn.n").alias("refs"))
-
-    j = ordered.join(refs, "way_id")
-    oriented = j.withColumn(
-        "oriented", F.when(F.col("direction") == -1, F.reverse(F.col("refs"))).otherwise(F.col("refs"))
-    )
-    # drop each way's first node except for the ring's first way: consecutive
-    # ways share the joint node (reference dedup at _frame.py:162-163)
-    w_ring = Window.partitionBy("rel_id", "ring")
-    trimmed = oriented.withColumn(
-        "part",
-        F.when(F.col("pos") == F.min("pos").over(w_ring), F.col("oriented")).otherwise(
-            F.slice(F.col("oriented"), 2, F.greatest(F.size(F.col("oriented")) - 1, F.lit(0)))
-        ),
-    )
-    seq = (
-        trimmed.groupBy("rel_id", "ring")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("part")))),
-                    lambda st: st["part"],
-                )
-            ).alias("nodes"),
-            # all rows of a ring carry the same ring_role/kind — min() picks
-            # them without another join (see _reorder_one)
-            F.min("ring_role").alias("ring_role"),
-            F.min("kind").alias("kind"),
-        )
-    )
-    if not close:
-        return seq
-    # close rings (reference G7 _close_rings, _frame.py:217-232)
-    return seq.withColumn(
-        "nodes",
-        F.when(
-            F.element_at("nodes", 1) != F.element_at("nodes", -1),
-            F.concat(F.col("nodes"), F.array(F.element_at("nodes", 1))),
-        ).otherwise(F.col("nodes")),
-    )

@@ -13,7 +13,8 @@ Local testing runs on ``local[N]`` but every setting is chosen for the
 - session timezone pinned to UTC so timestamp semantics are stable across
   driver/executor locales (and match the DuckDB oracle).
 - a generated-code cache that holds a query mix's working set (see
-  ``CODEGEN_CACHE_ENTRIES``).
+  ``CODEGEN_CACHE_ENTRIES``) and hits on a repeat whatever order its
+  stages ran in.
 """
 
 from __future__ import annotations
@@ -51,6 +52,12 @@ def get_spark(app_name: str = "osmdatapy-spark", cpus: int | None = None) -> Spa
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # the cache key is the generated source, and Spark names each
+        # whole-stage class after its codegen stage id, which under AQE
+        # can differ from one run of the same plan to the next: a repeat
+        # of the suite_mix pair recompiled 4 classes whose source differed
+        # only in that id
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # split-packing floor: the 4 MB default collapses every sub-4MB file
         # to ONE task, serializing the whole map stage on small inputs (the
         # local sf* tables are sub-MB; lineitem sf0.1 is 10 MB → 3 tasks).

@@ -555,7 +555,7 @@ def _ring_members(spark: SparkSession) -> DataFrame:
     """,
     doc="Ring assembly via endpoint chaining (ref G6 _reorder_ring "
     "_frame.py:181-215 — THE sequential-per-group kernel, here the fused "
-    "groupBy(rel_id).applyInPandas chain+sequence pass: ONE exchange, refs "
+    "chain+sequence kernel rings.ring_chains: ONE exchange, refs "
     "arrays ride through Arrow). Input rings are constructed from known "
     "cycles (scrambled + partially reversed), output canonicalized (min-node "
     "rotation, ascending direction), so the oracle can state the expected cycle "

@@ -49,7 +49,13 @@ class _Owner:
 
 @pytest.mark.parametrize(
     "qname",
-    ["llm_bm25_topk", "llm_lm_score", "osm_admin_hierarchy", "llm_jaccard_pairs"],
+    [
+        "llm_bm25_topk",
+        "llm_lm_score",
+        "osm_admin_hierarchy",
+        "llm_jaccard_pairs",
+        "osm_route_linestring",
+    ],
 )
 def test_no_session_lifetime_cache_growth(spark, qname):
     from osmdatapy_spark.suite import QUERY_REGISTRY

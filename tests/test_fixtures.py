@@ -112,19 +112,12 @@ def test_relation_shapes(osm):
 
 
 def test_ring_direction_flip(osm):
-    """Way 8 is stored reversed relative to the chain — the reorder kernel
-    must flip it (reference _frame.py:201-204)."""
-    from osmdatapy_spark.operators.rings import reorder_rings
-    from osmdatapy_spark.operators.topology import way_endpoints
-
-    ways = way_endpoints(osm.way_refs)
-    members = (
-        osm.rel_members.filter((col("rel_id") == 1) & (col("member_type") == 1))
-        .select("rel_id", col("member_id").alias("way_id"), col("pos").alias("member_pos"))
-        .join(ways, "way_id")
-    )
-    d = {r["way_id"]: r["direction"] for r in reorder_rings(members).collect()}
-    assert d[7] == 1 and d[8] == -1
+    """Way 8 (100-103-102) is stored reversed relative to the chain: the
+    chain kernel must flip it (reference _frame.py:201-204), so its refs
+    follow way 7's (100-101-102) reversed.  Relation 6 reaches the same
+    ways through its relation member and gets the same ring."""
+    rings = {r["rel_id"]: r["nodes"] for r in osm.relation_rings().collect() if r["rel_id"] in (1, 6)}
+    assert rings == {1: [100, 101, 102, 103, 100], 6: [100, 101, 102, 103, 100]}
 
 
 def test_query_topology_mode(osm):

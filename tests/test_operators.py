@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from osmdatapy_spark.operators.rings import reorder_rings, ring_node_sequence
+from osmdatapy_spark.operators.rings import ring_chains
 from osmdatapy_spark.operators.topology import topology_segments, way_endpoints
 
 
@@ -64,90 +64,84 @@ def test_topology_property_invariants(spark):
         assert sum(s["n_nodes"] for s in wsegs) == len(nds) + len(wsegs) - 1
 
 
-def _members_df(spark, rel_id, ways: dict[int, list[int]], order: list[int]):
-    refs = _refs_df(spark, ways)
-    ends = way_endpoints(refs)
+def _chains(spark, rel_id, ways: dict[int, list[int]], roles: dict[int, str] | None = None):
+    """``ring_chains`` over one relation whose members are ``ways`` in
+    dict order: ``{ring: (nodes, ring_role)}``."""
+    rows = [
+        (rel_id, wid, pos, refs, (roles or {}).get(wid))
+        for pos, (wid, refs) in enumerate(ways.items())
+    ]
     members = spark.createDataFrame(
-        [(rel_id, wid, pos) for pos, wid in enumerate(order)],
-        "rel_id long, way_id long, member_pos int",
-    ).join(ends, "way_id")
-    return members, refs
+        rows, "rel_id long, way_id long, member_pos int, refs array<long>, role string"
+    )
+    return {r["ring"]: (r["nodes"], r["ring_role"]) for r in ring_chains(members).collect()}
 
 
 def test_ring_single_closed(spark):
-    # square via two ways, second stored reversed: 1-2-3 + 1-4-3 (reversed)
-    ways = {101: [1, 2, 3], 102: [1, 4, 3]}
-    members, refs = _members_df(spark, 7, ways, [101, 102])
-    ordered = reorder_rings(members)
-    rows = {r["way_id"]: r for r in ordered.collect()}
-    assert rows[102]["direction"] == -1  # must flip to chain 3 → 1
-    seq = ring_node_sequence(ordered, refs).collect()
-    assert len(seq) == 1
-    nodes = seq[0]["nodes"]
-    assert nodes[0] == nodes[-1]  # closed
-    assert nodes == [1, 2, 3, 4, 1]
+    # square via two ways, second stored reversed: 1-2-3 + 1-4-3 must flip
+    # to chain 3 → 1
+    rings = _chains(spark, 7, {101: [1, 2, 3], 102: [1, 4, 3]})
+    assert {r: nodes for r, (nodes, _) in rings.items()} == {0: [1, 2, 3, 4, 1]}
 
 
 def test_ring_two_rings(spark):
     # outer square 1-2-3-4-1 split in two ways + separate inner 5-6-7-5
-    ways = {
-        201: [1, 2, 3],
-        202: [3, 4, 1],
-        203: [5, 6, 7, 5],
+    rings = _chains(spark, 8, {201: [1, 2, 3], 202: [3, 4, 1], 203: [5, 6, 7, 5]})
+    assert {r: nodes for r, (nodes, _) in rings.items()} == {
+        0: [1, 2, 3, 4, 1],
+        1: [5, 6, 7, 5],
     }
-    members, refs = _members_df(spark, 8, ways, [201, 202, 203])
-    seq = {r["ring"]: r["nodes"] for r in ring_node_sequence(reorder_rings(members), refs).collect()}
-    assert len(seq) == 2
-    assert seq[0] == [1, 2, 3, 4, 1]
-    assert seq[1] == [5, 6, 7, 5]
 
 
 def test_ring_chain_break_starts_new_ring(spark):
-    ways = {301: [1, 2], 302: [9, 8]}  # no shared endpoint
-    members, _ = _members_df(spark, 9, ways, [301, 302])
-    rings = {r["way_id"]: r["ring"] for r in reorder_rings(members).collect()}
-    assert rings[301] == 0 and rings[302] == 1
+    # no shared endpoint: the second way starts a new ring
+    rings = _chains(spark, 9, {301: [1, 2], 302: [9, 8]})
+    assert {r: nodes for r, (nodes, _) in rings.items()} == {0: [1, 2], 1: [9, 8]}
 
 
-def test_ring_chains_matches_split_formulation(spark):
-    """The fused chain+sequence kernel (ring_chains — one exchange, refs
-    through Arrow) must produce exactly the reorder_rings →
-    ring_node_sequence result on rings, roles, and node order."""
-    from osmdatapy_spark.operators.rings import ring_chains
-
-    ways = {
-        401: [1, 2, 3],
-        402: [3, 4, 1],   # closes ring 0 with 401
-        403: [7, 6, 5],   # ring 1 with 404, stored so 404 must flip
-        404: [7, 8, 5],
-        405: [20, 21],    # isolated → ring 2
-    }
-    roles = {401: "outer", 402: "outer", 403: "inner", 404: "inner", 405: "outer"}
-    refs = _refs_df(spark, ways)
-    ends = way_endpoints(refs)
-    order = [401, 402, 403, 404, 405]
-    base = spark.createDataFrame(
-        [(11, wid, pos, roles[wid]) for pos, wid in enumerate(order)],
-        "rel_id long, way_id long, member_pos int, role string",
+def test_ring_chains_five_ways_rings_and_roles(spark):
+    """Three rings from five ways: 401+402 close ring 0; 403 starts ring
+    1 and 404 joins it reversed (7-8-5 read as 5-8-7); the isolated 405
+    is ring 2.  Each ring's role is its first way's role."""
+    rings = _chains(
+        spark,
+        11,
+        {401: [1, 2, 3], 402: [3, 4, 1], 403: [7, 6, 5], 404: [7, 8, 5], 405: [20, 21]},
+        {401: "outer", 402: "outer", 403: "inner", 404: "inner", 405: "outer"},
     )
-    split = {
-        (r["rel_id"], r["ring"]): (r["nodes"], r["ring_role"])
-        for r in ring_node_sequence(
-            reorder_rings(base.join(ends, "way_id")), refs, close=False
-        ).collect()
+    assert rings == {
+        0: ([1, 2, 3, 4, 1], "outer"),
+        1: ([7, 6, 5, 8, 7], "inner"),
+        2: ([20, 21], "outer"),
     }
-    arrays = refs.groupBy("way_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "node_id"))), lambda s: s["node_id"]
-        ).alias("refs")
-    )
-    fused = {
-        (r["rel_id"], r["ring"]): (r["nodes"], r["ring_role"])
-        for r in ring_chains(base.join(arrays, "way_id")).collect()
-    }
-    assert split == fused
-    assert fused[(11, 0)][0] == [1, 2, 3, 4, 1]
-    assert fused[(11, 0)][1] == "outer" and fused[(11, 1)][1] == "inner"
+
+
+def test_relation_rings_are_the_rings_relation_areas_renders(spark):
+    """Twelve type=boundary relations reach their rings through untyped
+    sub-relations: ``relation_rings()`` keys the rings by the boundary
+    relations (not the sub-relations), four closed rings each, and their
+    coordinates are the rings of ``relation_areas()``' WKT."""
+    import re
+
+    from osmdatapy_spark.suite.osm import _nest_fixture_osm
+
+    osm = _nest_fixture_osm(spark, nested=True)
+    xy = {r["osmid"]: (r["lon"], r["lat"]) for r in osm.nodes.collect()}
+    rings: dict[int, list] = {}
+    for r in osm.relation_rings().collect():
+        assert r["nodes"][0] == r["nodes"][-1], r
+        assert r["kind"] == "area", r
+        rings.setdefault(r["rel_id"], []).append(tuple(xy[n] for n in r["nodes"]))
+    assert sorted(rings) == list(range(12))
+    assert all(len(rs) == 4 for rs in rings.values())
+    areas = dict(osm.relation_areas().collect())
+    assert sorted(areas) == sorted(rings)
+    for rel_id, wkt in areas.items():
+        rendered = [
+            tuple(tuple(float(v) for v in pt.split()) for pt in ring.split(", "))
+            for ring in re.findall(r"\(([^()]+)\)", wkt)
+        ]
+        assert sorted(rendered) == sorted(rings[rel_id]), rel_id
 
 
 def _ring(pts):

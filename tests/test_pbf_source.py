@@ -193,9 +193,11 @@ def test_osm_facade_from_pbf(spark, fixture_pbf):
     assert geo[5].startswith("POINT")
     assert geo[101].startswith("LINESTRING")
 
-    # ring assembly: the multipolygon relation chains into one closed ring
-    # (the route relation 202 also yields chain-break rings — not asserted)
-    rings = [r for r in osm.relation_rings().collect() if r["rel_id"] == 201]
+    # ring assembly: the multipolygon relation chains into one closed ring;
+    # the route relation 202 is not an area and has no rings
+    all_rings = osm.relation_rings().collect()
+    assert {r["rel_id"] for r in all_rings} == {201, 203}
+    rings = [r for r in all_rings if r["rel_id"] == 201]
     assert len(rings) == 1
     nodes = rings[0]["nodes"]
     assert nodes[0] == nodes[-1]

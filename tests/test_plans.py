@@ -87,6 +87,24 @@ def test_way_geometry_scans_the_way_side_once(spark, fixture_pbf):
     assert sorted(r.osmid for r in df.collect()) == [101, 102, 105]
 
 
+def test_relation_areas_read_kind_pruned_pbf_scans(spark, fixture_pbf):
+    # relation kinds come from the relation-only scan (osmid, osmtype,
+    # tags), so no osmpbf scan of relation_areas() decodes metadata or
+    # both ways' refs and relations' members: each scan reads one kind
+    from osmdatapy_spark.engine import OSM
+
+    df = OSM.from_pbf(spark, fixture_pbf).relation_areas()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scans = [
+        {c.split("#")[0].strip() for c in cols.split(",")}
+        for cols in re.findall(r"BatchScan osmpbf\[([^\]]*)\]", plan)
+    ]
+    assert scans, plan
+    for cols in scans:
+        assert "version" not in cols and not {"refs", "members"} <= cols, plan
+    assert sorted(r.rel_id for r in df.collect()) == [201, 203]
+
+
 def _warm_build_py4j_calls(build, monkeypatch) -> int:
     """py4j round trips of ``build()`` after one warm-up call (the
     session's table and relation handles, the per-gateway expressions).

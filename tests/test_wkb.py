@@ -148,6 +148,25 @@ def test_query_wkb_keeps_exact_doubles(spark):
     assert struct.unpack_from("<2d", bytes(row.geometry_wkb), 5) == (10.123456789, -3.25)
 
 
+def test_node_without_coordinates_has_null_geometry(spark):
+    """A table-backed node missing from the ``nodes`` table gets geometry
+    null, WKT and WKB, as a way or relation with a missing vertex does."""
+    elements = spark.createDataFrame(
+        [(1, 0, {"amenity": "cafe"}), (2, 0, {"amenity": "bar"})],
+        "osmid long, osmtype tinyint, tags map<string,string>",
+    )
+    nodes = spark.createDataFrame([(1, 10.5, 20.25)], "osmid long, lon double, lat double")
+    osm = OSM.from_tables(elements, nodes)
+    q = Query(nodes=True, ways=False, relations=False, geometry=True)
+    assert dict(osm.query(q).select("osmid", "geometry").collect()) == {
+        1: "POINT (10.5000000 20.2500000)",
+        2: None,
+    }
+    rows = {r.osmid: r for r in osm.query(q, wkb=True).collect()}
+    assert rows[2].geometry is None and rows[2].geometry_wkb is None
+    assert wkb_as_wkt(bytes(rows[1].geometry_wkb)) == rows[1].geometry
+
+
 def test_query_wkb_reprints_as_wkt(spark):
     """``geometry_wkb`` decoded and re-printed with ``%.7f`` equals the
     ``geometry`` WKT, null where it is null, over all five geometry types:
