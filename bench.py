@@ -3,6 +3,12 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
+Usage: python bench.py [NAME ...]
+With no names every headline query plus ``pbf_scan`` and ``pbf_query`` is
+timed; given names (any registry query, ``pbf_scan`` or ``pbf_query``),
+only those are, under the same gates, warm-ups, passes and re-runs —
+the focused before/after read on a few queries.
+
 Each query is executed to completion with the noop sink (full physical
 plan runs, nothing is collected to the driver — the honest way to time a
 distributed plan).  A warmup query absorbs JVM/codegen spin-up so the
@@ -22,6 +28,15 @@ sys.path.insert(0, str(REPO))
 
 from osmdatapy_spark.session import get_spark  # noqa: E402
 from osmdatapy_spark.suite import QUERY_REGISTRY  # noqa: E402
+from perfbench.trace import cpu_ticks, steal_pct  # noqa: E402
+
+PBF_ENTRIES = ("pbf_scan", "pbf_query")
+
+
+def _steal_stamp(t0: list[int] | None, t1: list[int] | None) -> float | None:
+    """Steal % between two /proc/stat samples, 2 decimals; null when
+    /proc/stat was unreadable (non-Linux or restricted)."""
+    return round(steal_pct(t0, t1), 2) if t0 and t1 else None
 
 
 def _synthetic_pbf(sf: float) -> str:
@@ -151,6 +166,10 @@ def run_query(fn, spark, sf_dir: str) -> float:
 
 
 def main() -> None:
+    names = sys.argv[1:] or [n for n, qd in QUERY_REGISTRY.items() if qd.bench] + list(PBF_ENTRIES)
+    unknown = [n for n in names if n not in QUERY_REGISTRY and n not in PBF_ENTRIES]
+    if unknown:
+        raise SystemExit(f"bench.py: unknown query name(s): {', '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
     # idle gate (round-12 verdict ask #4): a recording started at load1
@@ -185,23 +204,6 @@ def main() -> None:
     # parallel stages multiplicatively and is the residual drift source
     # the r12 adjudication could not name.  steal_pct > ~3 means the
     # reading ran in a noisy window — prefer a re-run.
-    def _cpu_ticks() -> list[int] | None:
-        try:
-            with open("/proc/stat") as f:
-                d = [int(x) for x in f.readline().split()[1:9]]
-            # kernels exposing < 9 cpu fields would make d[7] an
-            # IndexError AFTER the whole benchmark ran — stamp null instead
-            return d if len(d) >= 8 else None
-        except Exception:  # non-Linux / restricted: stamp null
-            return None
-
-    def _steal_pct_between(t0: list[int] | None, t1: list[int] | None) -> float | None:
-        if not (t0 and t1):
-            return None
-        d = [b - a for a, b in zip(t0, t1)]
-        total = sum(d)
-        return round(100.0 * d[7] / total, 2) if total else None
-
     # steal gate (round-13 verdict ask #1): the r13 closing bench started
     # at load1 1.43 but ran through a hypervisor-steal burst (4.69%) that
     # loadavg cannot see, manufacturing 7 phantom regressions on untouched
@@ -212,10 +214,10 @@ def main() -> None:
     # min-over-passes of the identical per-pass methodology.
     STEAL_GATE = float(os.environ.get("SPARK_GRAFT_BENCH_STEAL_GATE", "3.0"))
     while idle_wait_sec < IDLE_MAX_WAIT_SEC:
-        _t0 = _cpu_ticks()
+        _t0 = cpu_ticks()
         time.sleep(3)
         idle_wait_sec += 3
-        _s = _steal_pct_between(_t0, _cpu_ticks())
+        _s = _steal_stamp(_t0, cpu_ticks())
         if _s is None or _s <= STEAL_GATE:
             break
         idle_gated = True
@@ -227,12 +229,10 @@ def main() -> None:
         time.sleep(IDLE_RETRY_SEC)
         idle_wait_sec += IDLE_RETRY_SEC
 
-    ticks_start = _cpu_ticks()
+    ticks_start = cpu_ticks()
     load_start = os.getloadavg()
     spark = get_spark("osmdatapy-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    headline = [name for name, qd in QUERY_REGISTRY.items() if qd.bench]
 
     # pass 1 warms JVM JIT + parquet footer caches across every code path
     # (one generic warmup query leaves string/array-heavy codegen cold and
@@ -266,7 +266,7 @@ def main() -> None:
     steal_passes: dict[str, list[float | None]] = {}
 
     def _timed_pass(name: str) -> None:
-        t0 = _cpu_ticks()
+        t0 = cpu_ticks()
         if name == "pbf_scan":
             t = round(run_pbf_scan(spark, sf), 3)
         elif name == "pbf_query":
@@ -274,13 +274,11 @@ def main() -> None:
         else:
             t = round(run_query(QUERY_REGISTRY[name].fn, spark, sf_dir), 3)
         passes.setdefault(name, []).append(t)
-        steal_passes.setdefault(name, []).append(_steal_pct_between(t0, _cpu_ticks()))
+        steal_passes.setdefault(name, []).append(_steal_stamp(t0, cpu_ticks()))
 
     for _pass in range(N_PASSES):
-        for name in headline:
+        for name in names:
             _timed_pass(name)
-        _timed_pass("pbf_scan")
-        _timed_pass("pbf_query")
 
     # noise robustness (round-6 judge ask): timing noise on a shared box is
     # one-sided (GC pauses, cron spikes only ADD time), so the stable
@@ -317,12 +315,7 @@ def main() -> None:
             _timed_pass(name)
 
     load_end = os.getloadavg()
-    ticks_end = _cpu_ticks()
-    steal_pct = None
-    if ticks_start and ticks_end:
-        d = [b - a for a, b in zip(ticks_start, ticks_end)]
-        total = sum(d)
-        steal_pct = round(100.0 * d[7] / total, 2) if total else None
+    run_steal_pct = _steal_stamp(ticks_start, cpu_ticks())
     timings = {name: min(ts) for name, ts in passes.items()}
     # suite-level pass-1 wall over suite-level best-of wall.  Read it
     # TOGETHER with the totals (measured r11): an idle box shows a HIGH
@@ -401,7 +394,7 @@ def main() -> None:
         "idle_gated": idle_gated,
         "idle_wait_sec": idle_wait_sec,
         # hypervisor steal % across the whole run window (see stamp note)
-        "steal_pct": steal_pct,
+        "steal_pct": run_steal_pct,
     }
     # The driver captures only the LAST ~2000 chars of stdout and parses
     # the JSON it finds there (BENCH_r08/r09 recorded parsed:null because
@@ -438,7 +431,7 @@ def main() -> None:
         "idle_gated": idle_gated,
         # co-tenant CPU steal % over the run window — loadavg cannot see
         # it; > ~3 marks a noisy-window reading (adjudication evidence)
-        "steal_pct": steal_pct,
+        "steal_pct": run_steal_pct,
     }
     line = json.dumps(compact)
     if len(line) > 1900:

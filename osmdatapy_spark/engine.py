@@ -770,12 +770,19 @@ class OSM:
         stops when the frontier drains or ``max_depth`` is hit (the cap
         also terminates member cycles, which are legal-if-broken OSM data).
 
-        Scale shape: one join + ``localCheckpoint`` per level (lineage
-        stays flat, the standard driver-loop iteration — see
-        ``connected_components``).  The frontier SHRINKS geometrically —
-        it holds only relation-type members, which are <1% of planet
-        membership — so rounds after the first are near-free; real OSM
-        nesting rarely exceeds depth ~6."""
+        Scale shape: one join + one persisted level per round, so the
+        next round's frontier probe and join read the level instead of
+        re-running the walk.  Each level persists through
+        ``memo.managed_persist`` under one site per depth
+        (``member_walk.<depth>``): a session holds at most
+        ``max_depth - 1`` walk frames, however many walks it builds.
+        Contract (one live plan per site): building a second walk before
+        the first one's action runs unpersists the first walk's levels —
+        its result is unchanged, but its action recomputes them from
+        lineage.  The frontier SHRINKS geometrically — it holds only
+        relation-type members, which are <1% of planet membership — so
+        rounds after the first are near-free; real OSM nesting rarely
+        exceeds depth ~6."""
         keep = [c for c in members.columns if c not in ("pos", "member_id", "member_type", "role")]
         level = members.select(
             *keep,
@@ -793,21 +800,20 @@ class OSM:
             col("role").alias("_m_role"),
         )
         walk = level
-        for _ in range(1, max_depth):
+        for depth in range(2, max_depth + 1):
             frontier = level.filter(col("member_type") == OSMTYPE_RELATION)
             if frontier.isEmpty():
                 break
-            level = (
-                frontier.join(sub, col("member_id") == col("_sub_rel"))
-                .select(
+            level = memo.managed_persist(
+                frontier.join(sub, col("member_id") == col("_sub_rel")).select(
                     *keep,
                     col("_m_id").alias("member_id"),
                     col("_m_type").alias("member_type"),
                     col("_m_role").alias("role"),
                     (col("depth") + 1).alias("depth"),
                     F.concat("path", F.array(col("_m_pos").cast("int"))).alias("path"),
-                )
-                .localCheckpoint()
+                ),
+                f"member_walk.{depth}",
             )
             walk = walk.unionByName(level)
         return walk

@@ -469,31 +469,6 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int:
     return int(row["d"])
 
 
-def hyperplane_lsh_buckets(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Random-hyperplane LSH: sign pattern of dot products with fixed
-    pseudo-random planes → integer bucket.  Planes are generated
-    deterministically from the seed via a hash-based formula (no RNG state),
-    so executors regenerate them locally — nothing is shipped."""
-    dim_idx = F.sequence(lit(0), F.size(col(vec_col)) - 1)
-    bucket = lit(0)
-    for p in range(n_planes):
-        # plane component j = fractional hash in [-0.5, 0.5)
-        comp = lambda j: (F.pmod(F.xxhash64(lit(seed), lit(p), j), lit(1000)) / 1000.0 - 0.5)  # noqa: E731
-        proj = F.aggregate(
-            F.zip_with(as_double(col(vec_col)), F.transform(dim_idx, comp), lambda x, y: x * y),
-            lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(proj >= 0, lit(1 << p)).otherwise(lit(0))
-    return vectors.select(col(id_col), bucket.cast("int").alias("bucket"))
-
-
 def ivfpq_topk(
     corpus: DataFrame,
     probes: DataFrame,

@@ -9,8 +9,9 @@ number of decimals so text output is engine-portable.
 
 Scale: every function here is a narrow projection over already-joined
 coordinate arrays — no shuffle of its own.  The expensive part (refs →
-coords) is the join in ``osmdatapy_spark.operators.topology.attach_coords``,
-which at 100 TB runs as a sort-merge join on osmid-bucketed nodes.
+coords) is the coordinate-lookup join (``OSM.coords``,
+``suite/_util.coords_lookup``), which at 100 TB runs as a sort-merge join
+on osmid-bucketed nodes.
 """
 
 from __future__ import annotations

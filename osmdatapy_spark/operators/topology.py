@@ -131,13 +131,3 @@ def topology_segments(
     )
     return seg
 
-
-def attach_coords(way_refs: DataFrame, nodes: DataFrame, node_col: str = "node_id") -> DataFrame:
-    """Coordinate lookup join (reference J4 ``coords``, osmdata.py:81-84).
-
-    The reference does np.searchsorted on a driver-resident sorted array;
-    here it is an equi-join against the nodes table — broadcast when the
-    node table fits, sort-merge on bucketed osmid otherwise."""
-    return way_refs.join(
-        nodes.select(col("osmid").alias(node_col), "lon", "lat"), on=node_col, how="left"
-    )

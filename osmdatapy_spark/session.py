@@ -69,10 +69,9 @@ def get_spark(app_name: str = "osmdatapy-spark", cpus: int | None = None) -> Spa
             os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "524288"),
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # UI off by default (bench/test processes don't pay the jetty
-        # startup); tools that read the REST status API (task-time
-        # quantiles in tools/skew_check.py) opt in via the env override
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # UI off (no session pays the Jetty startup); stage and task
+        # metrics come from the event log (perfbench/trace.py)
+        .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
 

@@ -117,20 +117,12 @@ _PARTITION_BLOBS = 8
 _PROBE_POOL_MIN_SPANS = 192
 
 
-def _probe_chunk(
-    path: str, spans: list, must: frozenset, any_of: "frozenset | None"
-) -> list[bool]:
+def _probe_chunk(path: str, spans: list, any_of: frozenset) -> list[bool]:
     """Sequential keep-mask over one chunk of spans (pool work unit)."""
-    return [blob_dictionary_has(path, s, must, any_of) for s in spans]
+    return [blob_dictionary_has(path, s, any_of) for s in spans]
 
 
-def _probe_dictionaries(
-    path: str,
-    spans: list,
-    must: frozenset,
-    any_of: frozenset | None,
-    workers: int,
-) -> list[bool]:
+def _probe_dictionaries(path: str, spans: list, any_of: frozenset, workers: int) -> list[bool]:
     """Order-preserving keep-mask from the dictionary-skip probe, run
     over a bounded PROCESS pool for large files.  The probe's cost per
     blob is dominated by pure-Python protobuf varint/stringtable parsing
@@ -145,14 +137,14 @@ def _probe_dictionaries(
     exception propagates and fails planning loudly, same as the
     sequential form did."""
     if workers <= 1 or len(spans) < _PROBE_POOL_MIN_SPANS:
-        return _probe_chunk(path, spans, must, any_of)
+        return _probe_chunk(path, spans, any_of)
     from concurrent.futures import ProcessPoolExecutor
 
     n_chunks = min(len(spans), workers * 4)
     step = -(-len(spans) // n_chunks)
     chunks = [spans[i : i + step] for i in range(0, len(spans), step)]
     with ProcessPoolExecutor(max_workers=min(workers, len(chunks))) as ex:
-        futs = [ex.submit(_probe_chunk, path, c, must, any_of) for c in chunks]
+        futs = [ex.submit(_probe_chunk, path, c, any_of) for c in chunks]
         out: list[bool] = []
         for f in futs:
             out.extend(f.result())
@@ -182,13 +174,14 @@ class PbfDataSourceReader(DataSourceReader):
         # the module doc for why this is an option and not pushFilters
         self.wanted_types = parse_osmtypes(options.get("osmtypes"))
         # dictionary skip (reference P2 string-dictionary pruning,
-        # osmquery.py:242-257, at blob granularity): 'must_tag_keys' names
-        # strings that every wanted element MUST carry as tag keys — a
-        # blob whose block string table lacks any of them is skipped
-        # exactly (keys are dictionary indices, absence is proof).  This
-        # is a relation-defining option like 'osmtypes': the scan then
-        # only promises elements that can carry ALL the keys, so pair it
-        # with the matching tag filter downstream.  Executor-side, each
+        # osmquery.py:242-257, at blob granularity): 'any_tag_keys' names
+        # strings of which every wanted element carries AT LEAST ONE as a
+        # tag key (Query.must_tags semantics) — a blob whose block string
+        # table holds none of them is skipped exactly (keys are dictionary
+        # indices, absence is proof).  This is a relation-defining option
+        # like 'osmtypes': the scan then only promises elements that can
+        # carry one of the keys, so pair it with the matching tag filter
+        # downstream.  Executor-side, each
         # task bails after the stringtable decode; with 'plan_prune=true'
         # the DRIVER additionally drops non-matching blobs at planning
         # time (streaming just each blob's table head — kilobytes per
@@ -203,12 +196,6 @@ class PbfDataSourceReader(DataSourceReader):
         # the driver: right for region extracts and repeated queries,
         # wrong default for a one-shot 100 TB scan where the
         # executor-side skip already parallelizes the same decision.
-        raw_keys = options.get("must_tag_keys")
-        self.must_strings: frozenset[str] | None = (
-            frozenset(k for k in str(raw_keys).split(",") if k) if raw_keys else None
-        )
-        # disjunctive variant: skip a blob only when NONE of these keys
-        # is in its table (Query.must_tags "at least one of" semantics)
         raw_any = options.get("any_tag_keys")
         self.any_strings: frozenset[str] | None = (
             frozenset(k for k in str(raw_any).split(",") if k) if raw_any else None
@@ -231,13 +218,9 @@ class PbfDataSourceReader(DataSourceReader):
                         f"unsupported required PBF features in {path}: {unsupported}"
                     )
             data = [s for s in spans if s.blob_type == "OSMData"]
-            if (self.must_strings or self.any_strings) and self.plan_prune:
+            if self.any_strings and self.plan_prune:
                 keep = _probe_dictionaries(
-                    path,
-                    data,
-                    self.must_strings or frozenset(),
-                    self.any_strings,
-                    min(16, os.cpu_count() or 1),
+                    path, data, self.any_strings, min(16, os.cpu_count() or 1)
                 )
                 data = [s for s, k in zip(data, keep) if k]
             run: list[tuple[int, int]] = []
@@ -297,9 +280,7 @@ class PbfDataSourceReader(DataSourceReader):
                     with_refs=want_refs,
                     with_members=want_members,
                     # executor-side dictionary skip: bail after the
-                    # stringtable when a must key is absent from this block
-                    # (or no any-key is present)
-                    must_strings=self.must_strings,
+                    # stringtable when none of the keys is in this block
                     any_strings=self.any_strings,
                 )
             except ValueError as e:
@@ -489,7 +470,6 @@ def read_pbf(
     path: str,
     osmtypes: set[int] | None = None,
     columns: list[str] | None = None,
-    must_tag_keys: set[str] | None = None,
     any_tag_keys: set[str] | None = None,
     plan_prune: bool = False,
 ) -> DataFrame:
@@ -497,20 +477,19 @@ def read_pbf(
     kinds at the source (per-relation static pruning) and ``columns``
     restricts decoded wire FIELDS (relation-level projection — the Python
     DS API has no pruning pushdown, so a .select() above the scan would
-    still decode everything).  ``must_tag_keys`` enables the dictionary
-    skip (reference P2): blocks whose string table lacks any of the keys
+    still decode everything).  ``any_tag_keys`` enables the dictionary
+    skip (reference P2): blocks whose string table holds none of the keys
     decode to nothing executor-side, and with ``plan_prune=True`` such
     blobs are dropped at PLANNING time (driver streams each blob's table
     head) so they never become tasks — the scan then only promises
-    elements that can carry ALL the keys; pair it with the matching tag
-    filter."""
+    elements that can carry at least one of the keys; pair it with the
+    matching tag filter."""
     return load(
         spark,
         PbfDataSource,
         path,
         osmtypes=osmtypes,
         columns=columns,
-        must_tag_keys=must_tag_keys,
         any_tag_keys=any_tag_keys,
         plan_prune=plan_prune,
     )
@@ -522,7 +501,6 @@ def read_pbf_stream(
     osmtypes: set[int] | None = None,
     columns: list[str] | None = None,
     max_files_per_trigger: int = 0,
-    must_tag_keys: set[str] | None = None,
     any_tag_keys: set[str] | None = None,
 ) -> DataFrame:
     """``spark.readStream`` over a directory of ``.pbf`` extracts: each
@@ -543,12 +521,11 @@ def read_pbf_stream(
     after one ration.  A true planet-bulk initial load belongs on the
     batch reader, with only the diff tail streamed.
 
-    ``must_tag_keys`` / ``any_tag_keys`` apply the batch reader's
-    dictionary skip per epoch file (the watcher reuses the batch blob
-    planning verbatim, so the same string-table bail drops non-matching
-    blocks before their elements ever enter a microbatch — the right
-    shape for a tag-focused epoch watcher, where most of each extract is
-    irrelevant)."""
+    ``any_tag_keys`` applies the batch reader's dictionary skip per epoch
+    file (the watcher reuses the batch blob planning verbatim, so the same
+    string-table bail drops non-matching blocks before their elements
+    ever enter a microbatch — the right shape for a tag-focused epoch
+    watcher, where most of each extract is irrelevant)."""
     return load(
         spark,
         PbfDataSource,
@@ -557,6 +534,5 @@ def read_pbf_stream(
         maxFilesPerTrigger=max_files_per_trigger,
         osmtypes=osmtypes,
         columns=columns,
-        must_tag_keys=must_tag_keys,
         any_tag_keys=any_tag_keys,
     )

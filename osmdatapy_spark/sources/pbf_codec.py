@@ -314,16 +314,6 @@ def read_blob(path: str, span: BlobSpan) -> bytes:
 _ST_NOT_AT_HEAD = object()  # sentinel: PrimitiveBlock doesn't lead with field 1
 
 
-def _dict_allows(strings: set, needed: "frozenset[str]", any_of) -> bool:
-    """Conjunctive (ALL of ``needed``) + disjunctive (ANY of ``any_of``)
-    membership against a block string table."""
-    if needed and not needed <= strings:
-        return False
-    if any_of and not any_of & strings:
-        return False
-    return True
-
-
 def _stringtable_head_slice(buf: bytes):
     """If ``buf`` (a decompressed PrimitiveBlock prefix) starts with the
     complete stringtable field (field 1, length-delimited), return its
@@ -344,15 +334,9 @@ def _stringtable_head_slice(buf: bytes):
     return None
 
 
-def blob_dictionary_has(
-    path: str,
-    span: "BlobSpan",
-    needed: "frozenset[str]",
-    any_of: "frozenset[str] | None" = None,
-) -> bool:
-    """True iff the blob's PrimitiveBlock string table contains EVERY
-    string in ``needed`` AND at least one string in ``any_of`` (when
-    given) — the dictionary-skip probe (reference
+def blob_dictionary_has(path: str, span: "BlobSpan", any_of: "frozenset[str]") -> bool:
+    """True iff the blob's PrimitiveBlock string table contains at least
+    one string in ``any_of`` — the dictionary-skip probe (reference
     ``osmquery.py:242-257`` skips a block when a required predicate
     string is absent from its table; here the same decision is made at
     blob granularity during scan planning).
@@ -365,9 +349,9 @@ def blob_dictionary_has(
     not the blob body.  Any structural surprise (data field not last,
     stringtable not at the block head, non-zlib codec) falls back to a
     full read+decode — correctness never depends on the fast path.
-    Blocks whose table lacks a needed string cannot contain a matching
-    element (tag keys/values are dictionary indices), so skipping them
-    is exact, never approximate."""
+    Blocks whose table holds none of the strings cannot contain a
+    matching element (tag keys/values are dictionary indices), so
+    skipping them is exact, never approximate."""
     chunk = 16384
     with open(path, "rb") as f:
         f.seek(span.offset)
@@ -408,9 +392,7 @@ def blob_dictionary_has(
                 if probe is _ST_NOT_AT_HEAD:
                     break
                 if probe is not None:
-                    return _dict_allows(
-                        set(_decode_stringtable(probe)), needed, any_of
-                    )
+                    return not any_of.isdisjoint(_decode_stringtable(probe))
                 if remaining <= 0:
                     break
                 nxt = f.read(min(chunk, remaining))
@@ -422,7 +404,7 @@ def blob_dictionary_has(
             # raw blob fully inside the first chunk: probe directly
             probe = _stringtable_head_slice(first[dstart : dstart + dlen])
             if probe is not None and probe is not _ST_NOT_AT_HEAD:
-                return _dict_allows(set(_decode_stringtable(probe)), needed, any_of)
+                return not any_of.isdisjoint(_decode_stringtable(probe))
         # fallback: full payload read + full decode (rare: unusual field
         # order, exotic codec, or a stringtable that is not at the head)
         f.seek(span.offset)
@@ -437,7 +419,7 @@ def blob_dictionary_has(
     block = decompress_blob_field(dfield2, data)
     for field, _, val in iter_fields(block, 0, len(block)):
         if field == 1:
-            return _dict_allows(set(_decode_stringtable(val)), needed, any_of)
+            return not any_of.isdisjoint(_decode_stringtable(val))
     # no stringtable at all: only untagged elements live here
     return False
 
@@ -840,7 +822,6 @@ def decode_block_segments(
     with_tags: bool = True,
     with_refs: bool = True,
     with_members: bool = True,
-    must_strings: "frozenset[str] | None" = None,
     any_strings: "frozenset[str] | None" = None,
 ) -> list:
     """Decode one PrimitiveBlock into columnar segments, in wire order:
@@ -862,13 +843,13 @@ def decode_block_segments(
     - ``with_tags`` / ``with_refs`` / ``with_members`` skip the packed
       payload decodes for pruned scans (the 'columns' read option —
       reference field-decode pruning, primitives.py:23-29, end-to-end).
-    - ``must_strings`` is the executor-side dictionary skip: a block whose
-      string table lacks any required string decodes to NOTHING (tag
+    - ``any_strings`` is the executor-side dictionary skip: a block whose
+      string table holds NONE of the strings decodes to NOTHING (tag
       keys/values are indices into that table, so absence is exact proof
       no element matches — reference osmquery.py:242-257 semantics at
-      block granularity).  ``any_strings`` is the disjunctive variant
-      (skip only when NONE is present) — the shape Query.must_tags needs
-      ("element has at least one of these keys").
+      block granularity).  It is the shape Query.must_tags needs
+      ("element has at least one of these keys"); one key is the
+      single-key must case.
 
     A malformed DenseNodes group (``_decode_dense_columns``), an element
     whose keys and vals differ in length, or a relation whose memids and
@@ -881,9 +862,7 @@ def decode_block_segments(
     for field, _, val in iter_fields(block, 0, len(block)):
         if field == 1:
             strings = _decode_stringtable(val)
-            if (must_strings or any_strings) and not _dict_allows(
-                set(strings), must_strings or frozenset(), any_strings
-            ):
+            if any_strings and any_strings.isdisjoint(strings):
                 return []
         elif field == 2:
             groups.append(bytes(val))
@@ -897,7 +876,7 @@ def decode_block_segments(
             lon_off = val
     # a block with no stringtable holds only untagged elements — the
     # dictionary skip drops it the same way
-    if (must_strings or any_strings) and not strings:
+    if any_strings and not strings:
         return []
 
     scale = 1e-9

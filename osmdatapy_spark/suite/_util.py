@@ -37,9 +37,8 @@ def coords_lookup(
     fallback.  Left unhinted, AQE broadcasts when runtime stats fall under
     ``autoBroadcastJoinThreshold`` (true at bench scale, so plans and
     timings are unchanged locally) and shuffle-joins on the id key
-    otherwise — the ``operators/topology.attach_coords`` discipline
-    (SURVEY §1.5 J4: "broadcast if small, else sort-merge on bucketed
-    osmid").  ``tests/test_plans.py`` pins hint-absence by disabling
+    otherwise — the J4 discipline (SURVEY §1.5 J4: "broadcast if small,
+    else sort-merge on bucketed osmid").  ``tests/test_plans.py`` pins hint-absence by disabling
     auto-broadcast and asserting no BroadcastHashJoin survives.
     """
     return refs.join(nodes, node_col, how)

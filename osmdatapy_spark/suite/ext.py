@@ -2758,7 +2758,7 @@ def _pbf_prune_path() -> str:
     """Dictionary-prune fixture: 40 one-group way blocks of 50 ways
     (per-block string tables), every way highway=residential, and every
     way in blocks where b % 8 == 3 additionally bridge=yes — the rare
-    key lives in 5 of 40 blocks, so a must_tag_keys='bridge' planning
+    key lives in 5 of 40 blocks, so an any_tag_keys='bridge' planning
     pass should drop 35 blobs before any task exists."""
     import os
     import tempfile
@@ -2835,7 +2835,7 @@ def llm_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "— skip a block when a required predicate string is absent from its "
     "string table): a rare-tag scan over a fixture whose rare key lives "
     "in 5 of 40 blocks plans ONLY the matching blobs "
-    "(must_tag_keys + plan_prune read options; the planning probe "
+    "(any_tag_keys + plan_prune read options; the planning probe "
     "stream-decompresses each blob's table head — kilobytes per blob) "
     "and the executor-side skip bails after the stringtable decode for "
     "whatever still reaches a task.  The aggregate must equal the "
@@ -2846,9 +2846,7 @@ def llm_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def osm_pbf_dictionary_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osmdatapy_spark.sources.pbf import read_pbf
 
-    df = read_pbf(
-        spark, _pbf_prune_path(), must_tag_keys={"bridge"}, plan_prune=True
-    )
+    df = read_pbf(spark, _pbf_prune_path(), any_tag_keys={"bridge"}, plan_prune=True)
     return df.filter(F.element_at(col("tags"), "bridge").isNotNull()).agg(
         F.count("*").alias("n_ways"),
         F.sum("osmid").alias("id_sum"),

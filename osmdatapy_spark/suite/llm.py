@@ -566,7 +566,7 @@ def llm_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(they scale with the corpus — AQE broadcasts while small, degrades "
     "gracefully at scale); ranking on rounded cosine + id tiebreak for a "
     "total order. The LSH-bucketed scale path is functions/similarity.py:"
-    "hyperplane_lsh_buckets.",
+    "plane_band_buckets.",
 )
 def llm_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plain T, not TS: the cosine fold is whole-stage-codegen Column

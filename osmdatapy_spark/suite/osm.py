@@ -794,7 +794,7 @@ def osm_geojson_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     "assembles the same MULTIPOLYGON as direct way membership — the "
     "reference's depth-1 membership TODO (osmdata.py:192) leaves these "
     "without geometry.  Membership flattens to a depth-capped fixpoint "
-    "(one join + localCheckpoint per nesting level, frontier shrinks "
+    "(one join + one persisted level per nesting level, frontier shrinks "
     "geometrically), leaf ways keep their own roles, and flattened order "
     "is the hierarchical position path.  Oracle = the identical "
     "closed-form WKT as osm_ring_nesting.",

@@ -8,7 +8,9 @@
 - data-source relation handles are one per session, path and options,
   and are replaced when the files they read change;
 - degenerate quantizer literals fail loudly;
-- no module other than memo.py grows its own module-level cache."""
+- no module other than memo.py grows its own module-level cache;
+- the package reads no environment variable beyond its deployment
+  settings."""
 
 from __future__ import annotations
 
@@ -55,6 +57,8 @@ class _Owner:
         "osm_admin_hierarchy",
         "llm_jaccard_pairs",
         "osm_route_linestring",
+        "osm_boundary_nested",
+        "osm_relation_expand_depth3",
     ],
 )
 def test_no_session_lifetime_cache_growth(spark, qname):
@@ -425,4 +429,56 @@ def test_memo_is_the_only_module_level_cache():
             offenders.append(f"{path.relative_to(PKG.parent)}: {name}")
     assert not offenders, (
         "module-level caches outside osmdatapy_spark/memo.py: " + ", ".join(offenders)
+    )
+
+
+# the deployment settings: core count, the small-file split floor and the
+# driver heap.  A new knob is a decision, made here, not a stray getenv.
+_ENV_SETTINGS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_OPEN_COST_BYTES", "SPARK_GRAFT_DRIVER_MEM"}
+
+
+def _env_keys(tree: ast.AST) -> set[str]:
+    """String keys of every ``os.environ.get(k)``, ``os.environ[k]`` and
+    ``os.getenv(k)`` read; a non-literal key reads as ``<dynamic>``."""
+
+    def key(node):
+        return node.value if isinstance(node, ast.Constant) else "<dynamic>"
+
+    def is_environ(node):
+        return isinstance(node, ast.Attribute) and node.attr == "environ" or (
+            isinstance(node, ast.Name) and node.id == "environ"
+        )
+
+    found = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and node.args:
+            f = node.func
+            if isinstance(f, ast.Attribute) and (
+                (f.attr == "get" and is_environ(f.value))
+                or (f.attr == "getenv" and getattr(f.value, "id", None) == "os")
+            ):
+                found.add(key(node.args[0]))
+            elif isinstance(f, ast.Name) and f.id == "getenv":
+                found.add(key(node.args[0]))
+        elif isinstance(node, ast.Subscript) and is_environ(node.value):
+            found.add(key(node.slice))
+    return found
+
+
+def test_env_guard_detects_reads():
+    src = (
+        "import os\nfrom os import environ, getenv\n"
+        "a = os.environ.get('A', '1')\nb = os.environ['B']\nc = os.getenv('C')\n"
+        "d = environ.get('D')\ne = getenv('E')\nf = os.environ.get(name)\n"
+        "g = {}.get('G')\n"
+    )
+    assert _env_keys(ast.parse(src)) == {"A", "B", "C", "D", "E", "<dynamic>"}
+
+
+def test_package_env_reads_are_the_deployment_settings():
+    keys = set()
+    for path in sorted(PKG.rglob("*.py")):
+        keys |= _env_keys(ast.parse(path.read_text()))
+    assert keys == _ENV_SETTINGS, (
+        f"environment reads under osmdatapy_spark/ changed: {sorted(keys)}"
     )

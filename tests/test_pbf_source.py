@@ -817,7 +817,7 @@ def _dict_prune_fixture(tmp_path) -> str:
 
 def test_dictionary_prune_plans_fewer_partitions(tmp_path):
     """The plan_prune pass must plan strictly fewer partitions for a rare
-    must key (5 of 40 blobs survive → 1 run at the 8-blob coalesce cap
+    key (5 of 40 blobs survive → 1 run at the 8-blob coalesce cap
     vs 5 runs unpruned), and the executor-side skip alone must leave
     planning untouched."""
     from osmdatapy_spark.sources.pbf import PBF_SCHEMA, PbfDataSourceReader
@@ -825,10 +825,10 @@ def test_dictionary_prune_plans_fewer_partitions(tmp_path):
     p = _dict_prune_fixture(tmp_path)
     full = PbfDataSourceReader(PBF_SCHEMA, {"path": p})
     skip = PbfDataSourceReader(
-        PBF_SCHEMA, {"path": p, "must_tag_keys": "bridge"}
+        PBF_SCHEMA, {"path": p, "any_tag_keys": "bridge"}
     )
     pruned = PbfDataSourceReader(
-        PBF_SCHEMA, {"path": p, "must_tag_keys": "bridge", "plan_prune": "true"}
+        PBF_SCHEMA, {"path": p, "any_tag_keys": "bridge", "plan_prune": "true"}
     )
     n_full = len(full.partitions())
     n_skip = len(skip.partitions())
@@ -855,7 +855,7 @@ def test_dictionary_prune_workers_invariant(tmp_path, monkeypatch):
     spans = [s for s in scan_blob_spans(p) if s.blob_type == "OSMData"]
 
     def keep(workers):
-        return pbf_mod._probe_dictionaries(p, spans, frozenset({"bridge"}), None, workers=workers)
+        return pbf_mod._probe_dictionaries(p, spans, frozenset({"bridge"}), workers=workers)
 
     sequential = keep(1)
     assert sum(sequential) == 5
@@ -882,7 +882,7 @@ def test_dictionary_prune_pool_inside_spark_planning(spark, tmp_path):
     p = str(tmp_path / "pool200.osm.pbf")
     w.write(p, groups_per_block=1)
     want = sorted(b * 50 + i + 1 for b in range(200) if b % 8 == 3 for i in range(50))
-    df = read_pbf(spark, p, must_tag_keys={"bridge"}, plan_prune=True)
+    df = read_pbf(spark, p, any_tag_keys={"bridge"}, plan_prune=True)
     got = sorted(r.osmid for r in df.select("osmid").collect())
     assert got == want
 
@@ -903,7 +903,7 @@ def test_dictionary_prune_rows_exact(spark, tmp_path):
     assert got_base == want
     for plan_prune in (False, True):
         df = read_pbf(
-            spark, p, must_tag_keys={"bridge"}, plan_prune=plan_prune
+            spark, p, any_tag_keys={"bridge"}, plan_prune=plan_prune
         ).filter("element_at(tags, 'bridge') IS NOT NULL")
         got = sorted(r.osmid for r in df.select("osmid").collect())
         assert got == want, f"plan_prune={plan_prune}"
@@ -928,8 +928,9 @@ def test_blob_dictionary_has_streams_head(tmp_path):
         assert len(data) == 2
         assert blob_dictionary_has(p, data[0], frozenset({"highway"}))
         assert not blob_dictionary_has(p, data[0], frozenset({"bridge"}))
-        assert blob_dictionary_has(p, data[1], frozenset({"bridge", "yes"}))
-        assert not blob_dictionary_has(p, data[1], frozenset({"bridge", "nope"}))
+        # any-of: one present string is enough, none present skips
+        assert blob_dictionary_has(p, data[1], frozenset({"bridge", "nope"}))
+        assert not blob_dictionary_has(p, data[1], frozenset({"highway", "nope"}))
 
 
 def test_any_tag_keys_disjunctive_skip(spark, tmp_path):
@@ -999,12 +1000,8 @@ def test_blob_dictionary_probe_large_block(tmp_path):
     assert span.size > 64 * 1024  # genuinely multi-chunk
     assert blob_dictionary_has(p, span, frozenset({"highway"}))
     assert not blob_dictionary_has(p, span, frozenset({"bridge"}))
-    assert blob_dictionary_has(
-        p, span, frozenset(), any_of=frozenset({"bridge", "highway"})
-    )
-    assert not blob_dictionary_has(
-        p, span, frozenset(), any_of=frozenset({"bridge", "tunnel"})
-    )
+    assert blob_dictionary_has(p, span, frozenset({"bridge", "highway"}))
+    assert not blob_dictionary_has(p, span, frozenset({"bridge", "tunnel"}))
 
 
 def test_engine_query_pushes_keep_first_keys(spark, tmp_path):

@@ -14,11 +14,12 @@ Fixtures (deterministic, hash-derived, cached in /tmp):
              holds 96% of rows.
 
 For each (query, fixture) run: wall-clock (noop sink) plus the
-heaviest-by-executorRunTime stage's TASK-TIME DISTRIBUTION from the
-Spark REST API (min/median/p95/max) — the straggler evidence a wall
+heaviest-by-executor-run-time stage's max/median task run time
+(``task_skew``), read from the run's job group in the uncompressed Spark
+event log after the session stops — the straggler evidence a wall
 number alone hides.  A skew-safe plan shows skewed/uniform wall ≈ 1 and
-max-task ≈ median-task; a hot-key pathology shows up as one task owning
-the stage.
+task skew ≈ 1; a hot-key pathology shows up as one task owning the
+stage.
 
 Usage: python tools/skew_check.py   → one JSON line + a markdown table
 (paste into SCALE.md).
@@ -28,9 +29,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
-import urllib.request
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -40,14 +42,13 @@ from pyspark.sql import SparkSession, functions as F  # noqa: E402
 from pyspark.sql.functions import col, lit  # noqa: E402
 
 from osmdatapy_spark.suite import QUERY_REGISTRY  # noqa: E402
+from perfbench.trace import read_event_log  # noqa: E402
 
 N_DOCS = 600_000
 N_LINES = 4_000_000
 
 
 def _fixture_dir(kind: str) -> str:
-    import tempfile
-
     return os.path.join(tempfile.gettempdir(), f"osmdatapy_skew_{kind}_v1")
 
 
@@ -123,71 +124,29 @@ def build_lineitem(spark: SparkSession, skewed: bool) -> str:
     return d
 
 
-def _rest(sc, path: str):
-    base, app = sc.uiWebUrl, sc.applicationId
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app}{path}") as r:
-        return json.load(r)
-
-
-def run_instrumented(spark: SparkSession, name: str, sf_dir: str) -> dict:
-    """Wall-clock + heaviest-stage task-time quantiles for one query run."""
-    sc = spark.sparkContext
-    before = {s["stageId"] for s in _rest(sc, "/stages")}
+def run_timed(spark: SparkSession, name: str, sf_dir: str, group: str) -> float:
+    """Wall-clock of one query run to the noop sink, its jobs tagged with
+    ``group`` so the event log attributes their stages to this run."""
+    spark.sparkContext.setJobGroup(group, group)
     t0 = time.time()
     QUERY_REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     wall = time.time() - t0
     spark.catalog.clearCache()
-    # the REST status store is fed by the ASYNC listener bus — the final
-    # stage may not be COMPLETE yet when the action returns; poll briefly
-    # instead of losing a minutes-long harness run to an empty list
-    stages: list = []
-    for _ in range(20):
-        stages = [
-            s
-            for s in _rest(sc, "/stages?status=COMPLETE")
-            if s["stageId"] not in before and s.get("numCompleteTasks", 0) > 0
-        ]
-        if stages:
-            break
-        time.sleep(0.5)
-    if not stages:
-        return {"wall_sec": round(wall, 2), "stage_tasks": 0,
-                "task_ms": {"min": 0, "med": 0, "p95": 0, "max": 0}}
-    heaviest = max(stages, key=lambda s: s.get("executorRunTime", 0))
-    attempt = heaviest.get("attemptId", 0)  # a retried stage 404s attempt 0
-    qs = _rest(
-        sc,
-        f"/stages/{heaviest['stageId']}/{attempt}/taskSummary?quantiles=0.0,0.5,0.95,1.0",
-    )["executorRunTime"]
-    return {
-        "wall_sec": round(wall, 2),
-        "stage_tasks": heaviest["numCompleteTasks"],
-        "task_ms": {
-            "min": round(qs[0]),
-            "med": round(qs[1]),
-            "p95": round(qs[2]),
-            "max": round(qs[3]),
-        },
-    }
+    return round(wall, 2)
 
 
 def main() -> None:
-    # this harness reads task-time quantiles off the REST status API, so
-    # opt in to the UI (get_spark's env override) BEFORE the session builds
-    os.environ["SPARK_GRAFT_UI"] = "true"
+    # the event log must be configured before the JVM starts; the Spark UI
+    # stays off (get_spark's constant)
+    events = tempfile.mkdtemp(prefix="osmdatapy_skew_events_")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.eventLog.enabled=true "
+        f"--conf spark.eventLog.dir=file://{events} "
+        "--conf spark.eventLog.compress=false pyspark-shell"
+    )
     from osmdatapy_spark.session import get_spark
 
     spark = get_spark("osmdatapy-skew-check")
-    # getOrCreate REUSES a pre-existing session, in which case the env
-    # opt-in above never reached the builder and every _rest() call would
-    # crash opaquely on uiWebUrl=None — fail up front, naming the cause
-    if spark.sparkContext.uiWebUrl is None:
-        raise SystemExit(
-            "skew_check needs the Spark UI REST API, but this session has "
-            "spark.ui.enabled=false — a SparkSession already existed before "
-            "the SPARK_GRAFT_UI=true opt-in could apply (getOrCreate reuses "
-            "it).  Run skew_check in a fresh process."
-        )
     spark.sparkContext.setLogLevel("ERROR")
 
     fixtures = {
@@ -201,26 +160,37 @@ def main() -> None:
     ]
     # one warm pass absorbs JIT so uniform-vs-skewed is engine, not JDK
     for name, fam in plan:
-        run_instrumented(spark, name, fixtures[fam][0])
+        run_timed(spark, name, fixtures[fam][0], f"warm.{name}")
+
+    walls = {}
+    for name, fam in plan:
+        for kind, sf_dir in zip(("uniform", "skewed"), fixtures[fam]):
+            walls[name, kind] = run_timed(spark, name, sf_dir, f"{name}.{kind}")
+    spark.stop()
+    groups = read_event_log(events)
+    shutil.rmtree(events, ignore_errors=True)
 
     out: dict = {}
     rows = []
-    for name, fam in plan:
-        uni = run_instrumented(spark, name, fixtures[fam][0])
-        skw = run_instrumented(spark, name, fixtures[fam][1])
+    for name, _ in plan:
+        runs = {
+            kind: {
+                "wall_sec": walls[name, kind],
+                "task_skew": round(groups.get(f"{name}.{kind}", {}).get("task_skew", 0.0), 1),
+            }
+            for kind in ("uniform", "skewed")
+        }
+        uni, skw = runs["uniform"], runs["skewed"]
         ratio = round(skw["wall_sec"] / max(uni["wall_sec"], 1e-9), 2)
-        straggle = round(skw["task_ms"]["max"] / max(skw["task_ms"]["med"], 1), 1)
-        out[name] = {"uniform": uni, "skewed": skw, "wall_ratio": ratio,
-                     "skewed_max_over_med_task": straggle}
+        out[name] = {**runs, "wall_ratio": ratio}
         rows.append(
             f"| {name} | {uni['wall_sec']}s | {skw['wall_sec']}s | {ratio}x "
-            f"| {uni['task_ms']['med']}/{uni['task_ms']['max']} "
-            f"| {skw['task_ms']['med']}/{skw['task_ms']['max']} | {straggle}x |"
+            f"| {uni['task_skew']}x | {skw['task_skew']}x |"
         )
     print(json.dumps(out))
     print()
-    print("| query | uniform wall | skewed wall | wall ratio | uni med/max task ms | skew med/max task ms | skew max/med |")
-    print("|---|---|---|---|---|---|---|")
+    print("| query | uniform wall | skewed wall | wall ratio | uniform task skew | skewed task skew |")
+    print("|---|---|---|---|---|---|")
     for r in rows:
         print(r)
 
