@@ -181,8 +181,8 @@ class PbfDataSourceReader(DataSourceReader):
         # indices, absence is proof).  This is a relation-defining option
         # like 'osmtypes': the scan then only promises elements that can
         # carry one of the keys, so pair it with the matching tag filter
-        # downstream.  Executor-side, each
-        # task bails after the stringtable decode; with 'plan_prune=true'
+        # downstream.  Executor-side, each task bails after the
+        # stringtable decode; with 'plan_prune=true'
         # the DRIVER additionally drops non-matching blobs at planning
         # time (streaming just each blob's table head — kilobytes per
         # blob), so pruned blobs never even become task work.  The probe
